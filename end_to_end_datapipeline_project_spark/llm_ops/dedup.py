@@ -302,7 +302,7 @@ def minhash_signatures(arrs: DataFrame) -> DataFrame:
 MINHASH_BUCKET_CAP = 1024
 
 
-#: buckets larger than this get chunked in the self-join (the
+#: buckets larger than this get chunked in the SELF-pair kernel (the
 #: heavy-hitter discipline of q_salted_join applied to LSH): a single
 #: (seed, minhash) key's pair fan-out is an intra-key cartesian AQE
 #: skew-join cannot split — the ×10 skew probe measured one 72 s task
@@ -316,64 +316,83 @@ MINHASH_CHUNK_MIN = 256
 #: signature rows ×CHUNKS per side
 MINHASH_CHUNKS = 8
 
-#: the PROBE join's chunk threshold (q_incremental_minhash) sits at
-#: cap/2, far above the batch self-join's MINHASH_CHUNK_MIN: probe
-#: work is |delta ∩ bucket| × |bucket| — linear in occupancy, not
-#: C(n,2) — so spreading pays only when a bucket rides near the cap
-#: (the exact-duplicate overlay), while chunking the mid-size buckets
-#: an ×100 replica corpus produces everywhere fattens the probe side
-#: past AQE's broadcast threshold and demotes the probe join to a
-#: sort-merge over the whole index (measured: the 256 threshold read
-#: 131 s at the ×100 decade cell vs 62 s unchunked; cap/2 restores
-#: the broadcast for every non-degenerate bucket and keeps the skew
-#: overlay's capped 1024-bucket spread intact)
+#: the PROBE-pair kernel's chunk threshold sits at cap/2, far above the
+#: self-pair kernel's MINHASH_CHUNK_MIN: probe work is |probe ∩ bucket|
+#: × |bucket| — linear in occupancy, not C(n,2) — so spreading pays
+#: only when a bucket rides near the cap, while chunking the mid-size
+#: buckets an ×100 replica corpus produces everywhere fattens the probe
+#: side past AQE's broadcast threshold and demotes the probe join to a
+#: sort-merge over the whole index (measured at the ×100 decade cell:
+#: 131 s with the 256 threshold vs 62 s unchunked; cap/2 keeps the
+#: broadcast for every non-degenerate bucket)
 INCREMENTAL_CHUNK_MIN = MINHASH_BUCKET_CAP // 2
 
 
-def minhash_candidates(arrs: DataFrame) -> DataFrame:
-    """LSH candidate pairs (doc_a < doc_b): OR-amplified (r=1) bucket
-    self-join over :func:`minhash_signatures`, degenerate buckets capped
-    at :data:`MINHASH_BUCKET_CAP` members (deterministic lowest-doc_id
-    survivors so the DuckDB oracle mirrors exactly).
+def _rank_buckets(sig: DataFrame) -> DataFrame:
+    """(doc_id, seed, minhash) signature rows plus ``__bn``, the row's
+    doc_id rank inside its (seed, minhash) bucket, and ``__sz``, the
+    bucket's size — one window pass (one exchange) that serves both the
+    occupancy cap (``__bn <= MINHASH_BUCKET_CAP``) and the pair kernels'
+    hot-bucket chunking (:func:`_chunk_annotated`)."""
+    bucket = Window.partitionBy("seed", "minhash")
+    return sig.withColumn(
+        "__bn", F.row_number().over(bucket.orderBy("doc_id"))
+    ).withColumn("__sz", F.count(F.lit(1)).over(bucket))
 
-    Hot buckets (> :data:`MINHASH_CHUNK_MIN` members) are CHUNKED for
-    the self-join: member m carries chunk ``ck = (rank-1) % CHUNKS``;
-    the a-side fans out over the partner chunk ``cb``, the b-side over
-    ``ca``, and the join keys on (seed, minhash, ca, cb) — so the pair
-    (i, j) meets exactly once, in cell (ck_i, ck_j), and one mega-
-    bucket's cartesian spreads over CHUNKS² shuffle keys instead of
-    landing on one task.  Emitted pairs are IDENTICAL to the unchunked
-    join (the DuckDB oracle keeps the plain form); only the shuffle
-    layout changes.  Measured on the ×10 hot-key probe (5% of docs
-    sharing one bucket): max task 72 s → seconds, wall within the
-    output-growth bound.
 
-    KEPT over a bucket-SET rewrite (r16, measured negative result):
-    collapsing buckets to sorted member arrays, ``distinct``-ing the
-    sets and expanding pairs in-row (no join, fewer pre-dedup rows
-    when member sets repeat across seeds) LOST the interleaved A/B at
-    every probe scale — sf0.1 min 3.56 vs 3.04 s, ×10 10.15 vs 5.78 s,
-    ×30 first-pass 247.8 vs 78.4 s — because near-dup cliques are NOT
-    exact-dup cliques: each seed's minhash samples different shingles,
-    bucket membership differs slightly per seed, the cross-seed
-    ``distinct`` collapses almost nothing, and the in-row
-    struct-array expansion costs more per pair than the codegen join
-    it replaced.  The self-join + width-pinned dedup stays."""
-    # checkpoint the O(docs × seeds) signature table: both sides of the
-    # bucket self-join reference it, and without the checkpoint each
-    # side re-runs the md5-per-shingle signature pass (measured 2×
-    # 1.35 s of the 4.8 s sf0.1 wall) — the signatures are tiny
-    # (doc_id + seed + 8-char chunk), the shingle stream is not
-    mh = minhash_signatures(arrs).localCheckpoint()
-    w_bucket = Window.partitionBy("seed", "minhash").orderBy("doc_id")
-    w_size = Window.partitionBy("seed", "minhash")
-    mh = (
-        mh.withColumn("__bn", F.row_number().over(w_bucket))
-        .withColumn("__sz", F.count(F.lit(1)).over(w_size))
-        .filter(F.col("__bn") <= MINHASH_BUCKET_CAP)
+def _ranked_index(arrs: DataFrame) -> DataFrame:
+    """:func:`_rank_buckets` over the signatures of per-doc shingle
+    arrays, checkpointed: the md5-per-shingle signature pass runs once,
+    and the capped index, its spill and every pair kernel over them are
+    scans of this table."""
+    return _rank_buckets(minhash_signatures(arrs)).localCheckpoint()
+
+
+def minhash_index_with_spill(arrs: DataFrame) -> tuple:
+    """The capped LSH signature index over per-doc shingle arrays, plus
+    its SPILL side table.  Returns ``(idx, spill)``, both
+    (doc_id, seed, minhash).
+
+    Invariant: ``idx ∪ spill`` is exactly :func:`minhash_signatures`
+    of ``arrs`` (disjoint), and ``idx`` holds each (seed, minhash)
+    bucket's :data:`MINHASH_BUCKET_CAP` lowest doc_ids — the rows the
+    DuckDB oracles' ``__mhc`` keeps.  The spill is stored ingest-tier
+    state (tiny: only degenerate buckets overflow): an exact-duplicate
+    ingest can relabel a spilled row to a smaller doc_id and make it
+    re-enter the cap (:func:`lsh_maintenance_step`)."""
+    return _split_index(_ranked_index(arrs))
+
+
+def _split_index(ranked: DataFrame) -> tuple:
+    """(idx, spill) of a :func:`_rank_buckets` table: rows inside and
+    beyond the occupancy cap, projected back to (doc_id, seed,
+    minhash)."""
+    inside = F.col("__bn") <= MINHASH_BUCKET_CAP
+    cols = ("doc_id", "seed", "minhash")
+    return (
+        ranked.filter(inside).select(*cols),
+        ranked.filter(~inside).select(*cols),
     )
-    hot = F.col("__sz") > MINHASH_CHUNK_MIN
-    sig = mh.select(
+
+
+def minhash_index(arrs: DataFrame) -> DataFrame:
+    """The capped index half of :func:`minhash_index_with_spill` — at
+    100 TB the STORED table an ingest tier maintains, bucketed by
+    (seed, minhash)."""
+    return minhash_index_with_spill(arrs)[0]
+
+
+def _chunk_annotated(ranked: DataFrame, chunk_min: int) -> DataFrame:
+    """The capped rows of a :func:`_rank_buckets` table (or any subset
+    of them) with the hot-bucket partner-chunk columns both pair kernels
+    join on: ``__ck`` is the member's chunk ((rank-1) % CHUNKS in a
+    bucket of more than ``chunk_min`` members, else 0) and ``__fan`` the
+    chunks its partner side fans out over (all CHUNKS in a hot bucket,
+    else [0]).  Rank and size are the whole bucket's, so chunks stay
+    distinct-per-member and hotness uniform-per-bucket on any subset —
+    all a kernel needs to meet every pair exactly once."""
+    hot = F.col("__sz") > chunk_min
+    return ranked.filter(F.col("__bn") <= MINHASH_BUCKET_CAP).select(
         "doc_id",
         "seed",
         "minhash",
@@ -385,6 +404,20 @@ def minhash_candidates(arrs: DataFrame) -> DataFrame:
         .otherwise(F.array(F.lit(0)))
         .alias("__fan"),
     )
+
+
+def _chunked_self_pairs(ranked: DataFrame) -> DataFrame:
+    """Every (doc_a < doc_b) pair sharing a bucket of the capped index
+    held in the :func:`_rank_buckets` table ``ranked`` — the self-pair
+    kernel.  In a hot bucket (> :data:`MINHASH_CHUNK_MIN` members) the
+    a-side fans out over the partner chunk ``__cb`` and the b-side over
+    ``__ca``, and the join keys on (seed, minhash, ca, cb): pair (i, j)
+    meets exactly once, in cell (ck_i, ck_j), and one mega-bucket's
+    C(cap, 2) cartesian spreads over CHUNKS² shuffle keys instead of
+    landing on one task.  Emitted pairs are IDENTICAL to the plain
+    capped self-join the DuckDB oracles use (pinned by
+    test_minhash_candidates_match_plain_capped_self_join)."""
+    sig = _chunk_annotated(ranked, MINHASH_CHUNK_MIN)
     a = sig.select(
         F.col("doc_id").alias("doc_a"),
         "seed",
@@ -409,7 +442,7 @@ def minhash_candidates(arrs: DataFrame) -> DataFrame:
     # the parallelism.  Map-side partial dedup is no loss: a pair's per-
     # seed copies carry different (seed, chunk) join keys, so they land
     # in different partitions and never collapsed map-side anyway.
-    n = arrs.sparkSession.sparkContext.defaultParallelism
+    n = ranked.sparkSession.sparkContext.defaultParallelism
     return (
         a.join(b, ["seed", "minhash", "__ca", "__cb"])
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -419,59 +452,89 @@ def minhash_candidates(arrs: DataFrame) -> DataFrame:
     )
 
 
+def _chunked_probe_pairs(ranked: DataFrame, probe_ids: DataFrame) -> DataFrame:
+    """Every (doc_a < doc_b) pair sharing a bucket of the capped index
+    held in the :func:`_rank_buckets` table ``ranked`` with at least one
+    endpoint in ``probe_ids`` (one column, doc_id) — the probe-pair
+    kernel.  The index member keeps its chunk and the probe row fans out
+    over all chunks of a hot bucket (> :data:`INCREMENTAL_CHUNK_MIN`
+    members), so a pair meets once in the member's chunk (a both-probe
+    pair meets twice and collapses in the keyed dedup) and a near-cap
+    bucket's |probe ∩ bucket| × cap work spreads over CHUNKS shuffle
+    keys.  Only hot-bucket probe rows replicate; the index side never
+    does.  Emitted pairs are identical to the plain join."""
+    sig = _chunk_annotated(ranked, INCREMENTAL_CHUNK_MIN)
+    probe = sig.join(probe_ids, "doc_id", "left_semi").select(
+        F.col("doc_id").alias("d_id"),
+        "seed",
+        "minhash",
+        F.explode("__fan").alias("__ck"),
+    )
+    # width-pinned pair dedup: the self-pair kernel's rationale
+    n = ranked.sparkSession.sparkContext.defaultParallelism
+    return (
+        probe.join(
+            sig.select(
+                F.col("doc_id").alias("i_id"), "seed", "minhash", "__ck"
+            ),
+            ["seed", "minhash", "__ck"],
+        )
+        .filter(F.col("i_id") != F.col("d_id"))
+        .select(
+            F.least("d_id", "i_id").alias("doc_a"),
+            F.greatest("d_id", "i_id").alias("doc_b"),
+        )
+        .repartition(n, "doc_a", "doc_b")
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
+def minhash_candidates(arrs: DataFrame) -> DataFrame:
+    """LSH candidate pairs (doc_a < doc_b) over per-doc shingle arrays:
+    the OR-amplified (r=1) bucket self-join of the capped index —
+    degenerate buckets keep their :data:`MINHASH_BUCKET_CAP` lowest
+    doc_ids, so the DuckDB oracle mirrors the output exactly.  A thin
+    caller of :func:`_chunked_self_pairs`.
+
+    The chunked self-join is the kept form: an in-row bucket-SET
+    expansion lost the interleaved A/B at every probe scale
+    (OPTIMIZATION_r16.md §4)."""
+    return _chunked_self_pairs(_ranked_index(arrs))
+
+
 #: raw-bytes ceiling (xxhash64 longs) for the BROADCAST verify form.
 #: At or below it, verify_candidates broadcasts the array table for
 #: the doc_b join and shuffle-hash-joins it for the doc_a join — so a
 #: candidate-pair row NEVER crosses an exchange carrying a shingle
-#: array, and no stage sorts pair rows at all.  Above it, the original
-#: pair-keyed shuffle form takes over (both joins exchange).  The gate
-#: is a MEASURED one-row aggregate over the (checkpointed) array
-#: table, not a guess: 512 MB of raw longs builds an ~1.5 GB
-#: UnsafeHashedRelation — executor-feasible — and covers ~60 M
-#: shingles ≈ 6 M docs of this corpus's shape, far beyond any decade
-#: probe (×100 measures 26 M shingles / 208 MB).  The regime that
-#: EXCEEDS it is the full-corpus rebuild at extreme scale, whose
-#: decade cell already holds under the shuffle form; the incremental
-#: maintenance kernel's verify endpoints are delta-blast-radius
-#: bounded, so the ingest path stays under the gate by construction.
-#: Why this matters (VERDICT r14 #1): at the ×100 decade cell the
-#: shuffle form's second join sort-merged ~10⁹ pair rows each
-#: carrying a ~500-byte array — a fat exchange+sort whose spill
-#: dropped per-pair verify throughput 1.5× vs ×30 and made the
-#: maintenance kernel cost 2.2× the rebuild it exists to beat.
+#: array, and no stage sorts pair rows at all.  Above it, the
+#: pair-keyed shuffle form takes over (both joins exchange).  512 MB of
+#: raw longs builds an ~1.5 GB UnsafeHashedRelation — executor-feasible
+#: — and covers ~60 M shingles ≈ 6 M docs of this corpus's shape, far
+#: beyond any decade probe (×100 measures 26 M shingles / 208 MB).  Why
+#: it matters: at the ×100 decade cell the shuffle form's second join
+#: sort-merged ~10⁹ pair rows each carrying a ~500-byte array, a fat
+#: exchange+sort whose spill cut per-pair verify throughput 1.5× vs ×30.
 VERIFY_BCAST_MAX = 512 << 20
 
-#: raw-bytes FLOOR for the broadcast verify form (r15).  Below it the
-#: original pair-keyed shuffle form is strictly faster: the broadcast
-#: build + the extra one-row stats job cost more than the small
-#: shuffle they avoid.  Interleaved same-process A/B of q_minhash_lsh
-#: (min of 4 / 3): sf0.1 (~2 MB of arrays) shuffle 2.61 s vs broadcast
-#: 3.61 s; ×10 (~21 MB) shuffle 6.32 s vs broadcast 7.15 s.  The
-#: broadcast form's regime — the ×30/×100 maintenance-kernel verify
-#: whose shuffle form sort-merges ~10⁹ array-carrying pair rows —
-#: starts above ~60 MB of arrays, so the floor sits at 32 MB: every
-#: sf≤1 bench/oracle run keeps the r14 shuffle shape, every decade-
-#: probe regime (×30 ≈ 62 MB, ×100 ≈ 208 MB) gets the broadcast fix.
+#: raw-bytes FLOOR for the broadcast verify form.  Below it the
+#: pair-keyed shuffle form is strictly faster: the broadcast build
+#: costs more than the small shuffle it avoids.  Interleaved
+#: same-process A/B of q_minhash_lsh (min of 4 / 3, local[32]): sf0.1
+#: (~2 MB of arrays) shuffle 2.61 s vs broadcast 3.61 s; ×10 (~21 MB)
+#: shuffle 6.32 s vs broadcast 7.15 s.  Every sf≤1 bench/oracle run
+#: keeps the shuffle form; every decade-probe regime (×30 ≈ 62 MB,
+#: ×100 ≈ 208 MB) gets the broadcast form.
 VERIFY_BCAST_MIN = 32 << 20
 
 
 def checkpoint_arrs_with_bytes(df: DataFrame) -> tuple:
     """``df.localCheckpoint()`` for a shingle-array frame (…, shs) with
-    the verify size gate's stats RIDING the checkpoint job: a
+    the verify size gate's input riding the checkpoint job: a
     ``sum(size(shs))`` Observation attaches to the materialization the
-    caller already pays, so :func:`verify_candidates` receives
-    ``arr_bytes`` (8 × total shingle longs — the exact unit
-    VERIFY_BCAST_MIN/MAX gate on) for free.  Returns
-    ``(checkpointed_df, arr_bytes)``.
-
-    VERDICT r15 #5: through r15 every verify call paid a separate
-    one-row aggregate job over the (checkpointed) array table just to
-    pick a join form — a fixed cost per call that buys nothing below
-    the floor, where the answer is always "shuffle".  Riding the
-    Observation removes that job in EVERY regime (sub-floor callers
-    pay zero, decade-scale callers save a full scan of the array
-    table), and the maintenance kernel's two verify calls share one
-    measurement instead of re-scanning ``varrs`` twice."""
+    caller already pays.  Returns ``(checkpointed_df, arr_bytes)``,
+    ``arr_bytes`` = 8 × total shingle longs — the exact unit
+    :data:`VERIFY_BCAST_MIN`/:data:`VERIFY_BCAST_MAX` gate on — so
+    :func:`verify_candidates` picks its form without a stats job."""
     from pyspark.sql import Observation
 
     o = Observation()
@@ -486,47 +549,35 @@ def verify_candidates(
     arr_bytes: int | None = None,
     force_form: str | None = None,
 ) -> DataFrame:
-    """Exact-Jaccard verify of candidate (doc_a, doc_b) pairs by per-doc
-    shingle-ARRAY intersection: two doc-keyed joins carrying one array
-    per row, shared = |array_intersect| map-side — the same verify
-    kernel as the prefix-filter join (measured 150× faster than the
-    exploded pair×shingle fan-out at the ×10 probe).  Cost is
-    Σ_candidates (|A| + |B|), independent of how many non-candidate
-    pairs share a shingle — vs. the full inverted-index join, which at
-    100 TB is quadratic in posting-list length.
+    """Exact Jaccard of candidate (doc_a, doc_b) pairs by per-doc
+    shingle-ARRAY intersection — the one verify stage of the LSH chain.
+    Returns (doc_a, doc_b, jaccard rounded to 6 places).  Two doc-keyed
+    joins carry one array per row and shared = |array_intersect| is
+    computed map-side, so cost is Σ_candidates (|A| + |B|), independent
+    of how many non-candidate pairs share a shingle (the exploded
+    pair×shingle fan-out measured 150× slower at the ×10 probe).
 
-    The verify arrays carry xxhash64(shingle) LONGS, not the ~20-char
-    shingle strings: intersection/union SIZES (all jaccard needs) are
-    preserved short of a 64-bit collision (≈ C(40,2)/2⁶⁴ ≈ 4e-17 per
-    doc — zero in practice), while the two pair-keyed joins shuffle
-    8-byte elements instead of Java strings.  Under the ×10 hot-key
-    probe (40M verified pairs) the string form's transient heap drove
-    200 s GC-bound straggler tasks; longs are the same fix the
-    prefix-filter join measured at ×30 (244 s → seconds), done in-row
-    (zero extra shuffles) instead of via a vocab join because no
-    prefix order is needed here.
+    The arrays carry xxhash64(shingle) LONGS, not shingle strings:
+    intersection/union sizes (all jaccard needs) survive short of a
+    64-bit collision (≈ 4e-17 per doc), and the pair-keyed joins move
+    8-byte elements — the string form's transient heap drove 200 s
+    GC-bound straggler tasks at the ×10 hot-key probe.
 
-    Join strategy is ADAPTIVE on the measured array-table size,
-    gated to the BAND [:data:`VERIFY_BCAST_MIN`,
-    :data:`VERIFY_BCAST_MAX`] (r15): inside the band the doc_a join
-    is a width-pinned SHUFFLE_HASH (only the two-long pair rows cross
-    the wire, nothing sorts) and the doc_b join BROADCASTS the array
-    table, so the fat pair+array rows exist only transiently inside
-    one whole-stage pipeline and collapse to (doc_a, doc_b, jaccard)
-    map-side; BELOW the floor the original two-exchange shuffle form
-    is strictly faster (the broadcast build costs more than the small
-    shuffle it avoids — rationale on the constants), and ABOVE the
-    ceiling the shuffle form bounds executor memory.  The explicit
-    ``repartition(n, doc_a)`` is the q_minhash_lsh width discipline:
-    pair rows are two longs, and AQE's byte-based coalescing would
-    otherwise run the whole verify on a handful of tasks.
-
-    ``arr_bytes``: 8 × total shingle count of ``arrs`` when the caller
-    already knows it (ride it on the checkpoint job via
-    :func:`checkpoint_arrs_with_bytes`); ``None`` falls back to the
-    r15 one-row stats job.  ``force_form``: ``'broadcast'`` /
-    ``'shuffle'`` pins the join form outright (tests and plan probes —
-    ADVICE r15 — instead of mutating the gate globals)."""
+    Join form: inside the band [:data:`VERIFY_BCAST_MIN`,
+    :data:`VERIFY_BCAST_MAX`] of array bytes the doc_a join is a
+    width-pinned SHUFFLE_HASH (only two-long pair rows cross the wire)
+    and the doc_b join BROADCASTS the arrays; outside it both joins
+    shuffle (rationale on the constants).  ``arr_bytes`` is the array
+    table's size when the caller knows it
+    (:func:`checkpoint_arrs_with_bytes`); ``None`` runs a one-row stats
+    job.  ``force_form`` (``'broadcast'`` / ``'shuffle'``) pins the form
+    outright for tests and plan probes; any other value but ``None``
+    raises ``ValueError``."""
+    if force_form not in (None, "broadcast", "shuffle"):
+        raise ValueError(
+            "force_form must be None, 'broadcast' or 'shuffle', "
+            f"got {force_form!r}"
+        )
     varrs = arrs.select(
         "doc_id",
         F.transform("shs", lambda s: F.xxhash64(s)).alias("shs"),
@@ -600,56 +651,56 @@ def verify_candidates(
     )
 
 
-# --- exact-duplicate pre-collapse (the r11 skew-probe fix) ---------------
+# --- exact-duplicate collapse --------------------------------------------
 
 
-def collapse_exact_dups(docs: DataFrame) -> DataFrame:
-    """Restrict a ``documents`` frame to one representative (the min
-    doc_id) per exact-content fingerprint group, BEFORE any pairwise
-    near-dup machinery runs.
+def exact_groups(docs: DataFrame) -> tuple:
+    """The exact-duplicate collapse — the group step of the LSH chain.
+    Returns ``(digests, groups)``: digests (doc_id, fp) for every doc of
+    the (doc_id, text) frame ``docs``, and groups (fp, rep_id, text),
+    one row per exact-content fingerprint group whose representative
+    ``rep_id`` is the group's min doc_id.
 
-    Identical texts can never be *near* duplicates of each other — they
-    are exact duplicates, already handled by the q_dedup_exact hash-agg
-    — so feeding them into LSH only makes every member of a k-copy
-    group collide into the same (seed, minhash) buckets and emit
-    C(k, 2) verified pairs.  The r11 skew probe measured exactly that:
-    a 5%-identical overlay (2,500 copies of one text) drove
-    q_minhash_lsh to 7.1× wall / 10.4× straggler and 40.2 M pairs; at
-    the 100 TB target a 10⁶-copy boilerplate group would emit 5·10¹¹
-    pairs no chunking can absorb.  Collapsing first makes the pair
-    stream a function of DISTINCT texts only; members reattach
-    downstream through the fingerprint map (q_minhash_clusters).
-
-    Plan shape: one digest-only shuffle (doc_id + 16-byte md5, ~24 B a
-    row — never the text) to agree on group minima, then a doc_id-keyed
-    left-semi join that AQE broadcasts at test scale; at warehouse
-    scale both sides are doc_id-bucketed so the join is co-located.
-    """
-    reps = (
-        docs.select("doc_id", fingerprint_col().alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
+    Identical texts are exact duplicates, not near duplicates, so only
+    representatives enter the pairwise stages: a k-copy group costs one
+    signature row instead of C(k, 2) verified pairs, and members
+    reattach through the fingerprint (:func:`_reattach`).  Without the
+    collapse a 5%-identical overlay (2,500 copies of one text) drove
+    q_minhash_lsh to 7.1× wall and 40.2 M pairs at the ×10 skew probe.
+    Plan shape: one digest-only shuffle (doc_id + md5, never the text)
+    agrees on group minima, then a doc_id-keyed LEFT SEMI join keeps the
+    representatives' rows (AQE broadcasts the minima at test scale).  A
+    semi join, not an inner one, so the planner's size estimate of
+    everything downstream stays the input's and the LSH joins plan as
+    broadcasts up front (an inner join's estimate is the product of its
+    sides: measured +3 Spark jobs on q_minhash_lsh at sf0.1).
+    Mirrored in DuckDB by :func:`collapse_sql`."""
+    digests = docs.select("doc_id", fingerprint_col().alias("fp"))
+    reps = digests.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
+    # fp is re-derived from the representative's text after the join,
+    # so a consumer that drops it (q_minhash_lsh) hashes each text once
+    groups = docs.join(reps.select("doc_id"), "doc_id", "left_semi").select(
+        fingerprint_col().alias("fp"), F.col("doc_id").alias("rep_id"), "text"
     )
-    return docs.join(reps, "doc_id", "left_semi")
+    return digests, groups
 
 
-def exact_rep_map(docs: DataFrame) -> DataFrame:
-    """(doc_id, rep_id) for EVERY doc: rep_id = min doc_id of the doc's
-    exact-fingerprint group (a doc is its own rep iff doc_id == rep_id).
-    The reattachment side of :func:`collapse_exact_dups` — one
-    digest-keyed window shuffle, ~40 B a row, never the text."""
-    fp = docs.select("doc_id", fingerprint_col().alias("fingerprint"))
-    return fp.select(
-        "doc_id",
-        F.min("doc_id")
-        .over(Window.partitionBy("fingerprint"))
-        .alias("rep_id"),
+def _rep_arrays(groups: DataFrame) -> tuple:
+    """Checkpointed (doc_id, shs) shingle arrays of the group
+    representatives, with their byte size for the verify gate
+    (:func:`checkpoint_arrs_with_bytes`).  The texts are pinned to all
+    cores AFTER the collapse: its join output is a few MB, so AQE
+    would coalesce it to 1-4 partitions and serialize the md5-per-
+    shingle signature stage (measured 6.5 s → 32 s at the ×10 probe
+    when the pin sat before the collapse)."""
+    reps = groups.select(F.col("rep_id").alias("doc_id"), "text")
+    return checkpoint_arrs_with_bytes(
+        shingle_arrays(pin_parallelism(reps, "doc_id"))
     )
 
 
 def collapse_sql(src: str = "documents") -> str:
-    """DuckDB CTEs mirroring :func:`collapse_exact_dups`: ``__repdocs``
+    """DuckDB CTEs mirroring :func:`exact_groups`: ``__repdocs``
     is ``src`` restricted to per-fingerprint min-doc_id representatives,
     and ``__repmap`` carries every doc's (doc_id, rep_id) for
     reattachment."""
@@ -703,40 +754,20 @@ def collapse_sql(src: str = "documents") -> str:
     "seed), OR-amplified banding (r=1) for candidates, exact-Jaccard "
     "verify. md5 parity makes the full LSH pipeline oracle-checkable. "
     "Exact-duplicate texts collapse to one min-doc_id representative "
-    "BEFORE signatures (collapse_exact_dups, oracle-mirrored): a k-copy "
-    "group contributes one signature row instead of C(k,2) pairs — the "
-    "fix for the r11 skew probe's hot-bucket blow-up; members reattach "
-    "via the fingerprint map in q_minhash_clusters.",
+    "BEFORE signatures (exact_groups, oracle-mirrored): a k-copy "
+    "group contributes one signature row instead of C(k,2) pairs — "
+    "without it the ×10 skew probe's identical-text overlay blew up one "
+    "hot bucket; members reattach via the fingerprint map in "
+    "q_minhash_clusters.",
 )
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents")
-    # per-doc distinct shingle SETS built entirely map-side
-    # (array_distinct over the in-row 3-gram transform): the doc is the
-    # dedup scope, so the global explode + distinct shuffle the row-form
-    # ``shingles()`` pays is pure waste here — signatures, both verify
-    # probe sides, and sizes all derive from this one array column with
-    # ZERO shuffles before the candidate join.  At 100 TB this is the
-    # difference between shuffling every (doc, shingle) posting and
-    # shuffling nothing until the (small) LSH-bucket join.
-    # fan the raw docs out to all cores BEFORE the shingle/signature
-    # passes: the sf0.1 documents parquet reads as 2 splits, so the
-    # md5-heavy signature stage otherwise runs on 2 of 32 cores (the
-    # text shuffle is trivial next to 8 md5 evaluations per shingle)
-    # exact-duplicate pre-collapse: identical texts are exact dups, not
-    # near dups — one representative per fingerprint group enters the
-    # pairwise stage (rationale + 100 TB analysis on collapse_exact_dups)
-    docs = collapse_exact_dups(docs)
-    # pin AFTER the collapse: the semi-join's output is a few MB of
-    # text, so AQE coalesces it to 1-4 partitions by bytes and the
-    # md5-per-shingle signature stage would serialize on those cores
-    # (measured 6.5 s → 32 s at the ×10 probe when the pin sat before
-    # the collapse)
-    docs = pin_parallelism(docs, "doc_id")
-    arrs, nbytes = checkpoint_arrs_with_bytes(shingle_arrays(docs))
-    cand = minhash_candidates(arrs)
-    # verify ONLY the LSH candidates (the point of LSH) — kernel shared
-    # with q_incremental_minhash, rationale on verify_candidates
-    return verify_candidates(arrs, cand, arr_bytes=nbytes)
+    # per-doc distinct shingle SETS are built map-side (array_distinct
+    # over the in-row 3-gram transform): signatures, both verify sides
+    # and sizes all derive from this one array column with zero
+    # shuffles before the bucket join
+    arrs, nbytes = _rep_arrays(exact_groups(docs)[1])
+    return verify_candidates(arrs, minhash_candidates(arrs), arr_bytes=nbytes)
 
 
 # --- SimHash --------------------------------------------------------------
@@ -1123,56 +1154,35 @@ def minhash_cluster_assignments(
     docs: DataFrame, obs: dict | None = None
 ) -> DataFrame:
     """The full collapse → LSH → CC → reattach rebuild over any
-    (doc_id, text) corpus — q_minhash_clusters' body, factored so
-    synthetic-corpus tests (and the incremental path's equivalence
-    pins) can run it directly.  ``obs``: optional dict receiving
-    ``n_pairs_scored`` (the candidate pairs the exact Jaccard verify
-    must score — the decade probe's intrinsic-work gauge, same
-    rationale as incremental_minhash_clusters' obs)."""
-    # (doc_id, rep_id) fingerprint map: checkpointed because it feeds
-    # the rep filter, the CC node list, AND the reattachment join — the
-    # md5 window must not run three times
-    rep_map = exact_rep_map(docs).localCheckpoint()
-    reps = docs.join(
-        rep_map.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    # pin AFTER the rep semi-join (q_minhash_lsh rationale: AQE would
-    # coalesce the few-MB join output and serialize the signature md5s)
-    reps = pin_parallelism(reps, "doc_id")
-    arrs, nbytes = checkpoint_arrs_with_bytes(shingle_arrays(reps))
-    # observed mode: the scored-pair gauge rides the verify plan as a
-    # CollectMetrics node (resolved below, after the CC loop's eager
-    # actions have executed it) — no extra candidate materialization
-    cand = observe_pairs(minhash_candidates(arrs), obs)
-    pairs = verify_candidates(arrs, cand, arr_bytes=nbytes)
-    edges1 = pairs.filter(
-        F.col("jaccard") >= MINHASH_CLUSTER_JACCARD
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    rep_nodes = rep_map.select(F.col("rep_id").alias("doc_id")).distinct()
-    cc = connected_components(rep_nodes, edges1, "doc_id")
+    (doc_id, text) corpus — q_minhash_clusters' body and the reference
+    the incremental paths are pinned equal to: :func:`lsh_seed_state`
+    over the whole corpus, then :func:`_reattach`.  ``obs``: optional
+    dict receiving ``n_pairs_scored`` (the candidate pairs the exact
+    Jaccard verify scores — the decade probe's intrinsic-work gauge)."""
+    digests, groups, _idx, _spill, labels = lsh_seed_state(docs, obs)
     resolve_pair_counts(obs)
-    out = rep_map.join(
-        cc.select(F.col("doc_id").alias("rep_id"), "cluster_id"), "rep_id"
-    )
-    return out.select(
-        "doc_id",
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id"))
-        .cast("int")
-        .alias("is_canonical"),
-    )
+    return _reattach(digests, groups, labels)
 
 
-# NOTE (r13): q_incremental_clusters and its n-gram inverted-index
-# pair source (jaccard_pairs_delta) were RETIRED per VERDICT r12
-# task #3: posting lists grow with the corpus, so the probe join's
-# work was O(corpus), not O(delta) — the measured scale-killer that
-# aborted the x100 attempt.  The scale-safe successor is
-# q_incremental_minhash_clusters (collapse + LSH pair source, scoped
-# cap fallback); its pytest corners and the hypothesis equivalence
-# property were folded into the successor's tests.
+def _reattach(
+    digests: DataFrame, groups: DataFrame, labels: DataFrame
+) -> DataFrame:
+    """(doc_id, cluster_id, is_canonical) for every doc in ``digests``:
+    each doc takes its fingerprint group's representative's cluster
+    label.  cluster_id is the min doc_id over the cluster's members
+    (each representative is already its group's min), canonical = the
+    cluster min itself."""
+    return (
+        digests.join(groups.select("fp", "rep_id"), "fp")
+        .join(labels, "rep_id")
+        .select(
+            "doc_id",
+            "cluster_id",
+            (F.col("doc_id") == F.col("cluster_id"))
+            .cast("int")
+            .alias("is_canonical"),
+        )
+    )
 
 
 # --- fuzzy matching (record linkage) --------------------------------------
@@ -1610,45 +1620,12 @@ INCREMENTAL_MINHASH_SQL = f"""
 """
 
 
-def minhash_index(arrs: DataFrame) -> DataFrame:
-    """The capped corpus LSH signature index (identical construction to
-    q_minhash_lsh / the oracle's __mhc): checkpointed because every
-    consumer joins it at least twice, and the md5-per-shingle signature
-    pass must not run twice.  At 100 TB this is the STORED table an
-    ingest tier maintains, bucketed by (seed, minhash)."""
-    return minhash_index_with_spill(arrs)[0]
-
-
-def minhash_index_with_spill(arrs: DataFrame) -> tuple:
-    """:func:`minhash_index` PLUS its SPILL side table — the signature
-    rows the occupancy cap evicted at build time (``__bn >
-    MINHASH_BUCKET_CAP``).  The spill is persistent ingest-tier state
-    (tiny: only degenerate buckets overflow) kept because a later
-    exact-duplicate ingest can RELABEL a spilled row to a smaller
-    doc_id and make it re-enter the cap; without the spill the
-    maintained index silently diverges from the rebuild in exactly
-    that corner (the r13 eviction-only guard's blind spot, ADVICE
-    r13).  Returns (idx, spill); the shared ranked table is
-    checkpointed, both outputs are cheap filters over it."""
-    w_bucket = Window.partitionBy("seed", "minhash").orderBy("doc_id")
-    ranked = (
-        minhash_signatures(arrs)
-        .withColumn("__bn", F.row_number().over(w_bucket))
-        .localCheckpoint()
-    )
-    idx = ranked.filter(F.col("__bn") <= MINHASH_BUCKET_CAP).drop("__bn")
-    spill = ranked.filter(F.col("__bn") > MINHASH_BUCKET_CAP).drop("__bn")
-    return idx, spill
-
-
 def observe_pairs(cand: DataFrame, obs: dict | None) -> DataFrame:
     """Attach a CollectMetrics pair counter that RIDES the candidate
     stream's own execution — zero extra actions, zero checkpoint
-    footprint.  (The previous localCheckpoint+count gauge inflated
-    observed-mode walls and its storage footprint of the ~760 M-row
-    ×100 rebuild candidate stream died of lost checkpoint blocks —
-    VERDICT r13 task #2 / ADVICE r13.)  The count lands in
-    ``obs['n_pairs_scored']`` when :func:`resolve_pair_counts` runs
+    footprint (a checkpoint+count gauge of the ~760 M-row ×100 rebuild
+    candidate stream died of lost checkpoint blocks).  The count lands
+    in ``obs['n_pairs_scored']`` when :func:`resolve_pair_counts` runs
     after the plan has executed."""
     if obs is None:
         return cand
@@ -1695,64 +1672,8 @@ def q_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents")
     docs = pin_parallelism(docs, "doc_id")
     arrs, nbytes = checkpoint_arrs_with_bytes(shingle_arrays(docs))
-    idx = minhash_index(arrs)
-    # hot-bucket partner-chunk fan-out (the c212285 batch fix applied to
-    # the PROBE join — r11's skew probe showed one task carrying 4.4 s
-    # of the cell's 12.3 s wall): index members of a hot (seed, minhash)
-    # bucket carry chunk ck = (rank-1) % CHUNKS; the delta probe side
-    # fans out over ALL chunks, so a pair (d, i) meets exactly once —
-    # in i's chunk — and one mega-bucket's |delta ∩ bucket| × cap work
-    # spreads over CHUNKS shuffle subkeys instead of one task.  Only
-    # hot-bucket PROBE rows replicate ×CHUNKS; the index side never
-    # does.  Emitted pairs are identical to the unchunked join (the
-    # oracle keeps the plain form).
-    w_bucket = Window.partitionBy("seed", "minhash").orderBy("doc_id")
-    w_size = Window.partitionBy("seed", "minhash")
-    hot = F.col("__sz") > INCREMENTAL_CHUNK_MIN
-    sig = (
-        idx.withColumn("__bn", F.row_number().over(w_bucket))
-        .withColumn("__sz", F.count(F.lit(1)).over(w_size))
-        .select(
-            "doc_id",
-            "seed",
-            "minhash",
-            F.when(hot, (F.col("__bn") - 1) % MINHASH_CHUNKS)
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("__ck"),
-            F.when(hot, F.sequence(F.lit(0), F.lit(MINHASH_CHUNKS - 1)))
-            .otherwise(F.array(F.lit(0)))
-            .alias("__fan"),
-        )
-    )
-    delta = sig.filter(F.col("doc_id") % 10 == 7).select(
-        F.col("doc_id").alias("d_id"),
-        "seed",
-        "minhash",
-        F.explode("__fan").alias("__ck"),
-    )
-    # probe join: a pair qualifies iff at least one endpoint is in the
-    # delta, and whichever endpoint that is finds the pair (both-delta
-    # pairs are found twice and collapsed by the keyed dedup).  The
-    # explicit width-n repartition is the q_minhash_lsh discipline: the
-    # pair rows are two longs, and AQE's byte-based coalescing would
-    # otherwise collapse the dedup + verify to a handful of tasks.
-    n = spark.sparkContext.defaultParallelism
-    cand = (
-        delta.join(
-            sig.select(
-                F.col("doc_id").alias("i_id"), "seed", "minhash", "__ck"
-            ),
-            ["seed", "minhash", "__ck"],
-        )
-        .filter(F.col("i_id") != F.col("d_id"))
-        .select(
-            F.least("d_id", "i_id").alias("doc_a"),
-            F.greatest("d_id", "i_id").alias("doc_b"),
-        )
-        .repartition(n, "doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    delta = arrs.select("doc_id").filter(F.col("doc_id") % 10 == 7)
+    cand = _chunked_probe_pairs(_ranked_index(arrs), delta)
     return verify_candidates(arrs, cand, arr_bytes=nbytes)
 
 
@@ -1762,13 +1683,7 @@ def lsh_index_upsert(base_idx: DataFrame, delta_sig: DataFrame) -> DataFrame:
     base-survivors + delta.  Equivalent to a full rebuild because the
     cap's survivor rule (lowest doc_ids) is monotone; see
     q_lsh_index_upsert."""
-    w_bucket = Window.partitionBy("seed", "minhash").orderBy("doc_id")
-    return (
-        base_idx.unionByName(delta_sig)
-        .withColumn("__bn", F.row_number().over(w_bucket))
-        .filter(F.col("__bn") <= MINHASH_BUCKET_CAP)
-        .drop("__bn")
-    )
+    return _split_index(_rank_buckets(base_idx.unionByName(delta_sig)))[0]
 
 
 @register(
@@ -1827,19 +1742,20 @@ def q_lsh_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "edges touching novel reps feed contract-and-expand CC over the "
     "stored base clustering; members reattach through the fingerprint "
     "map. ORACLE = the full rebuild (q_minhash_clusters' SQL). "
-    "Exactness (r14): the maintained index is provably ≡ the "
+    "Exactness: the maintained index is provably ≡ the "
     "rebuild's — the cap's SPILL rows are stored state, and a "
-    "relabeled spill row re-enters the re-cap (the r13 eviction-only "
-    "guard's blind corner: a base-build-evicted rep relabeled to a "
-    "smaller delta id) and probes alongside novels; the only "
+    "relabeled spill row re-enters the re-cap (a base-build-evicted "
+    "rep relabeled to a smaller delta id) and probes alongside "
+    "novels; the only "
     "remaining divergence channel is a STORED row losing its bucket "
     "seat, which takes the SCOPED recluster — only the fast-path "
     "components containing an evicted doc are re-derived from the "
     "capped index's own candidate pairs (rebuild edges ⊆ fast-path "
     "scored edges, so no rebuild component crosses that boundary), "
-    "every other cluster keeps its label unrecomputed. The per-ingest "
-    "step is lsh_maintenance_step — the SAME kernel the streaming "
-    "twin commits per micro-batch.",
+    "every other cluster keeps its label unrecomputed. The stored "
+    "state is lsh_seed_state (the same rebuild q_minhash_clusters "
+    "runs) and the per-ingest step is lsh_maintenance_step — the SAME "
+    "kernel the streaming twin commits per micro-batch.",
 )
 def q_incremental_minhash_clusters(
     spark: SparkSession, sf_dir: str
@@ -1851,191 +1767,93 @@ def q_incremental_minhash_clusters(
 def incremental_minhash_clusters(docs: DataFrame, obs: dict | None = None) -> DataFrame:
     """See q_incremental_minhash_clusters.  Factored so tests can pin
     the rep-churn / bridge / cap-binding corners on synthetic corpora.
-    The delta is doc_id % 10 == 7 (the repo's simulated-ingest split).
-
-    Builds the STORED pre-ingest state from the base corpus in the
-    production shape — digests (doc_id, fp), group texts (fp, rep_id,
-    text), capped index + SPILL side table, labels — then applies ONE
-    :func:`lsh_maintenance_step` (the same kernel the streaming twin
-    runs per micro-batch) and reattaches members through the
-    fingerprint map.
+    The delta is doc_id % 10 == 7 (the repo's simulated-ingest split):
+    :func:`lsh_seed_state` builds the stored state from the base, ONE
+    :func:`lsh_maintenance_step` (the kernel the streaming twin runs per
+    micro-batch) ingests the delta, and :func:`_reattach` assigns every
+    doc.
 
     ``obs``: optional dict; when a cap-binding ingest takes the SCOPED
     recluster path, receives ``n_evicted`` / ``n_scope_reps`` /
     ``n_total_reps`` row counts so tests can prove untouched clusters'
-    labels were never recomputed (n_scope_reps < n_total_reps while the
-    output still equals the full rebuild).  It also always receives
-    ``n_pairs_scored`` — the number of candidate pairs the exact
-    Jaccard verify must score (stored-state construction + delta probe
-    + any scoped recluster): the decade probe's intrinsic-WORK gauge,
-    since the cluster-assignment OUTPUT is one row per doc while the
-    replica corpus's k-cliques grow the pair workload ~k² by
-    construction.  The counts ride the timed run as CollectMetrics
-    observations (observe_pairs), never extra materializations."""
+    labels were never recomputed.  It also always receives
+    ``n_pairs_scored`` — the candidate pairs the exact Jaccard verify
+    scores (seed + delta probe + any scoped recluster), the decade
+    probe's intrinsic-work gauge; the counts ride the run as
+    CollectMetrics observations (:func:`observe_pairs`)."""
     is_delta = F.col("doc_id") % 10 == 7
-    corpus = docs.select(
+    state = lsh_seed_state(docs.filter(~is_delta), obs)
+    batch = docs.filter(is_delta).select(
         "doc_id", fingerprint_col().alias("fp"), "text"
     )
-
-    # --- STORED pre-ingest state (read back from storage in production)
-    digests0, groups0, idx0, spill0, lab0, base_arrs = lsh_seed_state(
-        docs.filter(~is_delta), obs
-    )
-
-    # --- the ingest: ONE shared maintenance step, then reattachment.
-    # The construction's rep arrays ride along so the verify relabels
-    # ids instead of re-shingling (arrays are text-keyed)
     digests2, groups2, _idx2, _spill2, labels2 = lsh_maintenance_step(
-        digests0, groups0, idx0, spill0, lab0, corpus.filter(is_delta),
-        obs, rep_arrs=base_arrs,
+        *state, batch, obs
     )
-    return (
-        digests2.join(groups2.select("fp", "rep_id"), "fp")
-        .join(labels2, "rep_id")
-        .select(
-            "doc_id",
-            "cluster_id",
-            (F.col("doc_id") == F.col("cluster_id"))
-            .cast("int")
-            .alias("is_canonical"),
-        )
-    )
+    return _reattach(digests2, groups2, labels2)
 
 
 def lsh_seed_state(base_docs: DataFrame, obs: dict | None = None) -> tuple:
-    """The STORED pre-ingest LSH maintenance state derived from a
-    (doc_id, text) base corpus — digests, group texts, capped index +
-    SPILL side table, rep labels — shared by the batch query's
-    stored-state section, the streaming twin's seed commit, and the
-    crash-replay test.  Returns (digests, groups, idx, spill, labels,
-    rep_arrs) — the last being the reps' checkpointed shingle arrays,
-    which the batch kernel step reuses for verify (text-keyed, so a
-    relabel is an id substitution); ``obs`` threads the scored-pair
-    gauge through the base candidate pass (resolved later by the
-    caller's kernel step)."""
-    base = base_docs.select("doc_id", fingerprint_col().alias("fp"), "text")
-    digests0 = base.select("doc_id", "fp").localCheckpoint()
-    gmin0 = base.groupBy("fp").agg(F.min("doc_id").alias("rep_id"))
-    groups0 = (
-        base.join(gmin0, "fp")
-        .filter(F.col("doc_id") == F.col("rep_id"))
-        .select("fp", "rep_id", "text")
-        .localCheckpoint()
-    )
-    base_arrs, base_bytes = checkpoint_arrs_with_bytes(
-        shingle_arrays(
-            pin_parallelism(
-                groups0.select(F.col("rep_id").alias("doc_id"), "text"),
-                "doc_id",
-            )
-        )
-    )
-    idx0, spill0 = minhash_index_with_spill(base_arrs)
-    base_edges = (
-        verify_candidates(
-            base_arrs,
-            observe_pairs(minhash_candidates(base_arrs), obs),
-            arr_bytes=base_bytes,
-        )
+    """The one LSH rebuild: the five state tables of a (doc_id, text)
+    corpus, ``(digests, groups, idx, spill, labels)``, in the shapes
+    :func:`lsh_maintenance_step` documents.  Chain: :func:`exact_groups`
+    → representative shingle arrays → the checkpointed ranked index
+    (:func:`_ranked_index`, split into idx and spill) →
+    :func:`_chunked_self_pairs` over that same table → verify → Jaccard
+    ≥ :data:`MINHASH_CLUSTER_JACCARD` edges →
+    :func:`connected_components` over the representatives.  The md5
+    signature pass runs once: the candidates come from the index this
+    function checkpoints and returns.
+
+    Invariant the maintenance step's induction starts from: ``idx ∪
+    spill`` is exactly the signatures of the group representatives and
+    ``idx`` holds each bucket's :data:`MINHASH_BUCKET_CAP` lowest
+    doc_ids.  ``obs`` threads the scored-pair gauge through the
+    candidate stream; the caller resolves it
+    (:func:`resolve_pair_counts`)."""
+    digests, groups = exact_groups(base_docs)
+    digests = digests.localCheckpoint()
+    groups = groups.localCheckpoint()
+    arrs, nbytes = _rep_arrays(groups)
+    ranked = _ranked_index(arrs)
+    idx, spill = _split_index(ranked)
+    cand = observe_pairs(_chunked_self_pairs(ranked), obs)
+    edges = (
+        verify_candidates(arrs, cand, arr_bytes=nbytes)
         .filter(F.col("jaccard") >= MINHASH_CLUSTER_JACCARD)
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
-    lab0 = connected_components(
-        groups0.select(F.col("rep_id").alias("doc_id")), base_edges, "doc_id"
+    labels = connected_components(
+        groups.select(F.col("rep_id").alias("doc_id")), edges, "doc_id"
     ).select(F.col("doc_id").alias("rep_id"), "cluster_id")
-    return digests0, groups0, idx0, spill0, lab0, base_arrs
+    return digests, groups, idx, spill, labels
 
 
-def _chunk_annotated(idx: DataFrame, chunk_min: int) -> DataFrame:
-    """Annotate capped-index rows with the hot-bucket partner-chunk
-    columns (__ck = member's chunk, __fan = chunks to fan out over) —
-    the q_minhash_lsh / q_incremental_minhash skew discipline, factored
-    so the maintenance kernel's joins can reuse it."""
-    w_bucket = Window.partitionBy("seed", "minhash").orderBy("doc_id")
-    w_size = Window.partitionBy("seed", "minhash")
-    hot = F.col("__sz") > chunk_min
-    return (
-        idx.withColumn("__bn", F.row_number().over(w_bucket))
-        .withColumn("__sz", F.count(F.lit(1)).over(w_size))
-        .select(
-            "doc_id",
-            "seed",
-            "minhash",
-            F.when(hot, (F.col("__bn") - 1) % MINHASH_CHUNKS)
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("__ck"),
-            F.when(hot, F.sequence(F.lit(0), F.lit(MINHASH_CHUNKS - 1)))
-            .otherwise(F.array(F.lit(0)))
-            .alias("__fan"),
-        )
-    )
-
-
-def _chunked_probe_pairs(
-    idx: DataFrame, probe_ids: DataFrame, n: int
+def _verified_edges(
+    groups: DataFrame, cand: DataFrame, obs: dict | None
 ) -> DataFrame:
-    """(doc_a < doc_b) candidate pairs from PROBE docs against a capped
-    index with hot-bucket partner-chunk fan-out: the index member keeps
-    its chunk, the probe row fans out over all chunks, so a pair meets
-    exactly once (in the member's chunk; both-probe pairs meet twice
-    and collapse in the keyed dedup) and one near-cap bucket's
-    |probe ∩ bucket| × cap work spreads over CHUNKS shuffle subkeys
-    instead of one task.  Emitted pairs are IDENTICAL to the plain
-    join (the oracle keeps the plain form).  The r13 kernel had no
-    chunking here — the ×100 replica corpus's near-cap clique buckets
-    were the decade cell's reduce tail."""
-    sig = _chunk_annotated(idx, INCREMENTAL_CHUNK_MIN)
-    delta = sig.join(probe_ids, "doc_id", "left_semi").select(
-        F.col("doc_id").alias("d_id"),
-        "seed",
-        "minhash",
-        F.explode("__fan").alias("__ck"),
+    """Verified Jaccard ≥ :data:`MINHASH_CLUSTER_JACCARD` edges (src <
+    dst) among candidate pairs of representatives, shingling only the
+    candidates' endpoints from the group texts — the maintenance step's
+    one verify path (its state stores texts, not arrays).  The
+    checkpoint after the pair gauge lets the endpoint roster and the
+    verify read one materialization."""
+    cand = observe_pairs(cand, obs).localCheckpoint()
+    need = (
+        cand.select(F.col("doc_a").alias("doc_id"))
+        .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+    )
+    arrs, nbytes = checkpoint_arrs_with_bytes(
+        shingle_arrays(
+            groups.select(F.col("rep_id").alias("doc_id"), "text").join(
+                need, "doc_id", "left_semi"
+            )
+        )
     )
     return (
-        delta.join(
-            sig.select(
-                F.col("doc_id").alias("i_id"), "seed", "minhash", "__ck"
-            ),
-            ["seed", "minhash", "__ck"],
-        )
-        .filter(F.col("i_id") != F.col("d_id"))
-        .select(
-            F.least("d_id", "i_id").alias("doc_a"),
-            F.greatest("d_id", "i_id").alias("doc_b"),
-        )
-        .repartition(n, "doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-
-def _chunked_self_pairs(idx: DataFrame, n: int) -> DataFrame:
-    """(doc_a < doc_b) pairs from a capped-index SELF-join with
-    minhash_candidates' chunk fan-out (a-side fans over the partner
-    chunk, b-side over its own — pair (i, j) meets once in cell
-    (ck_i, ck_j)); one mega-bucket's C(cap, 2) cartesian spreads over
-    CHUNKS² shuffle cells.  Pairs identical to the plain join."""
-    sig = _chunk_annotated(idx, MINHASH_CHUNK_MIN)
-    a = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        "seed",
-        "minhash",
-        F.col("__ck").alias("__ca"),
-        F.explode("__fan").alias("__cb"),
-    )
-    b = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        "seed",
-        "minhash",
-        F.explode("__fan").alias("__ca"),
-        F.col("__ck").alias("__cb"),
-    )
-    return (
-        a.join(b, ["seed", "minhash", "__ca", "__cb"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .repartition(n, "doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
+        verify_candidates(arrs, cand, arr_bytes=nbytes)
+        .filter(F.col("jaccard") >= MINHASH_CLUSTER_JACCARD)
+        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
 
 
@@ -2047,13 +1865,12 @@ def lsh_maintenance_step(
     labels: DataFrame,
     batch: DataFrame,
     obs: dict | None = None,
-    rep_arrs: DataFrame | None = None,
 ) -> tuple:
-    """One ingest step of LSH cluster maintenance — THE shared patch
-    kernel behind q_incremental_minhash_clusters and its streaming twin
-    (factored per ADVICE r13 so a correctness fix lands exactly once).
+    """One ingest step of LSH cluster maintenance — the shared patch
+    kernel behind q_incremental_minhash_clusters and its streaming twin.
 
-    Stored state (parquet tables in production):
+    Stored state (parquet tables in production; :func:`lsh_seed_state`
+    builds the first one):
       digests (doc_id, fp)            — every doc applied so far
       groups  (fp, rep_id, text)      — one row per exact-dup group
       idx     (doc_id, seed, minhash) — capped LSH index over reps
@@ -2066,35 +1883,25 @@ def lsh_maintenance_step(
     (pure label substitution — signatures are text-keyed, zero
     signature work); only NOVEL texts are signed; the re-cap ranks
     relabeled stored rows ∪ RE-ENTRANT rows (relabeled spill rows) ∪
-    novel signatures.  That makes the maintained index EXACTLY the
-    rebuild's, by induction: relabels only decrease doc_ids, so a
-    non-relabeled spilled row can never rise back into the cap (every
-    row ranked above it stays above it), while a relabeled one can —
-    the r13 eviction-only guard missed exactly that corner (a
-    base-build-evicted rep relabeled to a smaller delta id: the
-    rebuild's bucket gains a row the fast path never saw, no eviction
-    fired, output silently diverged — ADVICE r13 high).  Novel and
-    re-entrant docs probe the index; verified Jaccard edges
-    contract-and-expand through the stored labels; and because the
-    index now matches the rebuild's, the only way an already-scored
-    edge can differ is a STORED row losing its bucket seat — the
-    SCOPED recluster (r13) re-derives just the fast-path components
-    containing an evicted doc from the capped index's own candidate
-    pairs (rebuild edges ⊆ fast-path scored edges, so no rebuild
-    component crosses that boundary); every other cluster keeps its
-    label unrecomputed.
+    novel signatures.
+
+    Invariant, by induction from the seed: ``idx ∪ spill`` is exactly
+    the signature set of the current representatives and ``idx`` is the
+    rebuild's capped index.  Relabels only decrease doc_ids, so a
+    non-relabeled spilled row can never rise back into the cap, while a
+    relabeled one can and re-enters.  Novel and re-entrant docs probe
+    the index (:func:`_chunked_probe_pairs`); verified edges
+    contract-and-expand through the stored labels.  Because the index
+    matches the rebuild's, an already-scored edge can differ only when
+    a STORED row loses its bucket seat — the SCOPED recluster re-derives
+    just the components containing an evicted doc from the capped
+    index's own self-pairs (rebuild edges ⊆ fast-path scored edges, so
+    no rebuild component crosses that boundary); every other cluster
+    keeps its label unrecomputed.
 
     ``obs``: optional dict — scored-pair CollectMetrics gauges
     (resolved at exit) plus the scoped-path n_evicted / n_scope_reps /
     n_total_reps counts.
-
-    ``rep_arrs``: optional (doc_id, shs) shingle-array table for every
-    CURRENT (pre-relabel) rep.  When supplied (the batch query reuses
-    the arrays its stored-state construction already materialized),
-    verify arrays come from a broadcast id relabel of this table ∪ the
-    novel arrays — zero re-shingling and zero candidate
-    materialization.  When absent (the streaming twin stores TEXTS,
-    not arrays), endpoints are shingled on demand from ``groups``.
 
     Returns (digests2, groups2, idx2, spill2, labels2)."""
     bnew = batch.join(
@@ -2154,37 +1961,13 @@ def lsh_maintenance_step(
         "doc_id", "seed", "minhash"
     )
     novel_arrs = shingle_arrays(novel_texts.select("doc_id", "text"))
-    if rep_arrs is not None:
-        # verify arrays for EVERY possible candidate endpoint with zero
-        # re-shingling: arrays are text-keyed, so a relabel is the same
-        # broadcast id substitution the index rows get; novel arrays
-        # are the only fresh shingling this ingest pays
-        novel_arrs = novel_arrs.localCheckpoint()
-        # checkpointed: the verify consumes this table twice per call
-        # (both join sides, r15 broadcast verify) and the scoped
-        # recluster may verify again — one materialization beats
-        # re-running the relabel union per consumer.  The size gate's
-        # stats ride the checkpoint job (r16): both verify calls share
-        # the one measurement instead of re-scanning varrs each
-        varrs, varrs_bytes = checkpoint_arrs_with_bytes(
-            rep_arrs.join(
-                F.broadcast(relabel), rep_arrs.doc_id == relabel.old, "left"
-            )
-            .select(F.coalesce("new", "doc_id").alias("doc_id"), "shs")
-            .unionByName(novel_arrs)
-        )
     novel_sig = minhash_signatures(novel_arrs)
-    w_bucket = Window.partitionBy("seed", "minhash").orderBy("doc_id")
-    ranked = (
+    ranked = _rank_buckets(
         idx_rel.withColumn("__src", F.lit("stored"))
         .unionByName(reent.withColumn("__src", F.lit("reent")))
         .unionByName(novel_sig.withColumn("__src", F.lit("novel")))
-        .withColumn("__bn", F.row_number().over(w_bucket))
-        .localCheckpoint()
-    )
-    idx2 = ranked.filter(F.col("__bn") <= MINHASH_BUCKET_CAP).drop(
-        "__bn", "__src"
-    )
+    ).localCheckpoint()
+    idx2, overflow = _split_index(ranked)
     # the exactness guard: a STORED row pushed beyond the cap is the
     # only way an already-scored edge can lose its bucket support (a
     # re-entrant or novel row beyond the cap is equally absent from
@@ -2202,50 +1985,18 @@ def lsh_maintenance_step(
     # re-cap (disjoint by construction); idx2 ∪ spill2 stays the
     # COMPLETE uncapped signature set over groups2's reps — the
     # induction invariant that makes idx2 ≡ the rebuild's index
-    spill2 = spill_kept.unionByName(
-        ranked.filter(F.col("__bn") > MINHASH_BUCKET_CAP).select(
-            "doc_id", "seed", "minhash"
-        )
-    )
+    spill2 = spill_kept.unionByName(overflow)
 
     # delta-touching candidates: novel AND re-entrant docs probe the
-    # maintained index (q_incremental_minhash kernel; width-pinned
-    # pair dedup).  Re-entrant pairs are exactly the edges the rebuild
-    # gains when a spilled row re-enters — the r13 guard's blind spot.
+    # maintained index.  Re-entrant pairs are exactly the edges the
+    # rebuild gains when a spilled row re-enters.
     probe_ids = (
         novel_texts.select("doc_id")
         .unionByName(reent.select("doc_id"))
         .distinct()
     )
-    n = batch.sparkSession.sparkContext.defaultParallelism
-    cand = _chunked_probe_pairs(idx2, probe_ids, n)
-    if rep_arrs is not None:
-        # single consumer: the pair gauge rides the verify execution,
-        # no candidate materialization at all
-        new_edges = verify_candidates(
-            varrs, observe_pairs(cand, obs), arr_bytes=varrs_bytes
-        )
-    else:
-        # storage-light mode (the streaming twin keeps TEXTS, not
-        # arrays, as state): shingle only candidate endpoints — the
-        # checkpoint AFTER the gauge lets the endpoint roster and the
-        # verify read the same materialization without recounting
-        cand = observe_pairs(cand, obs).localCheckpoint()
-        need = (
-            cand.select(F.col("doc_a").alias("doc_id"))
-            .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        varrs_d, vd_bytes = checkpoint_arrs_with_bytes(
-            shingle_arrays(
-                groups2.select(F.col("rep_id").alias("doc_id"), "text").join(
-                    need, "doc_id", "left_semi"
-                )
-            )
-        )
-        new_edges = verify_candidates(varrs_d, cand, arr_bytes=vd_bytes)
-    new_edges = new_edges.filter(
-        F.col("jaccard") >= MINHASH_CLUSTER_JACCARD
+    new_edges = _verified_edges(
+        groups2, _chunked_probe_pairs(ranked, probe_ids), obs
     )
 
     # contract-and-expand in MERGED rep id space: relabel stored label
@@ -2258,17 +2009,17 @@ def lsh_maintenance_step(
     nlab = bl.groupBy("cluster_id").agg(F.min("rid").alias("label"))
     old_lab = bl.join(nlab, "cluster_id").select("rid", "label")
     lab_a = old_lab.select(
-        F.col("rid").alias("doc_a"), F.col("label").alias("la")
+        F.col("rid").alias("src"), F.col("label").alias("la")
     )
     lab_b = old_lab.select(
-        F.col("rid").alias("doc_b"), F.col("label").alias("lb")
+        F.col("rid").alias("dst"), F.col("label").alias("lb")
     )
     contracted = (
-        new_edges.join(lab_a, "doc_a", "left")
-        .join(lab_b, "doc_b", "left")
+        new_edges.join(lab_a, "src", "left")
+        .join(lab_b, "dst", "left")
         .select(
-            F.coalesce("la", F.col("doc_a")).alias("u"),
-            F.coalesce("lb", F.col("doc_b")).alias("v"),
+            F.coalesce("la", F.col("src")).alias("u"),
+            F.coalesce("lb", F.col("dst")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .select(
@@ -2302,7 +2053,7 @@ def lsh_maintenance_step(
         .localCheckpoint()
     )
 
-    # SCOPED exactness fallback (r12 task #2, r13 scoping): with idx2
+    # SCOPED exactness fallback: with idx2
     # provably equal to the rebuild's index, evictions can only DROP
     # stored edges vs the rebuild, so the rebuild's edge set is a
     # SUBSET of the fast path's scored set — every rebuild component
@@ -2327,32 +2078,12 @@ def lsh_maintenance_step(
             .select(F.col("rep_id").alias("doc_id"))
             .localCheckpoint()
         )
-        scope_idx = idx2.join(scope_reps, "doc_id", "left_semi")
-        scope_cand = _chunked_self_pairs(scope_idx, n)
-        if rep_arrs is not None:
-            scope_edges = verify_candidates(
-                varrs, observe_pairs(scope_cand, obs), arr_bytes=varrs_bytes
-            )
-        else:
-            scope_cand = observe_pairs(scope_cand, obs).localCheckpoint()
-            s_need = (
-                scope_cand.select(F.col("doc_a").alias("doc_id"))
-                .unionAll(scope_cand.select(F.col("doc_b").alias("doc_id")))
-                .distinct()
-            )
-            s_arrs, s_bytes = checkpoint_arrs_with_bytes(
-                shingle_arrays(
-                    groups2.select(F.col("rep_id").alias("doc_id"), "text")
-                    .join(s_need, "doc_id", "left_semi")
-                )
-            )
-            scope_edges = verify_candidates(
-                s_arrs, scope_cand, arr_bytes=s_bytes
-            )
-        scope_edges = (
-            scope_edges
-            .filter(F.col("jaccard") >= MINHASH_CLUSTER_JACCARD)
-            .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        scope_edges = _verified_edges(
+            groups2,
+            _chunked_self_pairs(
+                ranked.join(scope_reps, "doc_id", "left_semi")
+            ),
+            obs,
         )
         scope_cc = connected_components(
             scope_reps, scope_edges, "doc_id"

@@ -1445,6 +1445,7 @@ def incremental_minhash_clusters_stream(
     import tempfile
 
     from .llm_ops.dedup import (
+        _reattach,
         fingerprint_col,
         lsh_maintenance_step,
         lsh_seed_state,
@@ -1456,9 +1457,7 @@ def incremental_minhash_clusters_stream(
         store = StateStore(f"{root}/state")
         # --- seed stored state from the base corpus (the batch
         # kernel's stored-state section, executed once; commit 0)
-        digests0, groups0, idx0, spill0, lab0, _arrs0 = lsh_seed_state(
-            base_docs
-        )
+        digests0, groups0, idx0, spill0, lab0 = lsh_seed_state(base_docs)
         store.commit(
             0,
             replace={
@@ -1514,21 +1513,11 @@ def incremental_minhash_clusters_stream(
         )
         q.awaitTermination()
 
-        digests = store.read(spark, "digests")
-        groups = store.read(spark, "groups")
-        lab = store.read(spark, "labels")
-        return (
-            digests.join(groups.select("fp", "rep_id"), "fp")
-            .join(lab, "rep_id")
-            .select(
-                "doc_id",
-                "cluster_id",
-                (F.col("doc_id") == F.col("cluster_id"))
-                .cast("int")
-                .alias("is_canonical"),
-            )
-            .localCheckpoint()
-        )
+        return _reattach(
+            store.read(spark, "digests"),
+            store.read(spark, "groups"),
+            store.read(spark, "labels"),
+        ).localCheckpoint()
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

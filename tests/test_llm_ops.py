@@ -493,14 +493,17 @@ def test_verify_candidates_broadcast_and_shuffle_forms_agree(spark):
     # the pinned-width shuffle-hash a-side; the fallback took neither
     assert "BroadcastHashJoin" in raw and "ShuffledHashJoin" in raw
     assert "ShuffledHashJoin" not in raw_s
+    # any other pinned form is an error, not a silent shuffle fallback
+    with pytest.raises(ValueError, match="force_form"):
+        dedup.verify_candidates(arrs, cand, force_form="bcast")
 
 
-def test_bucket_set_pairs_equal_plain_bucket_self_join(spark, monkeypatch):
-    """The r16 bucket-SET candidate kernel must emit EXACTLY the plain
-    bucket self-join's pairs — including when the occupancy cap binds
-    (survivors = lowest doc_ids) and when identical member sets repeat
-    across seeds (the clique shape whose duplicate pre-dedup pairs the
-    set form exists to collapse)."""
+def test_minhash_candidates_match_plain_capped_self_join(spark, monkeypatch):
+    """minhash_candidates — the chunked self-pair kernel over the capped
+    index, the only self-pair kernel in the LSH chain — must emit EXACTLY
+    the plain capped bucket self-join's pairs (the DuckDB oracles' form),
+    including when the occupancy cap binds (survivors = lowest doc_ids)
+    and when identical member sets repeat across seeds."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 

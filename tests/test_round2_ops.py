@@ -488,6 +488,56 @@ def test_incremental_minhash_clusters_spill_reentry(spark, monkeypatch):
     assert obs["n_total_reps"] == 5       # reps {7, 10, 20, 60, 62}
 
 
+def test_lsh_seed_state_index_and_spill_split_rep_signatures(
+    spark, monkeypatch
+):
+    """The invariant lsh_maintenance_step's induction starts from, with
+    the occupancy cap at 2: the seed's idx ∪ spill is exactly
+    minhash_signatures over the group representatives (disjoint), and
+    idx holds exactly each (seed, minhash) bucket's lowest-cap doc_ids."""
+    from collections import defaultdict
+
+    from end_to_end_datapipeline_project_spark.llm_ops import dedup
+
+    monkeypatch.setattr(dedup, "MINHASH_BUCKET_CAP", 2)
+    x = "g1 g2 g3 g1 g2 g3"  # shingle set {3 rotations} — one bucket
+    rows = [
+        (10, x),                           # bucket {10, 20, 30} in
+        (20, x + " g1"),                   #   every seed: cap 2 keeps
+        (30, x + " g1 g2"),                #   {10, 20}, 30 spills
+        (40, x),                           # exact dup of 10: not a rep
+        (50, "p1 p2 p3 p4 p5 p6 p7 p8"),
+        (60, "p1 p2 p3 p4 p5 p6 p7 p8 p9"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    _d, groups, idx, spill, _l = dedup.lsh_seed_state(docs)
+
+    reps = groups.select(F.col("rep_id").alias("doc_id"), "text")
+    want = sorted(
+        map(
+            tuple,
+            dedup.minhash_signatures(dedup.shingle_arrays(reps)).collect(),
+        )
+    )
+    got_idx = sorted(map(tuple, idx.collect()))
+    got_spill = sorted(map(tuple, spill.collect()))
+    assert sorted(got_idx + got_spill) == want
+    assert not set(got_idx) & set(got_spill)
+
+    buckets = defaultdict(list)
+    for doc_id, seed, minhash in want:
+        buckets[(seed, minhash)].append(doc_id)
+    lowest = sorted(
+        (doc_id, seed, minhash)
+        for (seed, minhash), ids in buckets.items()
+        for doc_id in sorted(ids)[: dedup.MINHASH_BUCKET_CAP]
+    )
+    assert got_idx == lowest
+    # the cap bound where the corpus says it must, and only there
+    assert {r[0] for r in got_spill} == {30}
+    assert 40 not in {r[0] for r in want}
+
+
 def test_minhash_recall_monotone(spark, sf_dir):
     from end_to_end_datapipeline_project_spark.llm_ops.dedup import (
         q_minhash_recall,

@@ -152,7 +152,7 @@ def test_lsh_ingest_crash_between_writes_replays_to_batch(
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
 
     store = StateStore(str(tmp_path / "state"))
-    d0, g0, i0, s0, l0, _a0 = dedup.lsh_seed_state(mk(base_rows))
+    d0, g0, i0, s0, l0 = dedup.lsh_seed_state(mk(base_rows))
     store.commit(
         0,
         replace={"groups": g0, "index": i0, "spill": s0, "labels": l0},

@@ -111,10 +111,9 @@ def _mc_observed(spark, sf_dir, obs):
     df = minhash_cluster_assignments(
         read_parquet_table(spark, sf_dir, "documents"), work
     )
-    # r14: the count is a CollectMetrics node on the verify plan,
-    # resolved by the CC loop's own actions inside the call — observed
-    # mode no longer localCheckpoints the candidate stream (that
-    # footprint killed the r13 ×100 attempt)
+    # the count is a CollectMetrics node on the seed's verify plan,
+    # resolved inside the call once the CC loop's own actions have run
+    # it — observed mode never materializes the candidate stream
     spark.range(1).observe(
         obs, F.max(F.lit(work["n_pairs_scored"])).alias("work_rows")
     ).collect()
@@ -1308,7 +1307,7 @@ def _lsh_ingest_probe(spark, k: int) -> None:
         "",
         f"`python tools/scale_probe.py {k} --lsh-ingest` — stored "
         "pre-ingest state (digests, group texts, capped index + spill, "
-        "labels, rep shingle arrays) seeded UNTIMED from the base "
+        "labels) seeded UNTIMED from the base "
         "corpus (doc_id % 10 != 7) via lsh_seed_state; timed region is "
         "ONE lsh_maintenance_step over the delta (doc_id % 10 == 7) "
         "plus member reattachment — the per-ingest cost the registered "
@@ -1342,9 +1341,7 @@ def _lsh_ingest_probe(spark, k: int) -> None:
         # discipline); labels are materialized so the timed step reads
         # state, never re-derives it
         t0 = time.time()
-        d0, g0, i0, s0, l0, base_arrs = dedup.lsh_seed_state(
-            docs.filter(~is_delta)
-        )
+        d0, g0, i0, s0, l0 = dedup.lsh_seed_state(docs.filter(~is_delta))
         i0, s0, l0 = (
             i0.localCheckpoint(),
             s0.localCheckpoint(),
@@ -1359,19 +1356,9 @@ def _lsh_ingest_probe(spark, k: int) -> None:
             obs: dict = {}
             t0 = time.time()
             d2, g2, _i2, _s2, l2 = dedup.lsh_maintenance_step(
-                d0, g0, i0, s0, l0, delta, obs, rep_arrs=base_arrs
+                d0, g0, i0, s0, l0, delta, obs
             )
-            out = (
-                d2.join(g2.select("fp", "rep_id"), "fp")
-                .join(l2, "rep_id")
-                .select(
-                    "doc_id",
-                    "cluster_id",
-                    (F.col("doc_id") == F.col("cluster_id"))
-                    .cast("int")
-                    .alias("is_canonical"),
-                )
-            )
+            out = dedup._reattach(d2, g2, l2)
             out.observe(ro, F.count(F.lit(1)).alias("rows")).write.format(
                 "noop"
             ).mode("overwrite").save()
