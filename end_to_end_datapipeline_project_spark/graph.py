@@ -15,8 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .registry import register, spark_dsum, spark_dsum_rounded
+from .registry import register, spark_dsum_rounded
 from .sources import read_parquet_table
+from .state import StateStore, read_segments
 
 PR_ITERS = 3
 PR_DAMP = 0.85
@@ -104,12 +105,10 @@ PAGERANK_SQL = f"""
     "the expensive part) localCheckpointed ONCE and reused by every "
     "iteration; per-message decimal-quantized sums keep each iteration "
     "bit-identical to the oracle's unrolled-CTE evaluation. Iterations "
-    "shuffle only partial-aggregated per-dst message sums (the rank "
-    "vector broadcasts, the edges never re-shuffle); the src-"
-    "partitioned shuffle-join alternative for rank vectors too large "
-    "to broadcast is exposed as pagerank(broadcast_ranks=False) and "
-    "measured within noise of the broadcast form at ×10 for both 3 "
-    "and 10 iterations (tools/ab_pr_forms.py, round 7).",
+    "shuffle only partial-aggregated per-dst message sums: the O(|V|) "
+    "rank vector and out-degree table broadcast, the edges never "
+    "re-shuffle (the shuffle-join rank form measured within noise of "
+    "this one and was removed; OPTIMIZATION_r16.md appendix).",
 )
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_parquet_table(spark, sf_dir, "lineitem")
@@ -122,10 +121,11 @@ def _co_supply_half(li: DataFrame) -> DataFrame:
     shuffles once and shrinks ~3x (repeat lineitems per part+supplier
     collapse) — then an equi-join on l_partkey emits each ordered pair
     inside the join stage (measured faster than collect_set + array
-    explode at this ~30-supplier fan-out; tools/ab_pagerank.py, round
-    4).  Checkpointing the HALF list keeps the materialized footprint 4x
-    smaller than the annotated directed list: both directions and the
-    outdeg annotation derive from it with a union + broadcast join.
+    explode at this ~30-supplier fan-out, and the gap widens with
+    scale; OPTIMIZATION_r16.md appendix).  Checkpointing the HALF list
+    keeps the materialized footprint 4x smaller than the annotated
+    directed list: both directions and the outdeg annotation derive
+    from it with a union + broadcast join.
     Pairs dedup on ONE packed long (src << 32 | dst) instead of a
     two-long struct: ~40% less shuffle payload through the dedup
     exchange (valid while supplier keys < 2^31, which holds at any
@@ -178,128 +178,6 @@ def _co_supply_half(li: DataFrame) -> DataFrame:
     )
 
 
-def pagerank(
-    li: DataFrame,
-    *,
-    iters: int = PR_ITERS,
-    broadcast_ranks: bool = True,
-    rounded_msg_sum: bool = True,
-) -> DataFrame:
-    """Supplier co-supply PageRank with both scale strategies exposed.
-
-    ``broadcast_ranks=True`` (default): the O(|V|) rank vector broadcasts
-    onto the checkpointed edge list each iteration — iterations shuffle
-    only partial-aggregated per-dst message sums.  Right while the rank
-    vector fits executor memory (hundreds of millions of nodes at 16 B
-    each) and iteration counts are small.
-
-    ``broadcast_ranks=False``: the annotated edge list is hash-
-    partitioned on src and checkpointed ONCE; each iteration shuffle-
-    joins the O(|V|) rank vector on src (edges never move — their
-    checkpointed HashPartitioning satisfies the join's distribution
-    requirement) and shuffles per-dst sums as before.  The scale path
-    when |V| outgrows a broadcast or iterations ≫ 3 amortize the
-    upfront edge repartition.  Measured (tools/ab_pr_forms.py,
-    interleaved min-of-4 in one process, ×10 data ≈6M lineitem rows):
-    the two forms are WITHIN NOISE of each other at both iteration
-    counts — iters=3: broadcast 14.89 s vs join 13.35 s; iters=10:
-    22.63 s vs 24.11 s — so the default stays broadcast (no upfront
-    repartition+materialize, simpler plan); flip it when the rank
-    vector outgrows executor memory, not for speed.  (This supersedes
-    the round-4 "77 s vs 12 s" note, which measured a DST-partitioned
-    annotated list rebuilt per iteration, a strictly worse layout than
-    the src-partitioned checkpoint used here.)
-
-    ``rounded_msg_sum`` selects the per-iteration message-sum kernel:
-    True = ``spark_dsum_rounded`` (primitive-long accumulator), False =
-    ``spark_dsum`` (BigDecimal buffer).  Both are bit-identical to the
-    oracle; the round-7 A/B (tools/ab_pr_forms.py, same methodology)
-    measured them within noise on the full query — rounded 4.94 s vs
-    plain 5.07 s at sf0.1, 20.70 s vs 21.28 s at ×10 — the per-row
-    ``cast(decimal(30,6))`` dominates either accumulator at this
-    per-group cardinality (~30 messages/node).  The round-6 batch-bench
-    regression suspicion against the rounded form (VERDICT r6 #1) did
-    NOT reproduce under interleaved measurement; the rounded form stays
-    (never slower, and it wins outright on wide groups —
-    registry.py micro-bench).
-    """
-    # edge generation factored as _co_supply_half (shared with the
-    # incremental path): join-kernel form measured against the round-3
-    # collect_set + nested-array-explode form with tools/ab_pagerank.py
-    # (FULL-query interleaved A/B, min of 4 alternating runs in one
-    # process): 3.76 s vs 4.05 s at sf0.1, 11.5 s vs 18.7 s at ×10
-    # (0.61×) — the join kernel beats per-row array allocation at the
-    # ~30-supplier-per-part fan-out this table has, and the gap WIDENS
-    # with scale (the per-ORDER co-order graph below keeps the
-    # collect_set form: its sets are ~4 elements, below the crossover).
-    # This is also literally the oracle's formulation.
-    msg_sum = spark_dsum_rounded if rounded_msg_sum else spark_dsum
-    half = _co_supply_half(li)
-    edges = half.unionAll(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    nodes = li.select(F.col("l_suppkey").alias("id")).distinct()
-    # outdeg is O(|V|): aggregate it small and broadcast it back — a
-    # src-partitioned window would shuffle AND sort the whole edge list
-    # just to annotate it
-    outdeg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).cast("double").alias("outdeg")
-    )
-    # NOT pre-partitioned by dst: measured at the ×10 probe, an upfront
-    # repartition("dst") + checkpoint of the annotated edge list costs
-    # more than the per-iteration partial-agg savings it buys (77 s vs
-    # 12 s wall at ×10) — the checkpointed HALF edge list plus a cheap
-    # union/broadcast-join per iteration wins.  For iterations >> 3 or
-    # rank vectors too big to broadcast, ``broadcast_ranks=False``
-    # pre-partitions the annotated list on SRC (see docstring A/B).
-    contrib = edges.join(F.broadcast(outdeg), "src")
-    if not broadcast_ranks:
-        # hash-partition + sort on the join key, checkpointed: the
-        # LogicalRDD keeps outputPartitioning AND outputOrdering, so
-        # every per-iteration sort-merge join re-reads the edges in
-        # place — only the O(|V|) rank vector shuffles
-        contrib = (
-            contrib.repartition(F.col("src"))
-            .sortWithinPartitions("src")
-            .localCheckpoint()
-        )
-    # the graph is undirected, so a node sends iff it receives: inside
-    # the loop the rank vector only needs message-RECEIVING nodes (every
-    # contrib.src is one), and the O(|V|) nodes ⟕ msgs completion —
-    # where isolated nodes take the closed-form 0.15 — happens ONCE at
-    # the end instead of per iteration.  Iteration 1 needs no rank
-    # distribution at all (uniform prior is a literal).
-    pr = None
-    for _ in range(iters):
-        if pr is None:
-            sender = contrib.withColumn("pr", F.lit(1.0))
-        else:
-            ranks = pr.withColumnRenamed("id", "src")
-            # pr is O(|V|): broadcast it (default) so iterations shuffle
-            # only partial-aggregated per-dst message sums; the shuffle-
-            # join form moves the rank vector instead — never the edges
-            sender = contrib.join(
-                F.broadcast(ranks) if broadcast_ranks else ranks, "src"
-            )
-        msgs = sender.groupBy("dst").agg(
-            # pr/outdeg is off-grid → rounded variant: same per-term
-            # decimal(30,6) HALF_UP as the oracle, primitive-long
-            # accumulation instead of BigDecimal buffers (this agg runs
-            # over the full directed edge list every iteration — the
-            # data-sized stage of the loop); A/B'd vs the BigDecimal
-            # form on the full query (docstring), within noise here
-            msg_sum(F.col("pr") / F.col("outdeg")).alias("m")
-        )
-        pr = msgs.select(
-            F.col("dst").alias("id"),
-            (0.15 + PR_DAMP * F.col("m")).alias("pr"),
-        )
-    return nodes.join(pr, "id", "left").select(
-        F.col("id").alias("supp_id"),
-        F.round(F.coalesce("pr", F.lit(0.15)), 6).alias("pagerank"),
-    )
-
-
 def _directed_half(half: DataFrame) -> DataFrame:
     """Both orientations of a half edge list."""
     return half.unionAll(
@@ -313,6 +191,100 @@ def _out_degrees(edges: DataFrame) -> DataFrame:
     )
 
 
+def _pr_level(contrib: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """One synchronous PageRank level — the only place the rank update
+    is written.  ``contrib`` carries directed (src, dst, outdeg) message
+    rows; every src sends ``pr / outdeg`` to dst, where ``pr`` is the
+    uniform prior 1.0 when ``prev`` is None and otherwise ``prev``'s
+    (id, pr) vector, broadcast (O(|V|)) so a level shuffles only
+    partial-aggregated per-dst message sums.  Returns (id, pr) for every
+    node that receives a message, pr = 0.15 + PR_DAMP · Σ messages.
+
+    Invariant: each message is quantized to decimal(30,6) HALF_UP and
+    summed exactly (``spark_dsum_rounded``, a primitive-long
+    accumulator), so every level is bit-identical to the oracle's
+    unrolled-CTE evaluation, whatever the summation order."""
+    sender = (
+        contrib.withColumn("pr", F.lit(1.0))
+        if prev is None
+        else contrib.join(
+            F.broadcast(prev.withColumnRenamed("id", "src")), "src"
+        )
+    )
+    return (
+        sender.groupBy("dst")
+        .agg(spark_dsum_rounded(F.col("pr") / F.col("outdeg")).alias("m"))
+        .select(
+            F.col("dst").alias("id"),
+            (0.15 + PR_DAMP * F.col("m")).alias("pr"),
+        )
+    )
+
+
+def _pr_result(rows: DataFrame, final: DataFrame) -> DataFrame:
+    """The published ranks: every supplier in ``rows`` (any frame with
+    ``l_suppkey``) joined to the final level; isolated suppliers take
+    the closed-form 0.15."""
+    nodes = rows.select(F.col("l_suppkey").alias("id")).distinct()
+    return nodes.join(final, "id", "left").select(
+        F.col("id").alias("supp_id"),
+        F.round(F.coalesce("pr", F.lit(0.15)), 6).alias("pagerank"),
+    )
+
+
+def pagerank(li: DataFrame) -> DataFrame:
+    """Supplier co-supply PageRank: :data:`PR_ITERS` levels of
+    :func:`_pr_level` over the checkpointed half edge list.
+
+    Layout: the half list (:func:`_co_supply_half`) is checkpointed once;
+    both orientations derive from it with a union, and the O(|V|)
+    out-degree table is aggregated small and broadcast back (a
+    src-partitioned window would shuffle and sort the whole edge list
+    just to annotate it).  The graph is undirected, so a node sends iff
+    it receives: inside the loop the rank vector covers only
+    message-receiving nodes, and isolated nodes take 0.15 in one final
+    left join.  Level 1 needs no rank vector (the prior is a literal).
+
+    Measured at sf0.1 on 4 cores (ROADMAP baseline): 6.6 s, 4.5 s of
+    it before the final action (the eager edge-list checkpoint).  The
+    rejected
+    alternatives (a src-partitioned shuffle-join rank form, a BigDecimal
+    message sum, a dst-partitioned annotated list, the collect_set edge
+    generator) and their A/Bs are in the OPTIMIZATION_r16.md appendix.
+    """
+    edges = _directed_half(_co_supply_half(li))
+    contrib = edges.join(F.broadcast(_out_degrees(edges)), "src")
+    pr = None
+    for _ in range(PR_ITERS):
+        pr = _pr_level(contrib, pr)
+    return _pr_result(li, pr)
+
+
+def pagerank_seed_levels(half: DataFrame) -> tuple:
+    """Stored PageRank state for a half edge list, computed in full:
+    (per-level rank vectors, out-degree table), each localCheckpointed —
+    what the incremental queries, the streaming twin and the sparse
+    probe seed their stored state with before patching it.
+
+    Invariant: level k equals level k of :func:`pagerank` on the same
+    graph (same :func:`_pr_level`), and the out-degree table is the one
+    :func:`pagerank_patch_levels` merges new edges into.  Measured
+    against seeding through :func:`pagerank_patch_levels` from empty
+    state at sf0.1 on 4 cores (base co-supply graph, edge generation
+    included, interleaved, min of 5): 4.71 s / 19 jobs here vs 8.92 s /
+    52 jobs through the patch kernel, whose frontier and pruned-read
+    machinery only pays off when most of the graph is already
+    stored."""
+    edges = _directed_half(half)
+    outdeg = _out_degrees(edges).localCheckpoint()
+    contrib = edges.join(F.broadcast(outdeg), "src")
+    levels: list[DataFrame] = []
+    for _ in range(PR_ITERS):
+        prev = levels[-1] if levels else None
+        levels.append(_pr_level(contrib, prev).localCheckpoint())
+    return levels, outdeg
+
+
 #: partition-dir count for PRUNABLE stored state (adjacency segments,
 #: pair-weight segments, part rosters).  Frontier/delta joins collect
 #: their bucket set (≤ this many ints) and scan only those partitions —
@@ -323,136 +295,93 @@ def _out_degrees(edges: DataFrame) -> DataFrame:
 ADJ_BUCKETS = 512
 
 
-def _adj_bucket(c: "F.Column") -> "F.Column":
-    return F.pmod(F.xxhash64(c), F.lit(ADJ_BUCKETS))
+def _bucket(*cols: str) -> "F.Column":
+    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(ADJ_BUCKETS))
 
 
-def _pair_bucket(s: "F.Column", d: "F.Column") -> "F.Column":
-    return F.pmod(F.xxhash64(s, d), F.lit(ADJ_BUCKETS))
+def bucketed(df: DataFrame, *key_cols: str) -> DataFrame:
+    """``df`` with the ``__bkt`` column a prunable segment is
+    partitioned by: ``pmod(xxhash64(*key_cols), ADJ_BUCKETS)``, the hash
+    :func:`read_pruned` recomputes from its keys."""
+    return df.withColumn("__bkt", _bucket(*key_cols))
 
 
-def write_adj_segment(half: DataFrame, path: str) -> None:
-    """Persist a (src < dst) half edge list as a stored-adjacency
-    SEGMENT: both orientations, partitioned by the src hash bucket, so
-    frontier joins prune to touched buckets (VERDICT r13 task #1 — the
-    r13 patch kernels joined the FULL stored edge list every level).
-    At 100 TB this is the bucketed edge table an ingest tier appends
-    one delta-sized segment to per batch; the graphs these kernels
-    serve are symmetric, so the src-keyed layout answers both
-    out-edge (expansion) and in-edge (gather, read reversed) probes.
-
-    The pre-write repartition ON THE BUCKET is load-bearing: a
-    partitionBy from N input partitions opens up to N files per
-    bucket directory (measured 3,683 files / 229 s for a 71k-row
-    segment from 64 partitions), and every later pruned read pays one
-    task per file.  Hashing rows to their bucket first writes exactly
-    one file per non-empty bucket."""
-    n = half.sparkSession.sparkContext.defaultParallelism
-    (
-        _directed_half(half)
-        .withColumn("__bkt", _adj_bucket(F.col("src")))
-        .repartition(n, F.col("__bkt"))
-        .write.mode("overwrite")
-        .partitionBy("__bkt")
-        .parquet(path)
-    )
+def adj_rows(half: DataFrame) -> DataFrame:
+    """The stored-adjacency segment rows for a (src < dst) half edge
+    list: both orientations, bucketed on src.  The graphs these kernels
+    serve are symmetric, so the src-keyed layout answers both out-edge
+    (expansion) and in-edge (gather, read reversed) probes.  Written
+    through ``StateStore.commit(append=..., partition_by={...:
+    ["__bkt"]})``, which hashes rows to their bucket before the write
+    (one file per non-empty bucket) and writes an empty segment
+    unpartitioned so it stays readable."""
+    return bucketed(_directed_half(half), "src")
 
 
-class _driver_side_listing:
-    """Keep partition discovery of the ≤ADJ_BUCKETS segment dirs on
-    the driver: above the default 32-path threshold Spark runs file
-    listing as a cluster job with one task per directory — measured
-    ~0.5 s × every pruned read here, 40% of the 0.1%-delta patch wall
-    — while a driver-side listing of a few hundred local dirs is
-    milliseconds.  A context manager that SCOPES the raised threshold
-    to the reads inside the ``with`` block (listing happens eagerly at
-    ``spark.read.parquet``), so the setting never leaks into unrelated
-    queries on the same session (ADVICE r14)."""
-
-    KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-
-    def __init__(self, spark: SparkSession) -> None:
-        self.spark = spark
-
-    def __enter__(self) -> None:
-        self.prev = self.spark.conf.get(self.KEY, None)
-        self.spark.conf.set(self.KEY, "4096")
-
-    def __exit__(self, *exc) -> None:
-        if self.prev is None:
-            self.spark.conf.unset(self.KEY)
-        else:
-            self.spark.conf.set(self.KEY, self.prev)
-
-
-#: frontier sizes at or below this BROADCAST in the pruned stored-state
-#: reads (~32 MB of longs); above it the id semi-join falls back to a
+#: key sets at or below this BROADCAST in the pruned stored-state
+#: reads (~32 MB of longs); above it the key semi-join falls back to a
 #: plain shuffle join.  The patch kernels' frontiers are delta-blast-
 #: radius bounded so the broadcast is the normal path, but a large-
 #: delta ingest's 2/3-hop frontier on a 100 TB graph can exceed any
 #: driver's broadcast budget — the gate makes that regime degrade to a
-#: shuffle instead of OOMing the driver (VERDICT r14 What's wrong #4).
-#: Costs nothing extra to enforce: the frontier count rides the same
-#: one-row-per-bucket action the partition pruning already collects.
+#: shuffle instead of OOMing the driver.  Costs nothing extra to
+#: enforce: the key count rides the same one-row-per-bucket action the
+#: partition pruning already collects.
 FRONTIER_BCAST_MAX = 4_000_000
 
 
-def _read_adj_pruned(
+def read_pruned(
     spark: SparkSession,
     dirs: list,
-    ids: DataFrame,
-    extra_half: DataFrame | None = None,
+    keys: DataFrame,
+    schema: str,
+    extra: DataFrame | None = None,
 ) -> DataFrame:
-    """Stored-adjacency rows whose src is in ``ids`` (one-column
-    frame): collect the ids' bucket set (≤ ADJ_BUCKETS ints — one tiny
-    driver action per level, the CC convergence-scalar discipline),
-    scan ONLY those partitions of each segment (plan shows
-    PartitionFilters), then broadcast-semi-join the ids.  Scan cost
-    tracks the frontier's buckets, never E.  ``extra_half`` unions
-    this batch's not-yet-committed new edges (both orientations) into
-    the probe, so patch kernels see the merged graph before the
-    segment is published.  ``dirs`` and ``extra_half`` must be
-    edge-DISJOINT (stored segments never already contain the batch
-    edges) — passing the same edges through both yields every row
-    twice (ADVICE r14; exactness survives for min/mode kernels but
-    message SUMS double).  The id semi-join broadcasts only while the
-    frontier is at most :data:`FRONTIER_BCAST_MAX` ids; above that it
-    degrades to a shuffle join instead of OOMing the driver."""
-    idc = ids.columns[0]
-    # one tiny driver action serves both the partition pruning (bucket
-    # set, ≤ ADJ_BUCKETS rows) and the broadcast size gate (frontier
-    # count): ids frames are distinct by construction at every caller
+    """Rows of a bucket-partitioned segment table (``dirs``, written
+    with :func:`bucketed` on the key columns) whose key columns match a
+    row of ``keys`` — the one pruned reader behind every stored-state
+    lookup of the graph kernels: adjacency frontiers, pair weights, and
+    the streaming twins' part/order rosters.
+
+    ``keys`` carries exactly the key columns and holds each key once.
+    One driver action collects the keys' bucket set (≤ ADJ_BUCKETS
+    rows) and their count; the scan reads only those partitions of
+    each segment (PartitionFilters on ``__bkt``), and the key semi-join
+    broadcasts while the count is at most :data:`FRONTIER_BCAST_MAX`,
+    else it degrades to a shuffle join.  Scan cost tracks the keys'
+    buckets, never the table.  ``extra`` holds rows in the same
+    ``schema`` that are not yet committed (an ingest's own new
+    adjacency rows), filtered by the same semi-join; it must be
+    row-disjoint from ``dirs``, or a row is returned twice (min/mode
+    kernels survive that, message sums do not).  ``schema`` is the
+    payload shape, also returned empty when there is nothing to read.
+
+    Measured (r14 sparse probe, ×10 co-order graph on 32 cores):
+    per-ingest PageRank patch wall 19.9 / 11.2 / 7.6 s at 10% / 1% /
+    0.1% deltas, against a flat ~32.5 s when every level joined the
+    full edge list."""
+    if not dirs and extra is None:
+        return spark.createDataFrame([], schema)
+    cols = [c.split()[0] for c in schema.split(",")]
+    key_cols = keys.columns
     per_bkt = (
-        ids.select(_adj_bucket(F.col(idc)).alias("b"))
+        keys.select(_bucket(*key_cols).alias("b"))
         .groupBy("b")
         .count()
         .collect()
     )
-    bkts = [r["b"] for r in per_bkt]
-    n_ids = sum(r["count"] for r in per_bkt)
-    with _driver_side_listing(spark):
-        scan = None
-        for d in dirs:
-            seg = spark.read.parquet(d).select("src", "dst", "__bkt")
-            scan = seg if scan is None else scan.unionByName(seg)
-    if scan is not None:
-        scan = scan.filter(F.col("__bkt").isin(bkts)).select("src", "dst")
-    if extra_half is not None:
-        ex = _directed_half(extra_half)
-        scan = ex if scan is None else scan.unionByName(ex)
-    if scan is None:
-        # no stored segments and no batch edges: the degenerate-seed
-        # corner a future caller hits first (ADVICE r14) — mirror
-        # _read_weights_pruned's empty frame instead of raising
-        return spark.createDataFrame([], "src long, dst long")
-    ids_as_src = ids.select(F.col(idc).alias("src"))
-    if n_ids <= FRONTIER_BCAST_MAX:
-        ids_as_src = F.broadcast(ids_as_src)
-    return (
-        scan.join(ids_as_src, "src", "left_semi")
-        # USING-joins move the key column first; pin the order back
-        .select("src", "dst")
-    )
+    scan = extra
+    if dirs:
+        stored = (
+            read_segments(spark, dirs)
+            .filter(F.col("__bkt").isin([r["b"] for r in per_bkt]))
+            .select(*cols)
+        )
+        scan = stored if extra is None else stored.unionByName(extra)
+    if sum(r["count"] for r in per_bkt) <= FRONTIER_BCAST_MAX:
+        keys = F.broadcast(keys)
+    # USING-joins move the key columns first; pin the order back
+    return scan.join(keys, key_cols, "left_semi").select(*cols)
 
 
 def co_supply_new_edges(
@@ -485,11 +414,40 @@ def co_supply_new_edges(
         )
         .distinct()
     )
-    stored = _read_adj_pruned(spark, adj_dirs, cand.select("src").distinct())
+    ids = cand.select(F.col("src").alias("id")).distinct()
+    stored = _read_adj(spark, adj_dirs, ids, None)
     new_half = cand.join(
         stored, ["src", "dst"], "left_anti"
     ).select("src", "dst").localCheckpoint()
     return new_ps, new_half
+
+
+def _seed_ids(new_half: DataFrame) -> DataFrame:
+    """Endpoints of an ingest's new edges (checkpointed, column id): the
+    nodes whose degree or level-1 value an ingest changes."""
+    return (
+        new_half.select(F.col("src").alias("id"))
+        .unionAll(new_half.select(F.col("dst").alias("id")))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _read_adj(
+    spark: SparkSession,
+    adj_dirs: list,
+    ids: DataFrame,
+    new_rows: DataFrame | None,
+) -> DataFrame:
+    """Stored adjacency rows (both orientations of every edge, bucketed
+    on src), plus the not-yet-committed ``new_rows``, whose src is in
+    ``ids`` (column id)."""
+    keys = ids.withColumnRenamed("id", "src")
+    return read_pruned(spark, adj_dirs, keys, "src long, dst long", new_rows)
+
+
+def _reversed(rows: DataFrame) -> DataFrame:
+    return rows.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
 
 def pagerank_patch_levels(
@@ -499,44 +457,42 @@ def pagerank_patch_levels(
     base_levels: list,
     new_half: DataFrame,
     *,
-    iters: int = PR_ITERS,
     obs: dict | None = None,
 ) -> tuple:
-    """The incremental-PageRank PATCH kernel over PRUNABLE stored
-    adjacency — given the STORED pre-ingest state (``adj_dirs``
-    segment list, ``outdeg_base`` degree table, per-iteration rank
-    vectors ``base_levels``) and the ingest's ``new_half`` edges,
-    re-rank only the new edges' k-hop blast radius, keep stored
-    doubles everywhere else.
+    """The incremental-PageRank PATCH kernel: given the STORED state
+    (``adj_dirs`` adjacency segments, ``outdeg_base`` degree table, the
+    per-level rank vectors ``base_levels``) and an ingest's checkpointed
+    ``new_half`` edges, re-rank only the new edges' blast radius with
+    :func:`_pr_level` and keep the stored doubles everywhere else.
 
-    r14 scale fix (VERDICT r13 task #1 / What's wrong #1): the r13
-    form joined the FULL merged edge list every level of every
-    iteration and recomputed out-degrees from it per patch, so the
-    sparse-pr probe's wall sat flat (~32.5 s) while the patched-node
-    count dropped 17,950 → 210.  Now every frontier expansion and
-    in-edge gather is a partition-PRUNED scan of the frontier's
-    buckets (:func:`_read_adj_pruned` — in-edges are the reversed
-    out-rows, exact because both orientations are stored), and the
-    degree table is MAINTAINED (one O(V) merge with the new edges'
-    counts) instead of recomputed from E.  Per-ingest cost: O(blast-
-    radius buckets) scans + O(V) vector merges, never an O(E) pass.
+    Level k patches S_k = S_{k-1} ∪ N(S_{k-1}), S_0 = the new edges'
+    endpoints; the level count is ``len(base_levels)``.  Each level pays
+    ONE pruned read (:func:`read_pruned` of S_k's buckets): the rows
+    reversed are S_k's in-edges (exact, both orientations are stored),
+    and their dst column is the next expansion.  The degree table is
+    maintained (one O(V) merge with the new edges' counts), never
+    recomputed from E.  Per-ingest cost: O(blast-radius buckets) scans
+    plus O(V) vector merges, never an O(E) pass.  Exactness argument on
+    :func:`incremental_pagerank`; composes across ingests by induction.
 
-    Exactness argument on :func:`incremental_pagerank`; composes
-    across repeated ingests by induction.  With EMPTY stored state
-    (``adj_dirs=[]``, empty degree/level frames) and ``new_half`` =
-    the whole graph this degenerates to the plain full computation
-    (how the streaming twin seeds).  ``new_half`` must be checkpointed
-    by the caller (it feeds the degree merge, the seed frontier, and
-    every level's probe union).  Returns (patched_levels,
-    outdeg_merged); each level is a LAZY union over checkpointed
-    pieces only (stored level, frontier, patched delta) — safe to
-    publish or join after the adjacency dirs are gone, without paying
-    an O(V) materialization per level."""
-    msg_sum = spark_dsum_rounded
-    new_deg = _out_degrees(_directed_half(new_half))
+    Returns (levels, outdeg_merged).  The merged degree table is
+    checkpointed; each level is a LAZY union over checkpointed pieces
+    only (stored level, frontier, patched values), so it is safe to
+    publish after the adjacency dirs are gone without paying an O(V)
+    materialization per level.  ``obs`` receives the blast-radius
+    gauges ``n_new_edges`` and ``n_patched``.
+
+    Measured (r14 sparse probe, ×10 co-order graph held fixed on 32
+    cores): 19.9 / 11.2 / 7.6 s per ingest at 10% / 1% / 0.1% deltas;
+    the floor is job count, not data (OPTIMIZATION_r16.md §6)."""
+    new_rows = _directed_half(new_half)
     outdeg = (
         outdeg_base.withColumnRenamed("outdeg", "d0")
-        .join(new_deg.withColumnRenamed("outdeg", "d1"), "src", "full")
+        .join(
+            _out_degrees(new_rows).withColumnRenamed("outdeg", "d1"),
+            "src",
+            "full",
+        )
         .select(
             "src",
             (
@@ -545,151 +501,81 @@ def pagerank_patch_levels(
         )
         .localCheckpoint()
     )
-    frontier = (
-        new_half.select(F.col("src").alias("id"))
-        .unionAll(new_half.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    levels = []
-    r_prev_full = None
-    # out-edges of the seed set; each level's out-rows serve BOTH that
-    # level's in-edge gather (reversed — the graph is symmetric) and
-    # the NEXT level's frontier expansion, so the loop pays ONE pruned
-    # read per level.  The checkpoint is blast-radius-sized (it only
-    # reaches E when the frontier saturates, where any gather is
-    # E-sized anyway).
-    out_rows = _read_adj_pruned(spark, adj_dirs, frontier, new_half)
-    for k in range(iters):
-        # S_k = S_{k-1} ∪ N(S_{k-1}): level-k ranks change only there.
-        # Checkpointed: the frontier feeds four consumers per level
-        # (bucket collect, probe semi-join, base anti-join, next
-        # union) — a lazy union-distinct re-ran for each and measured
-        # SLOWER than the one blast-radius-sized checkpoint job
+    frontier = _seed_ids(new_half)
+    out_rows = _read_adj(spark, adj_dirs, frontier, new_rows)
+    levels: list[DataFrame] = []
+    for base in base_levels:
+        # checkpointed: the frontier feeds the bucket collect, the
+        # probe semi-join, the base anti-join and the next union — a
+        # lazy union-distinct re-ran for each and measured slower
         frontier = (
             frontier.unionAll(out_rows.select(F.col("dst").alias("id")))
             .distinct()
             .localCheckpoint()
         )
-        out_rows = _read_adj_pruned(
-            spark, adj_dirs, frontier, new_half
+        out_rows = _read_adj(
+            spark, adj_dirs, frontier, new_rows
+        ).localCheckpoint()  # blast-radius-sized
+        contrib = _reversed(out_rows).join(F.broadcast(outdeg), "src")
+        patched = _pr_level(
+            contrib, levels[-1] if levels else None
         ).localCheckpoint()
-        # in-edges of S_k = reversed out-rows of S_k's buckets
-        in_e = out_rows.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
+        levels.append(
+            base.join(frontier, "id", "left_anti").unionAll(patched)
         )
-        sender = (
-            in_e.withColumn("pr", F.lit(1.0))
-            if r_prev_full is None
-            else in_e.join(
-                F.broadcast(r_prev_full.withColumnRenamed("id", "src")),
-                "src",
-            )
-        )
-        patched = (
-            sender.join(F.broadcast(outdeg), "src")
-            .groupBy("dst")
-            .agg(msg_sum(F.col("pr") / F.col("outdeg")).alias("m"))
-            .select(
-                F.col("dst").alias("id"),
-                (0.15 + PR_DAMP * F.col("m")).alias("pr"),
-            )
-            .localCheckpoint()  # blast-radius-sized
-        )
-        # level-k vector = stored base values outside the blast radius,
-        # patched values inside it.  Kept LAZY over checkpointed pieces
-        # (base level, frontier, patched): materializing the full O(V)
-        # vector per level was a fixed cost the delta never amortized.
-        r_prev_full = (
-            base_levels[k]
-            .join(frontier, "id", "left_anti")
-            .unionAll(patched)
-        )
-        levels.append(r_prev_full)
     if obs is not None:
-        # blast-radius gauges for the delta-scaling probe: how many
-        # nodes were actually re-ranked vs kept from stored state
         obs["n_new_edges"] = new_half.count()
         obs["n_patched"] = frontier.count()
     return levels, outdeg
 
 
-def incremental_pagerank(
-    li: DataFrame, delta_cond, *, iters: int = PR_ITERS
-) -> DataFrame:
+def incremental_pagerank(li: DataFrame, delta_cond) -> DataFrame:
     """Delta-edge PageRank maintenance: re-rank only the ingest's blast
-    radius, reuse stored per-iteration ranks everywhere else — EXACTLY
+    radius, reuse stored per-level ranks everywhere else — EXACTLY
     equal to a full rebuild on the merged graph (the oracle gate).
 
-    The exactness argument (why a bounded restart is not an
-    approximation for a fixed-iteration rank): after k synchronous
-    iterations a node's rank is a function of its k-hop in-
-    neighborhood's degrees and the uniform prior.  An ingest only ADDS
-    edges, and r_k(n) can change only if n is within k hops of a node
-    whose degree changed — i.e. of a new edge's endpoints (the seed
-    set).  So patching S_k = expand^k(seeds) with messages drawn from
-    the PREVIOUS level's patched-or-stored values reproduces the full
-    rebuild bit-for-bit: unaffected nodes keep stored doubles that the
+    Exactness (why a bounded restart is not an approximation for a
+    fixed-iteration rank): after k synchronous levels a node's rank is
+    a function of its k-hop in-neighborhood's degrees and the uniform
+    prior.  An ingest only ADDS edges, and r_k(n) can change only if n
+    is within k hops of a node whose degree changed — a new edge's
+    endpoint.  So patching S_k = expand^k(seeds) with messages drawn
+    from the previous level's patched-or-stored values reproduces the
+    full rebuild bit-for-bit: unaffected nodes keep stored doubles the
     rebuild would recompute from identical inputs through the same
-    decimal-quantized message kernel, and patched nodes aggregate over
-    ALL their in-edges with that same kernel.
+    :func:`_pr_level`, and patched nodes aggregate over ALL their
+    in-edges with it.
 
-    100 TB shape (r14): the ingest tier stores the directed edge list
-    as src-bucketed parquet segments, the (l_partkey, l_suppkey)
-    roster bucketed by part, the O(V) degree table, and ``iters`` O(V)
-    rank vectors.  Per-ingest work is now delta-sized END TO END: new
-    edges derive from batch-pairs × the roster pruned to batch parts
-    (:func:`co_supply_new_edges` — never a merged-graph diff), degrees
-    merge incrementally, and every frontier join is a partition-pruned
-    scan (:func:`pagerank_patch_levels`).  On this deliberately dense
-    test graph (~60 co-suppliers per node) a 3-hop ball saturates,
-    which the SCALING.md probe cell reports honestly — the bound is
-    structural, |delta blast radius|, not corpus size.
-    """
+    Stored state: the base graph's adjacency as one bucketed segment
+    committed through :class:`state.StateStore` (an empty base writes a
+    readable empty segment), the (l_partkey, l_suppkey) roster, and
+    the :func:`pagerank_seed_levels` degree table and rank vectors (each
+    localCheckpointed).  The ingest is delta-sized end to end: new
+    edges come from delta pairs × the roster pruned to delta parts
+    (:func:`co_supply_new_edges`), then :func:`pagerank_patch_levels`.
+    On this deliberately dense graph (~60 co-suppliers per node) a
+    3-hop ball saturates, so the wall here is rebuild-sized; the bound
+    is structural, |blast radius|, not corpus size."""
     import shutil
     import tempfile
 
     spark = li.sparkSession
-    msg_sum = spark_dsum_rounded
     base_li = li.filter(~delta_cond)
     root = tempfile.mkdtemp(prefix="spark_graft_incpr_")
     try:
-        # --- STORED pre-ingest state (in production read back from
-        # storage, not recomputed): bucketed adjacency segment, pair
-        # roster, degree table, per-ITERATION unrounded rank vectors.
         base_half = _co_supply_half(base_li)
-        adj0 = f"{root}/adj/seg0"
-        write_adj_segment(base_half, adj0)
-        outdeg0 = _out_degrees(_directed_half(base_half)).localCheckpoint()
+        store = StateStore(root)
+        store.commit(
+            0,
+            append={"adj": adj_rows(base_half)},
+            partition_by={"adj": ["__bkt"]},
+        )
+        base_levels, outdeg0 = pagerank_seed_levels(base_half)
         base_ps = (
             base_li.select("l_partkey", "l_suppkey")
             .distinct()
             .localCheckpoint()
         )
-        contrib = _directed_half(base_half).join(F.broadcast(outdeg0), "src")
-        base_levels: list[DataFrame] = []
-        pr = None
-        for _ in range(iters):
-            sender = (
-                contrib.withColumn("pr", F.lit(1.0))
-                if pr is None
-                else contrib.join(
-                    F.broadcast(pr.withColumnRenamed("id", "src")), "src"
-                )
-            )
-            pr = (
-                sender.groupBy("dst")
-                .agg(msg_sum(F.col("pr") / F.col("outdeg")).alias("m"))
-                .select(
-                    F.col("dst").alias("id"),
-                    (0.15 + PR_DAMP * F.col("m")).alias("pr"),
-                )
-                .localCheckpoint()
-            )
-            base_levels.append(pr)
-
-        # --- the ingest: delta-scoped new-edge derivation + the
-        # pruned-adjacency patch kernel (shared with the streaming twin)
         delta_ps = (
             li.filter(delta_cond)
             .select("l_partkey", "l_suppkey")
@@ -698,20 +584,16 @@ def incremental_pagerank(
         roster_sc = base_ps.join(
             delta_ps.select("l_partkey").distinct(), "l_partkey", "left_semi"
         )
+        adj_dirs = store.dirs("adj")
         _new_ps, new_half = co_supply_new_edges(
-            spark, [adj0], roster_sc, delta_ps
+            spark, adj_dirs, roster_sc, delta_ps
         )
         levels, _outdeg = pagerank_patch_levels(
-            spark, [adj0], outdeg0, base_levels, new_half, iters=iters
+            spark, adj_dirs, outdeg0, base_levels, new_half
         )
-
-        nodes = li.select(F.col("l_suppkey").alias("id")).distinct()
         # levels are lazy unions over checkpointed pieces only — the
         # returned plan never re-reads the tmpdir the finally removes
-        return nodes.join(levels[-1], "id", "left").select(
-            F.col("id").alias("supp_id"),
-            F.round(F.coalesce("pr", F.lit(0.15)), 6).alias("pagerank"),
-        )
+        return _pr_result(li, levels[-1])
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -811,97 +693,6 @@ def _co_order_half_edges(li: DataFrame, weighted: bool = False) -> DataFrame:
     return agg.select("src", "dst")
 
 
-def write_weight_segment(counts: DataFrame, path: str) -> None:
-    """Persist (src, dst, n_co) pair-count increments as a stored
-    pair-weight SEGMENT, partitioned by the pair hash bucket.  The
-    stored weight table is the union of all segments with counts
-    summed per pair — append-only because co-order counts from
-    disjoint order sets are additive — and floor-crossing checks read
-    only the delta's buckets.  Bucket-repartitioned before the write
-    for the same one-file-per-bucket reason as
-    :func:`write_adj_segment`."""
-    n = counts.sparkSession.sparkContext.defaultParallelism
-    (
-        counts.withColumn(
-            "__bkt", _pair_bucket(F.col("src"), F.col("dst"))
-        )
-        .repartition(n, F.col("__bkt"))
-        .write.mode("overwrite")
-        .partitionBy("__bkt")
-        .parquet(path)
-    )
-
-
-def _read_weights_pruned(
-    spark: SparkSession, dirs: list, pairs: DataFrame
-) -> DataFrame:
-    """Stored pair-count rows for exactly the given (src, dst) pairs:
-    bucket-set collect → partition-pruned scan of every segment →
-    broadcast semi-join on the pair."""
-    bkts = [
-        r[0]
-        for r in pairs.select(
-            _pair_bucket(F.col("src"), F.col("dst")).alias("b")
-        )
-        .distinct()
-        .collect()
-    ]
-    with _driver_side_listing(spark):
-        scan = None
-        for d in dirs:
-            seg = spark.read.parquet(d).select(
-                "src", "dst", "n_co", "__bkt"
-            )
-            scan = seg if scan is None else scan.unionByName(seg)
-    if scan is None:
-        return spark.createDataFrame([], "src long, dst long, n_co long")
-    return (
-        scan.filter(F.col("__bkt").isin(bkts))
-        .join(
-            F.broadcast(pairs.select("src", "dst")),
-            ["src", "dst"],
-            "left_semi",
-        )
-        .select("src", "dst", "n_co")
-    )
-
-
-def read_keyed_segments(
-    spark: SparkSession,
-    dirs: list,
-    keys: DataFrame,
-    key_cols: list,
-    schema: str,
-) -> DataFrame:
-    """Rows of a bucket-partitioned segment table matching ``keys`` (a
-    frame carrying exactly ``key_cols``): collect the keys' bucket set
-    (segments carry ``__bkt = pmod(xxhash64(*key_cols), ADJ_BUCKETS)``),
-    scan only those partitions of each segment, broadcast-semi-join the
-    keys, and pin the column order back (USING-joins reorder).
-    ``schema`` is the payload shape, also used when no segments exist.
-    The generic pruned reader behind the roster/op lookups the
-    streaming graph twins make per batch."""
-    cols = [c.strip().split()[0] for c in schema.split(",")]
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(ADJ_BUCKETS)
-    )
-    bkts = [
-        r[0] for r in keys.select(bucket.alias("b")).distinct().collect()
-    ]
-    with _driver_side_listing(spark):
-        scan = None
-        for d in dirs:
-            seg = spark.read.parquet(d).select(*cols, "__bkt")
-            scan = seg if scan is None else scan.unionByName(seg)
-    return (
-        scan.filter(F.col("__bkt").isin(bkts))
-        .join(F.broadcast(keys.select(*key_cols)), key_cols, "left_semi")
-        .select(*cols)
-    )
-
-
 def co_order_new_edges(
     spark: SparkSession, weight_dirs: list, dw: DataFrame
 ) -> DataFrame:
@@ -913,7 +704,10 @@ def co_order_new_edges(
     (monotone under ingest: counts only grow).  Never recounts the
     corpus and never scans untouched weight buckets.  Returns the
     checkpointed (src, dst) half list."""
-    stored = _read_weights_pruned(spark, weight_dirs, dw)
+    # each segment holds one ingest's counts; a pair's weight is the sum
+    keys = dw.select("src", "dst")
+    schema = "src long, dst long, n_co long"
+    stored = read_pruned(spark, weight_dirs, keys, schema)
     base_tot = stored.groupBy("src", "dst").agg(
         F.sum("n_co").alias("n_base")
     )
@@ -931,6 +725,30 @@ def co_order_new_edges(
         .select("src", "dst")
         .localCheckpoint()
     )
+
+
+def co_order_state(base_li: DataFrame, root: str) -> tuple:
+    """Stored co-order graph state for the orders in ``base_li``,
+    committed through a :class:`state.StateStore` at ``root``: the RAW
+    pair-weight table as a pair-bucketed segment (the payload
+    :func:`co_order_new_edges` reads) and the ≥2-floor adjacency as a
+    src-bucketed segment (:func:`adj_rows`); an empty base writes
+    readable empty segments.  Returns (store, checkpointed half edge
+    list)."""
+    w0 = _co_order_pair_counts(base_li).localCheckpoint()
+    base_half = (
+        w0.filter(F.col("n_co") >= 2).select("src", "dst").localCheckpoint()
+    )
+    store = StateStore(root)
+    store.commit(
+        0,
+        append={
+            "weights": bucketed(w0, "src", "dst"),
+            "adj": adj_rows(base_half),
+        },
+        partition_by={"weights": ["__bkt"], "adj": ["__bkt"]},
+    )
+    return store, base_half
 
 
 def orient_by_degree(half: DataFrame) -> DataFrame:
@@ -1067,6 +885,64 @@ LABEL_PROPAGATION_SQL = f"""
 """
 
 
+def _lpa_min_label(edges: DataFrame) -> DataFrame:
+    """LPA level 1 in closed form over directed (src, dst) rows: the
+    initial labels are the node ids, so every neighbor label is distinct
+    (cnt = 1 on a deduped edge list) and the (count desc, label asc)
+    modal winner is the minimum neighbor id — one partial-agg min, no
+    broadcast, no histogram."""
+    return edges.groupBy(F.col("dst").alias("id")).agg(
+        F.min("src").alias("label")
+    )
+
+
+def _lpa_vote(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """One LPA level over directed (src, dst) rows: every dst adopts the
+    modal label of its senders under ``labels`` (id, label; O(|V|),
+    broadcast), ties broken by (count desc, label asc).  The winner is a
+    partial-aggregable ``max_by`` on (cnt, -label) — the same
+    deterministic winner as a rank window, with no per-node sort, and
+    the second shuffle moves one candidate per (map partition, node)
+    instead of the full histogram."""
+    return (
+        edges.join(F.broadcast(labels.withColumnRenamed("id", "src")), "src")
+        .groupBy(F.col("dst").alias("id"), "label")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .groupBy("id")
+        .agg(
+            F.max_by(
+                "label", F.struct(F.col("cnt"), -F.col("label"))
+            ).alias("label")
+        )
+    )
+
+
+def _lpa_result(rows: DataFrame, final: DataFrame) -> DataFrame:
+    """The published communities: every part in ``rows`` (any frame
+    with ``l_partkey``) joined to the final level; isolated parts keep
+    their own id."""
+    nodes = rows.select(F.col("l_partkey").alias("id")).distinct()
+    return nodes.join(final, "id", "left").select(
+        F.col("id").alias("part_id"),
+        F.coalesce("label", "id").alias("community"),
+    )
+
+
+def lpa_seed_levels(half: DataFrame) -> tuple:
+    """Stored LPA state for a checkpointed half edge list, computed in
+    full: (level-1, level-2) label vectors, each localCheckpointed — the
+    seed of the incremental query, the streaming twin and the sparse
+    probe.  Invariant: equal to :func:`q_label_propagation`'s levels on
+    the same graph (same :func:`_lpa_min_label` / :func:`_lpa_vote`).
+    Measured against seeding through :func:`lpa_patch_levels` from
+    empty state at sf0.1 on 4 cores (base co-order graph, edge
+    generation included, interleaved, min of 5): 2.43 s / 12 jobs here
+    vs 3.61 s / 26 jobs."""
+    edges = _directed_half(half)
+    l1 = _lpa_min_label(edges).localCheckpoint()
+    return l1, _lpa_vote(edges, l1).localCheckpoint()
+
+
 @register(
     "q_label_propagation",
     LABEL_PROPAGATION_SQL,
@@ -1084,53 +960,15 @@ LABEL_PROPAGATION_SQL = f"""
 )
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_parquet_table(spark, sf_dir, "lineitem")
-    # checkpoint the HALF list and derive both directions per pass
-    # (r15, the q_pagerank layout): materializing the doubled list
-    # stored 2× the rows for zero per-iteration saving — each pass
-    # scans the same row count either way, and the checkpoint write
-    # itself halves
-    half = _co_order_half_edges(li).localCheckpoint()
-    edges = half.unionAll(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    nodes = li.select(F.col("l_partkey").alias("id")).distinct()
-    # undirected graph ⇒ every label-sender also receives, so the loop
-    # carries labels for edge-touching nodes only; isolated nodes keep
-    # their own id via ONE final left join instead of per-iteration
-    # nodes ⟕ winner completions (their labels never reach anyone).
-    labels = None
-    for it in range(_LPA_ITERS):
-        if labels is None:
-            # iteration 1 closed form: initial labels are the node ids,
-            # so every neighbor label is distinct (cnt = 1 on the deduped
-            # edge list) and the modal-with-(count desc, label asc)
-            # winner is simply the minimum neighbor id — one partial-agg
-            # min, no broadcast, no histogram
-            labels = edges.groupBy(F.col("dst").alias("id")).agg(
-                F.min("src").alias("label")
-            )
-            continue
-        hist = (
-            edges.join(
-                F.broadcast(labels.withColumnRenamed("id", "src")), "src"
-            )
-            .groupBy(F.col("dst").alias("id"), "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        # modal label via max_by on (cnt, -label): same deterministic
-        # (count desc, label asc) winner as a rank window, but as a
-        # partial-aggregable hash agg — no per-node sort, and the second
-        # shuffle moves one candidate per (map partition, node) instead
-        # of the full histogram
-        labels = hist.groupBy("id").agg(
-            F.max_by(
-                "label", F.struct(F.col("cnt"), -F.col("label"))
-            ).alias("label")
-        )
-    return nodes.join(labels, "id", "left").select(
-        F.col("id").alias("part_id"),
-        F.coalesce("label", "id").alias("community"),
-    )
+    # checkpoint the HALF list and derive both directions per pass:
+    # materializing the doubled list stores 2× the rows for zero
+    # per-iteration saving.  Undirected graph ⇒ every label-sender also
+    # receives, so the loop carries labels for edge-touching nodes only
+    edges = _directed_half(_co_order_half_edges(li).localCheckpoint())
+    labels = _lpa_min_label(edges)
+    for _ in range(_LPA_ITERS - 1):
+        labels = _lpa_vote(edges, labels)
+    return _lpa_result(li, labels)
 
 
 def incremental_label_propagation(li: DataFrame, delta_cond) -> DataFrame:
@@ -1143,20 +981,19 @@ def incremental_label_propagation(li: DataFrame, delta_cond) -> DataFrame:
     order shows up as a new edge).  Level-1 labels (min neighbor id)
     change ONLY at new-edge endpoints — S1 = seeds, no expansion — and
     level-2 modal labels only at S1 ∪ N(S1).  Every patched node
-    re-aggregates over ALL its in-edges with the same partial-agg
-    max_by kernel, unaffected nodes keep stored labels the rebuild
-    would recompute from identical integer inputs, so the oracle (full
-    2-iteration rebuild) matches exactly.
+    re-aggregates over ALL its in-edges with the same
+    :func:`_lpa_min_label` / :func:`_lpa_vote`, unaffected nodes keep
+    stored labels the rebuild would recompute from identical integer
+    inputs, so the oracle (full 2-iteration rebuild) matches exactly.
 
-    100 TB shape (r14): stored state is the RAW pair-weight table as
-    append-only bucketed segments (counts from disjoint order sets are
-    additive), the directed edge list as src-bucketed segments, and
-    both O(V) label vectors.  Per-ingest work is delta-sized end to
-    end: the delta's own pair counts (:func:`_co_order_pair_counts`
-    over delta orders only), a floor-crossing check that reads ONLY
-    the delta pairs' weight buckets (:func:`co_order_new_edges` —
-    never a merged-graph recount), and blast-radius re-votes through
-    partition-pruned adjacency scans (:func:`lpa_patch_levels`)."""
+    Stored state: :func:`co_order_state` — the RAW pair-weight table
+    (counts from disjoint order sets are additive, so later ingests
+    append) and the directed adjacency as bucketed segments — and the
+    :func:`lpa_seed_levels` label vectors.
+    The ingest is delta-sized end to end: the delta's own pair counts,
+    a floor-crossing check that reads ONLY the delta pairs' weight
+    buckets (:func:`co_order_new_edges`), and blast-radius re-votes
+    through pruned adjacency scans (:func:`lpa_patch_levels`)."""
     import shutil
     import tempfile
 
@@ -1164,44 +1001,17 @@ def incremental_label_propagation(li: DataFrame, delta_cond) -> DataFrame:
     base_li = li.filter(~delta_cond)
     root = tempfile.mkdtemp(prefix="spark_graft_inclpa_")
     try:
-        # --- STORED pre-ingest state (read back from storage in
-        # production): pair-weight segment, adjacency segment, and both
-        # per-iteration label vectors (seeded through the patch kernel
-        # itself — empty state degenerates to the full computation)
-        w0 = _co_order_pair_counts(base_li).localCheckpoint()
-        wdir0 = f"{root}/w/seg0"
-        write_weight_segment(w0, wdir0)
-        base_half = w0.filter(F.col("n_co") >= 2).select("src", "dst")
-        adj0 = f"{root}/adj/seg0"
-        write_adj_segment(base_half, adj0)
-        empty_lbl = spark.createDataFrame([], "id long, label long")
-        # seed through the DOCUMENTED degenerate mode — adj_dirs=[] with
-        # new_half = the whole graph: the kernel's pruned reads require
-        # dirs and new_half edge-disjoint, and the segment written above
-        # already contains base_half (ADVICE r14: passing it through
-        # both sides doubled every edge; LPA stayed exact only because
-        # uniform doubling preserves min/mode under the tiebreak)
-        l1_base, l2_base = lpa_patch_levels(
-            spark, [], empty_lbl, empty_lbl,
-            base_half.localCheckpoint(),
-        )
-        l2_base = l2_base.localCheckpoint()
-
-        # --- the ingest: delta pair counts → pruned floor-crossing
-        # check → pruned-adjacency patch (shared with the streaming twin)
+        store, base_half = co_order_state(base_li, root)
+        l1_base, l2_base = lpa_seed_levels(base_half)
         dw = _co_order_pair_counts(li.filter(delta_cond)).localCheckpoint()
-        new_half = co_order_new_edges(spark, [wdir0], dw)
-        l1f, l2f = lpa_patch_levels(
-            spark, [adj0], l1_base, l2_base, new_half
+        new_half = co_order_new_edges(spark, store.dirs("weights"), dw)
+        _l1, l2 = lpa_patch_levels(
+            spark, store.dirs("adj"), l1_base, l2_base, new_half
         )
-        # l2f is lazy over checkpointed pieces only — never re-reads
-        # the tmpdir the finally removes, and the final plan keeps the
+        # l2 is lazy over checkpointed pieces only — never re-reads the
+        # tmpdir the finally removes, and the final plan keeps the
         # partial_max_by re-vote visible for the PLANS.md gate
-        nodes = li.select(F.col("l_partkey").alias("id")).distinct()
-        return nodes.join(l2f, "id", "left").select(
-            F.col("id").alias("part_id"),
-            F.coalesce("label", "id").alias("community"),
-        )
+        return _lpa_result(li, l2)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -1214,72 +1024,51 @@ def lpa_patch_levels(
     new_half: DataFrame,
     obs: dict | None = None,
 ) -> tuple:
-    """The incremental-LPA PATCH kernel over PRUNABLE stored adjacency
-    — given stored (adjacency segments, level-1, level-2 label
-    vectors) and the ingest's ``new_half`` edges, new-edge endpoints
-    re-take their min-neighbor label and their 1-hop ball re-votes the
-    mode; composes across repeated ingests by induction.
+    """The incremental-LPA PATCH kernel: given stored (``adj_dirs``
+    adjacency segments, level-1, level-2 label vectors) and an ingest's
+    checkpointed ``new_half`` edges, the new edges' endpoints S1 re-take
+    their min-neighbor label (:func:`_lpa_min_label`) and the 1-hop ball
+    S2 = S1 ∪ N(S1) re-votes the mode (:func:`_lpa_vote`); composes
+    across ingests by induction.
 
-    r14 scale fix (VERDICT r13 task #1): same pruned layout as
-    :func:`pagerank_patch_levels` — in-edge gathers are reversed
-    out-rows of the blast radius' buckets, never a full edge-list
-    join; the one pruned read of S1's buckets serves both the level-1
-    re-vote (reversed) and the S2 expansion (its dst column).  With
-    EMPTY stored vectors and ``new_half`` = the whole graph it
-    degenerates to the plain full computation (how the twins and the
-    batch seed).  ``new_half`` must be checkpointed by the caller.
-    Returns (l1_full, l2_full); l1_full is checkpointed, l2_full is a
-    lazy union over checkpointed pieces only (its gather rows are
-    checkpointed inside), so it is safe to publish after the adjacency
-    dirs are gone AND the final plan keeps the partial_max_by re-vote
-    visible for the plan gate."""
-    s1 = (
-        new_half.select(F.col("src").alias("id"))
-        .unionAll(new_half.select(F.col("dst").alias("id")))
-        .distinct()
+    Same pruned layout as :func:`pagerank_patch_levels`: in-edge
+    gathers are reversed rows of one :func:`read_pruned` of the
+    frontier's buckets, never a full edge-list join, and the read of
+    S1's buckets serves both the level-1 re-take (reversed) and the S2
+    expansion (its dst column).  Returns (l1_full, l2_full); l1_full is
+    checkpointed, l2_full is a lazy union over checkpointed pieces only
+    (its gather rows are checkpointed inside), so it is safe to publish
+    after the adjacency dirs are gone AND the final plan keeps the
+    partial_max_by re-vote visible for the plan gate.  ``obs`` receives
+    ``n_new_edges`` and ``n_patched``.
+
+    Measured (r14 sparse probe, ×10 co-order graph on 32 cores): 10.7 /
+    6.9 / 5.9 s per ingest at 10% / 1% / 0.1% deltas."""
+    new_rows = _directed_half(new_half)
+    s1 = _seed_ids(new_half)
+    out1 = _read_adj(spark, adj_dirs, s1, new_rows).localCheckpoint()
+    l1_full = (
+        l1_base.join(s1, "id", "left_anti")
+        .unionAll(_lpa_min_label(_reversed(out1)))
         .localCheckpoint()
     )
-    # one pruned read of S1's buckets: reversed rows are S1's in-edges
-    # (level-1 re-vote), dst column is N(S1) (the S2 expansion)
-    out1 = _read_adj_pruned(spark, adj_dirs, s1, new_half).localCheckpoint()
-    p1 = (
-        out1.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.min("src").alias("label"))
-    )
-    l1_full = (
-        l1_base.join(s1, "id", "left_anti").unionAll(p1).localCheckpoint()
-    )
-    # level 2: modal label over the 1-hop blast radius S2 = S1 ∪ N(S1)
     s2 = (
         s1.unionAll(out1.select(F.col("dst").alias("id")))
         .distinct()
         .localCheckpoint()
     )
-    in2 = (
-        _read_adj_pruned(spark, adj_dirs, s2, new_half)
-        .localCheckpoint()  # blast-radius-sized; frees l2_full (and
-        # the final plan's max_by) from any adjacency-dir reference
-        .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    # checkpointed (blast-radius-sized): frees l2_full, and the final
+    # plan's max_by, from any reference to the adjacency dirs
+    in2 = _reversed(
+        _read_adj(spark, adj_dirs, s2, new_rows).localCheckpoint()
     )
-    p2 = (
-        in2.join(F.broadcast(l1_full.withColumnRenamed("id", "src")), "src")
-        .groupBy(F.col("dst").alias("id"), "label")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("id")
-        .agg(
-            F.max_by(
-                "label", F.struct(F.col("cnt"), -F.col("label"))
-            ).alias("label")
-        )
+    l2_full = l2_base.join(s2, "id", "left_anti").unionAll(
+        _lpa_vote(in2, l1_full)
     )
-    l2_full = l2_base.join(s2, "id", "left_anti").unionAll(p2)
     if obs is not None:
         obs["n_new_edges"] = new_half.count()
         obs["n_patched"] = s2.count()
     return l1_full, l2_full
-
-
 
 
 @register(
@@ -1338,10 +1127,7 @@ _BFS_HOPS = 3
 )
 def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_parquet_table(spark, sf_dir, "lineitem")
-    half = _co_order_half_edges(li)
-    edges = half.unionAll(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    edges = _directed_half(_co_order_half_edges(li)).localCheckpoint()
     seed = li.agg(F.min("l_partkey").alias("id"))
     levels = [seed.withColumn("h", F.lit(0))]
     frontier = seed

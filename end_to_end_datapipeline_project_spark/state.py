@@ -55,8 +55,35 @@ from __future__ import annotations
 
 import json
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def read_segments(spark: SparkSession, dirs: list[str]) -> DataFrame:
+    """The union by name of parquet directories (at least one), each
+    read separately so a filter on a partition column reaches every
+    directory's scan as a PartitionFilter.
+
+    Partition discovery stays on the driver: a bucketed segment has up
+    to 512 partition directories, and above the default 32-path
+    threshold Spark lists them as a cluster job with one task per
+    directory (measured ~0.5 s per pruned read, 40% of a 0.1%-delta
+    graph patch) where a driver-side listing takes milliseconds.  The
+    raised threshold is scoped to these reads — listing happens eagerly
+    in ``spark.read.parquet`` — and restored after, so it never leaks
+    into other queries on the session."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "4096")
+    try:
+        reads = [spark.read.parquet(d) for d in dirs]
+        return reduce(DataFrame.unionByName, reads)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 class StateStore:
@@ -139,26 +166,7 @@ class StateStore:
             if schema is None:
                 raise KeyError(f"state table {name!r} has no commits")
             return spark.createDataFrame([], schema)
-        # keep partition discovery of bucketed segments on the driver
-        # (above 32 paths Spark lists via a one-task-per-dir cluster
-        # job — measured ~0.5 s per read of a 512-bucket segment).
-        # Scoped set/restore: listing happens eagerly inside
-        # spark.read.parquet, so the raised threshold never leaks into
-        # unrelated queries on the session (ADVICE r14)
-        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "4096")
-        try:
-            out = None
-            for d in dirs:
-                part = spark.read.parquet(d)
-                out = part if out is None else out.unionByName(part)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        return out
+        return read_segments(spark, dirs)
 
     # --- the commit -------------------------------------------------------
 

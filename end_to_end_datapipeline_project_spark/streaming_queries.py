@@ -1033,45 +1033,40 @@ def incremental_pagerank_stream(
     co-supply edges from its (part, supplier) pairs against the stored
     roster PRUNED to the batch's parts (graph.co_supply_new_edges —
     never a full-graph rescan), and applies
-    :func:`graph.pagerank_patch_levels` — the exact batch patch kernel
-    — which since r14 expands/gathers through partition-PRUNED scans
+    :func:`graph.pagerank_patch_levels` — the exact batch patch kernel,
+    which expands and gathers through :func:`graph.read_pruned` scans
     of the bucketed stored adjacency and maintains the degree table
-    incrementally (VERDICT r13 task #1).  State is committed
-    ATOMICALLY per batch through :class:`state.StateStore` (VERDICT
-    r13 task #3): the adjacency and the pair roster are append-tables
-    gaining one O(delta) bucketed segment per batch, the degree table
-    and the per-iteration rank vectors are O(V) replacements, and one
-    manifest rename publishes them together — a crash between writes
-    leaves the previous consistent snapshot, and the watermark makes a
-    post-flip replay a no-op.  Seeded from the base corpus through the
-    SAME kernel (empty stored state degenerates to the plain
-    computation), so every level vector along the way is bit-identical
-    to a full rebuild on the graph seen so far."""
+    incrementally.  State is committed ATOMICALLY per batch through
+    :class:`state.StateStore`: the adjacency and the pair roster are
+    append-tables gaining one O(delta) bucketed segment per batch, the
+    degree table and the per-level rank vectors are O(V) replacements,
+    and one manifest rename publishes them together — a crash between
+    writes leaves the previous consistent snapshot, and the watermark
+    makes a post-flip replay a no-op.  Seeded from the base corpus with
+    :func:`graph.pagerank_seed_levels`, the seed the batch query uses,
+    so every level vector along the way is bit-identical to a full
+    rebuild on the graph seen so far."""
     import shutil
     import tempfile
 
     from .graph import (
         PR_ITERS,
-        _adj_bucket,
         _co_supply_half,
-        _directed_half,
+        _pr_result,
+        adj_rows,
+        bucketed,
         co_supply_new_edges,
         pagerank_patch_levels,
-        read_keyed_segments,
+        pagerank_seed_levels,
+        read_pruned,
     )
     from .state import StateStore
 
     root = tempfile.mkdtemp(prefix="spark_graft_stream_pr_")
     try:
         store = StateStore(f"{root}/state")
-        # --- seed stored pre-ingest state from the base corpus through
-        # the patch kernel itself (empty state -> plain full computation)
         base_half = _co_supply_half(base_li)
-        empty_deg = spark.createDataFrame([], "src long, outdeg double")
-        empty_lvl = spark.createDataFrame([], "id long, pr double")
-        lvls, outdeg0 = pagerank_patch_levels(
-            spark, [], empty_deg, [empty_lvl] * PR_ITERS, base_half
-        )
+        lvls, outdeg0 = pagerank_seed_levels(base_half)
         base_ps = base_li.select("l_partkey", "l_suppkey").distinct()
         store.commit(
             0,
@@ -1080,12 +1075,8 @@ def incremental_pagerank_stream(
                 **{f"level_{k}": lvl for k, lvl in enumerate(lvls)},
             },
             append={
-                "adj": _directed_half(base_half).withColumn(
-                    "__bkt", _adj_bucket(F.col("src"))
-                ),
-                "roster": base_ps.withColumn(
-                    "__bkt", _adj_bucket(F.col("l_partkey"))
-                ),
+                "adj": adj_rows(base_half),
+                "roster": bucketed(base_ps, "l_partkey"),
             },
             partition_by={"adj": ["__bkt"], "roster": ["__bkt"]},
         )
@@ -1100,11 +1091,10 @@ def incremental_pagerank_stream(
                 .distinct()
                 .localCheckpoint()
             )
-            roster_sc = read_keyed_segments(
+            roster_sc = read_pruned(
                 ss,
                 store.dirs("roster"),
                 bps.select("l_partkey").distinct(),
-                ["l_partkey"],
                 "l_partkey long, l_suppkey long",
             )
             adj_dirs = store.dirs("adj")
@@ -1122,12 +1112,8 @@ def incremental_pagerank_stream(
                     **{f"level_{k}": lvl for k, lvl in enumerate(patched)},
                 },
                 append={
-                    "adj": _directed_half(new_half).withColumn(
-                        "__bkt", _adj_bucket(F.col("src"))
-                    ),
-                    "roster": new_ps.withColumn(
-                        "__bkt", _adj_bucket(F.col("l_partkey"))
-                    ),
+                    "adj": adj_rows(new_half),
+                    "roster": bucketed(new_ps, "l_partkey"),
                 },
                 partition_by={"adj": ["__bkt"], "roster": ["__bkt"]},
             )
@@ -1142,21 +1128,13 @@ def incremental_pagerank_stream(
 
         final = store.read(spark, f"level_{PR_ITERS - 1}")
         roster = store.read(spark, "roster")
-        nodes = (
-            base_li.select("l_suppkey")
-            .unionByName(roster.select("l_suppkey"))
-            .select(F.col("l_suppkey").alias("id"))
-            .distinct()
-        )
         # eager checkpoint: materialize before the finally-rmtree
-        return (
-            nodes.join(final, "id", "left")
-            .select(
-                F.col("id").alias("supp_id"),
-                F.round(F.coalesce("pr", F.lit(0.15)), 6).alias("pagerank"),
-            )
-            .localCheckpoint()
-        )
+        return _pr_result(
+            base_li.select("l_suppkey").unionByName(
+                roster.select("l_suppkey")
+            ),
+            final,
+        ).localCheckpoint()
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -1221,52 +1199,44 @@ def incremental_lpa_stream(
     pairs; floor crossings read only the increments' weight buckets
     (graph.co_order_new_edges); and :func:`graph.lpa_patch_levels`
     re-votes only the 1-hop blast radius through partition-pruned
-    adjacency scans (VERDICT r13 task #1 — never a full edge-list
-    join).  Exactness composes by induction: summed segment weights
-    equal the merged corpus counts, so each batch's committed state
-    equals the batch kernel's derivation from the rows seen so far."""
+    adjacency scans, never a full edge-list join.  Seeded with
+    :func:`graph.lpa_seed_levels`, the seed the batch query uses.
+    Exactness composes by induction: summed segment weights equal the
+    merged corpus counts, so each batch's committed state equals the
+    batch kernel's derivation from the rows seen so far."""
     import shutil
     import tempfile
 
     from .graph import (
-        _adj_bucket,
         _co_order_pair_counts,
-        _directed_half,
-        _pair_bucket,
+        _lpa_result,
+        adj_rows,
+        bucketed,
         co_order_new_edges,
         lpa_patch_levels,
-        read_keyed_segments,
+        lpa_seed_levels,
+        read_pruned,
     )
     from .state import StateStore
 
     root = tempfile.mkdtemp(prefix="spark_graft_stream_lpa_")
     try:
         store = StateStore(f"{root}/state")
-        # --- seed from the base corpus through the patch kernel itself
         w0 = _co_order_pair_counts(base_li).localCheckpoint()
         base_half = (
             w0.filter(F.col("n_co") >= 2)
             .select("src", "dst")
             .localCheckpoint()
         )
-        empty_lbl = spark.createDataFrame([], "id long, label long")
-        l1, l2 = lpa_patch_levels(
-            spark, [], empty_lbl, empty_lbl, base_half
-        )
+        l1, l2 = lpa_seed_levels(base_half)
         base_op = base_li.select("l_orderkey", "l_partkey").distinct()
         store.commit(
             0,
             replace={"l1": l1, "l2": l2},
             append={
-                "op": base_op.withColumn(
-                    "__bkt", _adj_bucket(F.col("l_orderkey"))
-                ),
-                "weights": w0.withColumn(
-                    "__bkt", _pair_bucket(F.col("src"), F.col("dst"))
-                ),
-                "adj": _directed_half(base_half).withColumn(
-                    "__bkt", _adj_bucket(F.col("src"))
-                ),
+                "op": bucketed(base_op, "l_orderkey"),
+                "weights": bucketed(w0, "src", "dst"),
+                "adj": adj_rows(base_half),
             },
             partition_by={
                 "op": ["__bkt"],
@@ -1285,11 +1255,10 @@ def incremental_lpa_stream(
                 .distinct()
                 .localCheckpoint()
             )
-            op_sc = read_keyed_segments(
+            op_sc = read_pruned(
                 ss,
                 store.dirs("op"),
                 bop.select("l_orderkey").distinct(),
-                ["l_orderkey"],
                 "l_orderkey long, l_partkey long",
             )
             new_op = bop.join(
@@ -1328,15 +1297,9 @@ def incremental_lpa_stream(
                 bid,
                 replace={"l1": l1n, "l2": l2n},
                 append={
-                    "op": new_op.withColumn(
-                        "__bkt", _adj_bucket(F.col("l_orderkey"))
-                    ),
-                    "weights": dw.withColumn(
-                        "__bkt", _pair_bucket(F.col("src"), F.col("dst"))
-                    ),
-                    "adj": _directed_half(new_half).withColumn(
-                        "__bkt", _adj_bucket(F.col("src"))
-                    ),
+                    "op": bucketed(new_op, "l_orderkey"),
+                    "weights": bucketed(dw, "src", "dst"),
+                    "adj": adj_rows(new_half),
                 },
                 partition_by={
                     "op": ["__bkt"],
@@ -1355,20 +1318,12 @@ def incremental_lpa_stream(
 
         final = store.read(spark, "l2")
         roster = store.read(spark, "op")
-        nodes = (
-            base_li.select("l_partkey")
-            .unionByName(roster.select("l_partkey"))
-            .select(F.col("l_partkey").alias("id"))
-            .distinct()
-        )
-        return (
-            nodes.join(final, "id", "left")
-            .select(
-                F.col("id").alias("part_id"),
-                F.coalesce("label", "id").alias("community"),
-            )
-            .localCheckpoint()
-        )
+        return _lpa_result(
+            base_li.select("l_partkey").unionByName(
+                roster.select("l_partkey")
+            ),
+            final,
+        ).localCheckpoint()
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_datapipeline_project_spark.registry import all_queries
+from end_to_end_datapipeline_project_spark.state import StateStore
 
 SF = "/root/testdata/sf0.001"
 
@@ -251,10 +252,11 @@ def test_degree_orientation_bounds_wedges_under_skew(spark):
 
 
 def test_incremental_pagerank_equals_rebuild(spark):
-    """Maintenance ≡ rebuild, bit-for-bit, on the real table (sf0.001)
-    AND on a hand graph where the delta bridges two components and
+    """Maintenance ≡ rebuild, bit-for-bit, on the real table (sf0.001),
+    on a hand graph where the delta bridges two components and
     introduces a brand-new node — the corners where a wrong blast
-    radius or a stale stored rank would diverge."""
+    radius or a stale stored rank would diverge — and on an edgeless
+    base, where the stored adjacency segment is empty."""
     from end_to_end_datapipeline_project_spark.graph import (
         incremental_pagerank,
         pagerank,
@@ -297,6 +299,27 @@ def test_incremental_pagerank_equals_rebuild(spark):
     )
     assert got == sorted(map(tuple, pagerank(mini).collect()))
     assert {t[0] for t in got} == {1, 2, 3, 4, 9}
+
+    # edgeless base: one supplier per part; every edge arrives with
+    # delta order 17 (1—2 on part 100, 2—3 and a new node 5 on part 300)
+    rows = [
+        (1, 100, 1), (2, 200, 2), (3, 300, 3),
+        (17, 100, 2), (17, 300, 2), (17, 300, 5),
+    ]
+    edgeless = spark.createDataFrame(
+        [(ok, pk, sk, 1) for ok, pk, sk in rows],
+        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int",
+    )
+    got = sorted(
+        map(
+            tuple,
+            incremental_pagerank(
+                edgeless, F.col("l_orderkey") % 10 == 7
+            ).collect(),
+        )
+    )
+    assert got == sorted(map(tuple, pagerank(edgeless).collect()))
+    assert {t[0] for t in got} == {1, 2, 3, 5}
 
 
 def test_incremental_label_propagation_equals_rebuild(spark):
@@ -376,42 +399,36 @@ def test_incremental_label_propagation_equals_rebuild(spark):
     # carries l1=10, so 30 lands in 10's community, not its own
     assert by_id[30] == 10
 
-
-def test_pagerank_strategy_variants_are_bit_identical(spark):
-    """Both rank-distribution strategies (broadcast vs src-partitioned
-    shuffle join) and both message-sum kernels (rounded primitive-long
-    vs BigDecimal) must produce byte-for-byte the same ranks — the
-    strategy switch is a scale knob, never a semantics knob."""
-    from end_to_end_datapipeline_project_spark.graph import pagerank
-    from end_to_end_datapipeline_project_spark.sources import (
-        read_parquet_table,
+    # edgeless base: one part per order, so the stored weight and
+    # adjacency segments are empty; every edge arrives with delta orders
+    # 17 and 27 (a pair needs two orders to pass the ≥2 floor): the
+    # triangle 10—20—30 plus brand-new part 60
+    rows = [
+        (1, 10), (2, 20), (3, 30), (4, 40),
+        (17, 10), (17, 20), (17, 30), (17, 60),
+        (27, 10), (27, 20), (27, 30), (27, 60),
+    ]
+    edgeless = spark.createDataFrame(
+        [(ok, pk, 1, 1) for ok, pk in rows],
+        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int",
     )
-
-    li = read_parquet_table(spark, SF, "lineitem")
-    base = sorted(map(tuple, pagerank(li).collect()))
-    assert base == sorted(
-        map(tuple, pagerank(li, broadcast_ranks=False).collect())
+    got = sorted(
+        map(tuple, incremental_label_propagation(edgeless, cond).collect())
     )
-    assert base == sorted(
-        map(tuple, pagerank(li, rounded_msg_sum=False).collect())
-    )
-    # more iterations converge: both strategies agree there too
-    b10 = sorted(map(tuple, pagerank(li, iters=10).collect()))
-    j10 = sorted(
-        map(tuple, pagerank(li, iters=10, broadcast_ranks=False).collect())
-    )
-    assert b10 == j10
+    assert got == sorted(map(tuple, rebuild(edgeless).collect()))
+    assert {t[0] for t in got} == {10, 20, 30, 40, 60}
 
 
-def test_read_adj_pruned_plan_prunes_and_gates_broadcast(spark, tmp_path):
-    """The incremental graph kernels' load-bearing scale properties
-    (VERDICT r14 tasks #4/#6): (a) a pruned stored-adjacency read shows
-    PartitionFilters on __bkt — patch scans read the frontier's buckets,
-    never full E; (b) the frontier semi-join broadcasts below
-    FRONTIER_BCAST_MAX and falls back to a shuffle join above it
+def test_read_pruned_plan_prunes_and_gates_broadcast(spark, tmp_path):
+    """The incremental graph kernels' load-bearing scale properties, on
+    segments written through StateStore: (a) a pruned read shows
+    PartitionFilters on __bkt — patch scans read the keys' buckets,
+    never the full table — for the one-column adjacency key and the
+    two-column (src, dst) weight key; (b) the key semi-join broadcasts
+    below FRONTIER_BCAST_MAX and falls back to a shuffle join above it
     (instead of OOMing a real driver on a saturated multi-hop
-    frontier); (c) the no-segments/no-batch corner returns an empty
-    frame instead of raising (ADVICE r14)."""
+    frontier); (c) the no-segments/no-extra-rows corner returns an
+    empty frame instead of raising."""
     from pyspark.sql import functions as F
 
     from end_to_end_datapipeline_project_spark import graph
@@ -419,40 +436,70 @@ def test_read_adj_pruned_plan_prunes_and_gates_broadcast(spark, tmp_path):
     half = spark.range(2000).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
-    seg = str(tmp_path / "adj" / "seg0")
-    graph.write_adj_segment(half, seg)
-    ids = spark.range(40).select("id").localCheckpoint()
+    counts = half.withColumn("n_co", F.col("src") % 3)
+    store = StateStore(str(tmp_path / "st"))
+    store.commit(
+        0,
+        append={
+            "adj": graph.adj_rows(half),
+            "weights": graph.bucketed(counts, "src", "dst"),
+        },
+        partition_by={"adj": ["__bkt"], "weights": ["__bkt"]},
+    )
+    adj, weights = store.dirs("adj"), store.dirs("weights")
+    ADJ, WEIGHTS = "src long, dst long", "src long, dst long, n_co long"
+    ids = spark.range(40).select(F.col("id").alias("src")).localCheckpoint()
+    pairs = (
+        spark.range(0, 2000, 50)
+        .select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
+        .localCheckpoint()
+    )
+    edges = [(i, i + 1) for i in range(2000)]
+    want = {(s, d) for s, d in edges if s < 40}
+    want |= {(d, s) for s, d in edges if d < 40}
+    want_w = {(i, i + 1, i % 3) for i in range(0, 2000, 50)}
 
-    out = graph._read_adj_pruned(spark, [seg], ids)
-    rows = out.collect()
-    raw = out._jdf.queryExecution().executedPlan().toString()
+    def read(dirs, keys, schema):
+        out = graph.read_pruned(spark, dirs, keys, schema)
+        rows = {tuple(r) for r in out.collect()}
+        qe = out._jdf.queryExecution()
+        hinted = "strategy=broadcast" in qe.optimizedPlan().toString()
+        return rows, qe.executedPlan().toString(), hinted
+
+    rows, raw, hinted = read(adj, ids, ADJ)
     assert "PartitionFilters: [__bkt" in raw  # bucket pruning reached the scan
-    assert "BroadcastHashJoin" in raw and "LeftSemi" in raw
-    # exactness: both orientations of every edge touching [0, 40)
-    want = {(s, d) for s, d in ((i, i + 1) for i in range(2000)) if s < 40}
-    want |= {(d, s) for s, d in ((i, i + 1) for i in range(2000)) if d < 40}
-    assert {(r.src, r.dst) for r in rows} == want
+    assert "BroadcastHashJoin" in raw and "LeftSemi" in raw and hinted
+    assert rows == want  # both orientations of every edge touching [0, 40)
+    rows, raw, hinted = read(weights, pairs, WEIGHTS)
+    assert "PartitionFilters: [__bkt" in raw
+    assert "BroadcastHashJoin" in raw and "LeftSemi" in raw and hinted
+    assert rows == want_w
 
-    # (b) the over-threshold fallback: same rows, no broadcast semi-join
+    # (b) the over-threshold fallback: same rows, no broadcast hint on
+    # the keys (AQE may still pick a broadcast from measured sizes; the
+    # plan must not REQUIRE it)
     prev = graph.FRONTIER_BCAST_MAX
     graph.FRONTIER_BCAST_MAX = 0
     try:
-        out2 = graph._read_adj_pruned(spark, [seg], ids)
-        rows2 = {(r.src, r.dst) for r in out2.collect()}
-        raw2 = out2._jdf.queryExecution().executedPlan().toString()
+        rows2, raw2, hinted2 = read(adj, ids, ADJ)
+        rows2_w, raw2_w, hinted2_w = read(weights, pairs, WEIGHTS)
     finally:
         graph.FRONTIER_BCAST_MAX = prev
-    assert rows2 == want
-    # the ids side must not be a plan-forced broadcast (AQE may still
-    # pick one from measured sizes; the plan must not REQUIRE it)
-    assert "CartesianProduct" not in raw2
+    assert rows2 == want and rows2_w == want_w
+    assert not hinted2 and not hinted2_w
+    for plan in (raw2, raw2_w):
+        assert "CartesianProduct" not in plan
+        assert "PartitionFilters: [__bkt" in plan
 
-    # (c) degenerate corner: no segments, no batch edges
-    empty = graph._read_adj_pruned(spark, [], ids)
+    # (c) degenerate corner: no segments, no extra rows
+    empty = graph.read_pruned(spark, [], ids, ADJ)
     assert empty.columns == ["src", "dst"] and empty.count() == 0
 
-    # conf scoping: the raised listing threshold never leaks (ADVICE r14)
+    # conf scoping: the raised listing threshold never leaks, from the
+    # pruned reader or from StateStore.read
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert spark.conf.get(key, None) is None
+    store.read(spark, "adj").count()
     assert spark.conf.get(key, None) is None
 
 

@@ -4,8 +4,8 @@ noisy shared host.
 The batch bench (bench.py) times each query in sequence, so a burst of
 host CPU-steal lands entirely on whichever query is running — per-round
 BENCH deltas of ±30% appear on queries whose code did not change.  This
-harness generalizes tools/ab_pagerank.py: it runs the chosen queries
-ROUND-ROBIN (q1,q2,...,qn, q1,q2,...) for R rounds in ONE process, so
+harness runs the chosen queries ROUND-ROBIN (q1,q2,...,qn, q1,q2,...)
+for R rounds in ONE process, so
 contention bursts are spread across all queries instead of concentrated
 on one, and reports the per-query MIN — the closest observable to the
 steady-state plan execution cost (the quantity that scales with cluster

@@ -229,25 +229,30 @@ AUDIT: dict[str, list[tuple[str, str]]] = {
 
 def _adj_pruned_probe(spark, sf_dir):
     """A pruned stored-adjacency read exactly as the incremental
-    PR/LPA patch kernels issue one per level (graph._read_adj_pruned
-    over a write_adj_segment layout) — synthesized here because the
-    kernels run it during CONSTRUCTION behind localCheckpoints, so the
-    registered queries' FINAL plans can never exhibit it."""
+    PR/LPA patch kernels issue one per level (graph.read_pruned over an
+    adjacency segment committed through StateStore) — synthesized here
+    because the kernels run it during CONSTRUCTION behind
+    localCheckpoints, so the registered queries' FINAL plans can never
+    exhibit it."""
     import tempfile
 
     from pyspark.sql import functions as F
 
     from end_to_end_datapipeline_project_spark.graph import (
-        _read_adj_pruned,
-        write_adj_segment,
+        adj_rows,
+        read_pruned,
     )
+    from end_to_end_datapipeline_project_spark.state import StateStore
 
     half = spark.range(5000).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
-    seg = tempfile.mkdtemp(prefix="spark_graft_plans_adj_") + "/seg0"
-    write_adj_segment(half, seg)
-    return _read_adj_pruned(spark, [seg], spark.range(64).select("id"))
+    store = StateStore(tempfile.mkdtemp(prefix="spark_graft_plans_adj_"))
+    store.commit(
+        0, append={"adj": adj_rows(half)}, partition_by={"adj": ["__bkt"]}
+    )
+    keys = spark.range(64).select(F.col("id").alias("src"))
+    return read_pruned(spark, store.dirs("adj"), keys, "src long, dst long")
 
 
 def _verify_bcast_probe(spark, sf_dir):

@@ -1101,14 +1101,11 @@ def _sparse_pr_probe(spark, k: int) -> None:
     import shutil
 
     from end_to_end_datapipeline_project_spark.graph import (
-        PR_ITERS,
         _co_order_pair_counts,
-        _directed_half,
-        _out_degrees,
         co_order_new_edges,
+        co_order_state,
         pagerank_patch_levels,
-        write_adj_segment,
-        write_weight_segment,
+        pagerank_seed_levels,
     )
 
     full = f"/tmp/spark_graft_scale_{os.getuid()}/x{k}"
@@ -1120,8 +1117,6 @@ def _sparse_pr_probe(spark, k: int) -> None:
     li = read_parquet_table(spark, big_dir, "lineitem").localCheckpoint()
     n_nodes = li.select("l_partkey").distinct().count()
     state_root = f"/tmp/spark_graft_scale_{os.getuid()}/sparse_state"
-    empty_deg = spark.createDataFrame([], "src long, outdeg double")
-    empty_lvl = spark.createDataFrame([], "id long, pr double")
 
     rows_out = [
         SPARSE_MARKER,
@@ -1150,24 +1145,8 @@ def _sparse_pr_probe(spark, k: int) -> None:
         cond = F.col("l_orderkey") % mod == 7
         shutil.rmtree(state_root, ignore_errors=True)
         # --- stored pre-ingest state, untimed
-        w0 = _co_order_pair_counts(li.filter(~cond)).localCheckpoint()
-        wdir = f"{state_root}/w/seg0"
-        write_weight_segment(w0, wdir)
-        base_half = (
-            w0.filter(F.col("n_co") >= 2)
-            .select("src", "dst")
-            .localCheckpoint()
-        )
-        adj = f"{state_root}/adj/seg0"
-        write_adj_segment(base_half, adj)
-        outdeg0 = _out_degrees(_directed_half(base_half)).localCheckpoint()
-        # seed with adj_dirs=[] (the documented degenerate mode): the
-        # segment above already holds base_half, and the kernel requires
-        # dirs and new_half edge-disjoint — passing both doubled every
-        # seeded message sum vs a true rebuild (ADVICE r14)
-        base_levels, _ = pagerank_patch_levels(
-            spark, [], empty_deg, [empty_lvl] * PR_ITERS, base_half
-        )
+        store, base_half = co_order_state(li.filter(~cond), state_root)
+        base_levels, outdeg0 = pagerank_seed_levels(base_half)
         if n_half is None:
             n_half = base_half.count()  # ~the fixed graph's edge count
         delta_li = li.filter(cond).localCheckpoint()
@@ -1175,9 +1154,9 @@ def _sparse_pr_probe(spark, k: int) -> None:
         obs: dict = {}
         t0 = time.time()
         dw = _co_order_pair_counts(delta_li).localCheckpoint()
-        new_half = co_order_new_edges(spark, [wdir], dw)
+        new_half = co_order_new_edges(spark, store.dirs("weights"), dw)
         levels, _od = pagerank_patch_levels(
-            spark, [adj], outdeg0, base_levels, new_half, obs=obs
+            spark, store.dirs("adj"), outdeg0, base_levels, new_half, obs=obs
         )
         levels[-1].count()
         dt = time.time() - t0
@@ -1205,9 +1184,9 @@ def _sparse_lpa_probe(spark, k: int) -> None:
     from end_to_end_datapipeline_project_spark.graph import (
         _co_order_pair_counts,
         co_order_new_edges,
+        co_order_state,
         lpa_patch_levels,
-        write_adj_segment,
-        write_weight_segment,
+        lpa_seed_levels,
     )
 
     full = f"/tmp/spark_graft_scale_{os.getuid()}/x{k}"
@@ -1219,7 +1198,6 @@ def _sparse_lpa_probe(spark, k: int) -> None:
     li = read_parquet_table(spark, big_dir, "lineitem").localCheckpoint()
     n_nodes = li.select("l_partkey").distinct().count()
     state_root = f"/tmp/spark_graft_scale_{os.getuid()}/sparse_state"
-    empty_lbl = spark.createDataFrame([], "id long, label long")
 
     rows_out = [
         SPARSE_LPA_MARKER,
@@ -1238,29 +1216,15 @@ def _sparse_lpa_probe(spark, k: int) -> None:
     for mod in (10, 100, 1000):
         cond = F.col("l_orderkey") % mod == 7
         shutil.rmtree(state_root, ignore_errors=True)
-        w0 = _co_order_pair_counts(li.filter(~cond)).localCheckpoint()
-        wdir = f"{state_root}/w/seg0"
-        write_weight_segment(w0, wdir)
-        base_half = (
-            w0.filter(F.col("n_co") >= 2)
-            .select("src", "dst")
-            .localCheckpoint()
-        )
-        adj = f"{state_root}/adj/seg0"
-        write_adj_segment(base_half, adj)
-        # adj_dirs=[] for the seed: dirs and new_half must be
-        # edge-disjoint (ADVICE r14; see the --sparse-pr seed note)
-        l1b, l2b = lpa_patch_levels(
-            spark, [], empty_lbl, empty_lbl, base_half
-        )
-        l2b = l2b.localCheckpoint()
+        store, base_half = co_order_state(li.filter(~cond), state_root)
+        l1b, l2b = lpa_seed_levels(base_half)
         delta_li = li.filter(cond).localCheckpoint()
         obs: dict = {}
         t0 = time.time()
         dw = _co_order_pair_counts(delta_li).localCheckpoint()
-        new_half = co_order_new_edges(spark, [wdir], dw)
+        new_half = co_order_new_edges(spark, store.dirs("weights"), dw)
         l1f, l2f = lpa_patch_levels(
-            spark, [adj], l1b, l2b, new_half, obs=obs
+            spark, store.dirs("adj"), l1b, l2b, new_half, obs=obs
         )
         l2f.localCheckpoint().count()
         dt = time.time() - t0
