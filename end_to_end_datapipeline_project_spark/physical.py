@@ -39,6 +39,30 @@ def _stage(sf_dir: str, leaf: str) -> str:
     return stage_dir("spark_graft_physical", _STAGE_EPOCH, sf_dir, leaf)
 
 
+def _round_trip(
+    spark: SparkSession, sf_dir: str, leaf: str, df: DataFrame, write
+) -> DataFrame:
+    """Stage ``df`` once as parquet (``write(df, tmp_dir)``, published
+    by :func:`claim_staged`) and read the staged copy back with
+    ``df``'s schema, so the read launches no footer job."""
+    path = _stage(sf_dir, leaf)
+    claim_staged(path, lambda tmp: write(df, tmp))
+    return spark.read.schema(df.schema).parquet(path)
+
+
+def _silver_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cleansed events staged as date-partitioned Silver parquet."""
+    return _round_trip(
+        spark,
+        sf_dir,
+        "silver_events",
+        events_cleansed(spark, sf_dir),
+        lambda df, tmp: df.write.mode("overwrite")
+        .partitionBy("date")
+        .parquet(tmp),
+    )
+
+
 @register(
     "q_bucketed_join",
     f"""
@@ -107,16 +131,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregated per date.",
 )
 def q_medallion_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    silver_dir = _stage(sf_dir, "silver_events")
-    claim_staged(
-        silver_dir,
-        lambda tmp: events_cleansed(spark, sf_dir)
-        .write.mode("overwrite")
-        .partitionBy("date")
-        .parquet(tmp),
-    )
-    back = spark.read.parquet(silver_dir)
-    pruned = back.filter(
+    pruned = _silver_events(spark, sf_dir).filter(
         (F.col("date") >= F.lit("2024-01-10").cast("date"))
         & (F.col("date") < F.lit("2024-01-20").cast("date"))
     )
@@ -349,15 +364,7 @@ def hll_rollup(sketches: DataFrame, *keys: str) -> DataFrame:
     "`dynamicpruning` in tools/dump_plans.py.",
 )
 def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    silver_dir = _stage(sf_dir, "silver_events")
-    claim_staged(
-        silver_dir,
-        lambda tmp: events_cleansed(spark, sf_dir)
-        .write.mode("overwrite")
-        .partitionBy("date")
-        .parquet(tmp),
-    )
-    silver = spark.read.parquet(silver_dir)
+    silver = _silver_events(spark, sf_dir)
     dim = (
         silver.select(F.col("date").alias("d"))
         .distinct()
@@ -402,24 +409,26 @@ _COMPACT_TARGET_FILES = 4
     "asserted in tests/test_physical.py.",
 )
 def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    frag_dir = _stage(sf_dir, "frag_documents")
-    compact_dir = _stage(sf_dir, "compact_documents")
     docs = read_parquet_table(spark, sf_dir, "documents")
     # simulate micro-batch fragmentation: 64 shards of ~80 rows
-    claim_staged(
-        frag_dir,
-        lambda tmp: docs.repartition(_COMPACT_SHARDS)
+    frag = _round_trip(
+        spark,
+        sf_dir,
+        "frag_documents",
+        docs,
+        lambda df, tmp: df.repartition(_COMPACT_SHARDS)
         .write.mode("overwrite")
         .parquet(tmp),
     )
-    claim_staged(
-        compact_dir,
-        lambda tmp: spark.read.parquet(frag_dir)
-        .repartition(_COMPACT_TARGET_FILES)
+    back = _round_trip(
+        spark,
+        sf_dir,
+        "compact_documents",
+        frag,
+        lambda df, tmp: df.repartition(_COMPACT_TARGET_FILES)
         .write.mode("overwrite")
         .parquet(tmp),
     )
-    back = spark.read.parquet(compact_dir)
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("doc_id").alias("n_docs"),
@@ -452,7 +461,6 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is lossless.",
 )
 def q_parquet_bloom_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stage = _stage(sf_dir, "orders_bloom_v2")
     # parquet-mr SKIPS bloom filters for columns whose pages are fully
     # dictionary-encoded (the dictionary already answers membership
     # exactly) — true for any test-SF key column, so the sidecar would
@@ -460,16 +468,17 @@ def q_parquet_bloom_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dictionary-page limit and falls back to plain encoding, which is
     # precisely when blooms earn their keep; the staged copy disables
     # the dictionary for the key column to land in that regime.
-    claim_staged(
-        stage,
-        lambda tmp: read_parquet_table(spark, sf_dir, "orders")
-        .write.mode("overwrite")
+    back = _round_trip(
+        spark,
+        sf_dir,
+        "orders_bloom_v2",
+        read_parquet_table(spark, sf_dir, "orders"),
+        lambda df, tmp: df.write.mode("overwrite")
         .option("parquet.bloom.filter.enabled#o_custkey", "true")
         .option("parquet.bloom.filter.expected.ndv#o_custkey", "20000")
         .option("parquet.enable.dictionary#o_custkey", "false")
         .parquet(tmp),
     )
-    back = spark.read.parquet(stage)
     return (
         back.filter(F.col("o_custkey").isin(7, 21, 42))
         .groupBy("o_orderstatus")

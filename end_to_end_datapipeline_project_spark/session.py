@@ -35,6 +35,7 @@ _LOCAL_ONLY_KEYS = frozenset(
         "spark.sql.files.openCostInBytes",
         "spark.driver.memory",
         "spark.ui.enabled",
+        "spark.buffer.pageSize",
     }
 )
 
@@ -82,6 +83,13 @@ def build_conf(
         conf["spark.sql.files.openCostInBytes"] = str(512 * 1024)
         conf["spark.driver.memory"] = os.environ.get("SPARK_DRIVER_MEMORY", "90g")
         conf["spark.ui.enabled"] = "false"
+        # Spark sizes a memory page from the heap (execution memory /
+        # cores / 16, capped at 64 MB), so the 90g driver gets 64 MB
+        # pages: a broadcast hash relation of a handful of rows then
+        # holds a 64 MB array, and each broadcast still awaiting the
+        # ContextCleaner pins that much heap.  1 MB is Spark's floor; a
+        # record larger than a page still gets a page of its own size.
+        conf["spark.buffer.pageSize"] = "1m"
     conf.update(extra_conf or {})
     return master, conf
 
@@ -108,8 +116,9 @@ def get_spark(
     - ``shuffle.partitions`` sized to the cluster, not the 200 default.
     - Arrow for any pandas edge (vectorized transfer, never row-at-a-time).
 
-    Local-only knobs (file-split sizing, driver memory) apply only when the
-    resolved master is ``local[...]`` — see :data:`_LOCAL_ONLY_KEYS`.
+    Local-only knobs (file-split sizing, driver memory, memory page size)
+    apply only when the resolved master is ``local[...]`` — see
+    :data:`_LOCAL_ONLY_KEYS`.
     """
     master, conf = build_conf(
         master=master, shuffle_partitions=shuffle_partitions, extra_conf=extra_conf

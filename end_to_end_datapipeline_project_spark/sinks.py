@@ -102,6 +102,8 @@ def compact_partitioned(
     import math
     import os
 
+    # the one inferred parquet read in the package: ``path`` is any
+    # caller's table, whose schema only its footers know
     df = spark.read.parquet(path)
     data_cols = [c for c in df.columns if c != partition_col]
     # PER-PARTITION file budget, not a global one: salting by a global

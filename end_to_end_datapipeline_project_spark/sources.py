@@ -1,4 +1,4 @@
-"""Partition-aware sources (reference S4/S5 done right).
+"""Partition-aware, schema-declared sources (reference S4/S5 done right).
 
 The reference materializes the file list with Python ``glob.glob`` in the
 driver (gtfstransformerSilver.py:11) — a driver-side bottleneck and no
@@ -6,6 +6,11 @@ partition pruning.  We read the base directory and let Spark's Hive-style
 partition discovery + Catalyst partition pruning select files: on a
 100 TB lake only the matching ``year=/month=/day=`` directories are listed
 and scanned.
+
+Both readers declare their schema (``schemas.py``): the Bronze JSON
+envelope and the testdata parquet tables alike.  Building either
+DataFrame therefore launches no Spark job; an inferred parquet read
+launches one per call to read a footer.
 """
 
 from __future__ import annotations
@@ -13,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import BRONZE_SCHEMA
+from .schemas import BRONZE_SCHEMA, TESTDATA_SCHEMAS
 
 
 def read_bronze(
@@ -54,14 +59,9 @@ def read_bronze(
 
 
 def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table (TESTDATA.md).
-
-    ``events.ts`` is TIMESTAMP(NANOS) parquet, which Spark only reads as a
-    raw long (``legacy.parquet.nanosAsLong``).  We truncate nanos → micros
-    exactly like DuckDB does (integer DIV, not double division — the nano
-    epoch exceeds double's 53-bit integer range).
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """Load one driver testdata table (TESTDATA.md) with its declared
+    schema (:data:`schemas.TESTDATA_SCHEMAS`), so the read launches no
+    Spark job; every timestamp column is ``timestamp_ntz``."""
     # oracle-parity confs must hold even on a vanilla driver session
     # (SURVEY.md §7.4: pinned UTC, ANSI on) — the session factory sets
     # them too, but the driver contract may hand us any SparkSession.
@@ -72,11 +72,9 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     # needing different session semantics must use a separate session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for field in df.schema.fields:
-        if field.name == "ts" and field.dataType.typeName() in ("long", "bigint"):
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    return df
+    return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(
+        f"{sf_dir}/{name}.parquet"
+    )
 
 
 def stage_dir(root: str, epoch: str, sf_dir: str, leaf: str) -> str:

@@ -12,8 +12,8 @@ publish / Delta's ``_last_checkpoint``:
 1. every table the batch touches is written to a NEW directory under
    the store root (``<table>/b<batch>`` for full replacements,
    ``<table>/seg<batch>`` for appended segments);
-2. a single manifest JSON naming each table's live directories — plus
-   the last applied batch id — is renamed into place with
+2. a single manifest JSON naming each table's live directories and
+   schema — plus the last applied batch id — is renamed into place with
    ``os.replace`` (atomic on POSIX).
 
 A crash anywhere before step 2 leaves the previous manifest, and
@@ -49,6 +49,12 @@ commit runs.
 Append segments may be PARTITIONED (``partition_by``) so readers can
 prune: :meth:`read` applies a pushed filter per segment, and a filter
 on the partition column reaches every segment's ``PartitionFilters``.
+
+Every read declares its schema — the one the manifest recorded when the
+table was written — so building a state DataFrame launches no Spark
+job (an inferred parquet read launches one per directory to read a
+footer), and an empty partitioned segment, which has no footer at all,
+reads as an empty table.
 """
 
 from __future__ import annotations
@@ -58,12 +64,17 @@ import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
-def read_segments(spark: SparkSession, dirs: list[str]) -> DataFrame:
-    """The union by name of parquet directories (at least one), each
-    read separately so a filter on a partition column reaches every
-    directory's scan as a PartitionFilter.
+def read_segments(
+    spark: SparkSession, dirs: list[str], schema: T.StructType | str
+) -> DataFrame:
+    """The union by name of parquet directories (at least one) written
+    with ``schema`` (a StructType or DDL string, partition columns
+    included), each read separately so a filter on a partition column
+    reaches every directory's scan as a PartitionFilter.  The declared
+    schema means no read launches a footer job.
 
     Partition discovery stays on the driver: a bucketed segment has up
     to 512 partition directories, and above the default 32-path
@@ -77,7 +88,7 @@ def read_segments(spark: SparkSession, dirs: list[str]) -> DataFrame:
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "4096")
     try:
-        reads = [spark.read.parquet(d) for d in dirs]
+        reads = [spark.read.schema(schema).parquet(d) for d in dirs]
         return reduce(DataFrame.unionByName, reads)
     finally:
         if prev is None:
@@ -103,9 +114,9 @@ class StateStore:
     def _load(self) -> dict:
         try:
             with open(self._manifest_path()) as f:
-                return json.load(f)
+                manifest = json.load(f)
         except FileNotFoundError:
-            return {"batch": -1, "tables": {}}
+            return {"batch": -1, "tables": {}, "schemas": {}}
         except json.JSONDecodeError as e:
             # _publish fsyncs the tmp file and the directory around the
             # os.replace, so a torn manifest means filesystem-level
@@ -118,6 +129,10 @@ class StateStore:
                 "snapshot — resetting it would replay already-applied "
                 "batches"
             ) from e
+        # a manifest from before schemas were recorded still names its
+        # tables; read() refuses each one by name
+        manifest.setdefault("schemas", {})
+        return manifest
 
     def last_batch(self) -> int:
         """Id of the last fully-committed batch (-1 before any commit).
@@ -152,21 +167,29 @@ class StateStore:
             for d in self._load()["tables"].get(name, [])
         ]
 
-    def read(
-        self, spark: SparkSession, name: str, schema: str | None = None
-    ) -> DataFrame:
+    def read(self, spark: SparkSession, name: str) -> DataFrame:
         """The table's current content: the union of its live
         directories (one for replace tables, one per segment for
-        append tables).  ``schema`` supplies the empty-table shape
-        before the first commit.  Each directory is read separately
-        and unioned by name, so a filter on a partition column pushes
-        into every segment's scan as a PartitionFilter."""
-        dirs = self.dirs(name)
+        append tables), read with the schema the manifest recorded.
+        Each directory is read separately and unioned by name, so a
+        filter on a partition column pushes into every segment's scan
+        as a PartitionFilter."""
+        manifest = self._load()
+        dirs = manifest["tables"].get(name)
         if not dirs:
-            if schema is None:
-                raise KeyError(f"state table {name!r} has no commits")
-            return spark.createDataFrame([], schema)
-        return read_segments(spark, dirs)
+            raise KeyError(f"state table {name!r} has no commits")
+        schema = manifest["schemas"].get(name)
+        if schema is None:
+            raise KeyError(
+                f"state manifest {self._manifest_path()} records no "
+                f"schema for table {name!r}; it was written by an "
+                "engine that did not record schemas — rebuild the state"
+            )
+        return read_segments(
+            spark,
+            [os.path.join(self.root, d) for d in dirs],
+            T.StructType.fromJson(schema),
+        )
 
     # --- the commit -------------------------------------------------------
 
@@ -180,8 +203,11 @@ class StateStore:
         """Write every table's new directory, then flip the manifest
         once.  ``replace`` tables point at their fresh ``b<batch>``
         dir; ``append`` tables keep their previous segments and gain
-        ``seg<batch>``.  ``partition_by`` maps table name → partition
-        columns for prunable layouts.  Callers must materialize any
+        ``seg<batch>``; the manifest records each written table's
+        schema, which :meth:`read` declares.  An append segment must
+        have the schema of the table's earlier segments.
+        ``partition_by`` maps table name → partition columns for
+        prunable layouts.  Callers must materialize any
         DataFrame that READS a table this commit REPLACES before
         calling (the twins localCheckpoint their derivations), since
         the old dirs stay on disk but a same-name rewrite would race.
@@ -190,16 +216,19 @@ class StateStore:
         if batch_id <= manifest["batch"]:
             return  # replay of a fully-committed batch: no-op
         tables = dict(manifest["tables"])
+        schemas = dict(manifest["schemas"])
         parts = partition_by or {}
         for name, df in (replace or {}).items():
             rel = f"{name}/b{batch_id}"
             self._write(df, rel, parts.get(name))
             tables[name] = [rel]
+            schemas[name] = df.schema.jsonValue()
         for name, df in (append or {}).items():
             rel = f"{name}/seg{batch_id}"
             self._write(df, rel, parts.get(name))
             tables[name] = tables.get(name, []) + [rel]
-        self._publish({"batch": batch_id, "tables": tables})
+            schemas[name] = df.schema.jsonValue()
+        self._publish({"batch": batch_id, "tables": tables, "schemas": schemas})
         # GC dirs this flip superseded (old b<n> replace dirs) — without
         # it a long-running stream grows the root O(|V|) per batch
         # (ADVICE r14); append segments stay live until compact()
@@ -229,7 +258,13 @@ class StateStore:
         self._write(self.read(spark, name), rel, partition_by)
         tables = dict(manifest["tables"])
         tables[name] = [rel]
-        self._publish({"batch": manifest["batch"], "tables": tables})
+        self._publish(
+            {
+                "batch": manifest["batch"],
+                "tables": tables,
+                "schemas": manifest["schemas"],
+            }
+        )
         self._gc(manifest["tables"], tables)
 
     def _gc(self, old: dict, new: dict) -> None:
@@ -252,11 +287,9 @@ class StateStore:
         self, df: DataFrame, rel: str, partition_cols: list[str] | None
     ) -> None:
         # an EMPTY partitioned write leaves a dir with no partition
-        # directories and no footers — unreadable (schema inference
-        # fails).  Write empties unpartitioned: the partition column
-        # stays as an ordinary (empty) data column, so readers' filters
-        # and unions still resolve.
-        if partition_cols and not df.isEmpty():
+        # directories and no footers; read with its declared schema it
+        # is an empty table, so no emptiness check (one Spark job) runs
+        if partition_cols:
             # repartition ON the partition columns first: a partitionBy
             # from N input partitions opens up to N files per partition
             # directory, and every later pruned read pays one task per

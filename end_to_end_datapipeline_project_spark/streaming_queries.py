@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register
+from .schemas import TESTDATA_SCHEMAS
 from .sources import read_parquet_table, stage_dir
 from .streaming import (
     run_stream_to_memory,
@@ -43,10 +44,14 @@ def _stage_table_dir(spark: SparkSession, sf_dir: str, leaf: str,
     the stage (uid-suffixed root + parquet mtime/size fingerprint via
     sources.stage_dir — a schema-only key missed in-place data
     regeneration), and symlink the table's parquet in race-safely.
-    Returns (stage, schema)."""
+    Returns (stage, schema): the table's declared StructType
+    (:data:`schemas.TESTDATA_SCHEMAS`), so staging launches no Spark
+    job."""
     import os
 
-    schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    from pyspark.sql import types as T
+
+    schema = T.StructType.fromDDL(TESTDATA_SCHEMAS[table])
     stage = stage_dir(
         "spark_graft_stream", _STREAM_STAGE_EPOCH, sf_dir, leaf
     )
@@ -65,44 +70,32 @@ def _stage_table_dir(spark: SparkSession, sf_dir: str, leaf: str,
 
 
 def _stage_events_dir(spark: SparkSession, sf_dir: str, leaf: str):
-    """Events staging: the shared table staging plus the ts-specific
-    session pinning the nanos column needs.  Returns
-    (stage, schema, ts_type)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """Events staging: the shared table staging plus the session pins
+    the ts cast needs.  Returns (stage, schema)."""
     # defensive pinning, mirroring sources.read_parquet_table: the
     # driver contract may hand us any SparkSession, and the ntz->ltz
     # cast shifts instants unless the session is UTC
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "true")
-    stage, schema = _stage_table_dir(spark, sf_dir, leaf, "events")
-    ts_type = dict(
-        zip(schema.names, [f.dataType.typeName() for f in schema.fields])
-    ).get("ts")
-    return stage, schema, ts_type
+    return _stage_table_dir(spark, sf_dir, leaf, "events")
 
 
-def _normalize_ts(stream: DataFrame, ts_type: str) -> DataFrame:
-    if ts_type in ("long", "bigint"):
-        return stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts DIV 1000)")
-        )
-    if ts_type == "timestamp_ntz":
-        # Watermarks require TIMESTAMP (LTZ); with the session timezone
-        # pinned to UTC (session.py) the cast is value-identical.
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+def _normalize_ts(stream: DataFrame) -> DataFrame:
+    """events.ts is ``timestamp_ntz``; watermarks require TIMESTAMP
+    (LTZ).  With the session timezone pinned to UTC the cast is
+    value-identical."""
+    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over events.parquet (declared schema; nanos ts
-    arrives as long → truncate to micros exactly like the batch reader).
+    """File-source stream over events.parquet (declared schema, ts cast
+    to TIMESTAMP by :func:`_normalize_ts`).
 
     The file source requires a *directory*; stage a symlink dir (the
     landing-zone shape a real deployment would have).
     """
-    stage, schema, ts_type = _stage_events_dir(spark, sf_dir, "events")
-    stream = spark.readStream.schema(schema).parquet(stage)
-    return _normalize_ts(stream, ts_type)
+    stage, schema = _stage_events_dir(spark, sf_dir, "events")
+    return _normalize_ts(spark.readStream.schema(schema).parquet(stage))
 
 
 @register(
@@ -362,7 +355,10 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         merged = latest_per_user(batch_df)
         if os.path.exists(target):
-            cur = batch_df.sparkSession.read.parquet(target)
+            # the target holds earlier merges, which have batch_df's schema
+            cur = batch_df.sparkSession.read.schema(batch_df.schema).parquet(
+                target
+            )
             merged = latest_per_user(cur.unionByName(merged))
         # pin the merge result before overwriting its own input
         merged = merged.localCheckpoint()
@@ -386,7 +382,7 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (bench loops, repeated gate runs) leaks a full parquet copy of
         # the per-user table into /tmp.  eager checkpoint: the read must
         # complete before its source dir is deleted.
-        return spark.read.parquet(target).localCheckpoint()
+        return spark.read.schema(stream.schema).parquet(target).localCheckpoint()
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -469,9 +465,7 @@ def _events_stream_with_flush(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    stage, schema, ts_type = _stage_events_dir(
-        spark, sf_dir, f"events_flush_{tag}"
-    )
+    stage, schema = _stage_events_dir(spark, sf_dir, f"events_flush_{tag}")
     # sentinel event types MUST pass the query's own predicates: Catalyst
     # pushes filters below EventTimeWatermark, so a row the filter drops
     # never reaches the watermark tracker (verified empirically) — each
@@ -488,13 +482,7 @@ def _events_stream_with_flush(
             # would either crash its read or, worse, be recorded as
             # seen and never re-read, so its watermark never advances
             when = datetime.datetime(2200, 1, day)
-            if ts_type in ("long", "bigint"):
-                nanos = int(
-                    (when - datetime.datetime(1970, 1, 1)).total_seconds()
-                ) * 1_000_000_000
-                ts_val = pa.array([nanos] * n, pa.int64())
-            else:
-                ts_val = pa.array([when] * n, pa.timestamp("us"))
+            ts_val = pa.array([when] * n, pa.timestamp("us"))
             cols, names = [], []
             for f in schema.fields:
                 names.append(f.name)
@@ -516,16 +504,11 @@ def _events_stream_with_flush(
             os.replace(tmp, sentinel)
         else:
             os.utime(sentinel, (4102444800 + i, 4102444800 + i))
-    stream = (
+    return _normalize_ts(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    if ts_type in ("long", "bigint"):
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
 
 
 @register(
@@ -895,9 +878,13 @@ def incremental_tfidf_stream(
     tf_target = f"{root}/tf_delta"
     id_target = f"{root}/delta_ids"
 
+    # the state tables' schemas: the tf rows' and the doc-id roster's
+    tf_schema = tf_base.schema
+    id_schema = delta_stream.select("doc_id").schema
+
     def _upsert(path: str, new: DataFrame, keys: list[str]) -> None:
         if os.path.exists(path):
-            cur = new.sparkSession.read.parquet(path)
+            cur = new.sparkSession.read.schema(new.schema).parquet(path)
             new = cur.unionByName(new).dropDuplicates(keys)
         # pin the merge result before overwriting its own input
         new.localCheckpoint().write.mode("overwrite").parquet(path)
@@ -918,14 +905,14 @@ def incremental_tfidf_stream(
         q.awaitTermination()
 
         if os.path.exists(tf_target):
-            tf_delta = spark.read.parquet(tf_target)
-            n_delta = spark.read.parquet(id_target).agg(
-                F.count(F.lit(1)).alias("n_d")
+            tf_delta = spark.read.schema(tf_schema).parquet(tf_target)
+            n_delta = (
+                spark.read.schema(id_schema)
+                .parquet(id_target)
+                .agg(F.count(F.lit(1)).alias("n_d"))
             )
         else:  # empty delta: no micro-batch ever fired
-            tf_delta = spark.createDataFrame(
-                [], "doc_id long, term string, tf long"
-            )
+            tf_delta = spark.createDataFrame([], tf_schema)
             n_delta = spark.range(1).select(
                 F.lit(0).cast("long").alias("n_d")
             )

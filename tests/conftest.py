@@ -1,8 +1,10 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests live in (tests/..), whatever its path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from end_to_end_datapipeline_project_spark.session import get_spark
 
@@ -46,3 +48,20 @@ def spark_prop(spark):
     """Alias fixture so hypothesis @given tests can take the session-scoped
     SparkSession without hypothesis treating it as a strategy argument."""
     return spark
+
+
+def jobs_launched(spark, build) -> int:
+    """Spark jobs the status store records while ``build()`` runs (its
+    own job group, drained from the listener bus before counting)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -82,3 +82,19 @@ def test_scaling_md_has_ab_adjudication_appendix():
     text = (REPO / "SCALING.md").read_text()
     assert AB_MARKER in text
     assert "Σ(min)" in text, "appendix present but empty — re-run ab_bench"
+
+
+def test_no_hard_coded_checkout_path():
+    """Tools and tests import the package, and write their outputs,
+    under the checkout they live in: a hard-coded checkout path made a
+    run in any other copy of the tree time and rewrite that path's
+    code instead."""
+    literal = "/".join(["", "root", "repo"])
+    hits = [
+        f"{py.relative_to(REPO)}:{i}"
+        for top in ("tools", "tests")
+        for py in sorted((REPO / top).rglob("*.py"))
+        for i, line in enumerate(py.read_text().splitlines(), 1)
+        if literal in line
+    ]
+    assert not hits, hits

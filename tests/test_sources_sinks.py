@@ -325,3 +325,153 @@ def test_claim_staged_stale_sweep_respects_nested_mtime(tmp_path):
         os.utime(p, (old, old))
     claim_staged(final, lambda tmp: os.makedirs(tmp, exist_ok=True))
     assert not os.path.isdir(orphan), "dead+old orphan should be swept"
+
+
+# --- declared testdata schemas: drift guards and zero-job reads ----------
+
+
+def _testdata_dirs(sf_dir):
+    from pathlib import Path
+
+    corpus = Path(__file__).resolve().parents[1] / "perfbench" / "corpus"
+    return [corpus] + sorted(Path(sf_dir).parent.glob("sf*"))
+
+
+def test_testdata_schemas_match_every_footer(spark, sf_dir):
+    """A declared column missing from a file reads as NULLs, silently —
+    so the declared DDL must equal what footer inference gives, table by
+    table, on the benchmark corpus and on every testdata scale present."""
+    from pyspark.sql import types as T
+
+    from end_to_end_datapipeline_project_spark.schemas import TESTDATA_SCHEMAS
+
+    checked = 0
+    for d in _testdata_dirs(sf_dir):
+        for name, ddl in TESTDATA_SCHEMAS.items():
+            inferred = spark.read.parquet(f"{d}/{name}.parquet").schema
+            assert T.StructType.fromDDL(ddl) == inferred, (d, name)
+            checked += 1
+    assert checked >= 2 * len(TESTDATA_SCHEMAS)
+
+
+def test_nanos_events_file_fails_the_declared_read(spark, tmp_path):
+    """An events file whose ts is TIMESTAMP(NANOS) must fail the scan
+    with a type mismatch, not read as some other value."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from end_to_end_datapipeline_project_spark.sources import read_parquet_table
+
+    when = datetime.datetime(2024, 1, 1, 12)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1], pa.int64()),
+                "ts": pa.array([when], pa.timestamp("ns")),
+                "user_id": pa.array([7], pa.int64()),
+                "event_type": pa.array(["click"]),
+                "value": pa.array([1.5]),
+                "props": pa.array(["{}"]),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+        version="2.6",
+    )
+    assert pq.read_schema(tmp_path / "events.parquet").field("ts").type == pa.timestamp("ns")
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        read_parquet_table(spark, str(tmp_path), "events").collect()
+
+
+def test_read_parquet_table_launches_no_job(spark, sf_dir):
+    """Building each testdata table's DataFrame runs no Spark job; the
+    inferred read of the same file runs at least one (the footer job),
+    which shows the count sees such jobs."""
+    from conftest import jobs_launched
+
+    from end_to_end_datapipeline_project_spark.schemas import TESTDATA_TABLES
+    from end_to_end_datapipeline_project_spark.sources import read_parquet_table
+
+    for name in TESTDATA_TABLES:
+        assert jobs_launched(
+            spark, lambda: read_parquet_table(spark, sf_dir, name)
+        ) == 0, name
+    inferred = jobs_launched(
+        spark, lambda: spark.read.parquet(f"{sf_dir}/orders.parquet")
+    )
+    assert inferred >= 1
+
+
+def _parquet_reads_without_schema(source: str) -> list:
+    """Enclosing function of every parquet read chain (``.read`` or
+    ``.readStream`` ... ``.parquet(`` / ``.format("parquet")`` ...
+    ``.load(``) that declares no ``.schema(...)``."""
+    import ast
+
+    found = []
+
+    def chain(call):
+        """(method names, format args) along a call's receiver chain."""
+        names, formats = [], []
+        node = call.func.value
+        while True:
+            if isinstance(node, ast.Call):
+                if isinstance(node.func, ast.Attribute) and node.func.attr == "format":
+                    formats += [a.value for a in node.args if isinstance(a, ast.Constant)]
+                node = node.func
+            elif isinstance(node, ast.Attribute):
+                names.append(node.attr)
+                node = node.value
+            else:
+                return names, formats
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            names, formats = chain(node)
+            is_read = {"read", "readStream"} & set(names)
+            is_parquet = node.func.attr == "parquet" or (
+                node.func.attr == "load" and "parquet" in formats
+            )
+            if is_read and is_parquet and "schema" not in names:
+                found.append(fn)
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(ast.parse(source), "<module>")
+    return found
+
+
+def test_no_unlisted_inferred_parquet_reads():
+    """Source-level tripwire: every parquet read in the package declares
+    its schema, so none launches a footer-inference job."""
+    from pathlib import Path
+
+    # the detector itself: these must be found, the declared ones not
+    assert _parquet_reads_without_schema(
+        "def f(s):\n s.read.parquet(p)\n"
+        " s.read.option('k', 1).parquet(p)\n"
+        " s.readStream.format('parquet').load(p)\n"
+        " s.read.schema(x).parquet(p)\n"
+        " df.write.parquet(p)\n"
+    ) == ["f", "f", "f"]
+
+    pkg = Path(__file__).resolve().parents[1] / (
+        "end_to_end_datapipeline_project_spark"
+    )
+    sites = []
+    for py in sorted(pkg.rglob("*.py")):
+        sites += [f"{py.name}:{fn}" for fn in _parquet_reads_without_schema(py.read_text())]
+    allowed = {
+        # compacts a table at any caller-given path: only its footers
+        # know its schema
+        "sinks.py:compact_partitioned",
+    }
+    assert set(sites) <= allowed and len(sites) == len(allowed), (
+        f"parquet reads without a declared schema: {sites} — pass the "
+        "writer's schema (or schemas.TESTDATA_SCHEMAS) to "
+        "spark.read.schema(...)"
+    )

@@ -217,3 +217,49 @@ def test_lsh_ingest_crash_between_writes_replays_to_batch(
     assert got == want
     # the churn + bridge landed: the A∪B component's min is delta doc 7
     assert got[7] == (7, 1) and got[17] == (7, 0)
+
+
+def test_state_store_read_launches_no_job(spark, tmp_path):
+    """read() declares the manifest's schema, so building the DataFrame
+    of a replace table, a multi-segment partitioned append table, and an
+    EMPTY partitioned append table (no footer anywhere) runs no Spark
+    job; each reads back its content."""
+    from conftest import jobs_launched
+
+    store = StateStore(str(tmp_path / "st"))
+    for b in range(3):
+        df = spark.createDataFrame(
+            [(b * 10 + i, i % 2) for i in range(4)], "id long, bkt long"
+        )
+        store.commit(
+            b,
+            replace={"r": df},
+            append={"a": df, "e": df.limit(0)},
+            partition_by={"a": ["bkt"], "e": ["bkt"]},
+        )
+    assert len(store.dirs("a")) == 3 and len(store.dirs("e")) == 3
+    reads = {}
+    for name in ("r", "a", "e"):
+        assert jobs_launched(
+            spark, lambda: reads.__setitem__(name, store.read(spark, name))
+        ) == 0, name
+    assert sorted(r.id for r in reads["r"].collect()) == [20, 21, 22, 23]
+    assert reads["a"].count() == 12
+    assert reads["e"].count() == 0
+    assert reads["e"].schema.simpleString() == "struct<id:bigint,bkt:bigint>"
+
+
+def test_state_store_read_names_table_without_schema(spark, tmp_path):
+    """A manifest that lists a table but records no schema for it is
+    refused with an error naming the table, never read by inference."""
+    import json
+
+    store = StateStore(str(tmp_path / "st"))
+    df = spark.createDataFrame([(1,)], "id long")
+    store.commit(0, replace={"t": df})
+    path = tmp_path / "st" / StateStore.MANIFEST
+    manifest = json.loads(path.read_text())
+    del manifest["schemas"]["t"]
+    path.write_text(json.dumps(manifest))
+    with pytest.raises(KeyError, match="'t'"):
+        store.read(spark, "t")

@@ -25,11 +25,14 @@ question); a subset → targeted adjudication of specific bench deltas.
 from __future__ import annotations
 
 import gc
+import os
 import sys
 import time
 from datetime import datetime, timezone
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in (tools/..)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE  # noqa: E402
 from end_to_end_datapipeline_project_spark.registry import all_queries  # noqa: E402
@@ -113,7 +116,7 @@ def _cross_round_rows() -> list[str]:
     # made the paragraph compare r15 against itself (r16 fix)
     paths = [
         p
-        for p in glob.glob("/root/repo/BENCH_r*.json")
+        for p in glob.glob(os.path.join(ROOT, "BENCH_r*.json"))
         if re.search(r"BENCH_r(\d+)\.json$", p)
     ]
     for p in sorted(
@@ -175,7 +178,7 @@ def _cross_round_rows() -> list[str]:
 
 
 def write_appendix(rows: list[str]) -> None:
-    path = "/root/repo/SCALING.md"
+    path = os.path.join(ROOT, "SCALING.md")
     try:
         doc = open(path).read()
     except OSError:

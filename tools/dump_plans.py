@@ -7,9 +7,12 @@ with the scale-relevant properties to look for.  Run from the repo root:
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in (tools/..)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from end_to_end_datapipeline_project_spark.registry import REGISTRY, _load  # noqa: E402
 from end_to_end_datapipeline_project_spark.session import get_spark  # noqa: E402
@@ -426,7 +429,7 @@ def main() -> None:
         shown = "\n".join(plan.splitlines()[:40])
         out.append("```\n" + shown + "\n```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written; {len(failures)} missing properties")
     for name, needle in failures:

@@ -13,7 +13,9 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in (tools/..)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from end_to_end_datapipeline_project_spark.registry import all_queries  # noqa: E402
 from end_to_end_datapipeline_project_spark.session import get_spark  # noqa: E402

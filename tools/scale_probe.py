@@ -15,7 +15,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+#: the checkout this script lives in (tools/..)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -380,7 +382,7 @@ def _tail_probe(spark, run, k: int, big_dir: str, names: list) -> None:
         rk = _measure(run, name, big_dir)
         rows_out.append(_growth_row(name, r10, rk, data_ratio))
         print(rows_out[-1], flush=True)
-    path = "/root/repo/SCALING.md"
+    path = os.path.join(ROOT, "SCALING.md")
     doc = open(path).read()
     appendix = ""
     # the decade section (this tool's --decade mode) and the A/B
@@ -498,7 +500,7 @@ def _decade_probe(spark, run, k: int, subset: list | None = None) -> None:
         r_big = _measure(run, name, big_dir)
         fresh[name] = _growth_row(name, r_base, r_big, data_ratio)
         print(fresh[name], flush=True)
-    path = "/root/repo/SCALING.md"
+    path = os.path.join(ROOT, "SCALING.md")
     doc = open(path).read()
     appendix = ""
     for m in (LSH_INGEST_MARKER, SKEW_MARKER, AB_MARKER):
@@ -854,7 +856,7 @@ def _skew_probe(spark, run, k: int, subset: list | None = None) -> None:
     # r12): a renamed query or reformatted table row used to SystemExit
     # only after the uniform/skew replicas were already written
     if subset:
-        doc0 = open("/root/repo/SCALING.md").read()
+        doc0 = open(os.path.join(ROOT, "SCALING.md")).read()
         if SKEW_MARKER not in doc0:
             raise SystemExit(
                 "no skew section in SCALING.md — run the full --skew "
@@ -891,7 +893,7 @@ def _skew_probe(spark, run, k: int, subset: list | None = None) -> None:
     run("q_pricing_summary", uniform_dir)
 
     if subset:
-        path = "/root/repo/SCALING.md"
+        path = os.path.join(ROOT, "SCALING.md")
         doc = open(path).read()
         # scope the in-place replacement to the skew SECTION: the same
         # query has rows in the ×10/decade tables too, and a whole-doc
@@ -1043,7 +1045,7 @@ def _skew_probe(spark, run, k: int, subset: list | None = None) -> None:
         "graph.",
     ]
 
-    path = "/root/repo/SCALING.md"
+    path = os.path.join(ROOT, "SCALING.md")
     doc = open(path).read()
     appendix = ""
     # the sparse-pr section (--sparse-pr) sits between this section and
@@ -1348,7 +1350,7 @@ def _lsh_ingest_probe(spark, k: int) -> None:
 def _write_sparse_section(marker: str, rows_out: list) -> None:
     """Rewrite one tool-owned SCALING.md section in place, preserving
     everything after it up to the next known marker."""
-    path = "/root/repo/SCALING.md"
+    path = os.path.join(ROOT, "SCALING.md")
     doc = open(path).read()
     followers = [
         m
@@ -1510,7 +1512,7 @@ def main() -> None:
     # full probe owns only the ratio table
     appendix = ""
     try:
-        old = open("/root/repo/SCALING.md").read()
+        old = open(os.path.join(ROOT, "SCALING.md")).read()
         marks = [
             old.index(m)
             for m in (
@@ -1526,7 +1528,7 @@ def main() -> None:
             appendix = "\n" + old[min(marks):]
     except OSError:
         pass
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write("\n".join(lines) + "\n" + appendix)
     print("SCALING.md written")
 
