@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .lineage import cut
 from .registry import register, spark_dsum_rounded
 from .sources import read_parquet_table
 from .state import StateStore, read_segments
@@ -159,7 +160,7 @@ def _co_supply_half(li: DataFrame) -> DataFrame:
         .distinct()
         .repartition(n, "l_partkey")
     )
-    return (
+    return cut(
         ps.alias("a")
         .join(
             ps.alias("b"),
@@ -173,8 +174,8 @@ def _co_supply_half(li: DataFrame) -> DataFrame:
         .select(
             F.expr("e DIV 4294967296").alias("src"),
             F.expr("e % 4294967296").alias("dst"),
-        )
-        .localCheckpoint()
+        ),
+        "_co_supply_half",
     )
 
 
@@ -276,12 +277,12 @@ def pagerank_seed_levels(half: DataFrame) -> tuple:
     machinery only pays off when most of the graph is already
     stored."""
     edges = _directed_half(half)
-    outdeg = _out_degrees(edges).localCheckpoint()
+    outdeg = cut(_out_degrees(edges), "pagerank_seed_levels.outdeg")
     contrib = edges.join(F.broadcast(outdeg), "src")
     levels: list[DataFrame] = []
     for _ in range(PR_ITERS):
         prev = levels[-1] if levels else None
-        levels.append(_pr_level(contrib, prev).localCheckpoint())
+        levels.append(cut(_pr_level(contrib, prev), "pagerank_seed_levels.level"))
     return levels, outdeg
 
 
@@ -399,9 +400,10 @@ def co_supply_new_edges(
     new-pair × scoped-roster join, and the already-stored check reads
     only the candidates' buckets of the stored adjacency.  Returns
     (new_ps, new_half), both checkpointed."""
-    new_ps = batch_ps.join(
-        roster_scoped, ["l_partkey", "l_suppkey"], "left_anti"
-    ).localCheckpoint()
+    new_ps = cut(
+        batch_ps.join(roster_scoped, ["l_partkey", "l_suppkey"], "left_anti"),
+        "co_supply_new_edges.new_ps",
+    )
     side = roster_scoped.unionByName(new_ps)
     cand = (
         new_ps.alias("a")
@@ -418,20 +420,21 @@ def co_supply_new_edges(
     )
     ids = cand.select(F.col("src").alias("id")).distinct()
     stored = _read_adj(spark, adj_dirs, ids, None)
-    new_half = cand.join(
-        stored, ["src", "dst"], "left_anti"
-    ).select("src", "dst").localCheckpoint()
+    new_half = cut(
+        cand.join(stored, ["src", "dst"], "left_anti").select("src", "dst"),
+        "co_supply_new_edges.new_half",
+    )
     return new_ps, new_half
 
 
 def _seed_ids(new_half: DataFrame) -> DataFrame:
     """Endpoints of an ingest's new edges (checkpointed, column id): the
     nodes whose degree or level-1 value an ingest changes."""
-    return (
+    return cut(
         new_half.select(F.col("src").alias("id"))
         .unionAll(new_half.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "_seed_ids",
     )
 
 
@@ -488,7 +491,7 @@ def pagerank_patch_levels(
     cores): 19.9 / 11.2 / 7.6 s per ingest at 10% / 1% / 0.1% deltas;
     the floor is job count, not data (OPTIMIZATION_r16.md §6)."""
     new_rows = _directed_half(new_half)
-    outdeg = (
+    outdeg = cut(
         outdeg_base.withColumnRenamed("outdeg", "d0")
         .join(
             _out_degrees(new_rows).withColumnRenamed("outdeg", "d1"),
@@ -500,8 +503,8 @@ def pagerank_patch_levels(
             (
                 F.coalesce("d0", F.lit(0.0)) + F.coalesce("d1", F.lit(0.0))
             ).alias("outdeg"),
-        )
-        .localCheckpoint()
+        ),
+        "pagerank_patch_levels.outdeg",
     )
     frontier = _seed_ids(new_half)
     out_rows = _read_adj(spark, adj_dirs, frontier, new_rows)
@@ -510,18 +513,24 @@ def pagerank_patch_levels(
         # checkpointed: the frontier feeds the bucket collect, the
         # probe semi-join, the base anti-join and the next union — a
         # lazy union-distinct re-ran for each and measured slower
-        frontier = (
+        frontier = cut(
             frontier.unionAll(out_rows.select(F.col("dst").alias("id")))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            "pagerank_patch_levels.frontier",
         )
-        out_rows = _read_adj(
-            spark, adj_dirs, frontier, new_rows
-        ).localCheckpoint()  # blast-radius-sized
+        out_rows = cut(
+            _read_adj(
+                spark, adj_dirs, frontier, new_rows
+            ),
+            "pagerank_patch_levels.out_rows",
+        )  # blast-radius-sized
         contrib = _reversed(out_rows).join(F.broadcast(outdeg), "src")
-        patched = _pr_level(
-            contrib, levels[-1] if levels else None
-        ).localCheckpoint()
+        patched = cut(
+            _pr_level(
+                contrib, levels[-1] if levels else None
+            ),
+            "pagerank_patch_levels.patched",
+        )
         levels.append(
             base.join(frontier, "id", "left_anti").unionAll(patched)
         )
@@ -573,10 +582,10 @@ def incremental_pagerank(li: DataFrame, delta_cond) -> DataFrame:
             partition_by={"adj": ["__bkt"]},
         )
         base_levels, outdeg0 = pagerank_seed_levels(base_half)
-        base_ps = (
+        base_ps = cut(
             base_li.select("l_partkey", "l_suppkey")
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            "incremental_pagerank.base_ps",
         )
         delta_ps = (
             li.filter(delta_cond)
@@ -713,7 +722,7 @@ def co_order_new_edges(
     base_tot = stored.groupBy("src", "dst").agg(
         F.sum("n_co").alias("n_base")
     )
-    return (
+    return cut(
         dw.join(base_tot, ["src", "dst"], "left")
         .select(
             "src",
@@ -724,8 +733,8 @@ def co_order_new_edges(
         .filter(
             (F.col("n_base") < 2) & (F.col("n_base") + F.col("n_co") >= 2)
         )
-        .select("src", "dst")
-        .localCheckpoint()
+        .select("src", "dst"),
+        "co_order_new_edges",
     )
 
 
@@ -737,9 +746,12 @@ def co_order_state(base_li: DataFrame, root: str) -> tuple:
     src-bucketed segment (:func:`adj_rows`); an empty base writes
     readable empty segments.  Returns (store, checkpointed half edge
     list)."""
-    w0 = _co_order_pair_counts(base_li).localCheckpoint()
+    w0 = cut(_co_order_pair_counts(base_li), "co_order_state.w0")
     base_half = (
-        w0.filter(F.col("n_co") >= 2).select("src", "dst").localCheckpoint()
+        cut(
+            w0.filter(F.col("n_co") >= 2).select("src", "dst"),
+            "co_order_state.base_half",
+        )
     )
     store = StateStore(root)
     store.commit(
@@ -825,7 +837,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an id ordering lets one hub node generate O(deg^2) wedges.  The
     # triangle set (and so every per-node count) is orientation-
     # invariant, which the unchanged id-oriented DuckDB oracle proves.
-    half = orient_by_degree(half0).localCheckpoint()
+    half = cut(orient_by_degree(half0), "q_triangle_count.half")
     e1 = half.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     e2 = half.select(F.col("src").alias("b2"), F.col("dst").alias("c"))
     e3 = half.select(F.col("src").alias("a3"), F.col("dst").alias("c3"))
@@ -941,8 +953,8 @@ def lpa_seed_levels(half: DataFrame) -> tuple:
     generation included, interleaved, min of 5): 2.43 s / 12 jobs here
     vs 3.61 s / 26 jobs."""
     edges = _directed_half(half)
-    l1 = _lpa_min_label(edges).localCheckpoint()
-    return l1, _lpa_vote(edges, l1).localCheckpoint()
+    l1 = cut(_lpa_min_label(edges), "lpa_seed_levels.l1")
+    return l1, cut(_lpa_vote(edges, l1), "lpa_seed_levels.l2")
 
 
 @register(
@@ -966,7 +978,9 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializing the doubled list stores 2× the rows for zero
     # per-iteration saving.  Undirected graph ⇒ every label-sender also
     # receives, so the loop carries labels for edge-touching nodes only
-    edges = _directed_half(_co_order_half_edges(li).localCheckpoint())
+    edges = _directed_half(
+        cut(_co_order_half_edges(li), "q_label_propagation.edges")
+    )
     labels = _lpa_min_label(edges)
     for _ in range(_LPA_ITERS - 1):
         labels = _lpa_vote(edges, labels)
@@ -1005,7 +1019,10 @@ def incremental_label_propagation(li: DataFrame, delta_cond) -> DataFrame:
     try:
         store, base_half = co_order_state(base_li, root)
         l1_base, l2_base = lpa_seed_levels(base_half)
-        dw = _co_order_pair_counts(li.filter(delta_cond)).localCheckpoint()
+        dw = cut(
+            _co_order_pair_counts(li.filter(delta_cond)),
+            "incremental_label_propagation.dw",
+        )
         new_half = co_order_new_edges(spark, store.dirs("weights"), dw)
         _l1, l2 = lpa_patch_levels(
             spark, store.dirs("adj"), l1_base, l2_base, new_half
@@ -1048,21 +1065,23 @@ def lpa_patch_levels(
     6.9 / 5.9 s per ingest at 10% / 1% / 0.1% deltas."""
     new_rows = _directed_half(new_half)
     s1 = _seed_ids(new_half)
-    out1 = _read_adj(spark, adj_dirs, s1, new_rows).localCheckpoint()
-    l1_full = (
-        l1_base.join(s1, "id", "left_anti")
-        .unionAll(_lpa_min_label(_reversed(out1)))
-        .localCheckpoint()
+    out1 = cut(
+        _read_adj(spark, adj_dirs, s1, new_rows), "lpa_patch_levels.out1"
     )
-    s2 = (
+    l1_full = cut(
+        l1_base.join(s1, "id", "left_anti")
+        .unionAll(_lpa_min_label(_reversed(out1))),
+        "lpa_patch_levels.l1_full",
+    )
+    s2 = cut(
         s1.unionAll(out1.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "lpa_patch_levels.s2",
     )
     # checkpointed (blast-radius-sized): frees l2_full, and the final
     # plan's max_by, from any reference to the adjacency dirs
     in2 = _reversed(
-        _read_adj(spark, adj_dirs, s2, new_rows).localCheckpoint()
+        cut(_read_adj(spark, adj_dirs, s2, new_rows), "lpa_patch_levels.in2")
     )
     l2_full = l2_base.join(s2, "id", "left_anti").unionAll(
         _lpa_vote(in2, l1_full)
@@ -1129,7 +1148,7 @@ _BFS_HOPS = 3
 )
 def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_parquet_table(spark, sf_dir, "lineitem")
-    edges = _directed_half(_co_order_half_edges(li)).localCheckpoint()
+    edges = cut(_directed_half(_co_order_half_edges(li)), "q_bfs_hops.edges")
     seed = li.agg(F.min("l_partkey").alias("id"))
     levels = [seed.withColumn("h", F.lit(0))]
     frontier = seed
@@ -1301,11 +1320,14 @@ def _sssp_iter_sql(prev: str, out: str) -> str:
 def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_parquet_table(spark, sf_dir, "lineitem")
     half = _co_order_half_edges(li, weighted=True)
-    edges = half.unionAll(
-        half.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-        )
-    ).localCheckpoint()
+    edges = cut(
+        half.unionAll(
+            half.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
+            )
+        ),
+        "q_shortest_path.edges",
+    )
     dist = li.agg(F.min("l_partkey").alias("id")).withColumn(
         "d", F.lit(0.0)
     )

@@ -1,0 +1,146 @@
+"""The one lineage cut.
+
+Every eager materialization in the engine goes through :func:`cut`: a
+DataFrame whose plan would otherwise grow with each iteration or be
+re-executed by each consumer is checkpointed, its job labelled
+``cut:<label>``, and its plan replaced by a scan of the stored blocks.
+
+A cut can carry aggregates (``observe``) that ride the checkpoint job
+itself as Observation metrics, so a row count or convergence test that
+follows a cut costs no job of its own.  Reading them never hangs: the
+read waits at most :data:`OBSERVE_WAIT_S` for the metrics and otherwise
+computes the same aggregates over the cut frame in one counted job.
+"""
+
+from __future__ import annotations
+
+import time
+from typing import Sequence
+
+from pyspark.sql import Column, DataFrame, Observation
+
+from .session import is_local_master
+
+#: how long an observed metric read waits for the metrics to arrive
+#: before it computes them with an explicit aggregate instead.  They
+#: normally arrive within a few ms of the job: the listener that
+#: completes an Observation runs on the listener bus, after the action.
+OBSERVE_WAIT_S = 10.0
+
+#: parent of the checkpoint directory a cut sets on a shared default
+#: file system when the application has none (:func:`_checkpoint_dir`)
+CHECKPOINT_ROOT = "/tmp/spark-graft-checkpoints"
+
+#: attribute marking a DataFrame that is the output of a cut
+_CUT_ATTR = "_graft_cut"
+
+
+def is_cut(df: DataFrame) -> bool:
+    # the instance dict, not getattr: DataFrame.__getattr__ resolves
+    # unknown names as columns
+    return vars(df).get(_CUT_ATTR) is not None
+
+
+def cut(
+    df: DataFrame,
+    label: str,
+    observe: Sequence[Column] | None = None,
+    *,
+    drop: Sequence[str] = (),
+    eager: bool = True,
+):
+    """Materialize ``df`` and cut its lineage.
+
+    On a local master the blocks are stored by ``localCheckpoint()``; on
+    any other master by a reliable ``checkpoint()``, because a local
+    checkpoint is lost with the executor that held it.  That needs a
+    checkpoint directory every node can reach (:func:`_checkpoint_dir`);
+    without one the cut stays a ``localCheckpoint()``.
+
+    ``observe``: aliased aggregate Columns computed inside the
+    checkpoint job; the call then returns ``(cut_df, metrics dict)``.
+    ``drop`` names helper columns only those aggregates read: they are
+    projected away after the metrics and before the blocks are stored.
+    Without ``observe``, a ``df`` that is already the output of a cut is
+    returned as is, with no job.  ``eager=False`` defers the
+    materialization to the first action on the result; it cannot carry
+    metrics."""
+    if observe is None:
+        if drop:
+            raise ValueError("drop only applies to observed helper columns")
+        return df if is_cut(df) else _checkpoint(df, label, eager)
+    if not eager:
+        raise ValueError("a lazy cut cannot carry observed metrics")
+    o = Observation()
+    ck = _checkpoint(df.observe(o, *observe).drop(*drop), label, eager)
+    # the fallback aggregate needs the helper columns the cut dropped
+    return ck, metrics(o, df if drop else ck, observe)
+
+
+def _checkpoint(df: DataFrame, label: str, eager: bool) -> DataFrame:
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", f"cut:{label}")
+    try:
+        if is_local_master(sc.master) or _checkpoint_dir(sc) is None:
+            out = df.localCheckpoint(eager=eager)
+        else:
+            out = df.checkpoint(eager=eager)
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    setattr(out, _CUT_ATTR, label)
+    return out
+
+
+def _checkpoint_dir(sc) -> str | None:
+    """The application's checkpoint directory.  An application without
+    one gets :data:`CHECKPOINT_ROOT`/<app id> on the default file
+    system, deleted when the driver JVM exits, if that file system is
+    shared (HDFS, S3, ...).  A ``file:`` default is each node's own
+    disk: executors would write partitions the driver cannot list, so
+    there the answer is ``None`` and the cut stays local."""
+    d = sc.getCheckpointDir()
+    if d is not None:
+        return d
+    fs = _default_fs(sc)
+    if fs.getUri().getScheme() == "file":
+        return None
+    path = fs.makeQualified(
+        sc._jvm.org.apache.hadoop.fs.Path(
+            f"{CHECKPOINT_ROOT}/{sc.applicationId}"
+        )
+    )
+    sc.setCheckpointDir(path.toString())
+    # checkpoint files outlive their RDDs unless the deploy turns on
+    # spark.cleaner.referenceTracking.cleanCheckpoints
+    fs.deleteOnExit(path)
+    return sc.getCheckpointDir()
+
+
+def _default_fs(sc):
+    return sc._jvm.org.apache.hadoop.fs.FileSystem.get(
+        sc._jsc.hadoopConfiguration()
+    )
+
+
+def metrics(
+    o: Observation, frame: DataFrame, exprs: Sequence[Column]
+) -> dict:
+    """The metrics of ``o`` once its action has run, waiting at most
+    :data:`OBSERVE_WAIT_S`; if none arrive, ``exprs`` aggregated over
+    ``frame`` (one job) — the same values, never a guess."""
+    from pyspark.serializers import CPickleSerializer
+
+    deadline = time.monotonic() + OBSERVE_WAIT_S
+    while True:
+        opt = _row_or_empty(o)  # waits up to 100 ms inside the JVM
+        if opt.isDefined():
+            utils = o._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+            row = CPickleSerializer().loads(utils.toPyRow(opt.get()))
+            return row.asDict(recursive=False)
+        if time.monotonic() >= deadline:
+            return frame.agg(*exprs).first().asDict(recursive=False)
+
+
+def _row_or_empty(o: Observation):
+    return o._jo.getRowOrEmpty()

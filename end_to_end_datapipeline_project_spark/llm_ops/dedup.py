@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..lineage import cut, metrics
 from ..registry import register
 from ..sources import pin_parallelism, read_parquet_table
 from .text import TOKENS_SQL, tokens_col
@@ -345,7 +346,7 @@ def _ranked_index(arrs: DataFrame) -> DataFrame:
     arrays, checkpointed: the md5-per-shingle signature pass runs once,
     and the capped index, its spill and every pair kernel over them are
     scans of this table."""
-    return _rank_buckets(minhash_signatures(arrs)).localCheckpoint()
+    return cut(_rank_buckets(minhash_signatures(arrs)), "_ranked_index")
 
 
 def minhash_index_with_spill(arrs: DataFrame) -> tuple:
@@ -528,18 +529,15 @@ VERIFY_BCAST_MIN = 32 << 20
 
 
 def checkpoint_arrs_with_bytes(df: DataFrame) -> tuple:
-    """``df.localCheckpoint()`` for a shingle-array frame (…, shs) with
+    """:func:`~..lineage.cut` of a shingle-array frame (…, shs) with
     the verify size gate's input riding the checkpoint job: a
-    ``sum(size(shs))`` Observation attaches to the materialization the
-    caller already pays.  Returns ``(checkpointed_df, arr_bytes)``,
-    ``arr_bytes`` = 8 × total shingle longs — the exact unit
-    :data:`VERIFY_BCAST_MIN`/:data:`VERIFY_BCAST_MAX` gate on — so
-    :func:`verify_candidates` picks its form without a stats job."""
-    from pyspark.sql import Observation
-
-    o = Observation()
-    ck = df.observe(o, F.sum(F.size("shs")).alias("n")).localCheckpoint()
-    return ck, int(o.get["n"] or 0) * 8
+    ``sum(size(shs))`` metric the cut observes.  Returns
+    ``(checkpointed_df, arr_bytes)``, ``arr_bytes`` = 8 × total shingle
+    longs — the exact unit :data:`VERIFY_BCAST_MIN`/
+    :data:`VERIFY_BCAST_MAX` gate on — so :func:`verify_candidates`
+    picks its form without a stats job."""
+    ck, m = cut(df, "checkpoint_arrs_with_bytes", observe=[F.sum(F.size("shs")).alias("n")])
+    return ck, int(m["n"] or 0) * 8
 
 
 def verify_candidates(
@@ -900,10 +898,13 @@ def connected_components(
     length 2^20 converges in ~20 rounds, which is what makes fixed
     iteration budgets safe at 100 TB (plain one-hop propagation was
     observed to hit the cap on sparse sf0.001 chains and emit un-merged
-    clusters).  Labels are non-increasing, so the global label sum
-    strictly decreases on any change and sum stability is an exact
-    convergence test.  localCheckpoint per iteration cuts lineage (O(1)
-    plan depth).
+    clusters).  Labels never increase, so an iteration that lowers no
+    label is the fixed point: each iteration's lineage cut (O(1) plan
+    depth) observes ``count_if(label < previous label)`` and the loop
+    stops at the first 0 or after ``max_iters`` iterations.  The test
+    rides the cut's own jobs, so it launches none of its own.  Measured
+    on local[4] with AQE: 79 jobs per call on a 200-node chain (8
+    iterations), 11 on an edgeless graph.
 
     One STAR-CONTRACTION round runs before the loop: every node is
     mapped to m(v) = min(v, min neighbor), edges are rewritten through
@@ -927,9 +928,9 @@ def connected_components(
     # orientation (the r13 skew table's only above-floor "straggler"
     # readings were this uniformly-heavy doubled-verify stage: max ≈
     # median task, 64 tasks — a duplicated stage, not a reduce-tail).
-    # Verified edge lists are tiny; already-checkpointed callers pay a
-    # scan-only no-op.
-    edges1 = edges1.localCheckpoint()
+    # An edge list that is already a cut (the maintenance step's
+    # contracted edges) is used as is.
+    edges1 = cut(edges1, "connected_components.edges1")
     # contract enforcement: drop edges with an endpoint outside
     # ``nodes`` BEFORE doubling (one pass, two broadcast-shaped
     # semi-joins against the O(V) id list).  The trailing select pins
@@ -942,37 +943,36 @@ def connected_components(
         .join(nodes.select(F.col(id_col).alias("dst")), "dst", "left_semi")
         .select("src", "dst")
     )
-    edges = edges1.unionAll(
-        edges1.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    edges = cut(
+        edges1.unionAll(
+            edges1.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ),
+        "connected_components.edges",
+    )
 
     # --- star contraction: m(v) = min(v, min neighbor) ---------------
     nbr_min = edges.groupBy("src").agg(F.min("dst").alias("__nm"))
-    cmap = (
-        nodes.join(nbr_min, nodes[id_col] == nbr_min.src, "left")
-        .select(
+    cmap = cut(
+        nodes.join(nbr_min, nodes[id_col] == nbr_min.src, "left").select(
             F.col(id_col),
             # least() skips nulls: an isolated node maps to itself
             F.least(F.col(id_col), F.col("__nm")).alias("__m"),
-        )
-        .localCheckpoint()
+        ),
+        "connected_components.cmap",
     )
     mm_src = cmap.select(F.col(id_col).alias("src"), F.col("__m").alias("__ms"))
     mm_dst = cmap.select(F.col(id_col).alias("dst"), F.col("__m").alias("__md"))
-    edges = (
+    edges = cut(
         edges.join(mm_src, "src")
         .join(mm_dst, "dst")
         .select(F.col("__ms").alias("src"), F.col("__md").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()  # already doubled: distinct keeps both orientations
-        .localCheckpoint()
+        .distinct(),  # already doubled: distinct keeps both orientations
+        "connected_components.contracted",
     )
     cnodes = cmap.select(F.col("__m").alias(id_col)).distinct()
 
-    labels = cnodes.select(
-        F.col(id_col), F.col(id_col).alias("label")
-    ).localCheckpoint()
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
+    labels = cnodes.select(F.col(id_col), F.col(id_col).alias("label"))
     for _ in range(max_iters):
         # each node adopts min(own label, neighbors' labels)
         prop = (
@@ -985,6 +985,7 @@ def connected_components(
             F.least(
                 F.col("label"), F.coalesce("nbr_label", F.col("label"))
             ).alias("label"),
+            F.col("label").alias("__old"),
         )
         # pointer jumping: adopt the label of the node my label points
         # at (always <= my label since labels are reachable minima) —
@@ -992,23 +993,23 @@ def connected_components(
         holder = stepped.select(
             F.col(id_col).alias("__h_id"), F.col("label").alias("__h_label")
         )
-        labels = (
-            stepped.join(
-                holder, stepped.label == F.col("__h_id"), "left"
-            )
-            .select(
+        # the cut (O(1) plan depth per iteration) also counts the labels
+        # that fell this round: none fell = converged
+        labels, moved = cut(
+            stepped.join(holder, stepped.label == F.col("__h_id"), "left").select(
                 id_col,
                 F.least(
                     F.col("label"),
                     F.coalesce("__h_label", F.col("label")),
                 ).alias("label"),
-            )
-            .localCheckpoint()  # cut lineage: O(1) plan depth per iteration
+                "__old",
+            ),
+            "connected_components.labels",
+            observe=[F.count_if(F.col("label") < F.col("__old")).alias("n")],
+            drop=["__old"],
         )
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
+        if not moved["n"]:
             break
-        prev_sum = cur_sum
     # expand the contraction: label(v) = label(m(v))
     return (
         cmap.join(labels.withColumnRenamed(id_col, "__m"), "__m")
@@ -1048,8 +1049,9 @@ def connected_components(
     doc="Near-dup clustering: connected components over the Jaccard≥0.02 "
     "pair graph by iterative min-label propagation (each doc adopts the "
     "smallest doc_id reachable; canonical = cluster min). The Spark loop "
-    "localCheckpoints per iteration to cut lineage and stops when the "
-    "global label sum is stable; the oracle is a recursive-CTE "
+    "cuts lineage once per iteration and stops at the first iteration "
+    "that lowers no label, a count the cut observes inside its own job; "
+    "the oracle is a recursive-CTE "
     "transitive closure — an iterative distributed algorithm checked "
     "against exact SQL semantics.",
 )
@@ -1620,6 +1622,12 @@ INCREMENTAL_MINHASH_SQL = f"""
 """
 
 
+def _rows() -> list:
+    """The row count a cut observes: scored pairs, batch and eviction
+    sizes."""
+    return [F.count(F.lit(1)).alias("n")]
+
+
 def observe_pairs(cand: DataFrame, obs: dict | None) -> DataFrame:
     """Attach a CollectMetrics pair counter that RIDES the candidate
     stream's own execution — zero extra actions, zero checkpoint
@@ -1632,20 +1640,22 @@ def observe_pairs(cand: DataFrame, obs: dict | None) -> DataFrame:
     from pyspark.sql import Observation
 
     o = Observation()
-    obs.setdefault("_pair_obs", []).append(o)
-    return cand.observe(o, F.count(F.lit(1)).alias("n"))
+    obs.setdefault("_pair_obs", []).append((o, cand))
+    return cand.observe(o, *_rows())
 
 
 def resolve_pair_counts(obs: dict | None) -> None:
     """Fold every pending :func:`observe_pairs` metric into
-    ``obs['n_pairs_scored']``.  Call only after the observed plans have
-    executed (``Observation.get`` blocks otherwise); every kernel here
-    checkpoints its candidate streams before returning, so resolution
-    at kernel exit is immediate."""
+    ``obs['n_pairs_scored']``.  Call after the observed plans have
+    executed; every kernel here checkpoints its candidate streams
+    before returning, so resolution at kernel exit is immediate.  A
+    metric that never arrives is counted over the candidate stream
+    instead (:func:`~..lineage.metrics`)."""
     if obs is None:
         return
     obs["n_pairs_scored"] = obs.get("n_pairs_scored", 0) + sum(
-        int(o.get["n"]) for o in obs.pop("_pair_obs", ())
+        int(metrics(o, cand, _rows())["n"])
+        for o, cand in obs.pop("_pair_obs", ())
     )
 
 
@@ -1720,7 +1730,7 @@ def lsh_index_upsert(base_idx: DataFrame, delta_sig: DataFrame) -> DataFrame:
 def q_lsh_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents")
     docs = pin_parallelism(docs, "doc_id")
-    arrs = shingle_arrays(docs).localCheckpoint()
+    arrs = cut(shingle_arrays(docs), "q_lsh_index_upsert.arrs")
     # the stored pre-ingest index: built from the base corpus only (in
     # production this is read back from storage, not recomputed)
     base_idx = minhash_index(arrs.filter(F.col("doc_id") % 10 != 7))
@@ -1786,7 +1796,7 @@ def incremental_minhash_clusters(docs: DataFrame, obs: dict | None = None) -> Da
     batch = docs.filter(is_delta).select(
         "doc_id", fingerprint_col().alias("fp"), "text"
     )
-    digests2, groups2, _idx2, _spill2, labels2 = lsh_maintenance_step(
+    digests2, groups2, _idx2, _spill2, labels2, _ = lsh_maintenance_step(
         *state, batch, obs
     )
     return _reattach(digests2, groups2, labels2)
@@ -1811,8 +1821,8 @@ def lsh_seed_state(base_docs: DataFrame, obs: dict | None = None) -> tuple:
     candidate stream; the caller resolves it
     (:func:`resolve_pair_counts`)."""
     digests, groups = exact_groups(base_docs)
-    digests = digests.localCheckpoint()
-    groups = groups.localCheckpoint()
+    digests = cut(digests, "lsh_seed_state.digests")
+    groups = cut(groups, "lsh_seed_state.groups")
     arrs, nbytes = _rep_arrays(groups)
     ranked = _ranked_index(arrs)
     idx, spill = _split_index(ranked)
@@ -1837,7 +1847,7 @@ def _verified_edges(
     one verify path (its state stores texts, not arrays).  The
     checkpoint after the pair gauge lets the endpoint roster and the
     verify read one materialization."""
-    cand = observe_pairs(cand, obs).localCheckpoint()
+    cand = cut(observe_pairs(cand, obs), "_verified_edges.cand")
     need = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
@@ -1899,48 +1909,55 @@ def lsh_maintenance_step(
     no rebuild component crosses that boundary); every other cluster
     keeps its label unrecomputed.
 
-    ``obs``: optional dict — scored-pair CollectMetrics gauges
-    (resolved at exit) plus the scoped-path n_evicted / n_scope_reps /
-    n_total_reps counts.
+    ``obs``: optional dict — the scored-pair gauge (pending
+    :func:`observe_pairs` gauges are resolved at exit) plus the
+    scoped-path n_evicted / n_scope_reps / n_total_reps counts.  Every
+    count rides the cut that materializes its rows, so none costs a
+    job.
 
-    Returns (digests2, groups2, idx2, spill2, labels2)."""
-    bnew = batch.join(
-        digests.select("doc_id"), "doc_id", "left_anti"
-    ).localCheckpoint()
-    if not bnew.limit(1).count():
+    Returns (digests2, groups2, idx2, spill2, labels2, applied):
+    ``applied`` (doc_id, fp) is the part of ``batch`` the step took in,
+    the segment an append-table digest roster stores."""
+    bnew, n_new = cut(
+        batch.join(digests.select("doc_id"), "doc_id", "left_anti"),
+        "lsh_maintenance_step.bnew",
+        observe=_rows(),
+    )
+    applied = bnew.select("doc_id", "fp")
+    if not n_new["n"]:
         resolve_pair_counts(obs)
-        return digests, groups, idx, spill, labels
-    digests2 = digests.unionByName(bnew.select("doc_id", "fp"))
+        return digests, groups, idx, spill, labels, applied
+    digests2 = digests.unionByName(applied)
 
     # group deltas: relabels (group min moved to a batch id) + novels
     gmin = bnew.groupBy("fp").agg(F.min("doc_id").alias("bmin"))
     j = gmin.join(
         groups.select("fp", F.col("rep_id").alias("old")), "fp", "left"
     )
-    relabel = (
+    relabel = cut(
         j.filter(F.col("old").isNotNull() & (F.col("bmin") < F.col("old")))
-        .select("old", F.col("bmin").alias("new"))
-        .localCheckpoint()
+        .select("old", F.col("bmin").alias("new")),
+        "lsh_maintenance_step.relabel",
     )
-    novel_texts = (
+    novel_texts = cut(
         bnew.join(
             j.filter(F.col("old").isNull()).select(
                 "fp", F.col("bmin").alias("doc_id")
             ),
             ["fp", "doc_id"],
         )
-        .select("fp", "doc_id", "text")
-        .localCheckpoint()
+        .select("fp", "doc_id", "text"),
+        "lsh_maintenance_step.novel_texts",
     )
-    groups2 = (
+    groups2 = cut(
         groups.join(
             F.broadcast(relabel), groups.rep_id == relabel.old, "left"
         )
         .select("fp", F.coalesce("new", "rep_id").alias("rep_id"), "text")
         .unionByName(
             novel_texts.select("fp", F.col("doc_id").alias("rep_id"), "text")
-        )
-        .localCheckpoint()
+        ),
+        "lsh_maintenance_step.groups2",
     )
 
     # maintained index: relabel the stored rows AND the spill (both are
@@ -1962,24 +1979,28 @@ def lsh_maintenance_step(
     )
     novel_arrs = shingle_arrays(novel_texts.select("doc_id", "text"))
     novel_sig = minhash_signatures(novel_arrs)
-    ranked = _rank_buckets(
-        idx_rel.withColumn("__src", F.lit("stored"))
-        .unionByName(reent.withColumn("__src", F.lit("reent")))
-        .unionByName(novel_sig.withColumn("__src", F.lit("novel")))
-    ).localCheckpoint()
+    ranked = cut(
+        _rank_buckets(
+            idx_rel.withColumn("__src", F.lit("stored"))
+            .unionByName(reent.withColumn("__src", F.lit("reent")))
+            .unionByName(novel_sig.withColumn("__src", F.lit("novel")))
+        ),
+        "lsh_maintenance_step.ranked",
+    )
     idx2, overflow = _split_index(ranked)
     # the exactness guard: a STORED row pushed beyond the cap is the
     # only way an already-scored edge can lose its bucket support (a
     # re-entrant or novel row beyond the cap is equally absent from
     # the rebuild's index — nothing diverges)
-    evicted = (
+    evicted, n_evicted = cut(
         ranked.filter(
             (F.col("__bn") > MINHASH_BUCKET_CAP)
             & (F.col("__src") == "stored")
         )
         .select("doc_id")
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "lsh_maintenance_step.evicted",
+        observe=_rows(),
     )
     # spill2 = non-relabeled spill rows + every overflow row of this
     # re-cap (disjoint by construction); idx2 ∪ spill2 stays the
@@ -2014,7 +2035,7 @@ def lsh_maintenance_step(
     lab_b = old_lab.select(
         F.col("rid").alias("dst"), F.col("label").alias("lb")
     )
-    contracted = (
+    contracted = cut(
         new_edges.join(lab_a, "src", "left")
         .join(lab_b, "dst", "left")
         .select(
@@ -2025,8 +2046,8 @@ def lsh_maintenance_step(
         .select(
             F.least("u", "v").alias("src"), F.greatest("u", "v").alias("dst")
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "lsh_maintenance_step.contracted",
     )
     cnodes = (
         contracted.select(F.col("src").alias("id"))
@@ -2036,7 +2057,7 @@ def lsh_maintenance_step(
     cc2 = connected_components(cnodes, contracted, "id").select(
         "id", F.col("cluster_id").alias("merged")
     )
-    labels2 = (
+    labels2, n_reps = cut(
         old_lab.join(cc2.withColumnRenamed("id", "label"), "label", "left")
         .select(
             F.col("rid").alias("rep_id"),
@@ -2049,8 +2070,9 @@ def lsh_maintenance_step(
                 F.col("doc_id").alias("rep_id"),
                 F.coalesce("merged", "doc_id").alias("cluster_id"),
             )
-        )
-        .localCheckpoint()
+        ),
+        "lsh_maintenance_step.labels2",
+        observe=_rows(),
     )
 
     # SCOPED exactness fallback: with idx2
@@ -2062,21 +2084,23 @@ def lsh_maintenance_step(
     # Recluster ONLY the components containing an evicted doc,
     # regenerating their candidate pairs from the capped index itself;
     # every other cluster keeps its fast-path label unrecomputed.
-    if evicted.limit(1).count():
-        scope_cids = (
+    if n_evicted["n"]:
+        scope_cids = cut(
             labels2.join(
                 evicted.withColumnRenamed("doc_id", "rep_id"),
                 "rep_id",
                 "left_semi",
             )
             .select("cluster_id")
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            "lsh_maintenance_step.scope_cids",
         )
-        scope_reps = (
-            labels2.join(scope_cids, "cluster_id", "left_semi")
-            .select(F.col("rep_id").alias("doc_id"))
-            .localCheckpoint()
+        scope_reps, n_scope = cut(
+            labels2.join(scope_cids, "cluster_id", "left_semi").select(
+                F.col("rep_id").alias("doc_id")
+            ),
+            "lsh_maintenance_step.scope_reps",
+            observe=_rows(),
         )
         scope_edges = _verified_edges(
             groups2,
@@ -2089,18 +2113,18 @@ def lsh_maintenance_step(
             scope_reps, scope_edges, "doc_id"
         ).select(F.col("doc_id").alias("rep_id"), "cluster_id")
         if obs is not None:
-            obs["n_evicted"] = evicted.count()
-            obs["n_scope_reps"] = scope_reps.count()
-            obs["n_total_reps"] = labels2.count()
-        labels2 = (
+            obs["n_evicted"] = n_evicted["n"]
+            obs["n_scope_reps"] = n_scope["n"]
+            obs["n_total_reps"] = n_reps["n"]
+        labels2 = cut(
             labels2.join(scope_cids, "cluster_id", "left_anti")
             .select("rep_id", "cluster_id")
-            .unionByName(scope_cc)
-            .localCheckpoint()
+            .unionByName(scope_cc),
+            "lsh_maintenance_step.labels2",
         )
 
     resolve_pair_counts(obs)
-    return digests2, groups2, idx2, spill2, labels2
+    return digests2, groups2, idx2, spill2, labels2, applied
 
 
 # --- canonical selection per near-dup cluster -----------------------------
@@ -2274,7 +2298,7 @@ def _prefix_filter_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the per-doc top-K emission cap."""
     t = _PF_THRESHOLD
     docs = read_parquet_table(spark, sf_dir, "documents")
-    sh = shingles(docs).localCheckpoint()
+    sh = cut(shingles(docs), "_prefix_filter_scored.sh")
     # global df + a DISTINCT long surrogate id (sid) per shingle, pinned
     # by ONE checkpoint: the candidate join and the verify arrays carry
     # 8-byte longs instead of ~30-char shingle strings.  The ×30 probe
@@ -2285,19 +2309,19 @@ def _prefix_filter_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so monotonically_increasing_id is safe once materialized; the
     # rarest-first PREFIX ORDER stays on the exact (df, shingle) string
     # key, unchanged.
-    vocab = (
+    vocab = cut(
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("sid", F.monotonically_increasing_id())
-        .localCheckpoint()
+        .withColumn("sid", F.monotonically_increasing_id()),
+        "_prefix_filter_scored.vocab",
     )
     shv = sh.join(vocab, "shingle")
     # verify arrays as long sids — replaces the separate shingle_arrays
     # corpus pass (one fewer tokenize+explode of the whole corpus)
-    arrs = (
+    arrs = cut(
         shv.groupBy("doc_id")
-        .agg(F.collect_list("sid").alias("shs"))
-        .localCheckpoint()
+        .agg(F.collect_list("sid").alias("shs")),
+        "_prefix_filter_scored.arrs",
     )
     sz = arrs.select("doc_id", F.size("shs").alias("sz"))
     # rarest-first ordering WITHOUT a global rank: the prefix only needs
@@ -2625,7 +2649,7 @@ def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 2500
     )
-    sh = shingles(docs).localCheckpoint()
+    sh = cut(shingles(docs), "q_minhash_recall.sh")
     cand = minhash_candidates(shingle_arrays(docs))
     truth = jaccard_pairs(sh).select("doc_a", "doc_b", "jaccard")
     flagged = truth.join(
@@ -2702,7 +2726,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # claimed scale; a plain hash join on doc_id costs one shuffle of
     # the skinny (doc_id, source) side
     with_src = (
-        shingles(docs).join(src, "doc_id").localCheckpoint()
+        cut(shingles(docs).join(src, "doc_id"), "q_ngram_novelty.with_src")
     )
     per_shingle = with_src.groupBy("shingle").agg(
         F.countDistinct("source").alias("n_sources"),

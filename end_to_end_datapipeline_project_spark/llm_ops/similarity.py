@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..lineage import cut
 from ..registry import register
 from ..sources import read_parquet_table
 
@@ -459,8 +460,9 @@ SEMANTIC_COS = 0.45
     f"(≥ {SEMANTIC_COS}) become edges, connected components collapse "
     "chains of paraphrases into one cluster, canonical = min id — the "
     "embedding-space counterpart of shingle-based q_dedup_clusters, "
-    "sharing the same min-label-propagation loop (localCheckpoint per "
-    "iteration, label-sum convergence). At 100 TB the pair generation "
+    "sharing the same min-label-propagation loop (one lineage cut per "
+    "iteration; it stops at the first iteration that lowers no label). "
+    "At 100 TB the pair generation "
     "is the IVF/LSH candidate path, not this brute-force oracle shape.",
 )
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -671,7 +673,7 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the O(d) result, then release the cached corpus — a
     # bare persist would pin executor memory for the rest of the session
     # (bench/notebook reruns accumulate cached copies)
-    v_df = v_df.localCheckpoint()
+    v_df = cut(v_df, "q_pca_power.v_df")
     emb.unpersist()
     return v_df.select(
         "dim",
@@ -975,12 +977,12 @@ def rhp_band_index(vecs: DataFrame) -> DataFrame:
     it at least twice — at 100 TB this is the stored table an ingest
     tier maintains, bucketed by (band, sig)."""
     w_bucket = Window.partitionBy("band", "sig").orderBy("vec_id")
-    return (
+    return cut(
         _rhp_band_rows(vecs)
         .withColumn("__bn", F.row_number().over(w_bucket))
         .filter(F.col("__bn") <= _RHP_BUCKET_CAP)
-        .drop("__bn")
-        .localCheckpoint()
+        .drop("__bn"),
+        "rhp_band_index",
     )
 
 

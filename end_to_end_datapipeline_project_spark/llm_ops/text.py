@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..lineage import cut
 from ..registry import dsum, register, spark_dsum, spark_dsum_fast
 from ..sources import read_parquet_table
 
@@ -391,18 +392,22 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("freq"), "word")
         .limit(BPE_VOCAB_CAP)
     )
-    w = base.select(
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word")),
-                lambda i: F.substring(F.col("word"), i, F.lit(1)),
-            ),
-            "\x01",
-        ).alias("sym"),
-        "freq",
-    ).localCheckpoint()  # each iteration below reads it twice (pairs +
-    # merge); without materialization round k would re-run the corpus
-    # tokenize + k-1 merge folds per consumer
+    w = cut(
+        base.select(
+            F.array_join(
+                F.transform(
+                    F.sequence(F.lit(1), F.length("word")),
+                    lambda i: F.substring(F.col("word"), i, F.lit(1)),
+                ),
+                "\x01",
+            ).alias("sym"),
+            "freq",
+        ),
+        "q_bpe_merges.w",
+    )
+    # each iteration below reads w twice (pairs + merge); without
+    # materialization round k would re-run the corpus tokenize + k-1
+    # merge folds per consumer
     merges: list = []
     for k in range(1, N_BPE_MERGES + 1):
         arr = F.split("sym", "\x01")
@@ -449,12 +454,15 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         merge_fn = make_merge_fn(a, b)
 
-        w = w.select(
-            F.aggregate(
-                F.slice(arr, 2, npairs), F.element_at(arr, 1), merge_fn
-            ).alias("sym"),
-            "freq",
-        ).localCheckpoint()
+        w = cut(
+            w.select(
+                F.aggregate(
+                    F.slice(arr, 2, npairs), F.element_at(arr, 1), merge_fn
+                ).alias("sym"),
+                "freq",
+            ),
+            "q_bpe_merges.w",
+        )
     return spark.createDataFrame(
         merges,
         "iter int, pair_a string, pair_b string, merged string, cnt long",
@@ -580,9 +588,9 @@ def q_incremental_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the stored pre-ingest state (production reads these back): the
     # base per-doc tf matrix and its derived df / doc-count stats
-    tf_base = tf_rows(base).localCheckpoint()
+    tf_base = cut(tf_rows(base), "q_incremental_tfidf.tf_base")
     # the delta-only tokenize pass
-    tf_delta = tf_rows(delta).localCheckpoint()
+    tf_delta = cut(tf_rows(delta), "q_incremental_tfidf.tf_delta")
     n_delta = delta.agg(F.count(F.lit(1)).alias("n_d"))
     return merge_and_rescore_tfidf(base, tf_base, tf_delta, n_delta)
 
@@ -1059,13 +1067,17 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.trim("text") != ""
     )
     tok = docs.select("doc_id", F.explode(tokens_col()).alias("token"))
-    per_doc = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("doclen"),
-        *[
-            F.count(F.when(F.col("token") == q, 1)).alias(f"tf_{i}")
-            for i, q in enumerate(BM25_QUERY)
-        ],
-    ).localCheckpoint(eager=False)
+    per_doc = cut(
+        tok.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("doclen"),
+            *[
+                F.count(F.when(F.col("token") == q, 1)).alias(f"tf_{i}")
+                for i, q in enumerate(BM25_QUERY)
+            ],
+        ),
+        "q_bm25.per_doc",
+        eager=False,
+    )
     # lazy checkpoint: stats and tf both consume per_doc, and their
     # differing column pruning defeats exchange reuse — without the
     # materialization the full token explode runs twice.  per_doc is
@@ -1466,10 +1478,11 @@ def q_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocab) and each would re-run the token explode + (c, token)
     # shuffle from scratch — tc itself is the compact model table
     # (O(classes x vocab) rows), cheap to materialize once
-    tc = (
+    tc = cut(
         tok.groupBy(F.col("source").alias("c"), "token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        "q_naive_bayes.tc",
+        eager=False,
     )
     # one-row broadcast frames: per-class token totals and vocab size
     ct_row = (

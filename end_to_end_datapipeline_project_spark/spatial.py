@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .geo import WARSAW_BOX, haversine_km, haversine_sql
+from .lineage import cut
 from .pipeline_queries import TYPED_SQL, events_typed
 from .registry import register
 
@@ -289,15 +290,19 @@ def q_trajectory_hausdorff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         6,
     )
-    joined = a.join(b, F.col("a.user_id") < F.col("b.user_id")).select(
-        F.col("a.user_id").alias("user_a"),
-        F.col("b.user_id").alias("user_b"),
-        F.col("a.lat").alias("alat"),
-        F.col("a.lon").alias("alon"),
-        F.col("b.lat").alias("blat"),
-        F.col("b.lon").alias("blon"),
-        d.alias("dist"),
-    ).localCheckpoint(eager=False)
+    joined = cut(
+        a.join(b, F.col("a.user_id") < F.col("b.user_id")).select(
+            F.col("a.user_id").alias("user_a"),
+            F.col("b.user_id").alias("user_b"),
+            F.col("a.lat").alias("alat"),
+            F.col("a.lon").alias("alon"),
+            F.col("b.lat").alias("blat"),
+            F.col("b.lon").alias("blon"),
+            d.alias("dist"),
+        ),
+        "q_trajectory_hausdorff.joined",
+        eager=False,
+    )
     # both directed aggregations consume the SAME pairwise block join
     # (the dominant cost); without materialization each grouping
     # re-executes the whole O(P^2) join.  eager=False: plan-only callers

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .cleanse import cleanse_filters, explode_envelope, typed_projection
+from .lineage import cut
 from .schemas import BRONZE_SCHEMA
 
 
@@ -167,7 +168,7 @@ def run_stream_to_memory(
     # view: each invocation otherwise leaves its full result set
     # resident in the driver for the session lifetime (bench loops and
     # repeated gate runs accumulated every past run's rows)
-    out = spark.table(table_name).localCheckpoint()
+    out = cut(spark.table(table_name), "run_stream_to_memory.out")
     spark.catalog.dropTempView(table_name)
     return out
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .lineage import cut
 from .registry import register
 from .schemas import TESTDATA_SCHEMAS
 from .sources import read_parquet_table, stage_dir
@@ -361,7 +362,7 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             merged = latest_per_user(cur.unionByName(merged))
         # pin the merge result before overwriting its own input
-        merged = merged.localCheckpoint()
+        merged = cut(merged, "q_stream_upsert.merged")
         merged.write.mode("overwrite").parquet(target)
 
     # try/finally (ADVICE r12): a stream or upsert failure must not
@@ -382,7 +383,9 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (bench loops, repeated gate runs) leaks a full parquet copy of
         # the per-user table into /tmp.  eager checkpoint: the read must
         # complete before its source dir is deleted.
-        return spark.read.schema(stream.schema).parquet(target).localCheckpoint()
+        return cut(
+            spark.read.schema(stream.schema).parquet(target), "q_stream_upsert"
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -873,7 +876,7 @@ def incremental_tfidf_stream(
 
     from .llm_ops.text import merge_and_rescore_tfidf, tf_rows
 
-    tf_base = tf_rows(base).localCheckpoint()
+    tf_base = cut(tf_rows(base), "incremental_tfidf_stream.tf_base")
     root = tempfile.mkdtemp(prefix="spark_graft_stream_tfidf_")
     tf_target = f"{root}/tf_delta"
     id_target = f"{root}/delta_ids"
@@ -887,7 +890,8 @@ def incremental_tfidf_stream(
             cur = new.sparkSession.read.schema(new.schema).parquet(path)
             new = cur.unionByName(new).dropDuplicates(keys)
         # pin the merge result before overwriting its own input
-        new.localCheckpoint().write.mode("overwrite").parquet(path)
+        pinned = cut(new, "incremental_tfidf_stream.upsert")
+        pinned.write.mode("overwrite").parquet(path)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         _upsert(tf_target, tf_rows(batch_df), ["doc_id", "term"])
@@ -918,9 +922,10 @@ def incremental_tfidf_stream(
             )
         # eager checkpoint: the merge must materialize before its
         # source dirs are deleted in the finally block
-        return merge_and_rescore_tfidf(
-            base, tf_base, tf_delta, n_delta
-        ).localCheckpoint()
+        return cut(
+            merge_and_rescore_tfidf(base, tf_base, tf_delta, n_delta),
+            "incremental_tfidf_stream",
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -1073,10 +1078,10 @@ def incremental_pagerank_stream(
             if store.last_batch() >= bid:
                 return  # fully-applied replay: the manifest IS the marker
             ss = batch_df.sparkSession
-            bps = (
+            bps = cut(
                 batch_df.select("l_partkey", "l_suppkey")
-                .distinct()
-                .localCheckpoint()
+                .distinct(),
+                "incremental_pagerank_stream.bps",
             )
             roster_sc = read_pruned(
                 ss,
@@ -1116,12 +1121,15 @@ def incremental_pagerank_stream(
         final = store.read(spark, f"level_{PR_ITERS - 1}")
         roster = store.read(spark, "roster")
         # eager checkpoint: materialize before the finally-rmtree
-        return _pr_result(
-            base_li.select("l_suppkey").unionByName(
-                roster.select("l_suppkey")
+        return cut(
+            _pr_result(
+                base_li.select("l_suppkey").unionByName(
+                    roster.select("l_suppkey")
+                ),
+                final,
             ),
-            final,
-        ).localCheckpoint()
+            "incremental_pagerank_stream",
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -1209,11 +1217,11 @@ def incremental_lpa_stream(
     root = tempfile.mkdtemp(prefix="spark_graft_stream_lpa_")
     try:
         store = StateStore(f"{root}/state")
-        w0 = _co_order_pair_counts(base_li).localCheckpoint()
-        base_half = (
+        w0 = cut(_co_order_pair_counts(base_li), "incremental_lpa_stream.w0")
+        base_half = cut(
             w0.filter(F.col("n_co") >= 2)
-            .select("src", "dst")
-            .localCheckpoint()
+            .select("src", "dst"),
+            "incremental_lpa_stream.base_half",
         )
         l1, l2 = lpa_seed_levels(base_half)
         base_op = base_li.select("l_orderkey", "l_partkey").distinct()
@@ -1237,10 +1245,10 @@ def incremental_lpa_stream(
             if store.last_batch() >= bid:
                 return  # fully-applied replay: the manifest IS the marker
             ss = batch_df.sparkSession
-            bop = (
+            bop = cut(
                 batch_df.select("l_orderkey", "l_partkey")
-                .distinct()
-                .localCheckpoint()
+                .distinct(),
+                "incremental_lpa_stream.bop",
             )
             op_sc = read_pruned(
                 ss,
@@ -1248,14 +1256,15 @@ def incremental_lpa_stream(
                 bop.select("l_orderkey").distinct(),
                 "l_orderkey long, l_partkey long",
             )
-            new_op = bop.join(
-                op_sc, ["l_orderkey", "l_partkey"], "left_anti"
-            ).localCheckpoint()
+            new_op = cut(
+                bop.join(op_sc, ["l_orderkey", "l_partkey"], "left_anti"),
+                "incremental_lpa_stream.new_op",
+            )
             # pair-count increments: each pair is counted for an order
             # exactly once — in the batch where its SECOND part lands
             # (new × stored-partner and new × new, deduped per order)
             partners = op_sc.unionByName(new_op)
-            dw = (
+            dw = cut(
                 new_op.alias("a")
                 .join(
                     partners.alias("b"),
@@ -1269,8 +1278,8 @@ def incremental_lpa_stream(
                 )
                 .dropDuplicates(["o", "src", "dst"])
                 .groupBy("src", "dst")
-                .agg(F.count(F.lit(1)).alias("n_co"))
-                .localCheckpoint()
+                .agg(F.count(F.lit(1)).alias("n_co")),
+                "incremental_lpa_stream.dw",
             )
             new_half = co_order_new_edges(ss, store.dirs("weights"), dw)
             l1n, l2n = lpa_patch_levels(
@@ -1305,12 +1314,15 @@ def incremental_lpa_stream(
 
         final = store.read(spark, "l2")
         roster = store.read(spark, "op")
-        return _lpa_result(
-            base_li.select("l_partkey").unionByName(
-                roster.select("l_partkey")
+        return cut(
+            _lpa_result(
+                base_li.select("l_partkey").unionByName(
+                    roster.select("l_partkey")
+                ),
+                final,
             ),
-            final,
-        ).localCheckpoint()
+            "incremental_lpa_stream",
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -1416,17 +1428,12 @@ def incremental_minhash_clusters_stream(
             if store.last_batch() >= bid:
                 return  # fully-applied replay: the manifest IS the marker
             ss = batch_df.sparkSession
-            digests = store.read(ss, "digests")
-            batch = (
-                batch_df.select(
-                    "doc_id", fingerprint_col().alias("fp"), "text"
-                )
-                .dropDuplicates(["doc_id"])
-                .join(digests.select("doc_id"), "doc_id", "left_anti")
-                .localCheckpoint()
-            )
-            _d, g2, i2, s2, l2 = lsh_maintenance_step(
-                digests,
+            batch = batch_df.select(
+                "doc_id", fingerprint_col().alias("fp"), "text"
+            ).dropDuplicates(["doc_id"])
+            # the step drops docs already applied and returns the rest
+            _d, g2, i2, s2, l2, applied = lsh_maintenance_step(
+                store.read(ss, "digests"),
                 store.read(ss, "groups"),
                 store.read(ss, "index"),
                 store.read(ss, "spill"),
@@ -1444,7 +1451,7 @@ def incremental_minhash_clusters_stream(
                     "spill": s2,
                     "labels": l2,
                 },
-                append={"digests": batch.select("doc_id", "fp")},
+                append={"digests": applied},
             )
 
         q = (
@@ -1455,11 +1462,14 @@ def incremental_minhash_clusters_stream(
         )
         q.awaitTermination()
 
-        return _reattach(
-            store.read(spark, "digests"),
-            store.read(spark, "groups"),
-            store.read(spark, "labels"),
-        ).localCheckpoint()
+        return cut(
+            _reattach(
+                store.read(spark, "digests"),
+                store.read(spark, "groups"),
+                store.read(spark, "labels"),
+            ),
+            "incremental_minhash_clusters_stream",
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

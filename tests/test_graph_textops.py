@@ -508,20 +508,17 @@ def test_co_supply_half_pins_fanout_width(spark, monkeypatch):
     that AQE's byte-based coalescing ran the C(k,2) pair-explosion
     self-join on a handful of cores; _co_supply_half must pin the join
     input width with a user REPARTITION_BY_NUM (which AQE respects).
-    The localCheckpoint hides the construction plan, so bypass it for
-    the shape assertion; row-level equivalence stays covered by the
-    pagerank mass/strategy/incremental-rebuild pins.  The patch
-    targets ``type(li)`` (the session's concrete DataFrame class)
-    instead of importing the classic-internal module path, which
-    Spark Connect or a pyspark downgrade would break (ADVICE r15
-    #3)."""
+    The lineage cut hides the construction plan, so the test replaces
+    ``graph.cut`` with the identity for the shape assertion; row-level
+    equivalence stays covered by the pagerank mass/strategy/
+    incremental-rebuild pins."""
     from end_to_end_datapipeline_project_spark import graph
 
     li = spark.createDataFrame(
         [(1, 10), (1, 11), (2, 10), (2, 11), (2, 12)],
         "l_partkey long, l_suppkey long",
     )
-    monkeypatch.setattr(type(li), "localCheckpoint", lambda self: self)
+    monkeypatch.setattr(graph, "cut", lambda df, label, **kw: df)
     half = graph._co_supply_half(li)
     plan = half._jdf.queryExecution().toString()
     assert "REPARTITION_BY_NUM" in plan

@@ -1,0 +1,87 @@
+"""Job-count budget.  On this engine's small inputs a Spark job costs
+more than the rows it moves (0.1–0.17 s a job at sf0.1), so the number
+of jobs a query or an ingest step launches is its wall.  The table
+holds the jobs each call launches on the committed ``perfbench/corpus``:
+a count may fall freely, but it may rise only by editing the table,
+with the reason noted in CHANGES.md."""
+
+import sys
+from pathlib import Path
+
+import pytest
+from conftest import jobs_launched
+from pyspark.sql import functions as F
+
+ROOT = Path(__file__).resolve().parents[1]
+CORPUS = str(ROOT / "perfbench" / "corpus")
+
+#: jobs of the query call plus ``collect()``, for the perfbench headline
+#: pick (perfbench/workloads.py HEADLINE_PICK); they sum to the
+#: headline workload's ``spark_jobs`` per pass
+HEADLINE_JOBS = {
+    "q_daily_report": 3,
+    "q_large_orders": 4,
+    "q_token_count": 1,
+    "q_dedup_exact": 2,
+    "q_ann_topk": 3,
+    "q_multimodal_features": 1,
+    "q_asof_join": 3,
+    "q_correlation_matrix": 2,
+    "q_radius_join": 5,
+    "q_pii_scrub": 1,
+    "q_bloom_join": 6,
+    "q_pagerank": 15,
+}
+
+#: jobs of one ``lsh_maintenance_step`` ingesting the delta
+#: (doc_id % 10 = 7) into the base's seeded state, and of the replay of
+#: the same batch against the state it produced (nothing left to apply)
+LSH_STEP_JOBS = {"ingest": 73, "replay": 2}
+
+
+def test_budget_covers_the_headline_pick():
+    sys.path.insert(0, str(ROOT / "perfbench"))
+    try:
+        from workloads import HEADLINE_PICK
+    finally:
+        sys.path.remove(str(ROOT / "perfbench"))
+    assert sorted(HEADLINE_JOBS) == sorted(
+        q for qs in HEADLINE_PICK.values() for q in qs
+    )
+
+
+@pytest.mark.parametrize("query", sorted(HEADLINE_JOBS))
+def test_headline_query_jobs_within_budget(spark, query):
+    from end_to_end_datapipeline_project_spark.registry import all_queries
+
+    fn = all_queries()[query]
+    jobs = jobs_launched(spark, lambda: fn(spark, CORPUS).collect())
+    assert jobs <= HEADLINE_JOBS[query], (
+        f"{query} launched {jobs} jobs, budget {HEADLINE_JOBS[query]}"
+    )
+
+
+def test_lsh_maintenance_step_jobs_within_budget(spark):
+    from end_to_end_datapipeline_project_spark.llm_ops import dedup
+    from end_to_end_datapipeline_project_spark.sources import read_parquet_table
+
+    docs = read_parquet_table(spark, CORPUS, "documents")
+    is_delta = F.col("doc_id") % 10 == 7
+    state = dedup.lsh_seed_state(docs.filter(~is_delta))
+    batch = docs.filter(is_delta).select(
+        "doc_id", dedup.fingerprint_col().alias("fp"), "text"
+    )
+    box = {}
+    ingest = jobs_launched(
+        spark,
+        lambda: box.setdefault("s", dedup.lsh_maintenance_step(*state, batch)),
+    )
+    after = box["s"]
+    replay = jobs_launched(
+        spark, lambda: dedup.lsh_maintenance_step(*after[:5], batch)
+    )
+    assert after[5].count() == docs.filter(is_delta).count()
+    got = {"ingest": ingest, "replay": replay}
+    assert all(got[k] <= LSH_STEP_JOBS[k] for k in got), (
+        f"lsh_maintenance_step jobs {got}, budget {LSH_STEP_JOBS}"
+    )

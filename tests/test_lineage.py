@@ -1,0 +1,367 @@
+"""The lineage cut (``lineage.cut``) and the connected-components loop
+whose convergence test rides it."""
+
+import random
+
+import pytest
+from conftest import jobs_launched
+from pyspark.sql import functions as F
+
+from end_to_end_datapipeline_project_spark import lineage
+from end_to_end_datapipeline_project_spark.llm_ops import dedup
+
+
+def _rows_df(spark, n=50):
+    return spark.range(n).select(
+        F.col("id"), (F.col("id") % 7).alias("g")
+    ).repartition(4, "g")
+
+
+def _counts():
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.count_if(F.col("g") < 3).alias("small"),
+    ]
+
+
+def test_cut_of_a_cut_launches_no_job(spark):
+    ck = lineage.cut(_rows_df(spark), "test.once")
+    assert lineage.is_cut(ck)
+    box = {}
+    again = lambda: box.setdefault("again", lineage.cut(ck, "test.twice"))
+    assert jobs_launched(spark, again) == 0
+    assert box["again"] is ck
+    # a projection of a cut is a new plan: cutting it is a real cut
+    assert not lineage.is_cut(ck.select("id"))
+
+
+def test_observed_cut_costs_no_extra_job(spark):
+    plain = jobs_launched(
+        spark, lambda: lineage.cut(_rows_df(spark), "test.plain")
+    )
+    box = {}
+    observed = jobs_launched(
+        spark,
+        lambda: box.setdefault(
+            "r", lineage.cut(_rows_df(spark), "test.observed", observe=_counts())
+        ),
+    )
+    assert plain > 0 and observed == plain
+    ck, m = box["r"]
+    assert m == {"n": 50, "small": 22}
+    assert sorted(r.id for r in ck.collect()) == list(range(50))
+
+
+def test_cut_labels_its_job_and_restores_the_description(spark):
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.job.description", "outer")
+    try:
+        lineage.cut(_rows_df(spark), "test.labelled")
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = store.jobsList(None)
+    descs = set()
+    for i in range(jobs.size()):
+        d = jobs.apply(i).description()
+        if d.isDefined():
+            descs.add(d.get())
+    assert "cut:test.labelled" in descs
+
+
+def test_observed_metrics_fall_back_to_one_aggregate(spark, monkeypatch):
+    """No metrics arriving must neither hang nor guess: the read waits
+    its bound, then aggregates the cut frame in one job — same values."""
+    _, want = lineage.cut(_rows_df(spark), "test.metrics", observe=_counts())
+
+    class _Empty:
+        def isDefined(self):
+            return False
+
+    monkeypatch.setattr(lineage, "_row_or_empty", lambda o: _Empty())
+    monkeypatch.setattr(lineage, "OBSERVE_WAIT_S", 0.0)
+    box = {}
+    jobs = jobs_launched(
+        spark,
+        lambda: box.setdefault(
+            "r", lineage.cut(_rows_df(spark), "test.fallback", observe=_counts())
+        ),
+    )
+    plain = jobs_launched(
+        spark, lambda: lineage.cut(_rows_df(spark), "test.plain")
+    )
+    assert box["r"][1] == want
+    assert jobs > plain  # the fallback aggregate is a counted job
+
+    # helper columns a cut drops are still there for the fallback
+    helper = _rows_df(spark).withColumn("__h", F.col("g") + 1)
+    ck, m = lineage.cut(
+        helper,
+        "test.fallback_drop",
+        observe=[F.count_if(F.col("__h") < 4).alias("small")],
+        drop=["__h"],
+    )
+    assert m == {"small": want["small"]} and ck.columns == ["id", "g"]
+
+    # the pair gauge takes the same path
+    obs = {}
+    cand = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3)], "doc_a long, doc_b long"
+    )
+    dedup.observe_pairs(cand, obs).collect()
+    dedup.resolve_pair_counts(obs)
+    assert obs["n_pairs_scored"] == 3
+
+
+def _unset_checkpoint_dir(sc):
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+
+def _which_checkpoint(spark, monkeypatch):
+    """Record which DataFrame checkpoint method each cut calls."""
+    cls = type(spark.range(1))  # the session's concrete DataFrame class
+    called = []
+    for name in ("localCheckpoint", "checkpoint"):
+        real = getattr(cls, name)
+
+        def rec(self, *a, _real=real, _name=name, **k):
+            called.append(_name)
+            return _real(self, *a, **k)
+
+        monkeypatch.setattr(cls, name, rec)
+    return called
+
+
+def test_off_a_local_master_a_file_default_fs_keeps_the_cut_local(
+    spark, monkeypatch
+):
+    """``file:`` is each node's own disk on a cluster: with no checkpoint
+    directory there, a cut stays local and sets no directory."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    monkeypatch.setattr(lineage, "is_local_master", lambda master: False)
+    called = _which_checkpoint(spark, monkeypatch)
+    ck, m = lineage.cut(_rows_df(spark), "test.file_fs", observe=_counts())
+    assert called == ["localCheckpoint"]
+    assert sc.getCheckpointDir() is None
+    assert m == {"n": 50, "small": 22}
+    assert sorted(r.id for r in ck.collect()) == list(range(50))
+
+
+def test_off_a_local_master_a_shared_fs_gets_a_reliable_cut(
+    spark, monkeypatch, tmp_path
+):
+    """On a shared default file system an application without a
+    checkpoint directory gets one named after it, marked for deletion
+    at JVM exit, and the cut is a reliable checkpoint stored there."""
+    sc = spark.sparkContext
+    real_fs = lineage._default_fs(sc)
+    marked = []
+
+    class _Shared:
+        def getUri(self):
+            class _U:
+                def getScheme(self):
+                    return "hdfs"
+
+            return _U()
+
+        def makeQualified(self, path):
+            return real_fs.makeQualified(path)
+
+        def deleteOnExit(self, path):
+            marked.append(path.toString())
+            return real_fs.deleteOnExit(path)
+
+    monkeypatch.setattr(lineage, "is_local_master", lambda master: False)
+    monkeypatch.setattr(lineage, "_default_fs", lambda sc: _Shared())
+    monkeypatch.setattr(lineage, "CHECKPOINT_ROOT", str(tmp_path))
+    called = _which_checkpoint(spark, monkeypatch)
+    try:
+        ck, m = lineage.cut(_rows_df(spark), "test.reliable", observe=_counts())
+        root = tmp_path / sc.applicationId
+        assert called == ["checkpoint"]
+        assert marked == [f"file:{root}"]
+        assert sc.getCheckpointDir().startswith(f"file:{root}/")
+        assert m == {"n": 50, "small": 22}
+        assert sorted(r.id for r in ck.collect()) == list(range(50))
+        assert any(root.rglob("part-*"))  # the blocks went to the directory
+    finally:
+        real_fs.cancelDeleteOnExit(real_fs.makeQualified(
+            sc._jvm.org.apache.hadoop.fs.Path(str(tmp_path / sc.applicationId))
+        ))
+        _unset_checkpoint_dir(sc)
+
+
+def test_lazy_cut_defers_materialization_and_refuses_metrics(spark):
+    """A lazy cut stores nothing until the first action.  Under AQE its
+    construction still runs the map stage of each exchange below it
+    (one job for one groupBy); only an exchange-free plan builds with
+    no job at all."""
+
+    def checkpointed(df):
+        return df._jdf.queryExecution().analyzed().rdd().isCheckpointed()
+
+    box = {}
+    plain = lambda: box.setdefault(
+        "plain", lineage.cut(spark.range(50), "test.lazy", eager=False)
+    )
+    assert jobs_launched(spark, plain) == 0
+    grouped = _rows_df(spark).groupBy("g").agg(F.count(F.lit(1)).alias("n"))
+    shuffled = lambda: box.setdefault(
+        "grouped", lineage.cut(grouped, "test.lazy_exchange", eager=False)
+    )
+    assert jobs_launched(spark, shuffled) == 1
+    for key, want in (("plain", 50), ("grouped", 7)):
+        assert not checkpointed(box[key])
+        assert box[key].count() == want
+        assert checkpointed(box[key])
+    with pytest.raises(ValueError):
+        lineage.cut(_rows_df(spark), "test.lazy", observe=_counts(), eager=False)
+
+
+def _checkpoint_sites(source: str) -> list:
+    """Enclosing function of every ``localCheckpoint(`` / ``checkpoint(``
+    method call."""
+    import ast
+
+    found = []
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("localCheckpoint", "checkpoint")
+        ):
+            found.append(fn)
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(ast.parse(source), None)
+    return found
+
+
+def test_no_raw_checkpoint_outside_cut():
+    """Source-level tripwire: every lineage cut in the package goes
+    through ``lineage.cut``."""
+    from pathlib import Path
+
+    assert _checkpoint_sites(
+        "def f(d):\n d.localCheckpoint()\n d.x().checkpoint(eager=False)\n"
+        " cut(d, 'x')\n"
+    ) == ["f", "f"]
+    pkg = Path(__file__).resolve().parents[1] / (
+        "end_to_end_datapipeline_project_spark"
+    )
+    sites = []
+    for py in sorted(pkg.rglob("*.py")):
+        sites += [
+            f"{py.name}:{fn}" for fn in _checkpoint_sites(py.read_text())
+        ]
+    assert sites == ["lineage.py:_checkpoint"] * 2, (
+        f"raw checkpoints outside lineage.cut: {sites}"
+    )
+
+
+# --- connected components -------------------------------------------------
+
+
+def _union_find(nodes, edges):
+    parent = {v: v for v in nodes}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        if a in parent and b in parent:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in nodes}
+
+
+def _cc_reference(nodes, edges, max_iters):
+    """The Spark loop's algorithm in Python (star contraction, then
+    min-label steps with pointer jumping) under the sum-stability stop
+    rule: the labels after the loop and the iterations it ran."""
+    node_set = set(nodes)
+    es = [(a, b) for a, b in edges if a in node_set and b in node_set]
+    es += [(b, a) for a, b in es]
+    nbr_min = {}
+    for a, b in es:
+        nbr_min[a] = min(nbr_min.get(a, b), b)
+    m = {v: min(v, nbr_min.get(v, v)) for v in nodes}
+    cedges = {(m[a], m[b]) for a, b in es if m[a] != m[b]}
+    label = {c: c for c in set(m.values())}
+    prev_sum, iters = sum(label.values()), 0
+    for _ in range(max_iters):
+        iters += 1
+        prop = {}
+        for a, b in cedges:
+            prop[b] = min(prop.get(b, label[a]), label[a])
+        stepped = {v: min(lab, prop.get(v, lab)) for v, lab in label.items()}
+        label = {v: min(lab, stepped.get(lab, lab)) for v, lab in stepped.items()}
+        cur = sum(label.values())
+        if cur == prev_sum:
+            break
+        prev_sum = cur
+    return {v: label[m[v]] for v in nodes}, iters
+
+
+def _run_cc(spark, monkeypatch, nodes, edges, **kw):
+    """connected_components' {node: cluster} and iteration count."""
+    labels = []
+    real_cut = dedup.cut
+
+    def counting_cut(df, label, *a, **k):
+        labels.append(label)
+        return real_cut(df, label, *a, **k)
+
+    monkeypatch.setattr(dedup, "cut", counting_cut)
+    ndf = spark.createDataFrame([(v,) for v in nodes], "doc_id long")
+    edf = spark.createDataFrame(list(edges), "src long, dst long")
+    rows = dedup.connected_components(ndf, edf, "doc_id", **kw).collect()
+    monkeypatch.setattr(dedup, "cut", real_cut)
+    assert all(r.is_canonical == (r.doc_id == r.cluster_id) for r in rows)
+    return {r.doc_id: r.cluster_id for r in rows}, labels.count("connected_components.labels")
+
+
+def _graphs():
+    n = 200
+    yield "chain", list(range(n)), [(i, i + 1) for i in range(n - 1)]
+    for seed in (1, 2, 3):
+        rng = random.Random(seed)
+        nodes = rng.sample(range(1000), 120)
+        edges = [
+            (rng.choice(nodes), rng.choice(nodes)) for _ in range(rng.randint(40, 140))
+        ]
+        yield f"random{seed}", nodes, edges
+
+
+@pytest.mark.parametrize("name", ["chain", "random1", "random2", "random3"])
+def test_connected_components_matches_union_find(spark, monkeypatch, name):
+    """Exact components, and exactly the iterations the sum-stability
+    rule ran: "no label fell" is the same stop test."""
+    _, nodes, edges = next(g for g in _graphs() if g[0] == name)
+    got, iters = _run_cc(spark, monkeypatch, nodes, edges)
+    assert got == _union_find(nodes, edges)
+    want, want_iters = _cc_reference(nodes, edges, dedup.MAX_CC_ITERS)
+    assert got == want and iters == want_iters
+
+
+def test_connected_components_stops_at_the_cap(spark, monkeypatch):
+    """Below the iterations a chain needs, the loop stops at max_iters
+    with the partially propagated labels."""
+    _, nodes, edges = next(_graphs())
+    for cap in (1, 2):
+        got, iters = _run_cc(spark, monkeypatch, nodes, edges, max_iters=cap)
+        want, want_iters = _cc_reference(nodes, edges, cap)
+        assert iters == want_iters == cap
+        assert got == want and len(set(got.values())) > 1

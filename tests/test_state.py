@@ -162,15 +162,11 @@ def test_lsh_ingest_crash_between_writes_replays_to_batch(
     def apply_batch(bid, bdf):  # the twin's ingest closure, verbatim
         if store.last_batch() >= bid:
             return
-        digests = store.read(spark, "digests")
-        batch = (
-            bdf.select("doc_id", dedup.fingerprint_col().alias("fp"), "text")
-            .dropDuplicates(["doc_id"])
-            .join(digests.select("doc_id"), "doc_id", "left_anti")
-            .localCheckpoint()
-        )
-        _d, g2, i2, s2, l2 = dedup.lsh_maintenance_step(
-            digests,
+        batch = bdf.select(
+            "doc_id", dedup.fingerprint_col().alias("fp"), "text"
+        ).dropDuplicates(["doc_id"])
+        _d, g2, i2, s2, l2, applied = dedup.lsh_maintenance_step(
+            store.read(spark, "digests"),
             store.read(spark, "groups"),
             store.read(spark, "index"),
             store.read(spark, "spill"),
@@ -180,7 +176,7 @@ def test_lsh_ingest_crash_between_writes_replays_to_batch(
         store.commit(
             bid,
             replace={"groups": g2, "index": i2, "spill": s2, "labels": l2},
-            append={"digests": batch.select("doc_id", "fp")},
+            append={"digests": applied},
         )
 
     apply_batch(1, mk(batch1_rows))

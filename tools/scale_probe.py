@@ -1321,7 +1321,7 @@ def _lsh_ingest_probe(spark, k: int) -> None:
             ro = Observation()
             obs: dict = {}
             t0 = time.time()
-            d2, g2, _i2, _s2, l2 = dedup.lsh_maintenance_step(
+            d2, g2, _i2, _s2, l2, _ = dedup.lsh_maintenance_step(
                 d0, g0, i0, s0, l0, delta, obs
             )
             out = dedup._reattach(d2, g2, l2)
