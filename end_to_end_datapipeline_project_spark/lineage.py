@@ -5,6 +5,13 @@ DataFrame whose plan would otherwise grow with each iteration or be
 re-executed by each consumer is checkpointed, its job labelled
 ``cut:<label>``, and its plan replaced by a scan of the stored blocks.
 
+The scan keeps the planner's size estimate of the plan it replaced,
+often orders of magnitude above the bytes stored, so a join over a cut
+is planned as a sort-merge join and AQE runs a shuffle-map job per side
+before it switches to a broadcast.  An eager local cut whose stored
+blocks total at most ``spark.sql.autoBroadcastJoinThreshold`` therefore
+carries a broadcast hint, and the static plan is the one AQE would pick.
+
 A cut can carry aggregates (``observe``) that ride the checkpoint job
 itself as Observation metrics, so a row count or convergence test that
 follows a cut costs no job of its own.  Reading them never hangs: the
@@ -17,6 +24,7 @@ from __future__ import annotations
 import time
 from typing import Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation
 
 from .session import is_local_master
@@ -62,9 +70,10 @@ def cut(
     ``drop`` names helper columns only those aggregates read: they are
     projected away after the metrics and before the blocks are stored.
     Without ``observe``, a ``df`` that is already the output of a cut is
-    returned as is, with no job.  ``eager=False`` defers the
-    materialization to the first action on the result; it cannot carry
-    metrics."""
+    returned as is, with no job.  ``eager=False`` defers storing the
+    blocks to the first action on the result; it cannot carry metrics.
+    It does not make building the frame free: under AQE, building it
+    runs every map stage below its last exchange, one job each."""
     if observe is None:
         if drop:
             raise ValueError("drop only applies to observed helper columns")
@@ -84,12 +93,33 @@ def _checkpoint(df: DataFrame, label: str, eager: bool) -> DataFrame:
     try:
         if is_local_master(sc.master) or _checkpoint_dir(sc) is None:
             out = df.localCheckpoint(eager=eager)
+            if eager and _fits_broadcast(out):
+                out = out.hint("broadcast")
         else:
             out = df.checkpoint(eager=eager)
     finally:
         sc.setLocalProperty("spark.job.description", prev)
     setattr(out, _CUT_ATTR, label)
     return out
+
+
+def _fits_broadcast(ck: DataFrame) -> bool:
+    """Whether the blocks an eager ``localCheckpoint()`` stored total at
+    most ``spark.sql.autoBroadcastJoinThreshold`` (never, when that is
+    negative).  The block updates reach the status store on the listener
+    bus before the job ends; the read waits for the bus to drain and
+    launches no job.  An unknown size is no."""
+    spark = ck.sparkSession
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if limit < 0:
+        return False
+    jsc = spark.sparkContext._jsc.sc()
+    try:
+        jsc.listenerBus().waitUntilEmpty()
+        info = jsc.statusStore().rdd(ck._jdf.queryExecution().analyzed().rdd().id())
+    except Py4JJavaError:  # bus still busy after its wait, or no blocks
+        return False
+    return info.memoryUsed() + info.diskUsed() <= limit
 
 
 def _checkpoint_dir(sc) -> str | None:

@@ -888,10 +888,9 @@ def connected_components(
     ``nodes``: one column ``id_col``; ``edges1``: columns (src, dst), one
     row per undirected edge with BOTH endpoints present in ``nodes``
     (every in-repo caller builds edges from the node set; edges
-    violating that contract are DROPPED by an up-front semi-join on
-    both endpoints — without it the star-contraction pre-pass could
-    emit a foreign endpoint as a cluster_id, corrupting labels instead
-    of ignoring the edge, ADVICE r13).  Each
+    violating that contract are DROPPED inside star contraction, which
+    would otherwise emit a foreign endpoint as a cluster_id, corrupting
+    labels instead of ignoring the edge, ADVICE r13).  Each
     iteration does an edge-neighbor min step AND a pointer-jumping step
     (label := label of the label holder), so convergence takes
     O(log diameter) rounds instead of O(diameter) — a path graph of
@@ -903,16 +902,20 @@ def connected_components(
     depth) observes ``count_if(label < previous label)`` and the loop
     stops at the first 0 or after ``max_iters`` iterations.  The test
     rides the cut's own jobs, so it launches none of its own.  Measured
-    on local[4] with AQE: 79 jobs per call on a 200-node chain (8
-    iterations), 11 on an edgeless graph.
+    on local[4] with AQE, ``collect()`` included: 71 jobs per call on a
+    200-node chain (8 iterations), 9 on an edgeless graph, 13 on a
+    30-clique.
 
     One STAR-CONTRACTION round runs before the loop: every node is
     mapped to m(v) = min(v, min neighbor), edges are rewritten through
-    the map, self-loops dropped, duplicates collapsed.  Exactness: v and
-    m(v) share an edge (or are equal), so contraction preserves
-    components; the component's global minimum g has all-larger
-    neighbors, so m(g) = g — g survives as a contracted node and stays
-    the component's min label; expansion is label(v) = label(m(v)).
+    the map, self-loops dropped, each remaining pair kept once (its cut
+    counts them at no job).  No pair left means every contracted node is
+    its own component: the loop does not run and label(v) = m(v).
+    Exactness: v and m(v) share an edge (or are equal), so contraction
+    preserves components; the component's global minimum g has
+    all-larger neighbors, so m(g) = g — g survives as a contracted node
+    and stays the component's min label; expansion is label(v) =
+    label(m(v)).
     This is what makes near-dup CLIQUE walls affordable: a k-clique's
     C(k,2) edges all map to (min, min) self-loops and vanish before the
     propagation loop ever shuffles them (the ×100 replica corpus is
@@ -921,37 +924,26 @@ def connected_components(
     iteration and was killed).
     Returns (id_col, cluster_id, is_canonical).
     """
-    # materialize the half list ONCE before doubling: the union below
-    # references the edges1 subtree twice, and whole-stage pipelines
-    # everything above the last exchange into BOTH branches — for the
-    # LSH family that re-ran the exact-Jaccard verify joins per
-    # orientation (the r13 skew table's only above-floor "straggler"
-    # readings were this uniformly-heavy doubled-verify stage: max ≈
-    # median task, 64 tasks — a duplicated stage, not a reduce-tail).
-    # An edge list that is already a cut (the maintenance step's
-    # contracted edges) is used as is.
-    edges1 = cut(edges1, "connected_components.edges1")
-    # contract enforcement: drop edges with an endpoint outside
-    # ``nodes`` BEFORE doubling (one pass, two broadcast-shaped
-    # semi-joins against the O(V) id list).  The trailing select pins
-    # the (src, dst) order back: each USING-join moves its key column
-    # first, and the doubling union below is POSITIONAL.
-    edges1 = (
-        edges1.join(
-            nodes.select(F.col(id_col).alias("src")), "src", "left_semi"
-        )
-        .join(nodes.select(F.col(id_col).alias("dst")), "dst", "left_semi")
-        .select("src", "dst")
-    )
-    edges = cut(
-        edges1.unionAll(
-            edges1.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ),
-        "connected_components.edges",
-    )
+    # the half list is read three times below (both orientations of the
+    # neighbour minimum, and the rewrite): materialize it once, or every
+    # read re-runs its producer (for the LSH family, the exact-Jaccard
+    # verify joins).  An edge list that is already a cut (the
+    # maintenance step's contracted edges) is used as is.
+    edges1 = cut(edges1, "connected_components.edges1").select("src", "dst")
 
     # --- star contraction: m(v) = min(v, min neighbor) ---------------
-    nbr_min = edges.groupBy("src").agg(F.min("dst").alias("__nm"))
+    # The both-endpoints-in-``nodes`` contract is enforced here: only
+    # neighbours that are nodes count toward the minimum, the left join
+    # from ``nodes`` drops foreign sources, and the rewrite's inner joins
+    # against ``cmap`` drop every edge with a foreign endpoint.
+    nbr_min = (
+        edges1.unionAll(
+            edges1.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .join(nodes.select(F.col(id_col).alias("dst")), "dst", "left_semi")
+        .groupBy("src")
+        .agg(F.min("dst").alias("__nm"))
+    )
     cmap = cut(
         nodes.join(nbr_min, nodes[id_col] == nbr_min.src, "left").select(
             F.col(id_col),
@@ -962,13 +954,25 @@ def connected_components(
     )
     mm_src = cmap.select(F.col(id_col).alias("src"), F.col("__m").alias("__ms"))
     mm_dst = cmap.select(F.col(id_col).alias("dst"), F.col("__m").alias("__md"))
-    edges = cut(
-        edges.join(mm_src, "src")
+    # the contracted edges as a half list, each unordered pair once
+    half, n_half = cut(
+        edges1.join(mm_src, "src")
         .join(mm_dst, "dst")
-        .select(F.col("__ms").alias("src"), F.col("__md").alias("dst"))
+        .select(
+            F.least("__ms", "__md").alias("src"),
+            F.greatest("__ms", "__md").alias("dst"),
+        )
         .filter(F.col("src") != F.col("dst"))
-        .distinct(),  # already doubled: distinct keeps both orientations
+        .distinct(),
         "connected_components.contracted",
+        observe=[F.count(F.lit(1)).alias("n")],
+    )
+    if not n_half["n"]:
+        # no contracted edge: every contracted node is its own
+        # component, so label(v) = m(v)
+        return _clusters(cmap, "__m", id_col)
+    edges = half.unionAll(
+        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     cnodes = cmap.select(F.col("__m").alias(id_col)).distinct()
 
@@ -1011,15 +1015,16 @@ def connected_components(
         if not moved["n"]:
             break
     # expand the contraction: label(v) = label(m(v))
-    return (
-        cmap.join(labels.withColumnRenamed(id_col, "__m"), "__m")
-        .select(
-            id_col,
-            F.col("label").alias("cluster_id"),
-            (F.col(id_col) == F.col("label"))
-            .cast("int")
-            .alias("is_canonical"),
-        )
+    return _clusters(
+        cmap.join(labels.withColumnRenamed(id_col, "__m"), "__m"), "label", id_col
+    )
+
+
+def _clusters(df: DataFrame, label: str, id_col: str) -> DataFrame:
+    return df.select(
+        id_col,
+        F.col(label).alias("cluster_id"),
+        (F.col(id_col) == F.col(label)).cast("int").alias("is_canonical"),
     )
 
 

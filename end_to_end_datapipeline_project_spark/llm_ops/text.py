@@ -1082,7 +1082,9 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # differing column pruning defeats exchange reuse — without the
     # materialization the full token explode runs twice.  per_doc is
     # O(docs) compact rows (5 numeric cols), the token stream is not.
-    # eager=False so plan-only callers never pay the explode.
+    # eager=False stores nothing until the first action; under AQE,
+    # building the frame still runs the map stage below its exchange
+    # (1 job at sf0.001).
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"),
         # doclen is an integer — fast contract at frac 0

@@ -305,10 +305,10 @@ def q_trajectory_hausdorff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both directed aggregations consume the SAME pairwise block join
     # (the dominant cost); without materialization each grouping
-    # re-executes the whole O(P^2) join.  eager=False: plan-only callers
-    # (explain, registry enumeration) must not pay the join at
-    # DataFrame-construction time — the checkpoint materializes on first
-    # action and is shared from then on
+    # re-executes the whole O(P^2) join.  eager=False: the checkpoint
+    # stores the join's rows on the first action and is shared from then
+    # on; under AQE, building the frame still runs the map stages below
+    # the join's exchanges (1 job at sf0.001)
     h_ab = (
         joined.groupBy("user_a", "user_b", "alat", "alon")
         .agg(F.min("dist").alias("min_d"))

@@ -1,5 +1,6 @@
 import os
 import sys
+from collections import Counter
 
 import pytest
 
@@ -50,18 +51,35 @@ def spark_prop(spark):
     return spark
 
 
-def jobs_launched(spark, build) -> int:
-    """Spark jobs the status store records while ``build()`` runs (its
-    own job group, drained from the listener bus before counting)."""
+def _group_jobs(spark, build) -> list:
+    """Ids of the Spark jobs launched while ``build()`` runs, in a job
+    group of its own, drained from the listener bus before reading."""
     import uuid
 
     sc = spark.sparkContext
     group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
+    sc.setLocalProperty("spark.jobGroup.id", group)
     try:
         build()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jobs_launched(spark, build) -> int:
+    """Spark jobs the status store records while ``build()`` runs."""
+    return len(_group_jobs(spark, build))
+
+
+def jobs_by_label(spark, build) -> Counter:
+    """The jobs ``build()`` launches, counted by ``spark.job.description``
+    (a cut labels its job ``cut:<label>``; an unlabelled job counts
+    under ``None``)."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    out = Counter()
+    for job in _group_jobs(spark, build):
+        d = store.job(job).description()
+        out[d.get() if d.isDefined() else None] += 1
+    return out

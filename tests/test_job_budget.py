@@ -36,7 +36,28 @@ HEADLINE_JOBS = {
 #: jobs of one ``lsh_maintenance_step`` ingesting the delta
 #: (doc_id % 10 = 7) into the base's seeded state, and of the replay of
 #: the same batch against the state it produced (nothing left to apply)
-LSH_STEP_JOBS = {"ingest": 73, "replay": 2}
+LSH_STEP_JOBS = {"ingest": 53, "replay": 2}
+
+#: jobs of ``connected_components`` plus ``collect()`` on three graphs:
+#: a 200-node chain (the pointer-jumping loop runs), an edgeless graph
+#: and a 30-clique (star contraction leaves no edge, so the loop does
+#: not run)
+CC_JOBS = {"chain": 71, "edgeless": 9, "clique": 13}
+
+#: jobs launched while building (not collecting) the queries whose lazy
+#: cut sits above an exchange, at sf0.001: under AQE, building the frame
+#: runs every map stage below the cut's last exchange
+CONSTRUCT_JOBS = {"q_bm25": 1, "q_naive_bayes": 3, "q_trajectory_hausdorff": 1}
+
+
+def _cc_graphs():
+    n = 200
+    yield "chain", list(range(n)), [(i, i + 1) for i in range(n - 1)]
+    yield "edgeless", list(range(n)), []
+    k = 30
+    yield "clique", list(range(k)), [
+        (i, j) for i in range(k) for j in range(i + 1, k)
+    ]
 
 
 def test_budget_covers_the_headline_pick():
@@ -84,4 +105,33 @@ def test_lsh_maintenance_step_jobs_within_budget(spark):
     got = {"ingest": ingest, "replay": replay}
     assert all(got[k] <= LSH_STEP_JOBS[k] for k in got), (
         f"lsh_maintenance_step jobs {got}, budget {LSH_STEP_JOBS}"
+    )
+
+
+@pytest.mark.parametrize("graph", sorted(CC_JOBS))
+def test_connected_components_jobs_within_budget(spark, graph):
+    from end_to_end_datapipeline_project_spark.llm_ops import dedup
+
+    _, nodes, edges = next(g for g in _cc_graphs() if g[0] == graph)
+    ndf = spark.createDataFrame([(v,) for v in nodes], "doc_id long")
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    jobs = jobs_launched(
+        spark,
+        lambda: dedup.connected_components(ndf, edf, "doc_id").collect(),
+    )
+    assert jobs <= CC_JOBS[graph], (
+        f"connected_components on {graph} launched {jobs} jobs, "
+        f"budget {CC_JOBS[graph]}"
+    )
+
+
+@pytest.mark.parametrize("query", sorted(CONSTRUCT_JOBS))
+def test_lazy_cut_construction_jobs_within_budget(spark, sf_dir, query):
+    from end_to_end_datapipeline_project_spark.registry import all_queries
+
+    fn = all_queries()[query]
+    jobs = jobs_launched(spark, lambda: fn(spark, sf_dir))
+    assert jobs <= CONSTRUCT_JOBS[query], (
+        f"building {query} launched {jobs} jobs, "
+        f"budget {CONSTRUCT_JOBS[query]}"
     )

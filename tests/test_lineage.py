@@ -4,7 +4,7 @@ whose convergence test rides it."""
 import random
 
 import pytest
-from conftest import jobs_launched
+from conftest import jobs_by_label, jobs_launched
 from pyspark.sql import functions as F
 
 from end_to_end_datapipeline_project_spark import lineage
@@ -146,6 +146,7 @@ def test_off_a_local_master_a_file_default_fs_keeps_the_cut_local(
     ck, m = lineage.cut(_rows_df(spark), "test.file_fs", observe=_counts())
     assert called == ["localCheckpoint"]
     assert sc.getCheckpointDir() is None
+    assert _hinted(ck)  # an eager local cut knows its stored size
     assert m == {"n": 50, "small": 22}
     assert sorted(r.id for r in ck.collect()) == list(range(50))
 
@@ -183,6 +184,7 @@ def test_off_a_local_master_a_shared_fs_gets_a_reliable_cut(
         ck, m = lineage.cut(_rows_df(spark), "test.reliable", observe=_counts())
         root = tmp_path / sc.applicationId
         assert called == ["checkpoint"]
+        assert not _hinted(ck)  # a reliable cut's size is not read
         assert marked == [f"file:{root}"]
         assert sc.getCheckpointDir().startswith(f"file:{root}/")
         assert m == {"n": 50, "small": 22}
@@ -289,8 +291,9 @@ def _union_find(nodes, edges):
 
 def _cc_reference(nodes, edges, max_iters):
     """The Spark loop's algorithm in Python (star contraction, then
-    min-label steps with pointer jumping) under the sum-stability stop
-    rule: the labels after the loop and the iterations it ran."""
+    min-label steps with pointer jumping), stopping when the contraction
+    leaves no edge (0 iterations) or at the first iteration that lowers
+    no label: the labels after the loop and the iterations it ran."""
     node_set = set(nodes)
     es = [(a, b) for a, b in edges if a in node_set and b in node_set]
     es += [(b, a) for a, b in es]
@@ -300,18 +303,17 @@ def _cc_reference(nodes, edges, max_iters):
     m = {v: min(v, nbr_min.get(v, v)) for v in nodes}
     cedges = {(m[a], m[b]) for a, b in es if m[a] != m[b]}
     label = {c: c for c in set(m.values())}
-    prev_sum, iters = sum(label.values()), 0
-    for _ in range(max_iters):
+    iters = 0
+    for _ in range(max_iters if cedges else 0):
         iters += 1
         prop = {}
         for a, b in cedges:
             prop[b] = min(prop.get(b, label[a]), label[a])
         stepped = {v: min(lab, prop.get(v, lab)) for v, lab in label.items()}
-        label = {v: min(lab, stepped.get(lab, lab)) for v, lab in stepped.items()}
-        cur = sum(label.values())
-        if cur == prev_sum:
+        new = {v: min(lab, stepped.get(lab, lab)) for v, lab in stepped.items()}
+        if new == label:
             break
-        prev_sum = cur
+        label = new
     return {v: label[m[v]] for v in nodes}, iters
 
 
@@ -343,12 +345,27 @@ def _graphs():
             (rng.choice(nodes), rng.choice(nodes)) for _ in range(rng.randint(40, 140))
         ]
         yield f"random{seed}", nodes, edges
+    # a quarter of the endpoints outside the node set, all below it
+    rng = random.Random(4)
+    nodes = rng.sample(range(100, 1100), 120)
+    edges = [
+        tuple(rng.choice(nodes) if rng.random() < 0.75 else rng.randrange(100)
+              for _ in range(2))
+        for _ in range(150)
+    ]
+    yield "foreign", nodes, edges
+    # star contraction leaves no edge: the loop runs 0 iterations
+    yield "edgeless", list(range(50)), []
+    yield "clique", list(range(20)), [(i, j) for i in range(20) for j in range(i)]
+    yield "star", list(range(1, 40)), [(v, 1) for v in range(2, 40)]
+    yield "pairs", list(range(40)), [(2 * i + 1, 2 * i) for i in range(20)]
 
 
-@pytest.mark.parametrize("name", ["chain", "random1", "random2", "random3"])
+@pytest.mark.parametrize("name", [g[0] for g in _graphs()])
 def test_connected_components_matches_union_find(spark, monkeypatch, name):
-    """Exact components, and exactly the iterations the sum-stability
-    rule ran: "no label fell" is the same stop test."""
+    """Exact components, and exactly the iterations of the reference:
+    none when star contraction leaves no edge, else up to the first
+    iteration that lowers no label."""
     _, nodes, edges = next(g for g in _graphs() if g[0] == name)
     got, iters = _run_cc(spark, monkeypatch, nodes, edges)
     assert got == _union_find(nodes, edges)
@@ -365,3 +382,86 @@ def test_connected_components_stops_at_the_cap(spark, monkeypatch):
         want, want_iters = _cc_reference(nodes, edges, cap)
         assert iters == want_iters == cap
         assert got == want and len(set(got.values())) > 1
+
+
+@pytest.mark.parametrize("clique", [0, 10])
+def test_edgeless_contraction_launches_no_label_job(spark, clique):
+    """With no contracted edge (an edgeless graph, or a clique that
+    contracts to its minimum) the result is the contraction map itself:
+    no iteration cut runs."""
+    nodes = spark.createDataFrame([(v,) for v in range(50)], "doc_id long")
+    edges = spark.createDataFrame(
+        [(i, j) for i in range(clique) for j in range(i)], "src long, dst long"
+    )
+    box = {}
+    jobs = jobs_by_label(
+        spark,
+        lambda: box.setdefault(
+            "rows", dedup.connected_components(nodes, edges, "doc_id").collect()
+        ),
+    )
+    assert jobs["cut:connected_components.cmap"] > 0
+    assert jobs["cut:connected_components.labels"] == 0
+    got = {r.doc_id: r.cluster_id for r in box["rows"]}
+    assert got == {v: 0 if v < clique else v for v in range(50)}
+
+
+# --- the broadcast hint a small cut carries -------------------------------
+
+
+def _hinted(df) -> bool:
+    return df._jdf.queryExecution().analyzed().nodeName() == "ResolvedHint"
+
+
+def _small_over_big_estimate(spark):
+    """50 rows under a plan the planner estimates at gigabytes: a join's
+    size estimate is the product of its sides' estimates, and a filter
+    keeps its child's."""
+    ids = spark.range(10_000)
+    return ids.join(ids, "id").filter(F.col("id") < 50).select(
+        "id", (F.col("id") % 7).alias("g")
+    )
+
+
+def test_small_cut_plans_a_broadcast_join(spark, monkeypatch):
+    """A join against a small cut is planned as a broadcast of the cut,
+    with no exchange on the other side, and launches fewer jobs than the
+    same join over an unhinted cut; the rows are the same."""
+    # 80 MB by estimate: above the threshold, so only a hint broadcasts
+    other = spark.range(10**7).select("id", (F.col("id") * 2).alias("v"))
+    ck = lineage.cut(_small_over_big_estimate(spark), "test.hinted")
+    assert _hinted(ck)
+    plan = other.join(ck, "id")._jdf.queryExecution().executedPlan()
+    text = plan.toString()
+    assert "BroadcastHashJoin" in text and "SortMergeJoin" not in text
+    assert "Exchange hashpartitioning" not in text
+
+    monkeypatch.setattr(lineage, "_fits_broadcast", lambda ck: False)
+    plain = lineage.cut(_small_over_big_estimate(spark), "test.unhinted")
+    assert not _hinted(plain)
+    box = {}
+    hinted_jobs = jobs_launched(
+        spark, lambda: box.setdefault("hinted", other.join(ck, "id").collect())
+    )
+    plain_jobs = jobs_launched(
+        spark, lambda: box.setdefault("plain", other.join(plain, "id").collect())
+    )
+    assert hinted_jobs < plain_jobs
+    assert sorted(box["hinted"]) == sorted(box["plain"])
+    assert len(box["hinted"]) == 50
+
+
+def test_no_hint_when_the_size_is_unknown_or_broadcast_is_off(spark):
+    """A lazy cut has stored nothing yet, and a threshold below 0 turns
+    automatic broadcasts off: neither carries the hint."""
+    lazy = lineage.cut(_small_over_big_estimate(spark), "test.lazy_hint", eager=False)
+    assert not _hinted(lazy)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    was = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        off = lineage.cut(_small_over_big_estimate(spark), "test.off")
+    finally:
+        spark.conf.set(key, was)
+    assert not _hinted(off)
+    assert sorted(lazy.collect()) == sorted(off.collect())
