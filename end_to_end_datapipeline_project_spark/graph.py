@@ -101,36 +101,55 @@ PAGERANK_SQL = f"""
     PAGERANK_SQL,
     doc=f"PageRank ({PR_ITERS} synchronous iterations, damping {PR_DAMP}) "
     "over the supplier co-supply graph. Spark runs the classic "
-    "message-passing loop — contributions pr/outdeg shuffled on dst, one "
-    "hash-agg per iteration — with the edge list (self-join + distinct, "
-    "the expensive part) localCheckpointed ONCE and reused by every "
-    "iteration; per-message decimal-quantized sums keep each iteration "
-    "bit-identical to the oracle's unrolled-CTE evaluation. Iterations "
-    "shuffle only partial-aggregated per-dst message sums: the O(|V|) "
-    "rank vector and out-degree table broadcast, the edges never "
-    "re-shuffle (the shuffle-join rank form measured within noise of "
-    "this one and was removed; OPTIMIZATION_r16.md appendix).",
+    "message-passing loop over ONE adjacency cut — a row per directed "
+    "edge plus a row naming each supplier (isolated ones included), "
+    "checkpointed once and kept hash-partitioned on the supplier — so "
+    "each iteration joins the rows to the broadcast O(|V|) share vector "
+    "(pr/degree) and aggregates per supplier where the rows already "
+    "live: no iteration shuffles. Per-message decimal-quantized sums "
+    "keep each iteration bit-identical to the oracle's unrolled-CTE "
+    "evaluation.",
 )
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_parquet_table(spark, sf_dir, "lineitem")
     return pagerank(li)
 
 
+def _packed_pairs(ps: DataFrame, with_self: bool = False) -> DataFrame:
+    """Distinct (src, dst) supplier pairs, src < dst (src <= dst with
+    ``with_self``: every supplier also pairs with itself), sharing a part
+    in ``ps`` (l_partkey, l_suppkey).  An equi-join on l_partkey emits
+    each ordered pair inside the join stage (measured faster than
+    collect_set + array explode at this ~30-supplier fan-out, and the
+    gap widens with scale; OPTIMIZATION_r16.md appendix).  Pairs dedup
+    on ONE packed long (src << 32 | dst) instead of a two-long struct:
+    ~40% less shuffle payload through the dedup exchange (valid while
+    supplier keys < 2^31, which holds at any TPC-H scale factor;
+    partkey-sized graphs keep the struct form)."""
+    a, b = F.col("a.l_suppkey"), F.col("b.l_suppkey")
+    return (
+        ps.alias("a")
+        .join(
+            ps.alias("b"),
+            (F.col("a.l_partkey") == F.col("b.l_partkey"))
+            & ((a <= b) if with_self else (a < b)),
+        )
+        .select((a * 4294967296 + b).alias("e"))
+        .distinct()
+        .select(
+            F.expr("e DIV 4294967296").alias("src"),
+            F.expr("e % 4294967296").alias("dst"),
+        )
+    )
+
+
 def _co_supply_half(li: DataFrame) -> DataFrame:
     """Checkpointed HALF edge list (src < dst) of the supplier co-supply
-    graph.  Dedup (l_partkey, l_suppkey) FIRST — the 2-column projection
-    shuffles once and shrinks ~3x (repeat lineitems per part+supplier
-    collapse) — then an equi-join on l_partkey emits each ordered pair
-    inside the join stage (measured faster than collect_set + array
-    explode at this ~30-supplier fan-out, and the gap widens with
-    scale; OPTIMIZATION_r16.md appendix).  Checkpointing the HALF list
-    keeps the materialized footprint 4x smaller than the annotated
-    directed list: both directions and the outdeg annotation derive
-    from it with a union + broadcast join.
-    Pairs dedup on ONE packed long (src << 32 | dst) instead of a
-    two-long struct: ~40% less shuffle payload through the dedup
-    exchange (valid while supplier keys < 2^31, which holds at any
-    TPC-H scale factor; partkey-sized graphs keep the struct form).
+    graph (:func:`_packed_pairs`).  Dedup (l_partkey, l_suppkey) FIRST,
+    then pair.  Checkpointing the HALF list keeps the materialized
+    footprint 4x smaller than the annotated directed list: both
+    directions and the outdeg annotation derive from it with a union +
+    broadcast join.
 
     The deduped (part, supplier) table is re-spread to a PINNED width
     before the self-join (r15): the distinct output is ~10 MB at sf0.1,
@@ -160,22 +179,60 @@ def _co_supply_half(li: DataFrame) -> DataFrame:
         .distinct()
         .repartition(n, "l_partkey")
     )
-    return cut(
-        ps.alias("a")
-        .join(
-            ps.alias("b"),
-            (F.col("a.l_partkey") == F.col("b.l_partkey"))
-            & (F.col("a.l_suppkey") < F.col("b.l_suppkey")),
-        )
-        .select(
-            F.expr("a.l_suppkey * 4294967296 + b.l_suppkey").alias("e")
-        )
+    return cut(_packed_pairs(ps), "_co_supply_half")
+
+
+def _co_supply_adj(li: DataFrame) -> DataFrame:
+    """Checkpointed adjacency rows (id, nbr) of the supplier co-supply
+    graph, hash-partitioned on id and kept so (``cut(by=("id",))``): a
+    row per directed edge, plus one (id, null) row per supplier of
+    ``li``, so an isolated supplier is still a node.  The null rows come
+    from the self pairs of :func:`_packed_pairs` and, for suppliers of
+    rows with a null key (no pair at all), from those rows directly.
+
+    The (part, supplier) table is pinned to the cores' width as
+    :func:`_co_supply_half` pins it, but deduped after that exchange,
+    not before it: one exchange, one job fewer.  (Dedup is ~1.5% of the
+    rows at sf0.1, where a supplier is rarely repeated within a part.)"""
+    n = li.sparkSession.sparkContext.defaultParallelism
+    ps = (
+        li.select("l_partkey", "l_suppkey")
+        .repartition(n, "l_partkey")
         .distinct()
-        .select(
-            F.expr("e DIV 4294967296").alias("src"),
-            F.expr("e % 4294967296").alias("dst"),
-        ),
-        "_co_supply_half",
+    )
+    src, dst, none = F.col("src"), F.col("dst"), F.lit(None).cast("long")
+    rows = _packed_pairs(ps, with_self=True).select(
+        F.inline(
+            F.when(src == dst, F.array(_adj_row(src, none))).otherwise(
+                F.array(_adj_row(src, dst), _adj_row(dst, src))
+            )
+        )
+    )
+    keyless = li.filter(
+        F.col("l_partkey").isNull() | F.col("l_suppkey").isNull()
+    ).select(F.col("l_suppkey").alias("id"), none.alias("nbr"))
+    return cut(
+        rows.unionAll(keyless).repartition(n, "id"),
+        "_co_supply_adj",
+        by=("id",),
+    )
+
+
+def _adj_row(node: "F.Column", nbr: "F.Column") -> "F.Column":
+    return F.struct(node.alias("id"), nbr.alias("nbr"))
+
+
+def _half_adj(half: DataFrame) -> DataFrame:
+    """Checkpointed adjacency rows (id, nbr) of a half edge list, both
+    orientations, kept hash-partitioned on id; a node without an edge
+    has no row."""
+    n = half.sparkSession.sparkContext.defaultParallelism
+    return cut(
+        _directed_half(half)
+        .select(F.col("src").alias("id"), F.col("dst").alias("nbr"))
+        .repartition(n, "id"),
+        "_half_adj",
+        by=("id",),
     )
 
 
@@ -192,33 +249,44 @@ def _out_degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def _pr_level(contrib: DataFrame, prev: DataFrame | None) -> DataFrame:
-    """One synchronous PageRank level — the only place the rank update
-    is written.  ``contrib`` carries directed (src, dst, outdeg) message
-    rows; every src sends ``pr / outdeg`` to dst, where ``pr`` is the
-    uniform prior 1.0 when ``prev`` is None and otherwise ``prev``'s
-    (id, pr) vector, broadcast (O(|V|)) so a level shuffles only
-    partial-aggregated per-dst message sums.  Returns (id, pr) for every
-    node that receives a message, pr = 0.15 + PR_DAMP · Σ messages.
+def _pr_rank(share: "F.Column") -> "F.Column":
+    """The rank update, written once: pr = 0.15 + PR_DAMP · Σ messages
+    over the message values ``share`` of a group (0.15 for a group
+    whose messages are all null: a node with no neighbour).
 
     Invariant: each message is quantized to decimal(30,6) HALF_UP and
     summed exactly (``spark_dsum_rounded``, a primitive-long
     accumulator), so every level is bit-identical to the oracle's
     unrolled-CTE evaluation, whatever the summation order."""
-    sender = (
-        contrib.withColumn("pr", F.lit(1.0))
-        if prev is None
-        else contrib.join(
-            F.broadcast(prev.withColumnRenamed("id", "src")), "src"
+    m = F.coalesce(spark_dsum_rounded(share), F.lit(0.0))
+    return (0.15 + PR_DAMP * m).alias("pr")
+
+
+def _pr_level(adj: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """One synchronous PageRank level over adjacency rows ``adj`` (id,
+    nbr) kept hash-partitioned on id (a null nbr only names a node).
+    Every neighbour sends its ``share`` = pr / degree, read from
+    ``prev``'s (id, share) vector broadcast (O(|V|)); with ``prev`` None
+    the prior pr is 1.0.  The rows never leave the partition of their
+    id, so the per-id sum plans no exchange, and the degree is counted
+    in the same aggregate.  Returns (id, pr, share) for every id of
+    ``adj``; an id with no neighbour takes pr 0.15 and a null share,
+    which no message reads.
+
+    The share is the per-message ``pr / outdeg`` of a message-passing
+    level computed once per sender: the same double division, so the
+    quantized sums, and every level, are unchanged."""
+    deg = F.count("nbr")
+    if prev is None:
+        prev = adj.groupBy("id").agg(
+            F.try_divide(F.lit(1.0), deg).alias("share")
         )
-    )
+    sender = prev.select(F.col("id").alias("nbr"), "share")
     return (
-        sender.groupBy("dst")
-        .agg(spark_dsum_rounded(F.col("pr") / F.col("outdeg")).alias("m"))
-        .select(
-            F.col("dst").alias("id"),
-            (0.15 + PR_DAMP * F.col("m")).alias("pr"),
-        )
+        adj.join(F.broadcast(sender), "nbr", "left")
+        .groupBy("id")
+        .agg(_pr_rank(F.col("share")), deg.alias("deg"))
+        .select("id", "pr", F.try_divide("pr", "deg").alias("share"))
     )
 
 
@@ -235,55 +303,67 @@ def _pr_result(rows: DataFrame, final: DataFrame) -> DataFrame:
 
 def pagerank(li: DataFrame) -> DataFrame:
     """Supplier co-supply PageRank: :data:`PR_ITERS` levels of
-    :func:`_pr_level` over the checkpointed half edge list.
+    :func:`_pr_level` over the one adjacency cut.
 
-    Layout: the half list (:func:`_co_supply_half`) is checkpointed once;
-    both orientations derive from it with a union, and the O(|V|)
-    out-degree table is aggregated small and broadcast back (a
-    src-partitioned window would shuffle and sort the whole edge list
-    just to annotate it).  The graph is undirected, so a node sends iff
-    it receives: inside the loop the rank vector covers only
-    message-receiving nodes, and isolated nodes take 0.15 in one final
-    left join.  Level 1 needs no rank vector (the prior is a literal).
+    Layout: the adjacency rows (:func:`_co_supply_adj`) are checkpointed
+    once, isolated suppliers included, and the cut keeps its hash
+    partitioning on id.  A level joins the rows to the broadcast share
+    vector of the level before and sums per id inside the partition the
+    rows already sit in, so no level shuffles; each level carries its
+    own shares (pr / degree), so no out-degree table and no final node
+    join are left.  Jobs on ``perfbench/corpus`` (``collect()``
+    included): 9 (5 building the cut, 3 share broadcasts, the final
+    read), against 15 for the half edge list with a degree table and a
+    node join.
 
-    Measured at sf0.1 on 4 cores (ROADMAP baseline): 6.6 s, 4.5 s of
-    it before the final action (the eager edge-list checkpoint).  The
-    rejected
-    alternatives (a src-partitioned shuffle-join rank form, a BigDecimal
-    message sum, a dst-partitioned annotated list, the collect_set edge
-    generator) and their A/Bs are in the OPTIMIZATION_r16.md appendix.
+    The id-partitioned rows cost one more shuffle of the directed edges
+    to build and save each level's shuffle and jobs.  Against the
+    half-list form on 4 cores (same process, interleaved, median / min
+    wall): sf0.1 5.29 / 4.44 → 5.38 / 4.36 s over 7 pairs
+    (construction 3.25 → 3.80 s, final action 2.04 → 1.58 s); ×10
+    38.7 / 32.4 → 36.8 / 35.7 s over 5 rounds, so at ×10 the extra
+    shuffle is not paid back on a quiet run.  A ``collect_set``
+    neighbour-array adjacency built 1.4–1.7x slower at both scales.  The rejected alternatives of the half-list form (a
+    src-partitioned shuffle-join rank form, a BigDecimal message sum, a
+    dst-partitioned annotated list) and their A/Bs are in the
+    OPTIMIZATION_r16.md appendix.
     """
-    edges = _directed_half(_co_supply_half(li))
-    contrib = edges.join(F.broadcast(_out_degrees(edges)), "src")
+    adj = _co_supply_adj(li)
     pr = None
     for _ in range(PR_ITERS):
-        pr = _pr_level(contrib, pr)
-    return _pr_result(li, pr)
+        pr = _pr_level(adj, pr)
+    return pr.select(
+        F.col("id").alias("supp_id"), F.round("pr", 6).alias("pagerank")
+    )
 
 
 def pagerank_seed_levels(half: DataFrame) -> tuple:
     """Stored PageRank state for a half edge list, computed in full:
-    (per-level rank vectors, out-degree table), each localCheckpointed —
-    what the incremental queries, the streaming twin and the sparse
-    probe seed their stored state with before patching it.
+    (per-level (id, pr) rank vectors, out-degree table) — what the
+    incremental queries, the streaming twin and the sparse probe seed
+    their stored state with before patching it.  Each level is
+    checkpointed; the degree table is an aggregate of the adjacency cut
+    that plans no exchange.
 
-    Invariant: level k equals level k of :func:`pagerank` on the same
-    graph (same :func:`_pr_level`), and the out-degree table is the one
+    Invariant: level k is level k of :func:`pagerank` on the same graph
+    (same :func:`_pr_level`) without its isolated nodes, which a half
+    edge list does not name, and the out-degree table is the one
     :func:`pagerank_patch_levels` merges new edges into.  Measured
     against seeding through :func:`pagerank_patch_levels` from empty
     state at sf0.1 on 4 cores (base co-supply graph, edge generation
-    included, interleaved, min of 5): 4.71 s / 19 jobs here vs 8.92 s /
+    included, interleaved, min of 5), with the message-passing levels
+    the adjacency levels replaced: 4.71 s / 19 jobs here vs 8.92 s /
     52 jobs through the patch kernel, whose frontier and pruned-read
-    machinery only pays off when most of the graph is already
-    stored."""
-    edges = _directed_half(half)
-    outdeg = cut(_out_degrees(edges), "pagerank_seed_levels.outdeg")
-    contrib = edges.join(F.broadcast(outdeg), "src")
+    machinery only pays off when most of the graph is already stored.
+    On ``perfbench/corpus`` the seed launches 8 jobs: 2 for the
+    adjacency cut and 2 per level."""
+    adj = _half_adj(half)
     levels: list[DataFrame] = []
     for _ in range(PR_ITERS):
         prev = levels[-1] if levels else None
-        levels.append(cut(_pr_level(contrib, prev), "pagerank_seed_levels.level"))
-    return levels, outdeg
+        levels.append(cut(_pr_level(adj, prev), "pagerank_seed_levels.level"))
+    outdeg = _out_degrees(adj.withColumnRenamed("id", "src"))
+    return [lvl.select("id", "pr") for lvl in levels], outdeg
 
 
 #: partition-dir count for PRUNABLE stored state (adjacency segments,
@@ -455,6 +535,26 @@ def _reversed(rows: DataFrame) -> DataFrame:
     return rows.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
 
+def _patch_level(contrib: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """One PageRank level over directed (src, dst, outdeg) message rows:
+    every src sends ``pr / outdeg`` to dst, ``pr`` the prior 1.0 when
+    ``prev`` is None and otherwise ``prev``'s (id, pr) vector,
+    broadcast.  Returns (id, pr) for every node that receives a
+    message, ranked by :func:`_pr_rank` from the same double messages
+    as :func:`_pr_level`'s shares, so a patched value equals the
+    rebuild's."""
+    sender = (
+        contrib.withColumn("pr", F.lit(1.0))
+        if prev is None
+        else contrib.join(
+            F.broadcast(prev.withColumnRenamed("id", "src")), "src"
+        )
+    )
+    return sender.groupBy(F.col("dst").alias("id")).agg(
+        _pr_rank(F.col("pr") / F.col("outdeg"))
+    )
+
+
 def pagerank_patch_levels(
     spark: SparkSession,
     adj_dirs: list,
@@ -526,9 +626,7 @@ def pagerank_patch_levels(
         )  # blast-radius-sized
         contrib = _reversed(out_rows).join(F.broadcast(outdeg), "src")
         patched = cut(
-            _pr_level(
-                contrib, levels[-1] if levels else None
-            ),
+            _patch_level(contrib, levels[-1] if levels else None),
             "pagerank_patch_levels.patched",
         )
         levels.append(

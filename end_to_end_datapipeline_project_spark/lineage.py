@@ -12,6 +12,12 @@ before it switches to a broadcast.  An eager local cut whose stored
 blocks total at most ``spark.sql.autoBroadcastJoinThreshold`` therefore
 carries a broadcast hint, and the static plan is the one AQE would pick.
 
+Under AQE the scan also forgets how the blocks are partitioned: the
+checkpoint reads the partitioning of the adaptive plan's wrapper, which
+is unknown, so an aggregate or join over the cut re-shuffles blocks
+already hashed on its key.  A cut told that key (``by``) rebuilds its
+scan with the partitioning of the final plan that stored the blocks.
+
 A cut can carry aggregates (``observe``) that ride the checkpoint job
 itself as Observation metrics, so a row count or convergence test that
 follows a cut costs no job of its own.  Reading them never hangs: the
@@ -24,7 +30,7 @@ from __future__ import annotations
 import time
 from typing import Sequence
 
-from py4j.protocol import Py4JJavaError
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation
 
 from .session import is_local_master
@@ -56,6 +62,7 @@ def cut(
     *,
     drop: Sequence[str] = (),
     eager: bool = True,
+    by: Sequence[str] = (),
 ):
     """Materialize ``df`` and cut its lineage.
 
@@ -73,34 +80,92 @@ def cut(
     returned as is, with no job.  ``eager=False`` defers storing the
     blocks to the first action on the result; it cannot carry metrics.
     It does not make building the frame free: under AQE, building it
-    runs every map stage below its last exchange, one job each."""
+    runs every map stage below its last exchange, one job each.
+
+    ``by`` names the key the caller will aggregate or join the cut on.
+    When the blocks were stored hashed on exactly those columns, the cut
+    keeps that partitioning (:func:`_keep_partitioning`), so the planner
+    adds no exchange for it; otherwise the cut is as without ``by``.
+    Only an eager cut has stored blocks to describe."""
+    if by and not eager:
+        raise ValueError("a lazy cut has no stored partitioning to keep")
     if observe is None:
         if drop:
             raise ValueError("drop only applies to observed helper columns")
-        return df if is_cut(df) else _checkpoint(df, label, eager)
+        return df if is_cut(df) else _checkpoint(df, label, eager, by)
     if not eager:
         raise ValueError("a lazy cut cannot carry observed metrics")
     o = Observation()
-    ck = _checkpoint(df.observe(o, *observe).drop(*drop), label, eager)
+    ck = _checkpoint(df.observe(o, *observe).drop(*drop), label, eager, by)
     # the fallback aggregate needs the helper columns the cut dropped
     return ck, metrics(o, df if drop else ck, observe)
 
 
-def _checkpoint(df: DataFrame, label: str, eager: bool) -> DataFrame:
+def _checkpoint(
+    df: DataFrame, label: str, eager: bool, by: Sequence[str]
+) -> DataFrame:
     sc = df.sparkSession.sparkContext
     prev = sc.getLocalProperty("spark.job.description")
     sc.setLocalProperty("spark.job.description", f"cut:{label}")
     try:
-        if is_local_master(sc.master) or _checkpoint_dir(sc) is None:
+        local = is_local_master(sc.master) or _checkpoint_dir(sc) is None
+        if local:
             out = df.localCheckpoint(eager=eager)
-            if eager and _fits_broadcast(out):
-                out = out.hint("broadcast")
         else:
             out = df.checkpoint(eager=eager)
+        if by:
+            out = _keep_partitioning(df, out, by)
+        if local and eager and _fits_broadcast(out):
+            out = out.hint("broadcast")
     finally:
         sc.setLocalProperty("spark.job.description", prev)
     setattr(out, _CUT_ATTR, label)
     return out
+
+
+def _keep_partitioning(
+    df: DataFrame, ck: DataFrame, by: Sequence[str]
+) -> DataFrame:
+    """``ck`` (the eager cut of ``df``) with its scan rebuilt to carry
+    the output partitioning of the final adaptive plan that stored its
+    blocks, when that partitioning hashes on exactly the columns ``by``
+    names into as many partitions as were stored.  (A final plan that
+    projects its hash key away reports no partitioning on it.)  In any
+    other case, or on any py4j error (no adaptive plan, a partitioning
+    that is no expression), ``ck`` as is: a cut whose partitioning is
+    not kept is never wrong, only re-shuffled.  Launches no job."""
+    try:
+        scan = ck._jdf.queryExecution().analyzed()
+        final = df._jdf.queryExecution().executedPlan().executedPlan()
+        part = final.outputPartitioning()
+        refs = part.references()
+        cols = refs.toSeq()
+        names = {cols.apply(i).name() for i in range(cols.size())}
+        if (
+            names != set(by)
+            or part.numPartitions() != scan.rdd().getNumPartitions()
+        ):
+            return ck
+        # LogicalRDD's second parameter list: session, stats, constraints
+        extra = scan.otherCopyArgs()
+        kept = scan.copy(
+            scan.output(),
+            scan.rdd(),
+            part,
+            scan.outputOrdering(),
+            scan.isStreaming(),
+            scan.stream(),
+            extra.apply(0),
+            extra.apply(1),
+            extra.apply(2),
+        )
+        spark = ck.sparkSession
+        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, kept
+        )
+    except Py4JError:
+        return ck
+    return type(ck)(jdf, spark)
 
 
 def _fits_broadcast(ck: DataFrame) -> bool:

@@ -21,6 +21,24 @@ def test_pagerank_conserves_mass_and_is_positive(spark):
     assert all(r.pagerank >= 0.15 for r in rows)
 
 
+def test_pagerank_ranks_every_supplier_null_keys_included(spark):
+    """Every supplier of lineitem is a node, as in the oracle's
+    ``DISTINCT l_suppkey``: an isolated supplier, a supplier seen only
+    with a null part key, and the null supplier itself each take 0.15;
+    a null part key links no one."""
+    from end_to_end_datapipeline_project_spark.graph import pagerank
+
+    li = spark.createDataFrame(
+        [(1, 10), (1, 11), (2, 13), (None, 12), (None, 14), (3, None), (3, 15)],
+        "l_partkey long, l_suppkey long",
+    )
+    got = {tuple(r) for r in pagerank(li).collect()}
+    assert got == {
+        (10, 1.0), (11, 1.0), (12, 0.15), (13, 0.15), (14, 0.15),
+        (15, 0.15), (None, 0.15),
+    }
+
+
 def test_train_test_split_is_deterministic_and_partitions(spark):
     q = all_queries()["q_train_test_split"]
     a = {(r.doc_id, r.split) for r in q(spark, SF).collect()}

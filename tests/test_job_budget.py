@@ -30,7 +30,7 @@ HEADLINE_JOBS = {
     "q_radius_join": 5,
     "q_pii_scrub": 1,
     "q_bloom_join": 6,
-    "q_pagerank": 15,
+    "q_pagerank": 9,
 }
 
 #: jobs of one ``lsh_maintenance_step`` ingesting the delta
@@ -43,6 +43,10 @@ LSH_STEP_JOBS = {"ingest": 53, "replay": 2}
 #: and a 30-clique (star contraction leaves no edge, so the loop does
 #: not run)
 CC_JOBS = {"chain": 71, "edgeless": 9, "clique": 13}
+
+#: jobs of ``pagerank_seed_levels`` on the corpus's co-supply half edge
+#: list (built beforehand) plus ``collect()`` of its last level
+SEED_LEVELS_JOBS = 9
 
 #: jobs launched while building (not collecting) the queries whose lazy
 #: cut sits above an exchange, at sf0.001: under AQE, building the frame
@@ -122,6 +126,21 @@ def test_connected_components_jobs_within_budget(spark, graph):
     assert jobs <= CC_JOBS[graph], (
         f"connected_components on {graph} launched {jobs} jobs, "
         f"budget {CC_JOBS[graph]}"
+    )
+
+
+def test_pagerank_seed_levels_jobs_within_budget(spark):
+    from end_to_end_datapipeline_project_spark import graph
+    from end_to_end_datapipeline_project_spark.sources import read_parquet_table
+
+    li = read_parquet_table(spark, CORPUS, "lineitem")
+    half = graph._co_supply_half(li)
+    jobs = jobs_launched(
+        spark, lambda: graph.pagerank_seed_levels(half)[0][-1].collect()
+    )
+    assert jobs <= SEED_LEVELS_JOBS, (
+        f"pagerank_seed_levels launched {jobs} jobs, "
+        f"budget {SEED_LEVELS_JOBS}"
     )
 
 

@@ -1,6 +1,7 @@
 """The lineage cut (``lineage.cut``) and the connected-components loop
 whose convergence test rides it."""
 
+import contextlib
 import random
 
 import pytest
@@ -190,6 +191,12 @@ def test_off_a_local_master_a_shared_fs_gets_a_reliable_cut(
         assert m == {"n": 50, "small": 22}
         assert sorted(r.id for r in ck.collect()) == list(range(50))
         assert any(root.rglob("part-*"))  # the blocks went to the directory
+        # a reliable cut keeps its partitioning as a local one does
+        kept = lineage.cut(_grouped(spark), "test.reliable_by", by=("g",))
+        assert called == ["checkpoint"] * 2
+        assert _partitioning(kept).startswith("coalescedhashpartitioning(")
+        assert not _exchanges(kept.groupBy("g").count())
+        assert sorted(kept.collect()) == sorted(_grouped(spark).collect())
     finally:
         real_fs.cancelDeleteOnExit(real_fs.makeQualified(
             sc._jvm.org.apache.hadoop.fs.Path(str(tmp_path / sc.applicationId))
@@ -465,3 +472,109 @@ def test_no_hint_when_the_size_is_unknown_or_broadcast_is_off(spark):
         spark.conf.set(key, was)
     assert not _hinted(off)
     assert sorted(lazy.collect()) == sorted(off.collect())
+
+
+# --- the partitioning a cut keeps ----------------------------------------
+
+
+def _grouped(spark):
+    """50 rows grouped by g = id % 7 through an exchange of its own."""
+    return spark.range(50).groupBy((F.col("id") % 7).alias("g")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+
+
+def _partitioning(df) -> str:
+    """The output partitioning of a cut's scan, under its hint if any."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "ResolvedHint":
+        plan = plan.child()
+    return plan.outputPartitioning().toString()
+
+
+def _exchanges(df) -> bool:
+    return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
+
+
+@contextlib.contextmanager
+def _conf(spark, **kv):
+    """Session confs set for a block and restored after it."""
+    was = {k: spark.conf.get(k) for k in kv}
+    for k, v in kv.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in was.items():
+            spark.conf.set(k, v)
+
+
+_COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
+_BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@pytest.mark.parametrize(
+    "coalesce, kind",
+    [("true", "coalescedhashpartitioning"), ("false", "hashpartitioning")],
+)
+def test_by_cut_aggregates_on_its_key_with_no_exchange(spark, coalesce, kind):
+    """A cut of a groupBy(g) told ``by=("g",)`` keeps the partitioning
+    the final adaptive plan stored its blocks with (coalesced or not),
+    so a groupBy(g) over it plans no exchange; over a plain cut it does.
+    The rows are the same."""
+    with _conf(spark, **{_COALESCE: coalesce}):
+        kept = lineage.cut(_grouped(spark), "test.by", by=("g",))
+        plain = lineage.cut(_grouped(spark), "test.plain_by")
+    assert _partitioning(kept).startswith(f"{kind}(")
+    assert _partitioning(plain) == "UnknownPartitioning(0)"
+    over_kept = kept.groupBy("g").agg(F.sum("n").alias("s"))
+    over_plain = plain.groupBy("g").agg(F.sum("n").alias("s"))
+    assert not _exchanges(over_kept)
+    assert _exchanges(over_plain)
+    assert sorted(over_kept.collect()) == sorted(over_plain.collect())
+    assert sum(r.s for r in over_kept.collect()) == 50
+
+
+def test_by_naming_a_column_the_blocks_are_not_hashed_on_keeps_nothing(spark):
+    """``by`` naming a column the blocks are not hashed on, a superset
+    of the hash key, or the hash key after it was projected away keeps
+    nothing: the cut plans an exchange as a plain cut does."""
+    for frame, by, key in (
+        (_grouped(spark), ("n",), "n"),
+        (_grouped(spark), ("g", "n"), "g"),
+        (_grouped(spark).select("n"), ("g",), "n"),
+    ):
+        ck = lineage.cut(frame, "test.by_unkept", by=by)
+        assert _partitioning(ck) == "UnknownPartitioning(0)", by
+        assert _exchanges(ck.groupBy(key).count()), by
+
+
+def test_kept_cut_joins_a_frame_hashed_into_other_partitions(spark):
+    """A kept cut (8 hash partitions) sort-merge joined to a kept cut
+    hashed on the same key into 3 partitions, and to the same frame
+    uncut, returns the rows of the join of the uncut frames."""
+    def other():
+        return spark.range(30).select(
+            (F.col("id") % 5).alias("g"), F.col("id").alias("v")
+        ).groupBy("g").agg(F.sum("v").alias("v"))
+
+    with _conf(spark, **{_COALESCE: "false", _BROADCAST: "-1"}):
+        kept = lineage.cut(_grouped(spark), "test.by_join", by=("g",))
+        with _conf(spark, **{"spark.sql.shuffle.partitions": "3"}):
+            kept3 = lineage.cut(other(), "test.by_join3", by=("g",))
+            plain3 = other()
+            assert _partitioning(kept3).endswith(", 3)")
+        assert _partitioning(kept).endswith(", 8)")
+        want = sorted(_grouped(spark).join(other(), "g").collect())
+        for side in (kept3, plain3):
+            joined = kept.join(side, "g")
+            assert "SortMergeJoin" in (
+                joined._jdf.queryExecution().executedPlan().toString()
+            )
+            assert sorted(joined.collect()) == want
+    assert len(want) == 5
+
+
+def test_by_refuses_a_lazy_cut(spark):
+    with pytest.raises(ValueError):
+        lineage.cut(_grouped(spark), "test.by_lazy", eager=False, by=("g",))

@@ -163,8 +163,9 @@ AUDIT: dict[str, list[tuple[str, str]]] = {
         ("dynamicpruning", "runtime dim values injected into the fact scan's partition filters"),
     ],
     "q_pagerank": [
-        ("partial_sum(cast(", "per-dst message sums combine map-side before each iteration's shuffle (O(parts x V) rows move, not O(E))"),
-        ("BroadcastHashJoin", "rank vector + outdeg broadcast; the checkpointed edge list never reshuffles"),
+        ("partial_sum(cast(", "per-supplier message sums aggregate inside the partition the adjacency row already lives in (the cut keeps its hash partitioning on id)"),
+        ("!Exchange hashpartitioning", "no iteration shuffles: the adjacency cut is read where it lives"),
+        ("BroadcastHashJoin", "the O(|V|) share vector broadcasts; the checkpointed adjacency never reshuffles"),
     ],
     "q_label_propagation": [
         ("partial_max_by", "modal-label winner partial-aggregates map-side — no per-node sort window"),
