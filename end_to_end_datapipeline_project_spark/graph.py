@@ -659,7 +659,7 @@ def incremental_pagerank(li: DataFrame, delta_cond) -> DataFrame:
     committed through :class:`state.StateStore` (an empty base writes a
     readable empty segment), the (l_partkey, l_suppkey) roster, and
     the :func:`pagerank_seed_levels` degree table and rank vectors (each
-    localCheckpointed).  The ingest is delta-sized end to end: new
+    a ``lineage.cut``).  The ingest is delta-sized end to end: new
     edges come from delta pairs × the roster pruned to delta parts
     (:func:`co_supply_new_edges`), then :func:`pagerank_patch_levels`.
     On this deliberately dense graph (~60 co-suppliers per node) a
@@ -836,6 +836,17 @@ def co_order_new_edges(
     )
 
 
+def co_order_weights(li: DataFrame) -> tuple:
+    """(RAW pair-weight table, ≥2-floor half edge list) of the orders in
+    ``li``, each a cut."""
+    w = cut(_co_order_pair_counts(li), "co_order_weights.w")
+    half = cut(
+        w.filter(F.col("n_co") >= 2).select("src", "dst"),
+        "co_order_weights.half",
+    )
+    return w, half
+
+
 def co_order_state(base_li: DataFrame, root: str) -> tuple:
     """Stored co-order graph state for the orders in ``base_li``,
     committed through a :class:`state.StateStore` at ``root``: the RAW
@@ -844,13 +855,7 @@ def co_order_state(base_li: DataFrame, root: str) -> tuple:
     src-bucketed segment (:func:`adj_rows`); an empty base writes
     readable empty segments.  Returns (store, checkpointed half edge
     list)."""
-    w0 = cut(_co_order_pair_counts(base_li), "co_order_state.w0")
-    base_half = (
-        cut(
-            w0.filter(F.col("n_co") >= 2).select("src", "dst"),
-            "co_order_state.base_half",
-        )
-    )
+    w0, base_half = co_order_weights(base_li)
     store = StateStore(root)
     store.commit(
         0,
@@ -1042,7 +1047,7 @@ def _lpa_result(rows: DataFrame, final: DataFrame) -> DataFrame:
 
 def lpa_seed_levels(half: DataFrame) -> tuple:
     """Stored LPA state for a checkpointed half edge list, computed in
-    full: (level-1, level-2) label vectors, each localCheckpointed — the
+    full: (level-1, level-2) label vectors, each a ``lineage.cut`` — the
     seed of the incremental query, the streaming twin and the sparse
     probe.  Invariant: equal to :func:`q_label_propagation`'s levels on
     the same graph (same :func:`_lpa_min_label` / :func:`_lpa_vote`).

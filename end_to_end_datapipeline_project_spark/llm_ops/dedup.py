@@ -303,6 +303,28 @@ def minhash_signatures(arrs: DataFrame) -> DataFrame:
 MINHASH_BUCKET_CAP = 1024
 
 
+#: DuckDB CTEs over ``__sh`` (doc_id, shingle): ``__mh`` holds every
+#: doc's :data:`N_SEEDS` min-hashes, the 32-bit hex chunks of md5 per
+#: 4 seeds (as :func:`minhash_signatures`), and ``__mhc`` keeps each
+#: (seed, minhash) bucket's :data:`MINHASH_BUCKET_CAP` lowest doc_ids.
+MINHASH_CTE_SQL = f"""__seeds AS (SELECT unnest(range(0, {N_SEEDS})) AS seed),
+  __mh AS (
+    SELECT doc_id, seed,
+           min(substr(md5(CAST(seed // 4 AS VARCHAR) || ':' || shingle),
+                      CAST(1 + 8 * (seed % 4) AS INTEGER), 8)) AS minhash
+    FROM __sh CROSS JOIN __seeds
+    GROUP BY doc_id, seed
+  )"""
+MINHASH_CAPPED_CTE_SQL = f"""{MINHASH_CTE_SQL},
+  __mhc AS (
+    SELECT doc_id, seed, minhash FROM (
+      SELECT *, row_number() OVER (
+        PARTITION BY seed, minhash ORDER BY doc_id) AS bn
+      FROM __mh)
+    WHERE bn <= {MINHASH_BUCKET_CAP}
+  )"""
+
+
 #: buckets larger than this get chunked in the SELF-pair kernel (the
 #: heavy-hitter discipline of q_salted_join applied to LSH): a single
 #: (seed, minhash) key's pair fan-out is an intra-key cartesian AQE
@@ -720,21 +742,7 @@ def collapse_sql(src: str = "documents") -> str:
     f"""
   WITH {collapse_sql()},
   {shingles_sql("__repdocs")},
-  __seeds AS (SELECT unnest(range(0, {N_SEEDS})) AS seed),
-  __mh AS (
-    SELECT doc_id, seed,
-           min(substr(md5(CAST(seed // 4 AS VARCHAR) || ':' || shingle),
-                      CAST(1 + 8 * (seed % 4) AS INTEGER), 8)) AS minhash
-    FROM __sh CROSS JOIN __seeds
-    GROUP BY doc_id, seed
-  ),
-  __mhc AS (
-    SELECT doc_id, seed, minhash FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY seed, minhash ORDER BY doc_id) AS bn
-      FROM __mh)
-    WHERE bn <= {MINHASH_BUCKET_CAP}
-  ),
+  {MINHASH_CAPPED_CTE_SQL},
   __cand AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM __mhc a JOIN __mhc b
@@ -1089,21 +1097,7 @@ MINHASH_CLUSTER_JACCARD = 0.5
 MINHASH_CLUSTERS_SQL = f"""
   WITH RECURSIVE {collapse_sql()},
   {shingles_sql("__repdocs")},
-  __seeds AS (SELECT unnest(range(0, {N_SEEDS})) AS seed),
-  __mh AS (
-    SELECT doc_id, seed,
-           min(substr(md5(CAST(seed // 4 AS VARCHAR) || ':' || shingle),
-                      CAST(1 + 8 * (seed % 4) AS INTEGER), 8)) AS minhash
-    FROM __sh CROSS JOIN __seeds
-    GROUP BY doc_id, seed
-  ),
-  __mhc AS (
-    SELECT doc_id, seed, minhash FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY seed, minhash ORDER BY doc_id) AS bn
-      FROM __mh)
-    WHERE bn <= {MINHASH_BUCKET_CAP}
-  ),
+  {MINHASH_CAPPED_CTE_SQL},
   __cand AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM __mhc a JOIN __mhc b
@@ -1597,21 +1591,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: semantics, so identical oracle
 INCREMENTAL_MINHASH_SQL = f"""
   WITH {SHINGLES_SQL},
-  __seeds AS (SELECT unnest(range(0, {N_SEEDS})) AS seed),
-  __mh AS (
-    SELECT doc_id, seed,
-           min(substr(md5(CAST(seed // 4 AS VARCHAR) || ':' || shingle),
-                      CAST(1 + 8 * (seed % 4) AS INTEGER), 8)) AS minhash
-    FROM __sh CROSS JOIN __seeds
-    GROUP BY doc_id, seed
-  ),
-  __mhc AS (
-    SELECT doc_id, seed, minhash FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY seed, minhash ORDER BY doc_id) AS bn
-      FROM __mh)
-    WHERE bn <= {MINHASH_BUCKET_CAP}
-  ),
+  {MINHASH_CAPPED_CTE_SQL},
   __cand AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM __mhc a JOIN __mhc b
@@ -1705,19 +1685,8 @@ def lsh_index_upsert(base_idx: DataFrame, delta_sig: DataFrame) -> DataFrame:
     "q_lsh_index_upsert",
     f"""
   WITH {SHINGLES_SQL},
-  __seeds AS (SELECT unnest(range(0, {N_SEEDS})) AS seed),
-  __mh AS (
-    SELECT doc_id, seed,
-           min(substr(md5(CAST(seed // 4 AS VARCHAR) || ':' || shingle),
-                      CAST(1 + 8 * (seed % 4) AS INTEGER), 8)) AS minhash
-    FROM __sh CROSS JOIN __seeds
-    GROUP BY doc_id, seed
-  )
-  SELECT doc_id, seed, minhash FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY seed, minhash ORDER BY doc_id) AS bn
-    FROM __mh)
-  WHERE bn <= {MINHASH_BUCKET_CAP}
+  {MINHASH_CAPPED_CTE_SQL}
+  SELECT doc_id, seed, minhash FROM __mhc
 """,
     doc="LSH index maintenance: the Spark side merges the delta's "
     "signatures INTO the stored pre-ingest index (base-only capped "
@@ -2290,8 +2259,7 @@ def q_prefix_filter_join_observed(spark: SparkSession, sf_dir: str, obs):
     scored pairs: one run yields both the capped output and the
     intrinsic-work count (``obs.get["work_rows"]``), so the scale
     probe's work column no longer re-executes the whole scored plan —
-    including its three localCheckpoint materializations — a second
-    time (ADVICE r8)."""
+    including its three lineage cuts — a second time (ADVICE r8)."""
     scored = _prefix_filter_scored(spark, sf_dir).observe(
         obs, F.count(F.lit(1)).alias("work_rows")
     )
@@ -2597,21 +2565,7 @@ _MH_EVAL_THRESHOLDS = (0.02, 0.05, 0.1)
   __sizes AS (
     SELECT doc_id, count(*) AS n_shingles FROM __sh GROUP BY doc_id
   ),
-  __seeds AS (SELECT unnest(range(0, {N_SEEDS})) AS seed),
-  __mh AS (
-    SELECT doc_id, seed,
-           min(substr(md5(CAST(seed // 4 AS VARCHAR) || ':' || shingle),
-                      CAST(1 + 8 * (seed % 4) AS INTEGER), 8)) AS minhash
-    FROM __sh CROSS JOIN __seeds
-    GROUP BY doc_id, seed
-  ),
-  __mhc AS (
-    SELECT doc_id, seed, minhash FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY seed, minhash ORDER BY doc_id) AS bn
-      FROM __mh)
-    WHERE bn <= {MINHASH_BUCKET_CAP}
-  ),
+  {MINHASH_CAPPED_CTE_SQL},
   __cand AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM __mhc a JOIN __mhc b

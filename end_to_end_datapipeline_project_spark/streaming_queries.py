@@ -16,13 +16,17 @@ semantics with lag + cumulative-sum.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import graph
 from .lineage import cut
 from .registry import register
 from .schemas import TESTDATA_SCHEMAS
 from .sources import read_parquet_table, stage_dir
+from .state import maintain
 from .streaming import (
     run_stream_to_memory,
     stateful_user_stats,
@@ -68,6 +72,21 @@ def _stage_table_dir(spark: SparkSession, sf_dir: str, leaf: str,
             pass  # concurrent process won the exists→symlink race; the
             # content-keyed stage guarantees its target is identical
     return stage, schema
+
+
+def _delta_stream(
+    spark: SparkSession, sf_dir: str, table: str, key: str, *cols: str
+) -> DataFrame:
+    """File-source stream of ``table``'s delta rows — the ``key % 10 =
+    7`` slice the incremental queries ingest — projected to ``cols``
+    (all columns when none are named)."""
+    stage, schema = _stage_table_dir(spark, sf_dir, table, table)
+    stream = (
+        spark.readStream.schema(schema)
+        .parquet(stage)
+        .filter(F.col(key) % 10 == 7)
+    )
+    return stream.select(*cols) if cols else stream
 
 
 def _stage_events_dir(spark: SparkSession, sf_dir: str, leaf: str):
@@ -313,6 +332,24 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def upsert_step(spark: SparkSession, store, batch_df: DataFrame) -> tuple:
+    """One micro-batch of q_stream_upsert: the batch merged into the
+    stored table by a keyed per-user row_number (latest (ts, event_id)
+    wins), so a redelivered row changes nothing."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy(
+        F.desc("ts"), F.desc("event_id")
+    )
+    merged = store.read(spark, "latest").unionByName(batch_df)
+    latest = (
+        merged.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+    return {"latest": latest}, {}
+
+
 @register(
     "q_stream_upsert",
     """
@@ -323,71 +360,25 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
   ) WHERE rn = 1
 """,
-    doc="Streaming foreachBatch upsert: every micro-batch is reduced to "
-    "its per-user latest row (deterministic (ts, event_id) tiebreak), "
-    "merged into a keyed parquet table, and re-written — the "
+    doc="Streaming foreachBatch upsert: every micro-batch is merged "
+    "into a keyed per-user table (latest row by a deterministic "
+    "(ts, event_id) tiebreak) that each batch replaces — the "
     "CDC-into-serving-table topology. Idempotent under batch replay "
     "(the merge is a keyed row_number, not an append), so exactly-once "
     "end to end with at-least-once delivery. The final table equals "
     "batch SQL's per-user argmax, which is the oracle.",
 )
 def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from pyspark.sql import Window
-
     stream = _events_stream(spark, sf_dir).select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="spark_graft_upsert_")
-    target = f"{root}/state"
-
-    def latest_per_user(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("user_id").orderBy(
-            F.desc("ts"), F.desc("event_id")
-        )
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        merged = latest_per_user(batch_df)
-        if os.path.exists(target):
-            # the target holds earlier merges, which have batch_df's schema
-            cur = batch_df.sparkSession.read.schema(batch_df.schema).parquet(
-                target
-            )
-            merged = latest_per_user(cur.unionByName(merged))
-        # pin the merge result before overwriting its own input
-        merged = cut(merged, "q_stream_upsert.merged")
-        merged.write.mode("overwrite").parquet(target)
-
-    # try/finally (ADVICE r12): a stream or upsert failure must not
-    # leak the temp state dir — repeated failing runs would accumulate
-    # per-invocation parquet copies + checkpoints in /tmp.
-    import shutil
-
-    try:
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # materialize the final state, then remove the per-invocation
-        # temp table + checkpoint: without the cleanup every invocation
-        # (bench loops, repeated gate runs) leaks a full parquet copy of
-        # the per-user table into /tmp.  eager checkpoint: the read must
-        # complete before its source dir is deleted.
-        return cut(
-            spark.read.schema(stream.schema).parquet(target), "q_stream_upsert"
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return maintain(
+        stream,
+        "q_stream_upsert",
+        lambda: ({"latest": spark.createDataFrame([], stream.schema)}, {}),
+        upsert_step,
+        lambda ss, store: store.read(ss, "latest"),
+    )
 
 
 @register(
@@ -791,12 +782,8 @@ def incremental_minhash_stream(
 )
 def q_stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents")
-    stage, schema = _stage_table_dir(spark, sf_dir, "documents", "documents")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 10 == 7)
+    stream = _delta_stream(
+        spark, sf_dir, "documents", "doc_id", "doc_id", "text"
     )
     out = incremental_minhash_stream(stream, docs)
     return run_stream_to_memory(
@@ -835,14 +822,7 @@ def q_stream_incremental_embedding_neardup(
     from .llm_ops.similarity import vectors
 
     vecs = vectors(spark, sf_dir)
-    stage, schema = _stage_table_dir(
-        spark, sf_dir, "embeddings", "embeddings"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .filter(F.col("vec_id") % 10 == 7)
-    )
+    stream = _delta_stream(spark, sf_dir, "embeddings", "vec_id")
     out = incremental_embedding_stream(stream, vecs)
     return run_stream_to_memory(
         spark,
@@ -852,82 +832,64 @@ def q_stream_incremental_embedding_neardup(
     )
 
 
+def tfidf_seed(spark: SparkSession, tf_base: DataFrame) -> tuple:
+    """Commit 0 of the TF-IDF twin: empty ``tf`` and ``ids`` append
+    tables, so the publish reads state even when no batch fires."""
+    return {}, {
+        "tf": spark.createDataFrame([], tf_base.schema),
+        "ids": spark.createDataFrame([], tf_base.select("doc_id").schema),
+    }
+
+
+def tfidf_step(spark: SparkSession, store, batch_df: DataFrame) -> tuple:
+    """One micro-batch of TF-IDF upkeep: tokenize ONLY the batch and
+    append its per-doc tf rows and its doc ids (which carry zero-token
+    docs' contribution to N) as segments."""
+    from .llm_ops.text import tf_rows
+
+    return {}, {"tf": tf_rows(batch_df), "ids": batch_df.select("doc_id")}
+
+
+def tfidf_publish(
+    base: DataFrame, tf_base: DataFrame, spark: SparkSession, store
+) -> DataFrame:
+    """The whole corpus re-scored under the moved idf
+    (:func:`text.merge_and_rescore_tfidf`, the batch kernel).  A doc's
+    tf rows are a pure function of its text, so deduplicating on read
+    counts a doc delivered in two batches once."""
+    from .llm_ops.text import merge_and_rescore_tfidf
+
+    tf_delta = store.read(spark, "tf").dropDuplicates(["doc_id", "term"])
+    n_delta = (
+        store.read(spark, "ids")
+        .dropDuplicates(["doc_id"])
+        .agg(F.count(F.lit(1)).alias("n_d"))
+    )
+    return merge_and_rescore_tfidf(base, tf_base, tf_delta, n_delta)
+
+
 def incremental_tfidf_stream(
     spark: SparkSession, delta_stream: DataFrame, base: DataFrame
 ) -> DataFrame:
     """The streaming TF-IDF ingest pipeline: ``delta_stream`` is a
     streaming (doc_id, text) DataFrame of arriving documents, ``base``
-    the static pre-ingest corpus.  foreachBatch tokenizes ONLY each
-    micro-batch and upserts its immutable per-doc tf rows (plus the
-    delta doc-id roster, which carries zero-token docs' contribution to
-    N) into keyed parquet state — replay-idempotent like
-    q_stream_upsert's CDC merge, since a doc's tf rows are a pure
-    function of its text.  After the stream drains, one additive stat
-    merge + broadcast re-score (merge_and_rescore_tfidf, the exact
-    batch kernel) prices the WHOLE corpus under the moved idf.  At
-    100 TB the state tables are doc-partitioned appends (a replayed
-    batch overwrites only its own partition — the keyed-overwrite here
-    is the single-node stand-in) and the re-score is the read-side
-    view, so per-ingest work is the delta tokenize + an O(vocab)
-    merge, never a corpus re-tokenize."""
-    import os
-    import shutil
-    import tempfile
-
-    from .llm_ops.text import merge_and_rescore_tfidf, tf_rows
+    the static pre-ingest corpus.  :func:`state.maintain` appends each
+    micro-batch's tf rows and doc ids (:func:`tfidf_step`); after the
+    stream drains, one additive stat merge + broadcast re-score
+    (:func:`tfidf_publish`) prices the WHOLE corpus under the moved
+    idf.  Per-ingest work is the delta tokenize and an O(delta)
+    segment, never a corpus re-tokenize or a rewrite of earlier
+    batches."""
+    from .llm_ops.text import tf_rows
 
     tf_base = cut(tf_rows(base), "incremental_tfidf_stream.tf_base")
-    root = tempfile.mkdtemp(prefix="spark_graft_stream_tfidf_")
-    tf_target = f"{root}/tf_delta"
-    id_target = f"{root}/delta_ids"
-
-    # the state tables' schemas: the tf rows' and the doc-id roster's
-    tf_schema = tf_base.schema
-    id_schema = delta_stream.select("doc_id").schema
-
-    def _upsert(path: str, new: DataFrame, keys: list[str]) -> None:
-        if os.path.exists(path):
-            cur = new.sparkSession.read.schema(new.schema).parquet(path)
-            new = cur.unionByName(new).dropDuplicates(keys)
-        # pin the merge result before overwriting its own input
-        pinned = cut(new, "incremental_tfidf_stream.upsert")
-        pinned.write.mode("overwrite").parquet(path)
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        _upsert(tf_target, tf_rows(batch_df), ["doc_id", "term"])
-        _upsert(id_target, batch_df.select("doc_id"), ["doc_id"])
-
-    # try/finally (ADVICE r12): an exception in the stream, the upsert,
-    # or the final re-score must not leak the temp state dir
-    try:
-        q = (
-            delta_stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        if os.path.exists(tf_target):
-            tf_delta = spark.read.schema(tf_schema).parquet(tf_target)
-            n_delta = (
-                spark.read.schema(id_schema)
-                .parquet(id_target)
-                .agg(F.count(F.lit(1)).alias("n_d"))
-            )
-        else:  # empty delta: no micro-batch ever fired
-            tf_delta = spark.createDataFrame([], tf_schema)
-            n_delta = spark.range(1).select(
-                F.lit(0).cast("long").alias("n_d")
-            )
-        # eager checkpoint: the merge must materialize before its
-        # source dirs are deleted in the finally block
-        return cut(
-            merge_and_rescore_tfidf(base, tf_base, tf_delta, n_delta),
-            "incremental_tfidf_stream",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return maintain(
+        delta_stream,
+        "incremental_tfidf_stream",
+        partial(tfidf_seed, spark, tf_base),
+        tfidf_step,
+        partial(tfidf_publish, base, tf_base),
+    )
 
 
 def _tfidf_sql() -> str:
@@ -941,9 +903,9 @@ def _tfidf_sql() -> str:
     _tfidf_sql(),
     doc="Streaming TF-IDF ingest gate: delta documents (doc_id % 10 = "
     "7) arrive as a file-source stream; each micro-batch tokenizes "
-    "only itself and upserts immutable per-doc tf rows + the delta "
-    "doc roster into keyed parquet state (foreachBatch, availableNow, "
-    "replay-idempotent), then one additive df/N merge + broadcast "
+    "only itself and appends its immutable per-doc tf rows + doc ids "
+    "as StateStore segments (state.maintain, deduplicated on read), "
+    "then one additive df/N merge + broadcast "
     "re-score — the exact batch q_incremental_tfidf kernel — prices "
     "the whole corpus under the moved idf. ORACLE is the full TF-IDF "
     "rebuild, so the gate proves streamed maintenance ≡ rebuild; "
@@ -955,12 +917,8 @@ def _tfidf_sql() -> str:
 def q_stream_incremental_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents")
     base = docs.filter(~(F.col("doc_id") % 10 == 7))
-    stage, schema = _stage_table_dir(spark, sf_dir, "documents", "documents")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 10 == 7)
+    stream = _delta_stream(
+        spark, sf_dir, "documents", "doc_id", "doc_id", "text"
     )
     return incremental_tfidf_stream(spark, stream, base)
 
@@ -1017,132 +975,92 @@ def q_stream_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- streaming twins of the graph incremental family (VERDICT r12 #5) ------
 
 
+#: the PageRank twin's bucketed append tables
+PAGERANK_LAYOUT = {"adj": ["__bkt"], "roster": ["__bkt"]}
+
+
+def _pagerank_tables(outdeg, levels, half, ps) -> tuple:
+    return (
+        {"outdeg": outdeg, **{f"level_{k}": v for k, v in enumerate(levels)}},
+        {
+            "adj": graph.adj_rows(half),
+            "roster": graph.bucketed(ps, "l_partkey"),
+        },
+    )
+
+
+def pagerank_seed(base_li: DataFrame) -> tuple:
+    """Commit 0 of the PageRank twin: the base graph's degree table and
+    rank levels (:func:`graph.pagerank_seed_levels`, the batch query's
+    seed), its adjacency and its (part, supplier) roster."""
+    base_half = graph._co_supply_half(base_li)
+    levels, outdeg = graph.pagerank_seed_levels(base_half)
+    base_ps = base_li.select("l_partkey", "l_suppkey").distinct()
+    return _pagerank_tables(outdeg, levels, base_half, base_ps)
+
+
+def pagerank_step(spark: SparkSession, store, batch_df: DataFrame) -> tuple:
+    """One micro-batch of PageRank upkeep: the batch's NEW co-supply
+    edges from its (part, supplier) pairs against the stored roster
+    PRUNED to the batch's parts (:func:`graph.co_supply_new_edges` —
+    never a full-graph rescan), then :func:`graph.pagerank_patch_levels`,
+    the exact batch patch kernel, which re-ranks only the blast radius
+    through pruned scans of the bucketed adjacency.  Adjacency and
+    roster gain one O(delta) segment; degrees and rank levels are O(V)
+    replacements."""
+    bps = cut(
+        batch_df.select("l_partkey", "l_suppkey").distinct(),
+        "incremental_pagerank_stream.bps",
+    )
+    roster_sc = graph.read_pruned(
+        spark,
+        store.dirs("roster"),
+        bps.select("l_partkey").distinct(),
+        "l_partkey long, l_suppkey long",
+    )
+    adj_dirs = store.dirs("adj")
+    new_ps, new_half = graph.co_supply_new_edges(
+        spark, adj_dirs, roster_sc, bps
+    )
+    levels = [store.read(spark, f"level_{k}") for k in range(graph.PR_ITERS)]
+    patched, outdeg = graph.pagerank_patch_levels(
+        spark, adj_dirs, store.read(spark, "outdeg"), levels, new_half
+    )
+    return _pagerank_tables(outdeg, patched, new_half, new_ps)
+
+
+def pagerank_publish(
+    base_li: DataFrame, spark: SparkSession, store
+) -> DataFrame:
+    roster = store.read(spark, "roster")
+    return graph._pr_result(
+        base_li.select("l_suppkey").unionByName(roster.select("l_suppkey")),
+        store.read(spark, f"level_{graph.PR_ITERS - 1}"),
+    )
+
+
 def incremental_pagerank_stream(
     spark: SparkSession, delta_stream: DataFrame, base_li: DataFrame
 ) -> DataFrame:
     """Streaming incremental-PageRank maintenance: delta lineitem rows
-    arrive as micro-batches; foreachBatch derives the batch's NEW
-    co-supply edges from its (part, supplier) pairs against the stored
-    roster PRUNED to the batch's parts (graph.co_supply_new_edges —
-    never a full-graph rescan), and applies
-    :func:`graph.pagerank_patch_levels` — the exact batch patch kernel,
-    which expands and gathers through :func:`graph.read_pruned` scans
-    of the bucketed stored adjacency and maintains the degree table
-    incrementally.  State is committed ATOMICALLY per batch through
-    :class:`state.StateStore`: the adjacency and the pair roster are
-    append-tables gaining one O(delta) bucketed segment per batch, the
-    degree table and the per-level rank vectors are O(V) replacements,
-    and one manifest rename publishes them together — a crash between
-    writes leaves the previous consistent snapshot, and the watermark
-    makes a post-flip replay a no-op.  Seeded from the base corpus with
+    arrive as micro-batches and :func:`state.maintain` applies
+    :func:`pagerank_step` to each.  Seeded with
     :func:`graph.pagerank_seed_levels`, the seed the batch query uses,
     so every level vector along the way is bit-identical to a full
     rebuild on the graph seen so far."""
-    import shutil
-    import tempfile
-
-    from .graph import (
-        PR_ITERS,
-        _co_supply_half,
-        _pr_result,
-        adj_rows,
-        bucketed,
-        co_supply_new_edges,
-        pagerank_patch_levels,
-        pagerank_seed_levels,
-        read_pruned,
+    return maintain(
+        delta_stream,
+        "incremental_pagerank_stream",
+        partial(pagerank_seed, base_li),
+        pagerank_step,
+        partial(pagerank_publish, base_li),
+        PAGERANK_LAYOUT,
     )
-    from .state import StateStore
-
-    root = tempfile.mkdtemp(prefix="spark_graft_stream_pr_")
-    try:
-        store = StateStore(f"{root}/state")
-        base_half = _co_supply_half(base_li)
-        lvls, outdeg0 = pagerank_seed_levels(base_half)
-        base_ps = base_li.select("l_partkey", "l_suppkey").distinct()
-        store.commit(
-            0,
-            replace={
-                "outdeg": outdeg0,
-                **{f"level_{k}": lvl for k, lvl in enumerate(lvls)},
-            },
-            append={
-                "adj": adj_rows(base_half),
-                "roster": bucketed(base_ps, "l_partkey"),
-            },
-            partition_by={"adj": ["__bkt"], "roster": ["__bkt"]},
-        )
-
-        def ingest(batch_df: DataFrame, batch_id: int) -> None:
-            bid = batch_id + 1  # seed owns commit 0
-            if store.last_batch() >= bid:
-                return  # fully-applied replay: the manifest IS the marker
-            ss = batch_df.sparkSession
-            bps = cut(
-                batch_df.select("l_partkey", "l_suppkey")
-                .distinct(),
-                "incremental_pagerank_stream.bps",
-            )
-            roster_sc = read_pruned(
-                ss,
-                store.dirs("roster"),
-                bps.select("l_partkey").distinct(),
-                "l_partkey long, l_suppkey long",
-            )
-            adj_dirs = store.dirs("adj")
-            new_ps, new_half = co_supply_new_edges(
-                ss, adj_dirs, roster_sc, bps
-            )
-            levels = [store.read(ss, f"level_{k}") for k in range(PR_ITERS)]
-            patched, outdeg2 = pagerank_patch_levels(
-                ss, adj_dirs, store.read(ss, "outdeg"), levels, new_half
-            )
-            store.commit(
-                bid,
-                replace={
-                    "outdeg": outdeg2,
-                    **{f"level_{k}": lvl for k, lvl in enumerate(patched)},
-                },
-                append={
-                    "adj": adj_rows(new_half),
-                    "roster": bucketed(new_ps, "l_partkey"),
-                },
-                partition_by={"adj": ["__bkt"], "roster": ["__bkt"]},
-            )
-
-        q = (
-            delta_stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        final = store.read(spark, f"level_{PR_ITERS - 1}")
-        roster = store.read(spark, "roster")
-        # eager checkpoint: materialize before the finally-rmtree
-        return cut(
-            _pr_result(
-                base_li.select("l_suppkey").unionByName(
-                    roster.select("l_suppkey")
-                ),
-                final,
-            ),
-            "incremental_pagerank_stream",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _pagerank_sql() -> str:
-    from .graph import PAGERANK_SQL
-
-    return PAGERANK_SQL
 
 
 @register(
     "q_stream_incremental_pagerank",
-    _pagerank_sql(),
+    graph.PAGERANK_SQL,
     doc="Streaming PageRank ingest gate: delta lineitem rows "
     "(l_orderkey % 10 = 7) arrive as a file-source stream; each "
     "micro-batch derives its NEW co-supply edges from the pair roster "
@@ -1165,177 +1083,123 @@ def q_stream_incremental_pagerank(
 ) -> DataFrame:
     li = read_parquet_table(spark, sf_dir, "lineitem")
     base_li = li.filter(~(F.col("l_orderkey") % 10 == 7))
-    stage, schema = _stage_table_dir(spark, sf_dir, "lineitem", "lineitem")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .filter(F.col("l_orderkey") % 10 == 7)
-        .select("l_partkey", "l_suppkey")
+    stream = _delta_stream(
+        spark, sf_dir, "lineitem", "l_orderkey", "l_partkey", "l_suppkey"
     )
     return incremental_pagerank_stream(spark, stream, base_li)
+
+
+#: the LPA twin's bucketed append tables
+LPA_LAYOUT = {"op": ["__bkt"], "weights": ["__bkt"], "adj": ["__bkt"]}
+
+
+def _lpa_tables(l1, l2, op, weights, half) -> tuple:
+    return (
+        {"l1": l1, "l2": l2},
+        {
+            "op": graph.bucketed(op, "l_orderkey"),
+            "weights": graph.bucketed(weights, "src", "dst"),
+            "adj": graph.adj_rows(half),
+        },
+    )
+
+
+def lpa_seed(base_li: DataFrame) -> tuple:
+    """Commit 0 of the LPA twin: the base graph's two label levels
+    (:func:`graph.lpa_seed_levels`, the batch query's seed), its
+    (order, part) roster, raw pair weights and adjacency."""
+    w0, base_half = graph.co_order_weights(base_li)
+    l1, l2 = graph.lpa_seed_levels(base_half)
+    base_op = base_li.select("l_orderkey", "l_partkey").distinct()
+    return _lpa_tables(l1, l2, base_op, w0, base_half)
+
+
+def lpa_step(spark: SparkSession, store, batch_df: DataFrame) -> tuple:
+    """One micro-batch of label-propagation upkeep.  NEW roster rows
+    come from an anti-join against the roster pruned to the batch's
+    ORDERS (micro-batches may split an order); pair-count increments
+    are new-part × same-order-partner pairs, each counted once, in the
+    batch where its SECOND part lands; floor crossings read only the
+    increments' weight buckets (:func:`graph.co_order_new_edges`); and
+    :func:`graph.lpa_patch_levels` re-votes only the 1-hop blast radius
+    through partition-pruned adjacency scans.  Counts are additive, so
+    each batch appends only its own increments."""
+    bop = cut(
+        batch_df.select("l_orderkey", "l_partkey").distinct(),
+        "incremental_lpa_stream.bop",
+    )
+    op_sc = graph.read_pruned(
+        spark,
+        store.dirs("op"),
+        bop.select("l_orderkey").distinct(),
+        "l_orderkey long, l_partkey long",
+    )
+    new_op = cut(
+        bop.join(op_sc, ["l_orderkey", "l_partkey"], "left_anti"),
+        "incremental_lpa_stream.new_op",
+    )
+    partners = op_sc.unionByName(new_op)
+    dw = cut(
+        new_op.alias("a")
+        .join(
+            partners.alias("b"),
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
+        )
+        .select(
+            F.col("a.l_orderkey").alias("o"),
+            F.least("a.l_partkey", "b.l_partkey").alias("src"),
+            F.greatest("a.l_partkey", "b.l_partkey").alias("dst"),
+        )
+        .dropDuplicates(["o", "src", "dst"])
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("n_co")),
+        "incremental_lpa_stream.dw",
+    )
+    new_half = graph.co_order_new_edges(spark, store.dirs("weights"), dw)
+    l1, l2 = graph.lpa_patch_levels(
+        spark,
+        store.dirs("adj"),
+        store.read(spark, "l1"),
+        store.read(spark, "l2"),
+        new_half,
+    )
+    return _lpa_tables(l1, l2, new_op, dw, new_half)
+
+
+def lpa_publish(base_li: DataFrame, spark: SparkSession, store) -> DataFrame:
+    roster = store.read(spark, "op")
+    return graph._lpa_result(
+        base_li.select("l_partkey").unionByName(roster.select("l_partkey")),
+        store.read(spark, "l2"),
+    )
 
 
 def incremental_lpa_stream(
     spark: SparkSession, delta_stream: DataFrame, base_li: DataFrame
 ) -> DataFrame:
     """Streaming incremental label-propagation — the integer twin of
-    :func:`incremental_pagerank_stream`.  Stored state (all committed
-    atomically per batch through :class:`state.StateStore`): the
+    :func:`incremental_pagerank_stream`, maintained by
+    :func:`state.maintain` with :func:`lpa_step`.  Stored state: the
     (l_orderkey, l_partkey) roster as order-bucketed append segments,
-    the RAW pair-weight table as pair-bucketed append segments (counts
-    are additive, so each batch appends only its own increments), the
+    the RAW pair-weight table as pair-bucketed append segments, the
     directed adjacency as src-bucketed append segments, and both O(V)
-    label-vector replacements.
-
-    Per batch: NEW roster rows come from an anti-join against the
-    roster pruned to the batch's ORDERS (micro-batches may split an
-    order — a pair is counted exactly once, when its second part
-    arrives); pair-count increments are new-part × same-order-partner
-    pairs; floor crossings read only the increments' weight buckets
-    (graph.co_order_new_edges); and :func:`graph.lpa_patch_levels`
-    re-votes only the 1-hop blast radius through partition-pruned
-    adjacency scans, never a full edge-list join.  Seeded with
-    :func:`graph.lpa_seed_levels`, the seed the batch query uses.
-    Exactness composes by induction: summed segment weights equal the
-    merged corpus counts, so each batch's committed state equals the
-    batch kernel's derivation from the rows seen so far."""
-    import shutil
-    import tempfile
-
-    from .graph import (
-        _co_order_pair_counts,
-        _lpa_result,
-        adj_rows,
-        bucketed,
-        co_order_new_edges,
-        lpa_patch_levels,
-        lpa_seed_levels,
-        read_pruned,
+    label vectors as replacements.  Summed segment weights equal the
+    merged corpus counts, so each commit equals the batch kernel's
+    derivation from the rows seen so far."""
+    return maintain(
+        delta_stream,
+        "incremental_lpa_stream",
+        partial(lpa_seed, base_li),
+        lpa_step,
+        partial(lpa_publish, base_li),
+        LPA_LAYOUT,
     )
-    from .state import StateStore
-
-    root = tempfile.mkdtemp(prefix="spark_graft_stream_lpa_")
-    try:
-        store = StateStore(f"{root}/state")
-        w0 = cut(_co_order_pair_counts(base_li), "incremental_lpa_stream.w0")
-        base_half = cut(
-            w0.filter(F.col("n_co") >= 2)
-            .select("src", "dst"),
-            "incremental_lpa_stream.base_half",
-        )
-        l1, l2 = lpa_seed_levels(base_half)
-        base_op = base_li.select("l_orderkey", "l_partkey").distinct()
-        store.commit(
-            0,
-            replace={"l1": l1, "l2": l2},
-            append={
-                "op": bucketed(base_op, "l_orderkey"),
-                "weights": bucketed(w0, "src", "dst"),
-                "adj": adj_rows(base_half),
-            },
-            partition_by={
-                "op": ["__bkt"],
-                "weights": ["__bkt"],
-                "adj": ["__bkt"],
-            },
-        )
-
-        def ingest(batch_df: DataFrame, batch_id: int) -> None:
-            bid = batch_id + 1  # seed owns commit 0
-            if store.last_batch() >= bid:
-                return  # fully-applied replay: the manifest IS the marker
-            ss = batch_df.sparkSession
-            bop = cut(
-                batch_df.select("l_orderkey", "l_partkey")
-                .distinct(),
-                "incremental_lpa_stream.bop",
-            )
-            op_sc = read_pruned(
-                ss,
-                store.dirs("op"),
-                bop.select("l_orderkey").distinct(),
-                "l_orderkey long, l_partkey long",
-            )
-            new_op = cut(
-                bop.join(op_sc, ["l_orderkey", "l_partkey"], "left_anti"),
-                "incremental_lpa_stream.new_op",
-            )
-            # pair-count increments: each pair is counted for an order
-            # exactly once — in the batch where its SECOND part lands
-            # (new × stored-partner and new × new, deduped per order)
-            partners = op_sc.unionByName(new_op)
-            dw = cut(
-                new_op.alias("a")
-                .join(
-                    partners.alias("b"),
-                    (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                    & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-                )
-                .select(
-                    F.col("a.l_orderkey").alias("o"),
-                    F.least("a.l_partkey", "b.l_partkey").alias("src"),
-                    F.greatest("a.l_partkey", "b.l_partkey").alias("dst"),
-                )
-                .dropDuplicates(["o", "src", "dst"])
-                .groupBy("src", "dst")
-                .agg(F.count(F.lit(1)).alias("n_co")),
-                "incremental_lpa_stream.dw",
-            )
-            new_half = co_order_new_edges(ss, store.dirs("weights"), dw)
-            l1n, l2n = lpa_patch_levels(
-                ss,
-                store.dirs("adj"),
-                store.read(ss, "l1"),
-                store.read(ss, "l2"),
-                new_half,
-            )
-            store.commit(
-                bid,
-                replace={"l1": l1n, "l2": l2n},
-                append={
-                    "op": bucketed(new_op, "l_orderkey"),
-                    "weights": bucketed(dw, "src", "dst"),
-                    "adj": adj_rows(new_half),
-                },
-                partition_by={
-                    "op": ["__bkt"],
-                    "weights": ["__bkt"],
-                    "adj": ["__bkt"],
-                },
-            )
-
-        q = (
-            delta_stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        final = store.read(spark, "l2")
-        roster = store.read(spark, "op")
-        return cut(
-            _lpa_result(
-                base_li.select("l_partkey").unionByName(
-                    roster.select("l_partkey")
-                ),
-                final,
-            ),
-            "incremental_lpa_stream",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _lpa_sql() -> str:
-    from .graph import LABEL_PROPAGATION_SQL
-
-    return LABEL_PROPAGATION_SQL
 
 
 @register(
     "q_stream_incremental_label_propagation",
-    _lpa_sql(),
+    graph.LABEL_PROPAGATION_SQL,
     doc="Streaming label-propagation ingest gate, the integer twin of "
     "q_stream_incremental_pagerank: delta lineitem rows arrive as a "
     "file-source stream; each micro-batch appends its NEW (order, "
@@ -1356,122 +1220,79 @@ def q_stream_incremental_label_propagation(
 ) -> DataFrame:
     li = read_parquet_table(spark, sf_dir, "lineitem")
     base_li = li.filter(~(F.col("l_orderkey") % 10 == 7))
-    stage, schema = _stage_table_dir(spark, sf_dir, "lineitem", "lineitem")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .filter(F.col("l_orderkey") % 10 == 7)
-        .select("l_orderkey", "l_partkey")
+    stream = _delta_stream(
+        spark, sf_dir, "lineitem", "l_orderkey", "l_orderkey", "l_partkey"
     )
     return incremental_lpa_stream(spark, stream, base_li)
+
+
+def _lsh_tables(groups, index, spill, labels, digests) -> tuple:
+    return (
+        {"groups": groups, "index": index, "spill": spill, "labels": labels},
+        {"digests": digests},
+    )
+
+
+def lsh_clusters_seed(base_docs: DataFrame) -> tuple:
+    """Commit 0 of the LSH cluster twin: the batch kernel's stored state
+    for the base corpus (:func:`dedup.lsh_seed_state`)."""
+    from .llm_ops.dedup import lsh_seed_state
+
+    digests, groups, index, spill, labels = lsh_seed_state(base_docs)
+    return _lsh_tables(groups, index, spill, labels, digests)
+
+
+def lsh_clusters_step(
+    spark: SparkSession, store, batch_df: DataFrame
+) -> tuple:
+    """One micro-batch of LSH cluster upkeep: :func:`dedup.
+    lsh_maintenance_step`, the kernel the batch query runs, over the
+    stored digests, groups, capped index, spill and labels.  The step
+    drops docs already applied and appends the rest to the digest
+    roster; groups, index, spill and labels are O(reps) replacements."""
+    from .llm_ops.dedup import fingerprint_col, lsh_maintenance_step
+
+    batch = batch_df.select(
+        "doc_id", fingerprint_col().alias("fp"), "text"
+    ).dropDuplicates(["doc_id"])
+    _d, groups, index, spill, labels, applied = lsh_maintenance_step(
+        *[
+            store.read(spark, t)
+            for t in ("digests", "groups", "index", "spill", "labels")
+        ],
+        batch,
+    )
+    return _lsh_tables(groups, index, spill, labels, applied)
+
+
+def lsh_clusters_publish(spark: SparkSession, store) -> DataFrame:
+    from .llm_ops.dedup import _reattach
+
+    return _reattach(
+        store.read(spark, "digests"),
+        store.read(spark, "groups"),
+        store.read(spark, "labels"),
+    )
 
 
 def incremental_minhash_clusters_stream(
     spark: SparkSession, delta_stream: DataFrame, base_docs: DataFrame
 ) -> DataFrame:
     """Streaming LSH cluster maintenance — the flagship incremental
-    path run ONCE PER MICRO-BATCH against parquet-backed stored state.
-
-    Since r14 the per-ingest step IS :func:`dedup.lsh_maintenance_step`
-    — the same kernel the batch query runs — so correctness fixes land
-    exactly once (ADVICE r13), including the spill-re-entry guard: the
-    stored state carries the capped index's SPILL side table, and an
-    exact-duplicate batch doc that relabels a spilled rep to a smaller
-    id re-enters the re-cap exactly as the rebuild would.
-
-    State commit is ATOMIC (VERDICT r13 task #3): every table the
-    batch touches is written to a fresh versioned directory and a
-    single manifest rename publishes them together
-    (:class:`state.StateStore`).  A crash between table writes leaves
-    the previous consistent state; the replayed batch re-derives
-    against it and flips the manifest once.  A replay after the flip
-    is skipped by the watermark — the marker now genuinely means "this
-    batch was fully applied" (the r13 twin wrote digests FIRST of four
-    non-atomic overwrites, so a mid-commit crash made replay silently
-    drop the batch's docs).  The digest roster is an append-table (one
-    O(delta) segment per batch — the 100 TB shape); groups, index,
-    spill and labels are O(reps) replacements.
-
-    Exactness composes by induction: each batch's committed state
-    equals what the batch kernel derives from the corpus seen so far,
-    so the final reattachment equals the full-rebuild ORACLE."""
-    import shutil
-    import tempfile
-
-    from .llm_ops.dedup import (
-        _reattach,
-        fingerprint_col,
-        lsh_maintenance_step,
-        lsh_seed_state,
+    path run ONCE PER MICRO-BATCH against parquet-backed stored state
+    (:func:`state.maintain`).  The per-ingest step IS the batch query's
+    kernel (:func:`lsh_clusters_step`), so correctness fixes land
+    exactly once, including the spill-re-entry guard: the stored state
+    carries the capped index's SPILL side table, and an exact-duplicate
+    batch doc that relabels a spilled rep to a smaller id re-enters the
+    re-cap exactly as the rebuild would."""
+    return maintain(
+        delta_stream,
+        "incremental_minhash_clusters_stream",
+        partial(lsh_clusters_seed, base_docs),
+        lsh_clusters_step,
+        lsh_clusters_publish,
     )
-    from .state import StateStore
-
-    root = tempfile.mkdtemp(prefix="spark_graft_stream_imc_")
-    try:
-        store = StateStore(f"{root}/state")
-        # --- seed stored state from the base corpus (the batch
-        # kernel's stored-state section, executed once; commit 0)
-        digests0, groups0, idx0, spill0, lab0 = lsh_seed_state(base_docs)
-        store.commit(
-            0,
-            replace={
-                "groups": groups0,
-                "index": idx0,
-                "spill": spill0,
-                "labels": lab0,
-            },
-            append={"digests": digests0},
-        )
-
-        def ingest(batch_df: DataFrame, batch_id: int) -> None:
-            bid = batch_id + 1  # seed owns commit 0
-            if store.last_batch() >= bid:
-                return  # fully-applied replay: the manifest IS the marker
-            ss = batch_df.sparkSession
-            batch = batch_df.select(
-                "doc_id", fingerprint_col().alias("fp"), "text"
-            ).dropDuplicates(["doc_id"])
-            # the step drops docs already applied and returns the rest
-            _d, g2, i2, s2, l2, applied = lsh_maintenance_step(
-                store.read(ss, "digests"),
-                store.read(ss, "groups"),
-                store.read(ss, "index"),
-                store.read(ss, "spill"),
-                store.read(ss, "labels"),
-                batch,
-            )
-            # versioned dirs: the writes below never touch the dirs the
-            # reads above came from, so no materialize-before-overwrite
-            # discipline is needed — the manifest flip swaps atomically
-            store.commit(
-                bid,
-                replace={
-                    "groups": g2,
-                    "index": i2,
-                    "spill": s2,
-                    "labels": l2,
-                },
-                append={"digests": applied},
-            )
-
-        q = (
-            delta_stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        return cut(
-            _reattach(
-                store.read(spark, "digests"),
-                store.read(spark, "groups"),
-                store.read(spark, "labels"),
-            ),
-            "incremental_minhash_clusters_stream",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _minhash_clusters_sql() -> str:
@@ -1504,11 +1325,7 @@ def q_stream_incremental_minhash_clusters(
 ) -> DataFrame:
     docs = read_parquet_table(spark, sf_dir, "documents")
     base = docs.filter(~(F.col("doc_id") % 10 == 7)).select("doc_id", "text")
-    stage, schema = _stage_table_dir(spark, sf_dir, "documents", "documents")
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .filter(F.col("doc_id") % 10 == 7)
-        .select("doc_id", "text")
+    stream = _delta_stream(
+        spark, sf_dir, "documents", "doc_id", "doc_id", "text"
     )
     return incremental_minhash_clusters_stream(spark, stream, base)
