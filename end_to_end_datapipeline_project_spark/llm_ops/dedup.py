@@ -22,8 +22,11 @@ these are the LLM-pipeline extensions from BASELINE.json's north star.)
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..lineage import cut, metrics
 from ..registry import register
@@ -886,69 +889,99 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CLUSTER_JACCARD = 0.02
 MAX_CC_ITERS = 20
+#: the largest edge list connected_components labels on the driver.
+#: Measured on local[4] (4 cores, 6 GB driver heap; median of 3, each
+#: path forced, noop write of the result), driver / Spark path seconds: random graphs (n = E, one giant
+#: component) 0.5M edges 6.1 / 20.2, 1M 8.7 / 27.7, 2M 19.6 / 65.3, 4M
+#: 28.8 / 134.3; disjoint 10-cliques (the near-dup wall, which star
+#: contraction empties) 0.5M 2.2 / 2.6, 1M 4.2 / 3.5, 2M 7.4 / 4.3, 4M
+#: 16.1 / 7.6.  The cliques cross between 0.5M and 1M edges.  At ×10
+#: documents q_minhash_clusters (249k edges) reads 34.5 / 34.1 s a query
+DRIVER_CC_MAX_EDGES = 500_000
 
 
 def connected_components(
-    nodes: DataFrame, edges1: DataFrame, id_col: str, max_iters: int = MAX_CC_ITERS
+    nodes: DataFrame | None,
+    edges1: DataFrame,
+    id_col: str,
+    max_iters: int = MAX_CC_ITERS,
 ) -> DataFrame:
-    """Min-label propagation connected components.
+    """Connected components by min label: every node's cluster_id is the
+    smallest id of its component.  Returns (id_col, cluster_id,
+    is_canonical).
 
     ``nodes``: one column ``id_col``; ``edges1``: columns (src, dst), one
-    row per undirected edge with BOTH endpoints present in ``nodes``
-    (every in-repo caller builds edges from the node set; edges
-    violating that contract are DROPPED inside star contraction, which
-    would otherwise emit a foreign endpoint as a cluster_id, corrupting
-    labels instead of ignoring the edge, ADVICE r13).  Each
-    iteration does an edge-neighbor min step AND a pointer-jumping step
-    (label := label of the label holder), so convergence takes
-    O(log diameter) rounds instead of O(diameter) — a path graph of
-    length 2^20 converges in ~20 rounds, which is what makes fixed
-    iteration budgets safe at 100 TB (plain one-hop propagation was
-    observed to hit the cap on sparse sf0.001 chains and emit un-merged
-    clusters).  Labels never increase, so an iteration that lowers no
-    label is the fixed point: each iteration's lineage cut (O(1) plan
-    depth) observes ``count_if(label < previous label)`` and the loop
-    stops at the first 0 or after ``max_iters`` iterations.  The test
-    rides the cut's own jobs, so it launches none of its own.  Measured
-    on local[4] with AQE, ``collect()`` included: 71 jobs per call on a
-    200-node chain (8 iterations), 9 on an edgeless graph, 13 on a
-    30-clique.
+    row per undirected edge with BOTH endpoints present in ``nodes``.
+    Every in-repo caller builds its edges from its node set; an edge
+    with a foreign endpoint is DROPPED on both paths below, never merged
+    through (it would otherwise emit a foreign endpoint as a cluster_id,
+    ADVICE r13).  ``nodes=None`` means the nodes are the endpoints of
+    ``edges1``: the contract then holds by construction; the driver path
+    then joins no node list, and the Spark path derives it from the
+    edges.
 
-    One STAR-CONTRACTION round runs before the loop: every node is
-    mapped to m(v) = min(v, min neighbor), edges are rewritten through
-    the map, self-loops dropped, each remaining pair kept once (its cut
-    counts them at no job).  No pair left means every contracted node is
-    its own component: the loop does not run and label(v) = m(v).
-    Exactness: v and m(v) share an edge (or are equal), so contraction
-    preserves components; the component's global minimum g has
-    all-larger neighbors, so m(g) = g — g survives as a contracted node
-    and stays the component's min label; expansion is label(v) =
-    label(m(v)).
-    This is what makes near-dup CLIQUE walls affordable: a k-clique's
-    C(k,2) edges all map to (min, min) self-loops and vanish before the
-    propagation loop ever shuffles them (the ×100 replica corpus is
-    5,000 disjoint ~100-cliques — ~25M pair edges contract to ~0; the
-    r12 attempt without contraction spent 47 min shuffling them every
-    iteration and was killed).
-    Returns (id_col, cluster_id, is_canonical).
-    """
-    # the half list is read three times below (both orientations of the
-    # neighbour minimum, and the rewrite): materialize it once, or every
-    # read re-runs its producer (for the LSH family, the exact-Jaccard
-    # verify joins).  An edge list that is already a cut (the
-    # maintenance step's contracted edges) is used as is.
-    edges1 = cut(edges1, "connected_components.edges1").select("src", "dst")
+    The edges are cut once; the cut counts them inside its own job, and
+    that count picks the path:
+
+    - **Driver** (at most ``DRIVER_CC_MAX_EDGES`` edges, the largest
+      size measured at which it beat the Spark path on both a random
+      graph and a clique wall).  One job collects the edges; with a node
+      list, one more collects the endpoints that are nodes (a semi-join
+      of ``nodes`` against the broadcast endpoint list) and only edges
+      between them are kept.  numpy labels the nodes (:func:`_min_labels`)
+      and the label map comes back as a local frame, joined to
+      ``nodes`` with ``coalesce(label, id)``.  An empty edge list
+      collects nothing.
+    - **Spark** (a larger edge list): the loop
+      below.  One STAR-CONTRACTION round maps every node to m(v) =
+      min(v, min neighbor) and rewrites the edges through the map,
+      dropping self-loops and keeping each pair once (its cut counts
+      them at no job).  The contract is enforced there: only neighbours
+      that are nodes count toward the minimum, the left join from
+      ``nodes`` drops foreign sources and the rewrite's inner joins
+      drop every edge with a foreign endpoint.  No pair left means
+      label(v) = m(v) and the loop does not run.  Otherwise each
+      iteration does an edge-neighbor min step AND a pointer-jumping
+      step (label := label of the label holder), so convergence takes
+      O(log diameter) rounds: a path of length 2^20 converges in ~20
+      rounds, which is what makes the fixed ``max_iters`` budget safe
+      (plain one-hop propagation hit the cap on sparse sf0.001 chains).
+      Labels never increase, so an iteration that lowers no label is
+      the fixed point: each iteration's cut observes ``count_if(label <
+      previous label)`` and the loop stops at the first 0 or after
+      ``max_iters``.  Contraction is exact: v and m(v) share an edge,
+      and a component's minimum g has only larger neighbours, so m(g) =
+      g stays its label; expansion is label(v) = label(m(v)).  It is
+      what makes near-dup CLIQUE walls affordable: a k-clique's C(k,2)
+      edges all map to (min, min) self-loops and vanish before the loop
+      shuffles them (the ×100 replica corpus is 5,000 disjoint
+      ~100-cliques, ~25M pair edges contracting to ~0; the r12 attempt
+      without contraction spent 47 min shuffling them every iteration).
+
+    Measured on local[4] with AQE, ``collect()`` included, jobs per call
+    driver / Spark path (the latter with automatic broadcasts off, so no
+    cut's broadcast hint counts): 200-node chain 6 / 63, edgeless 200
+    nodes 2 / 9, 30-clique 6 / 12.  On the driver
+    path with a node list: the edges cut, the edges collect, the
+    semi-join's broadcast and scan, and the final join's broadcast and
+    scan; without one, the edges cut and collect only."""
+    edges1, n_edges = cut(
+        edges1.select("src", "dst"),
+        "connected_components.edges1",
+        observe=[F.count(F.lit(1)).alias("n")],
+    )
+    if n_edges["n"] <= DRIVER_CC_MAX_EDGES:
+        return _driver_components(nodes, edges1, n_edges["n"], id_col)
 
     # --- star contraction: m(v) = min(v, min neighbor) ---------------
-    # The both-endpoints-in-``nodes`` contract is enforced here: only
-    # neighbours that are nodes count toward the minimum, the left join
-    # from ``nodes`` drops foreign sources, and the rewrite's inner joins
-    # against ``cmap`` drop every edge with a foreign endpoint.
+    both = edges1.unionAll(
+        edges1.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    if nodes is None:
+        # every endpoint is some row's src
+        nodes = both.select(F.col("src").alias(id_col)).distinct()
     nbr_min = (
-        edges1.unionAll(
-            edges1.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .join(nodes.select(F.col(id_col).alias("dst")), "dst", "left_semi")
+        both.join(nodes.select(F.col(id_col).alias("dst")), "dst", "left_semi")
         .groupBy("src")
         .agg(F.min("dst").alias("__nm"))
     )
@@ -1028,6 +1061,73 @@ def connected_components(
     )
 
 
+def _driver_components(
+    nodes: DataFrame | None, edges1: DataFrame, n: int, id_col: str
+) -> DataFrame:
+    """:func:`connected_components`' driver path over the cut ``edges1``
+    of ``n`` rows: numpy labels the endpoints, and the label map comes
+    back as a local frame joined to ``nodes``."""
+    if not n:
+        # no edge: every node is its own component (an empty local
+        # relation when the nodes are the endpoints)
+        if nodes is None:
+            nodes = edges1.select(F.col("src").alias(id_col)).limit(0)
+        return _clusters(
+            nodes.select(id_col, F.col(id_col).alias("__label")), "__label", id_col
+        )
+    spark = edges1.sparkSession
+    id_type = edges1.schema["src"].dataType
+    pdf = edges1.toPandas()
+    src, dst = pdf["src"].to_numpy(), pdf["dst"].to_numpy()
+    if nodes is not None:
+        # the contract: only edges between two nodes count
+        ends = spark.createDataFrame(
+            pd.DataFrame({id_col: np.unique(np.concatenate([src, dst]))}),
+            StructType([StructField(id_col, id_type)]),
+        )
+        known = (
+            nodes.select(id_col)
+            .join(F.broadcast(ends), id_col, "left_semi")
+            .toPandas()[id_col]
+            .to_numpy()
+        )
+        keep = np.isin(src, known) & np.isin(dst, known)
+        src, dst = src[keep], dst[keep]
+    ids, ix = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    root = _min_labels(ix[: len(src)], ix[len(src) :], len(ids))
+    labels = spark.createDataFrame(
+        pd.DataFrame({id_col: ids, "__label": ids[root]}),
+        StructType([StructField(id_col, id_type), StructField("__label", id_type)]),
+    )
+    if nodes is not None:
+        labels = nodes.join(labels, id_col, "left").select(
+            id_col, F.coalesce("__label", id_col).alias("__label")
+        )
+    return _clusters(labels, "__label", id_col)
+
+
+def _min_labels(src: np.ndarray, dst: np.ndarray, n: int) -> np.ndarray:
+    """Index of the smallest node of each node's component, for nodes
+    0..n-1 and the edges (src[i], dst[i]).  The min-label hook of the
+    Spark loop on the driver: every root adopts the smallest root across
+    its edges (both orientations), then pointer jumping (lab := lab[lab])
+    until every node points at a root.  Labels only fall, so a round
+    that moves none is the fixed point: no edge joins two roots."""
+    lab = np.arange(n)
+    while True:
+        hooked = lab.copy()
+        np.minimum.at(hooked, lab[src], lab[dst])
+        np.minimum.at(hooked, lab[dst], lab[src])
+        while True:
+            jumped = hooked[hooked]
+            if np.array_equal(jumped, hooked):
+                break
+            hooked = jumped
+        if np.array_equal(hooked, lab):
+            return lab
+        lab = hooked
+
+
 def _clusters(df: DataFrame, label: str, id_col: str) -> DataFrame:
     return df.select(
         id_col,
@@ -1061,7 +1161,9 @@ def _clusters(df: DataFrame, label: str, id_col: str) -> DataFrame:
 """,
     doc="Near-dup clustering: connected components over the Jaccard≥0.02 "
     "pair graph by iterative min-label propagation (each doc adopts the "
-    "smallest doc_id reachable; canonical = cluster min). The Spark loop "
+    "smallest doc_id reachable; canonical = cluster min). An edge list "
+    "of at most DRIVER_CC_MAX_EDGES edges is labelled on the driver after "
+    "one collect; a larger one runs the Spark loop, which "
     "cuts lineage once per iteration and stops at the first iteration "
     "that lowers no label, a count the cut observes inside its own job; "
     "the oracle is a recursive-CTE "
@@ -2009,7 +2111,7 @@ def lsh_maintenance_step(
     lab_b = old_lab.select(
         F.col("rid").alias("dst"), F.col("label").alias("lb")
     )
-    contracted = cut(
+    contracted = (
         new_edges.join(lab_a, "src", "left")
         .join(lab_b, "dst", "left")
         .select(
@@ -2020,15 +2122,11 @@ def lsh_maintenance_step(
         .select(
             F.least("u", "v").alias("src"), F.greatest("u", "v").alias("dst")
         )
-        .distinct(),
-        "lsh_maintenance_step.contracted",
-    )
-    cnodes = (
-        contracted.select(F.col("src").alias("id"))
-        .unionAll(contracted.select(F.col("dst").alias("id")))
         .distinct()
     )
-    cc2 = connected_components(cnodes, contracted, "id").select(
+    # the nodes are the contracted edges' endpoints; CC's edges cut is
+    # the one materialization of these edges
+    cc2 = connected_components(None, contracted, "id").select(
         "id", F.col("cluster_id").alias("merged")
     )
     labels2, n_reps = cut(

@@ -460,8 +460,10 @@ SEMANTIC_COS = 0.45
     f"(≥ {SEMANTIC_COS}) become edges, connected components collapse "
     "chains of paraphrases into one cluster, canonical = min id — the "
     "embedding-space counterpart of shingle-based q_dedup_clusters, "
-    "sharing the same min-label-propagation loop (one lineage cut per "
-    "iteration; it stops at the first iteration that lowers no label). "
+    "sharing its connected components (a small pair list is labelled on "
+    "the driver; a larger one runs the min-label-propagation loop, one "
+    "lineage cut per iteration, stopping at the first iteration that "
+    "lowers no label). "
     "At 100 TB the pair generation "
     "is the IVF/LSH candidate path, not this brute-force oracle shape.",
 )

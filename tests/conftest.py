@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 from collections import Counter
@@ -83,3 +84,16 @@ def jobs_by_label(spark, build) -> Counter:
         d = store.job(job).description()
         out[d.get() if d.isDefined() else None] += 1
     return out
+
+
+@contextlib.contextmanager
+def spark_conf(spark, **kv):
+    """Session confs set for a block and restored after it."""
+    was = {k: spark.conf.get(k) for k in kv}
+    for k, v in kv.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in was.items():
+            spark.conf.set(k, v)

@@ -1,15 +1,19 @@
-"""The lineage cut (``lineage.cut``) and the connected-components loop
-whose convergence test rides it."""
+"""The lineage cut (``lineage.cut``) and connected components: the Spark
+loop whose convergence test rides it, and the driver path a small edge
+list takes instead."""
 
-import contextlib
 import random
 
 import pytest
-from conftest import jobs_by_label, jobs_launched
+from conftest import jobs_by_label, jobs_launched, spark_conf
 from pyspark.sql import functions as F
 
 from end_to_end_datapipeline_project_spark import lineage
 from end_to_end_datapipeline_project_spark.llm_ops import dedup
+
+
+_COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
+_BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
 
 
 def _rows_df(spark, n=50):
@@ -324,8 +328,11 @@ def _cc_reference(nodes, edges, max_iters):
     return {v: label[m[v]] for v in nodes}, iters
 
 
-def _run_cc(spark, monkeypatch, nodes, edges, **kw):
-    """connected_components' {node: cluster} and iteration count."""
+def _run_cc(spark, monkeypatch, nodes, edges, path, **kw):
+    """connected_components' {node: cluster} and iteration count, after
+    checking that the call took ``path`` ("driver" or "spark") and that
+    a driver call launched no iteration.  ``nodes=None`` passes no node
+    list."""
     labels = []
     real_cut = dedup.cut
 
@@ -334,12 +341,24 @@ def _run_cc(spark, monkeypatch, nodes, edges, **kw):
         return real_cut(df, label, *a, **k)
 
     monkeypatch.setattr(dedup, "cut", counting_cut)
-    ndf = spark.createDataFrame([(v,) for v in nodes], "doc_id long")
+    ndf = None
+    if nodes is not None:
+        ndf = spark.createDataFrame([(v,) for v in nodes], "doc_id long")
     edf = spark.createDataFrame(list(edges), "src long, dst long")
     rows = dedup.connected_components(ndf, edf, "doc_id", **kw).collect()
     monkeypatch.setattr(dedup, "cut", real_cut)
     assert all(r.is_canonical == (r.doc_id == r.cluster_id) for r in rows)
+    assert ("connected_components.cmap" in labels) == (path == "spark"), labels
+    assert len(rows) == len({r.doc_id for r in rows})
     return {r.doc_id: r.cluster_id for r in rows}, labels.count("connected_components.labels")
+
+
+@pytest.fixture
+def spark_path(spark, monkeypatch):
+    """The session with the driver path's edge cap below every edge list,
+    so connected_components runs its Spark loop."""
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", -1)
+    return spark
 
 
 def _graphs():
@@ -366,36 +385,105 @@ def _graphs():
     yield "clique", list(range(20)), [(i, j) for i in range(20) for j in range(i)]
     yield "star", list(range(1, 40)), [(v, 1) for v in range(2, 40)]
     yield "pairs", list(range(40)), [(2 * i + 1, 2 * i) for i in range(20)]
+    # self-loops and an edge given three times, in both orientations
+    yield "loops", list(range(10)), [(1, 1), (2, 3), (3, 2), (2, 3), (5, 5), (5, 6)]
+
+
+def _graph(name):
+    return next(g for g in _graphs() if g[0] == name)
 
 
 @pytest.mark.parametrize("name", [g[0] for g in _graphs()])
-def test_connected_components_matches_union_find(spark, monkeypatch, name):
-    """Exact components, and exactly the iterations of the reference:
-    none when star contraction leaves no edge, else up to the first
-    iteration that lowers no label."""
-    _, nodes, edges = next(g for g in _graphs() if g[0] == name)
-    got, iters = _run_cc(spark, monkeypatch, nodes, edges)
+def test_connected_components_matches_union_find(spark_path, monkeypatch, name):
+    """The Spark loop: exact components, and exactly the iterations of
+    the reference: none when star contraction leaves no edge, else up
+    to the first iteration that lowers no label."""
+    _, nodes, edges = _graph(name)
+    got, iters = _run_cc(spark_path, monkeypatch, nodes, edges, "spark")
     assert got == _union_find(nodes, edges)
     want, want_iters = _cc_reference(nodes, edges, dedup.MAX_CC_ITERS)
     assert got == want and iters == want_iters
 
 
-def test_connected_components_stops_at_the_cap(spark, monkeypatch):
+@pytest.mark.parametrize("name", [g[0] for g in _graphs()])
+def test_driver_components_match_union_find(spark, monkeypatch, name):
+    """The driver path: exact components with foreign endpoints,
+    self-loops and duplicate edges, and no iteration cut."""
+    _, nodes, edges = _graph(name)
+    got, iters = _run_cc(spark, monkeypatch, nodes, edges, "driver")
+    assert got == _union_find(nodes, edges) and iters == 0
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+@pytest.mark.parametrize("name", ["random1", "pairs"])
+def test_components_without_a_node_list(spark, monkeypatch, path, name):
+    """``nodes=None``: the nodes are the edges' endpoints, on both paths."""
+    _, _, edges = _graph(name)
+    ends = sorted({v for e in edges for v in e})
+    if path == "spark":
+        monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", -1)
+    got, _ = _run_cc(spark, monkeypatch, None, edges, path)
+    assert got == _union_find(ends, edges)
+
+
+def test_driver_components_of_an_empty_edge_list(spark):
+    """No edge: every node is its own component, and with no node list
+    the result is empty; neither collects anything."""
+    edges = spark.createDataFrame([], "src long, dst long")
+    nodes = spark.createDataFrame([(v,) for v in range(5)], "doc_id long")
+    box = {}
+    jobs = jobs_by_label(
+        spark,
+        lambda: box.update(
+            some=dedup.connected_components(nodes, edges, "doc_id").collect(),
+            none=dedup.connected_components(None, edges, "doc_id").collect(),
+        ),
+    )
+    assert {r.doc_id: r.cluster_id for r in box["some"]} == {v: v for v in range(5)}
+    assert box["none"] == []
+    # the two edge cuts and the node list's collect
+    assert sum(jobs.values()) == jobs["cut:connected_components.edges1"] + 1
+
+
+def test_driver_path_gate_is_the_edge_cap(spark, monkeypatch):
+    """With the cap at exactly the edge count the edges go to the driver;
+    one edge less and the Spark loop runs.  Same components."""
+    _, nodes, edges = _graph("random2")
+    ndf = spark.createDataFrame([(v,) for v in nodes], "doc_id long")
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    want = _union_find(nodes, edges)
+    for cap, cmap_jobs in ((len(edges), False), (len(edges) - 1, True)):
+        monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", cap)
+        box = {}
+        jobs = jobs_by_label(
+            spark,
+            lambda: box.setdefault(
+                "rows", dedup.connected_components(ndf, edf, "doc_id").collect()
+            ),
+        )
+        assert (jobs["cut:connected_components.cmap"] > 0) == cmap_jobs, cap
+        assert {r.doc_id: r.cluster_id for r in box["rows"]} == want
+
+
+def test_connected_components_stops_at_the_cap(spark_path, monkeypatch):
     """Below the iterations a chain needs, the loop stops at max_iters
     with the partially propagated labels."""
     _, nodes, edges = next(_graphs())
     for cap in (1, 2):
-        got, iters = _run_cc(spark, monkeypatch, nodes, edges, max_iters=cap)
+        got, iters = _run_cc(
+            spark_path, monkeypatch, nodes, edges, "spark", max_iters=cap
+        )
         want, want_iters = _cc_reference(nodes, edges, cap)
         assert iters == want_iters == cap
         assert got == want and len(set(got.values())) > 1
 
 
 @pytest.mark.parametrize("clique", [0, 10])
-def test_edgeless_contraction_launches_no_label_job(spark, clique):
+def test_edgeless_contraction_launches_no_label_job(spark_path, clique):
     """With no contracted edge (an edgeless graph, or a clique that
     contracts to its minimum) the result is the contraction map itself:
     no iteration cut runs."""
+    spark = spark_path
     nodes = spark.createDataFrame([(v,) for v in range(50)], "doc_id long")
     edges = spark.createDataFrame(
         [(i, j) for i in range(clique) for j in range(i)], "src long, dst long"
@@ -496,23 +584,6 @@ def _exchanges(df) -> bool:
     return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
 
 
-@contextlib.contextmanager
-def _conf(spark, **kv):
-    """Session confs set for a block and restored after it."""
-    was = {k: spark.conf.get(k) for k in kv}
-    for k, v in kv.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in was.items():
-            spark.conf.set(k, v)
-
-
-_COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
-_BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
-
-
 @pytest.mark.parametrize(
     "coalesce, kind",
     [("true", "coalescedhashpartitioning"), ("false", "hashpartitioning")],
@@ -522,7 +593,7 @@ def test_by_cut_aggregates_on_its_key_with_no_exchange(spark, coalesce, kind):
     the final adaptive plan stored its blocks with (coalesced or not),
     so a groupBy(g) over it plans no exchange; over a plain cut it does.
     The rows are the same."""
-    with _conf(spark, **{_COALESCE: coalesce}):
+    with spark_conf(spark, **{_COALESCE: coalesce}):
         kept = lineage.cut(_grouped(spark), "test.by", by=("g",))
         plain = lineage.cut(_grouped(spark), "test.plain_by")
     assert _partitioning(kept).startswith(f"{kind}(")
@@ -558,9 +629,9 @@ def test_kept_cut_joins_a_frame_hashed_into_other_partitions(spark):
             (F.col("id") % 5).alias("g"), F.col("id").alias("v")
         ).groupBy("g").agg(F.sum("v").alias("v"))
 
-    with _conf(spark, **{_COALESCE: "false", _BROADCAST: "-1"}):
+    with spark_conf(spark, **{_COALESCE: "false", _BROADCAST: "-1"}):
         kept = lineage.cut(_grouped(spark), "test.by_join", by=("g",))
-        with _conf(spark, **{"spark.sql.shuffle.partitions": "3"}):
+        with spark_conf(spark, **{"spark.sql.shuffle.partitions": "3"}):
             kept3 = lineage.cut(other(), "test.by_join3", by=("g",))
             plain3 = other()
             assert _partitioning(kept3).endswith(", 3)")

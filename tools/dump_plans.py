@@ -210,7 +210,7 @@ AUDIT: dict[str, list[tuple[str, str]]] = {
     # broadcast regressing to sort-merge drops BroadcastHashJoin.
     "q_minhash_clusters": [
         ("BroadcastHashJoin", "fingerprint-map reattachment joins the O(#reps) label table without reshuffling members"),
-        ("Scan ExistingRDD", "CC labels enter as checkpointed state — a lost localCheckpoint would inline the whole LSH construction"),
+        ("Scan ExistingRDD", "the digests and groups cuts the labels reattach through enter as checkpointed state — a lost localCheckpoint would inline the whole LSH construction (a small rep graph's CC labels come back from the driver as a LocalTableScan)"),
         ("!CartesianProduct", "pair generation never degenerates to all-pairs"),
     ],
     "q_incremental_minhash_clusters": [
@@ -229,6 +229,11 @@ AUDIT: dict[str, list[tuple[str, str]]] = {
         ("Scan ExistingRDD", "stored per-iteration labels enter as checkpointed state"),
     ],
 }
+
+
+#: prefix of the temp directory the pruned-read probe stores its
+#: adjacency under; canonicalize() replaces the directory with a token
+_ADJ_ROOT_PREFIX = "spark_graft_plans_adj_"
 
 
 def _adj_pruned_probe(spark, sf_dir):
@@ -251,7 +256,7 @@ def _adj_pruned_probe(spark, sf_dir):
     half = spark.range(5000).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
-    store = StateStore(tempfile.mkdtemp(prefix="spark_graft_plans_adj_"))
+    store = StateStore(tempfile.mkdtemp(prefix=_ADJ_ROOT_PREFIX))
     store.commit(
         0, append={"adj": adj_rows(half)}, partition_by={"adj": ["__bkt"]}
     )
@@ -340,6 +345,10 @@ def canonicalize(plan: str) -> str:
     # literal array constants render as the JVM object's identity hash
     # (UnsafeArrayData@7a50b5f7) — different every run
     plan = re.sub(r"(UnsafeArrayData)@[0-9a-f]+", r"\1@N", plan)
+    # the pruned-read probe's store is a fresh temp directory each run
+    plan = re.sub(
+        rf"file:[^\[\]\s,]*{_ADJ_ROOT_PREFIX}\w+", "file:<adj-root>", plan
+    )
     # AQE stage numbers and whole-stage-codegen span ids are
     # execution-order-dependent (vary run to run even at one HEAD)
     plan = re.sub(r"QueryStage \d+", "QueryStage N", plan)
@@ -388,7 +397,8 @@ def main() -> None:
         "",
         "Plans are CANONICALIZED for byte-stable regens: expression/stage/"
         "codegen ids, the AQE build-side token (`BuildSide`), and "
-        "configured partition counts (`, P)`) are normalized, and the "
+        "configured partition counts (`, P)`) and the pruned-read "
+        "probe's temp directory (`<adj-root>`) are normalized, and the "
         "broadcast wrapper chain (BroadcastQueryStage/BroadcastExchange/"
         "AQEShuffleRead) is elided — its tree position moves with the "
         "runtime-chosen build side; the join node itself still records "
