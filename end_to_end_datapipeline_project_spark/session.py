@@ -6,21 +6,28 @@ semantics knobs (UTC session timezone, ANSI) so results are oracle-stable,
 and the performance knobs (AQE, adaptive coalesce + skew join, Arrow) so the
 same logical plans survive a 1000-executor cluster.
 
-Local test mode uses ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads).
+Local mode sizes itself from the host: ``local[N]`` with N the CPUs this
+process may run on (``$SPARK_GRAFT_CPUS`` wins), and a driver heap of half
+the memory it may use, capped at 31 GiB so HotSpot keeps compressed oops on
+(``$SPARK_DRIVER_MEMORY`` wins).  On a 4-core, 15 GB host that is
+``local[4]`` and a ~7.8 GiB heap.
 
 Local-only knobs are gated on the master URL (VERDICT r10 "What's wrong" #1):
-``get_spark`` applied 4 MB file splits and a 90g driver unconditionally, which
-on a cluster would mean ~25 million scan tasks per 100 TB table and a forced
-local master.  ``build_conf`` now applies those only when the master is
-``local[...]``; the semantics pins (UTC, ANSI default, AQE, Arrow) are
-unconditional.  A cluster deploy passes ``master="yarn"`` /
-``master="spark://..."`` (or sets ``SPARK_GRAFT_MASTER``) and inherits only
-the portable configuration.
+file splits sized for 1-100 MB testdata files and a driver heap sized to
+this machine would mean ~25 million scan tasks per 100 TB table and a forced
+local master on a cluster.  ``build_conf`` applies those only when the
+master is ``local``, ``local[N]``, ``local[*]`` or ``local[N,F]`` (not
+``local-cluster[...]``, which runs real executors); the semantics pins
+(UTC, ANSI default, AQE, Arrow) are unconditional.  A cluster deploy passes
+``master="yarn"`` / ``master="spark://..."`` (or sets
+``SPARK_GRAFT_MASTER``) and inherits only the portable configuration.
 """
 
 from __future__ import annotations
 
+import math
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -40,12 +47,72 @@ _LOCAL_ONLY_KEYS = frozenset(
 )
 
 
+#: Ceiling of the host-derived driver heap, in MiB.  Above ~32 GB HotSpot
+#: turns compressed oops off and every object reference takes 8 bytes
+#: instead of 4: after two passes of the perfbench headline queries the
+#: driver's ~1.08 M live objects held 98.1 MB at a 90 GB heap and 80.9 MB
+#: at 7.8 GiB (``jcmd GC.class_histogram``; ``String`` 32 -> 24 B,
+#: ``ConcurrentHashMap$Node`` 40 -> 32 B, byte arrays unchanged).
+MAX_DRIVER_HEAP_MB = 31 * 1024
+
+
+def _read(path: str) -> str | None:
+    """The text of ``path``, None when it cannot be read."""
+    try:
+        with open(path) as f:
+            return f.read()
+    except OSError:
+        return None
+
+
+def _cgroup2(name: str) -> str | None:
+    """This process's own cgroup v2 control file ``name`` (None under
+    cgroup v1 or without a cgroup file system)."""
+    for line in (_read("/proc/self/cgroup") or "").splitlines():
+        if line.startswith("0::"):
+            return _read(f"/sys/fs/cgroup{line[3:].rstrip('/')}/{name}")
+    return None
+
+
+def default_driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY``, else half of the memory this process may
+    use (the smaller of the cgroup v2 ``memory.max``, when it holds a
+    number, and ``MemTotal``) capped at :data:`MAX_DRIVER_HEAP_MB`, else
+    4g when neither can be read (the floor the oracle gate and bench.py
+    were validated at, COVERAGE.md)."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    limits = []
+    cgroup = (_cgroup2("memory.max") or "").strip()
+    if cgroup.isdigit():
+        limits.append(int(cgroup))
+    total = re.search(r"^MemTotal:\s+(\d+) kB", _read("/proc/meminfo") or "", re.M)
+    if total:
+        limits.append(int(total.group(1)) * 1024)
+    if not limits:
+        return "4g"
+    return f"{min(min(limits) // 2 // 2**20, MAX_DRIVER_HEAP_MB)}m"
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on,
+    lowered to a cgroup v2 ``cpu.max`` quota (rounded up) when one is
+    set."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    cpus = len(os.sched_getaffinity(0))
+    quota = (_cgroup2("cpu.max") or "").split()
+    if len(quota) == 2 and quota[0].isdigit():
+        cpus = min(cpus, max(1, math.ceil(int(quota[0]) / int(quota[1]))))
+    return cpus
 
 
 def is_local_master(master: str) -> bool:
-    return master.startswith("local")
+    """``local``, ``local[N]``, ``local[*]`` or ``local[N,F]`` (Spark's own
+    local master forms); ``local-cluster[...]`` is not local."""
+    return re.fullmatch(r"local(\[(\d+|\*)(\s*,\s*\d+)?\])?", master) is not None
 
 
 def build_conf(
@@ -81,12 +148,16 @@ def build_conf(
     if is_local_master(master):
         conf["spark.sql.files.maxPartitionBytes"] = str(4 * 1024 * 1024)
         conf["spark.sql.files.openCostInBytes"] = str(512 * 1024)
-        conf["spark.driver.memory"] = os.environ.get("SPARK_DRIVER_MEMORY", "90g")
+        conf["spark.driver.memory"] = default_driver_memory()
         conf["spark.ui.enabled"] = "false"
         # Spark sizes a memory page from the heap (execution memory /
-        # cores / 16, capped at 64 MB), so the 90g driver gets 64 MB
-        # pages: a broadcast hash relation of a handful of rows then
-        # holds a 64 MB array, and each broadcast still awaiting the
+        # cores / 16, rounded up to a power of two, between 1 MB and
+        # 64 MB).  The host-derived heap is capped below 32 GB to keep
+        # compressed oops, but the page still reaches the cap: a 7.8 GiB
+        # heap on 4 cores starts with a ~2.3 GB execution pool (half of
+        # 0.6 x (heap - 300 MB)), / 4 cores / 16 = ~36 MB, rounded up to
+        # a 64 MB page.  A broadcast hash relation of a handful of rows
+        # then holds a 64 MB array, and each broadcast still awaiting the
         # ContextCleaner pins that much heap.  1 MB is Spark's floor; a
         # record larger than a page still gets a page of its own size.
         conf["spark.buffer.pageSize"] = "1m"

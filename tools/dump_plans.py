@@ -243,7 +243,9 @@ def _adj_pruned_probe(spark, sf_dir):
     because the kernels run it during CONSTRUCTION behind
     localCheckpoints, so the registered queries' FINAL plans can never
     exhibit it."""
+    import shutil
     import tempfile
+    import weakref
 
     from pyspark.sql import functions as F
 
@@ -256,12 +258,17 @@ def _adj_pruned_probe(spark, sf_dir):
     half = spark.range(5000).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
-    store = StateStore(tempfile.mkdtemp(prefix=_ADJ_ROOT_PREFIX))
+    root = tempfile.mkdtemp(prefix=_ADJ_ROOT_PREFIX)
+    store = StateStore(root)
     store.commit(
         0, append={"adj": adj_rows(half)}, partition_by={"adj": ["__bkt"]}
     )
     keys = spark.range(64).select(F.col("id").alias("src"))
-    return read_pruned(spark, store.dirs("adj"), keys, "src long, dst long")
+    pruned = read_pruned(spark, store.dirs("adj"), keys, "src long, dst long")
+    # the store lives as long as the plan that reads it: main() drops the
+    # DataFrame once its plan is dumped (at the latest, at exit)
+    weakref.finalize(pruned, shutil.rmtree, root, True)
+    return pruned
 
 
 def _verify_bcast_probe(spark, sf_dir):

@@ -270,7 +270,7 @@ NOTES = {
     "q_incremental_embedding_neardup": "(delta band signatures probe the capped index; candidate volume scales with the delta share of each bucket) ",
     "q_lsh_index_upsert": "(linear by construction: one signature pass over base+delta and one (seed,minhash) window; output = 8 rows per shingled doc) ",
     "q_script_mix": "(translate() char-map counts; the 4-regex-pass form measured 4.1x) ",
-    "q_pagerank": "(edge-gen bound: dedup-(part,supp)-then-equi-join pair emission [beat the collect_set form in the r5 ab_pagerank A/B, gap widening with scale]; r7 interleaved A/B [tools/ab_pr_forms.py, min of 4, one process] adjudicated the r6 suspicions: rounded-vs-BigDecimal message sum WITHIN NOISE [4.94s vs 5.07s sf0.1, 20.7s vs 21.3s x10] so the r6 batch delta was host noise, and broadcast-vs-shuffle-join rank distribution within noise at x10 for iters 3 and 10 [14.9/13.4s, 22.6/24.1s] - defaults stay rounded+broadcast, the join form is the beyond-broadcast-memory path behind pagerank(broadcast_ranks=False); iterations shuffle only partial-aggregated per-dst message sums, plan-gated in PLANS.md) ",
+    "q_pagerank": "(edge-gen bound: dedup-(part,supp)-then-equi-join pair emission beat the collect_set form at sf0.1 and x10; the rounded message sum and the broadcast share vector each measured within noise of their alternatives - those A/Bs, and the shuffle-join rank form to rebuild if a share vector outgrows executor memory, are in the OPTIMIZATION_r16.md appendix; levels aggregate inside the id-partitioned adjacency cut and shuffle nothing, plan-gated in PLANS.md) ",
     "q_label_propagation": "(same edge-gen profile as q_pagerank on the co-order graph; iteration shuffles are the reduced label histogram, winner via partial-agg max_by) ",
     "q_incremental_label_propagation": "(delta-edge restart, integer twin of q_incremental_pagerank: stored per-iteration labels, seeds re-take min-neighbor, their 1-hop ball re-votes the mode; oracle = full rebuild) ",
     "q_item_cosine": "(linear pair volume: disjoint-key replicas keep basket sizes constant so C(b,2) pairs grow exactly x10 and saturate the fan-out stage; basket cap 64 bounds the quadratic term on pathological baskets) ",
