@@ -2,30 +2,26 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 Without that variable the session takes one thread per host CPU.
 
-Output contract (the driver tails stdout and parses the LAST line):
-the FINAL stdout line is a JSON object carrying the suite total, the
-per-query ``queries`` map (interleaved min — the noise-robust
-estimator), the host-speed canaries, sf, and the resources the run
-resolved (``cpus``, ``master``, ``defaultParallelism``,
-``driver_memory``).  MEASUREMENT-CONTRACT FIX
-(round 16, VERDICT r15 task #2): through r15 the per-query map rode an
-EARLIER NDJSON line (``"detail": "interleaved_min"``) and the final
-line carried totals only, which left the driver's PERF machinery blind
-(PERF_r15: ``per_query: {}``, ``n_common: 0``, geomean null).  The map
-is ~1.5 KB — well within a tail capture — so it now ALSO rides the
-final line as ``queries``; the earlier NDJSON detail lines are kept
-unchanged for human/NDJSON consumers and for continuity with r12-r15
-logs.  Since round 12 the headline ``value`` is the noise-robust
-Σ(per-query min over all passes); the single-pass batch-order total
-rides alongside as ``batch_total`` (rationale at the emit site).
+This module owns the one timed run every measuring tool uses
+(:func:`timed_run`), the one sampling loop (:func:`measure`) and the
+one host-speed canary (:func:`host_canary`).
 
-Each query is fully materialized through a noop sink (no driver-side
-collect skew); a warm-up pass primes the JVM/codegen so the numbers
-reflect steady-state plan execution, which is what scales.  The host
-canary (fixed 1-core python loop + fixed all-core Spark job, min of 3)
-is emitted every round so cross-round Σ(min) deltas can be normalized
-mechanically: this shared host has shifted ±35% with no code change
-(r6→r7), and without a canary every such shift costs an investigation.
+Invariant: a timed run starts its clock before the DataFrame is built
+(eager construction jobs count), writes the query to the noop sink with
+an ``Observation`` row count, and cleans up untimed: ``clearCache()``,
+``gc.collect()``, then ``System.gc()`` (the ContextCleaner frees cut and
+broadcast blocks only after a JVM GC, and blocks left pinned push a
+stall into a later query's timed window).
+
+Output contract (the driver tails stdout and parses the LAST line):
+the FINAL stdout line is a JSON object carrying ``value`` = Σ(per-query
+min over every sample), the single-pass ``batch_total``, the per-query
+``queries`` map (interleaved min), the host-speed ``canary`` and the
+canary-normalized totals, sf, the resources the run resolved (``cpus``,
+``master``, ``defaultParallelism``, ``driver_memory``), and per-query
+``jobs`` and ``construct_s`` of each query's first timed run.  Keys are
+only ever added.  The history of these choices is in OPTIMIZATION_r16.md
+("bench.py measurement contract").
 """
 
 from __future__ import annotations
@@ -35,7 +31,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from end_to_end_datapipeline_project_spark.registry import all_queries
 from end_to_end_datapipeline_project_spark.session import (
@@ -97,17 +94,119 @@ HEADLINE = [
     "q_correlation_matrix",
 ]
 
+#: fixed-work canary references: BENCH_r13.json python_1core_sec and
+#: BENCH_r14.json spark_allcores_sec
+REF_CANARY = 0.132
+REF_SPARK_CANARY = 0.113
+
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def release(spark) -> None:
+    """Free what the last run pinned: cached tables, Python-held
+    DataFrames, then (through a JVM GC) cut and broadcast blocks."""
+    import gc
+
+    spark.catalog.clearCache()
+    gc.collect()
+    spark._jvm.System.gc()
+
+
+def drain(spark) -> None:
+    """Wait until the listener bus has delivered every event, so the
+    status store holds the jobs and stages just run."""
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def spark_probe(spark):
+    """perfbench's job-group counter on this session (imported here:
+    perfbench imports this module)."""
+    path = os.path.join(ROOT, "perfbench")
+    if path not in sys.path:
+        sys.path.insert(0, path)
+    from measure import SparkProbe
+
+    return SparkProbe(spark)
+
+
+def timed_run(spark, build) -> tuple[float, int, float]:
+    """Time ``build()`` plus the noop write of the DataFrame it returns,
+    then :func:`release` untimed.  Returns (wall s, output rows,
+    construction s)."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    t0 = time.time()
+    df = build()
+    built = time.time() - t0
+    materialize(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    wall = time.time() - t0
+    rows = obs.get["rows"]
+    release(spark)
+    return wall, rows, built
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Prime the JVM, codegen, parquet footers and the Python/Arrow
+    worker pool, untimed."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    materialize(all_queries()["q_pricing_summary"](spark, sf_dir))
+    materialize(
+        spark.range(32).repartition(32).mapInPandas(lambda it: it, "id long")
+    )
+    r = spark.range(1024).withColumn("g", F.col("id") % 8)
+    materialize(
+        r.withColumn("rn", F.row_number().over(Window.partitionBy("g").orderBy("id")))
+        .join(F.broadcast(r.groupBy("g").count()), "g")
+    )
+
+
+def measure(spark, names: list[str], sf_dir: str) -> dict[str, dict]:
+    """The bench loop over ``names``: a warm-up, a batch pass (a second
+    sample for a query whose first exceeds 1 s), then
+    $SPARK_GRAFT_BENCH_SWEEPS (default 2) round-robin sweeps, which
+    spread a host CPU-steal burst over every query instead of the one
+    it lands on.  Each query's first run is counted in a job group of
+    its own.  Returns per query ``samples`` (every timed wall, in run
+    order), ``batch`` (min of the batch pass), ``jobs`` and
+    ``construct_s`` (of the first run)."""
+    queries = all_queries()
+    probe = spark_probe(spark)
+    warm_up(spark, sf_dir)
+
+    def build(name: str):
+        return lambda: queries[name](spark, sf_dir)
+
+    out: dict[str, dict] = {}
+    for name in names:
+        with probe.group(f"bench:{name}"):
+            wall, _, built = timed_run(spark, build(name))
+        drain(spark)
+        samples = [wall]
+        if wall > 1.0:
+            samples.append(timed_run(spark, build(name))[0])
+        out[name] = {
+            "samples": samples,
+            "batch": min(samples),
+            "jobs": probe.group_stats(f"bench:{name}")["jobs"],
+            "construct_s": built,
+        }
+    for _ in range(int(os.environ.get("SPARK_GRAFT_BENCH_SWEEPS", "2"))):
+        for name in names:
+            out[name]["samples"].append(timed_run(spark, build(name))[0])
+    return out
+
+
 def host_canary(spark) -> dict[str, float]:
     """Fixed-work host-speed measurements recorded beside the suite
-    totals (same probes as tools/ab_bench.py): a pure-Python 1-core
-    arithmetic loop and a fixed all-core Spark range-sum, min of 3
-    each.  Divide cross-round Σ(min) deltas by the canary ratio before
-    reading them as regressions."""
+    totals: a pure-Python 1-core arithmetic loop and a fixed all-core
+    Spark range-sum, min of 3 each.  Divide cross-round Σ(min) deltas by
+    the canary ratio before reading them as regressions."""
 
     def timeit(fn) -> float:
         t0 = time.time()
@@ -133,137 +232,44 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
-    queries = all_queries()
-
-    # warm-up: prime JVM, codegen, parquet footers, and the Python/Arrow
-    # worker pool (mapInPandas queries pay worker fork + Arrow init once
-    # per executor; steady state is what scales) — not timed
-    materialize(queries["q_pricing_summary"](spark, sf_dir))
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    # generic window + broadcast-join warmers (compile WindowExec/BHJ
-    # codegen paths once, outside the timed region)
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as _F
-
-    _r = spark.range(1024).withColumn("g", _F.col("id") % 8)
-    materialize(
-        _r.withColumn(
-            "rn", _F.row_number().over(_W.partitionBy("g").orderBy("id"))
-        ).join(_F.broadcast(_r.groupBy("g").count()), "g")
-    )
-
-    # report the MIN of two timed passes for any query whose first pass
-    # exceeds 1 s: the shared host this runs on shows 2-5x run-to-run
-    # variance from CPU steal, and the min is the closest observable to
-    # the steady-state plan execution cost (the quantity that scales
-    # with cluster size) — a single sample mostly measures host
-    # contention at that instant.  Sub-second queries keep one sample:
-    # their absolute noise contribution is small and the second pass
-    # would double total bench wall for nothing.
-    def timed(name: str) -> float:
-        t0 = time.time()
-        materialize(queries[name](spark, sf_dir))
-        dt = time.time() - t0
-        # untimed: release the previous run's localCheckpoint / broadcast
-        # blocks (ContextCleaner frees them only after a JVM GC, and
-        # letting them pile up makes later heavy queries pay a
-        # multi-second stall inside their timed window)
-        spark._jvm.System.gc()
-        return dt
-
-    samples: dict[str, list[float]] = {n: [] for n in HEADLINE}
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        best = timed(name)
-        samples[name].append(best)
-        if best > 1.0:
-            t = timed(name)
-            samples[name].append(t)
-            best = min(best, t)
-        timings[name] = round(best, 3)
-
-    # interleaved sweeps (tools/ab_bench.py methodology folded into the
-    # bench ritual): the batch numbers above concentrate any host
-    # CPU-steal burst on whichever query was running; two extra ROUND-
-    # ROBIN sweeps spread contention across all queries, and the
-    # per-query MIN over every sample is the quiet-host estimate — the
-    # noise-robust number rounds should be compared on.
-    for _ in range(int(os.environ.get("SPARK_GRAFT_BENCH_SWEEPS", "2"))):
-        for name in HEADLINE:
-            samples[name].append(timed(name))
-
+    res = measure(spark, HEADLINE, sf_dir)
     canary = host_canary(spark)
 
+    timings = {n: round(r["batch"], 3) for n, r in res.items()}
+    imins = {n: round(min(r["samples"]), 3) for n, r in res.items()}
     total = round(sum(timings.values()), 3)
-    imins = {n: round(min(ts), 3) for n, ts in samples.items()}
+    value = round(sum(imins.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # bulky per-query dicts go on their own lines (human/NDJSON
-    # consumers); the driver parses only the short FINAL line below
+    # bulky per-query dicts also go on their own lines for NDJSON readers
     print(json.dumps({"detail": "batch_queries", "queries": timings}))
     print(json.dumps({"detail": "interleaved_min", "queries": imins}))
-    # headline `value` = Σ per-query MIN over every sample (first-pass
-    # batch + interleaved sweeps): r11's batch-order total read +10%
-    # round-over-round while the same-process interleaved A/B read -12%
-    # — the batch total concentrates host CPU-steal bursts on whichever
-    # query they land on, so the driver-recorded number whipsawed with
-    # host noise.  The min-of-samples total is the quiet-host estimate
-    # (the steady-state plan cost that actually scales); the batch-order
-    # single-pass total stays alongside as `batch_total`.
-    # canary-normalized total (VERDICT r13 task #6): Σ(min) scaled by
-    # this host's python canary against the fixed reference canary
-    # below, so cross-round comparisons on drifting shared hosts have
-    # ONE number both the builder's and the driver's records can use
-    # (r13: the A/B appendix read "flat" while the driver record read
-    # −6%, with a 20%-apart canary doing the explaining).  The
-    # reference value is the r13 driver record's canary — normalizing
-    # every round to the same fixed host-speed unit.
-    ref_canary = 0.132  # BENCH_r13.json python_1core_sec
-    ref_spark_canary = 0.113  # BENCH_r14.json spark_allcores_sec
-    value = round(sum(imins.values()), 3)
     print(
         json.dumps(
             {
                 "metric": "headline_suite_total",
-                # schema marker (ADVICE r12): `value` is the
-                # Σ(per-query min) estimator since r12 — consumers can
-                # detect the change instead of misreading it against
-                # pre-r12 batch-order totals
                 "headline": "sum_min",
                 "value": value,
                 "value_canary_norm": round(
-                    value * ref_canary / canary["python_1core_sec"], 3
+                    value * REF_CANARY / canary["python_1core_sec"], 3
                 ),
-                # spark-canary-normalized total (VERDICT r15 "what's
-                # wrong" #4): in r15 the 1-core python canary and the
-                # all-core spark canary DISAGREED (python said host 32%
-                # faster, spark said 25% slower) — single-core and
-                # multicore host speed decouple under CPU steal, and the
-                # suite is multicore work, so the spark canary is the
-                # honest deflator for Σ(min).  Both are emitted; prefer
-                # this one for cross-round suite comparisons.
+                # the suite is multicore work: prefer this deflator
                 "value_canary_norm_spark": round(
-                    value * ref_spark_canary / canary["spark_allcores_sec"], 3
+                    value * REF_SPARK_CANARY / canary["spark_allcores_sec"], 3
                 ),
-                "canary_ref_spark": ref_spark_canary,
-                "canary_ref": ref_canary,
+                "canary_ref_spark": REF_SPARK_CANARY,
+                "canary_ref": REF_CANARY,
                 "unit": "sec",
                 "n_queries": len(timings),
                 "batch_total": total,
                 "canary": canary,
-                # per-query interleaved-min map — the driver's PERF
-                # contract parses THIS line only (round-16 fix, see
-                # module docstring); keys here are a superset-stable
-                # set: entries may be added round-over-round, never
-                # removed or renamed
                 "queries": imins,
                 "sf": sf_val,
-                # the resources this run resolved (VERDICT r16 #1)
                 "cpus": default_parallelism(),
                 "master": spark.sparkContext.master,
                 "defaultParallelism": spark.sparkContext.defaultParallelism,
                 "driver_memory": spark.conf.get("spark.driver.memory", None),
+                "jobs": {n: r["jobs"] for n, r in res.items()},
+                "construct_s": {n: round(r["construct_s"], 3) for n, r in res.items()},
             }
         )
     )

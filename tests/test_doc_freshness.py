@@ -71,9 +71,10 @@ def test_scaling_md_matches_probe_configuration():
 
 
 def test_scaling_md_has_ab_adjudication_appendix():
-    """The interleaved-A/B appendix (tools/ab_bench.py) is the only
-    trustworthy per-query timing record on this host; scale_probe
-    preserves it across rewrites, so it must never silently vanish."""
+    """The interleaved-A/B appendix (`tools/scale_probe.py --ab`) is the
+    only trustworthy per-query timing record on this host; the other
+    probe modes rewrite only their own sections, so it must never
+    silently vanish."""
     import sys
 
     sys.path.insert(0, str(REPO / "tools"))

@@ -356,6 +356,11 @@ def canonicalize(plan: str) -> str:
     plan = re.sub(
         rf"file:[^\[\]\s,]*{_ADJ_ROOT_PREFIX}\w+", "file:<adj-root>", plan
     )
+    # staged fixtures live under a uid-suffixed root, keyed (directory
+    # and bucketed table names) by a hash of the testdata files' mtimes;
+    # a path cut short by the plan printer keeps a prefix of the hash
+    plan = re.sub(r"(spark_graft_\w+?_)\d+/[0-9a-f]{16}/", r"\1<uid>/<fp>/", plan)
+    plan = re.sub(r"\b(sg_\w+?_b_)[0-9a-f]+", r"\1<fp>", plan)
     # AQE stage numbers and whole-stage-codegen span ids are
     # execution-order-dependent (vary run to run even at one HEAD)
     plan = re.sub(r"QueryStage \d+", "QueryStage N", plan)

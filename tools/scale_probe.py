@@ -6,7 +6,19 @@ A plan whose runtime grows ≈K× on K× data is shuffle/scan bound (healthy —
 it will ride more executors); super-linear growth flags an operator whose
 fan-out or state grows with data size (the thing that kills 100 TB runs).
 
-    python tools/scale_probe.py [K]
+    python tools/scale_probe.py [K] [query ...]      sf0.1 vs ×K ratio table
+    python tools/scale_probe.py K --tail [query ...]    ×10 vs ×K growth
+    python tools/scale_probe.py K --decade [query ...]  ×30 vs ×K growth
+    python tools/scale_probe.py K --lsh-ingest       seeded LSH ingest, ×30 and ×K
+    python tools/scale_probe.py K --skew [query ...]    uniform vs hot keys at ×K
+    python tools/scale_probe.py K --sparse-lpa | --sparse-pr   delta sweep
+    python tools/scale_probe.py --ab [query ...]     bench.py's loop, interleaved
+
+Every cell is one or more ``bench.timed_run`` calls.  Each mode owns one
+SCALING.md section (``SECTIONS``, in file order) and writes it through
+``write_section``.  A run given a query subset keeps the section's rows
+for every other query; the ratio table and the A/B appendix print a
+subset run and write nothing.
 """
 
 from __future__ import annotations
@@ -14,30 +26,64 @@ from __future__ import annotations
 import os
 import sys
 import time
+import uuid
 
 #: the checkout this script lives in (tools/..)
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from py4j.protocol import Py4JJavaError  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import (  # noqa: E402
+    HEADLINE,
+    REF_SPARK_CANARY,
+    drain,
+    host_canary,
+    measure,
+    spark_probe,
+    timed_run,
+)
+from end_to_end_datapipeline_project_spark import graph  # noqa: E402
 from end_to_end_datapipeline_project_spark.registry import REGISTRY, _load  # noqa: E402
 from end_to_end_datapipeline_project_spark.session import get_spark  # noqa: E402
-from end_to_end_datapipeline_project_spark.sources import read_parquet_table  # noqa: E402
+from end_to_end_datapipeline_project_spark.sources import (  # noqa: E402
+    claim_staged,
+    read_parquet_table,
+)
 
 BASE_SF = "/root/testdata/sf0.1"
+SCALING = os.path.join(ROOT, "SCALING.md")
+#: replicas and probe state live under one uid-suffixed root
+SCALE_ROOT = f"/tmp/spark_graft_scale_{os.getuid()}"
 
-#: section header owned by tools/ab_bench.py; scale_probe preserves
-#: everything from this line onward when it rewrites SCALING.md
+RATIO_MARKER = "# SCALING — measured runtime growth"
+TAIL_MARKER = "## Output-bound tail probe"
+DECADE_MARKER = "## Decade cell (work-probe tail, tool-generated)"
+LSH_INGEST_MARKER = "## LSH maintenance ingest-only decade cell (tool-generated)"
+SKEW_MARKER = "## Skewed-key probe (hot keys, tool-generated)"
+SPARSE_LPA_MARKER = (
+    "## Sparse-graph delta-scaling probe (incremental LPA, tool-generated)"
+)
+SPARSE_MARKER = (
+    "## Sparse-graph delta-scaling probe (incremental PageRank, "
+    "tool-generated)"
+)
 AB_MARKER = "## Interleaved A/B adjudication"
 
-#: section owned by `scale_probe.py K --tail q...`: does cap-bounded
-#: growth FLATTEN one decade past x10, or was the quadratic only
-#: deferred?  Sits between the ratio table and the A/B appendix; full
-#: probe runs preserve it (ab_bench owns everything after AB_MARKER).
-TAIL_MARKER = "## Output-bound tail probe"
+#: SCALING.md's sections, each starting at its marker, in file order
+SECTIONS = (
+    RATIO_MARKER,
+    TAIL_MARKER,
+    DECADE_MARKER,
+    LSH_INGEST_MARKER,
+    SKEW_MARKER,
+    SPARSE_LPA_MARKER,
+    SPARSE_MARKER,
+    AB_MARKER,
+)
 
-#: default `--tail` subset: the four output-bound dedup queries whose
+#: default `--tail` query set: the four output-bound dedup queries whose
 #: caps the tail probe exists to audit
 TAIL_DEFAULT = (
     "q_fuzzy_match",
@@ -45,12 +91,6 @@ TAIL_DEFAULT = (
     "q_prefix_filter_join",
     "q_sorted_neighborhood",
 )
-
-
-#: section owned by `scale_probe.py K --decade`: the work-probe queries
-#: one decade past the ×30 tail cell.  Sits between the tail table and
-#: the A/B appendix; tail runs preserve it.
-DECADE_MARKER = "## Decade cell (work-probe tail, tool-generated)"
 
 
 def _pf_observed(spark, sf_dir, obs):
@@ -288,6 +328,56 @@ NOTES = {
     "q_sorted_neighborhood": "(output-bound per the rows column: replica ' replica{i}' suffixes leave 16-char probes identical across replicas, so qualifying neighbor pairs grow ~330x while input grows 10x; rank windows are bucket-partitioned with a two-level prefix sum for bases) ",
 }
 
+#: the growth probes: flag → (base scale, section, default query set)
+GROWTH = {
+    "--tail": (10, TAIL_MARKER, TAIL_DEFAULT),
+    "--decade": (30, DECADE_MARKER, tuple(WORK_PROBE_TABLES)),
+}
+
+
+def write_section(
+    marker: str, lines: list[str], subset=None, path: str = SCALING
+) -> None:
+    """Replace the section of ``path`` that starts at ``marker`` with
+    ``lines``, or insert it before the first later ``SECTIONS`` entry
+    present.  With ``subset``, an existing section keeps every line but
+    its table rows for those names, which the rows of ``lines`` replace
+    (a name without a row yet goes after the section's last row)."""
+    doc = open(path).read() if os.path.exists(path) else ""
+    at = {m: doc.index(m) for m in SECTIONS if m in doc}
+    if marker in at:
+        start = at[marker]
+        end = min((p for p in at.values() if p > start), default=len(doc))
+        if subset:
+            lines = _merge_rows(
+                doc[start:end].rstrip("\n").split("\n"), lines, subset
+            )
+    else:
+        later = SECTIONS[SECTIONS.index(marker) + 1 :]
+        start = end = min((at[m] for m in later if m in at), default=len(doc))
+    head, tail = doc[:start], doc[end:]
+    if head and not head.endswith("\n\n"):
+        head = head.rstrip("\n") + "\n\n"
+    with open(path, "w") as f:
+        f.write(head + "\n".join(lines) + ("\n\n" if tail else "\n") + tail)
+    print(f"'{marker}' written to {path}")
+
+
+def _merge_rows(old: list[str], new: list[str], names) -> list[str]:
+    out = list(old)
+    for name in names:
+        row = next(line for line in new if line.startswith(f"| {name} |"))
+        hit = [i for i, line in enumerate(out) if line.startswith(f"| {name} |")]
+        if hit:
+            out[hit[0]] = row
+        else:
+            last = max(
+                (i for i, line in enumerate(out) if line.startswith("|")),
+                default=len(out) - 1,
+            )
+            out.insert(last + 1, row)
+    return out
+
 
 def _replicated(spark, table: str, k: int):
     """×k replica of one sf0.1 table with disjoint key spaces (the
@@ -323,13 +413,11 @@ def _replicated(spark, table: str, k: int):
 
 
 def build(spark, k: int, tables: tuple | None = None) -> str:
-    from end_to_end_datapipeline_project_spark.sources import claim_staged
-
     subset = tuple(KEY_OFFSETS) if tables is None else tables
     # partial builds publish under their own suffix so a later FULL ×K
     # probe never claims a directory that holds only a table subset
     suffix = "" if tables is None else "_" + "-".join(sorted(subset))
-    out = f"/tmp/spark_graft_scale_{os.getuid()}/x{k}{suffix}"
+    out = f"{SCALE_ROOT}/x{k}{suffix}"
 
     def _build(tmp: str) -> None:
         os.makedirs(tmp, exist_ok=True)
@@ -344,84 +432,168 @@ def build(spark, k: int, tables: tuple | None = None) -> str:
     return out
 
 
-def _tail_probe(spark, run, k: int, big_dir: str, names: list) -> None:
-    """One decade past the standard probe: time each query at ×10 AND
-    ×K (default 30) and compare WALL growth to OUTPUT growth over the
-    ×10→×K step.  For the output-bound queries (candidate pairs grow
-    with replica k-cliques), a healthy cap means wall tracks
-    max(output, data) growth; wall outgrowing both flags a quadratic
-    that the cap only deferred.  Rewrites the TAIL_MARKER section of
-    SCALING.md, preserving the ratio table before it and the A/B
-    appendix after it."""
-    x10_dir = build(spark, 10)
-    run("q_pricing_summary", x10_dir)
-    run("q_pricing_summary", big_dir)
-    rows_out = [
-        TAIL_MARKER,
+def _scale_dir(spark, scale: int, tables: tuple | None = None) -> str:
+    """A ×scale replica holding ``tables`` (every table when None): a
+    published full build when it has them all, else a build of just
+    those tables (a full ×100 build writes tens of millions of rows a
+    one-table probe never scans)."""
+    full = f"{SCALE_ROOT}/x{scale}"
+    if tables is None or all(
+        os.path.exists(f"{full}/{t}.parquet/_SUCCESS") for t in tables
+    ):
+        return build(spark, scale)
+    return build(spark, scale, tables)
+
+
+def run(spark, name, sf_dir: str, work: bool = False) -> tuple:
+    """One ``bench.timed_run`` of a registry query (or of a ``(spark,
+    sf_dir)`` builder) at ``sf_dir``.  With ``work``, the WORK_PROBES form
+    adds a CollectMetrics count of the pre-cap rows to the same run.
+    Returns (wall s, output rows, work rows | None)."""
+    from pyspark.sql import Observation
+
+    wobs = Observation() if work else None
+    if work:
+        build_df = lambda: WORK_PROBES[name](spark, sf_dir, wobs)  # noqa: E731
+    else:
+        fn = name if callable(name) else REGISTRY[name].spark_fn
+        build_df = lambda: fn(spark, sf_dir)  # noqa: E731
+    wall, rows, _ = timed_run(spark, build_df)
+    return wall, rows, wobs.get["work_rows"] if work else None
+
+
+def _measure(probe, name, sf_dir: str, work: bool = False) -> tuple:
+    """Min of 2 runs at one scale, each in a job group of its own.  With
+    ``work`` and a WORK_PROBES entry, the first run carries the pre-cap
+    work count, so it costs no extra execution of the scored plan.
+    Returns (min wall s, output rows, work rows | None, longest task ms
+    of the min-wall run | None)."""
+    runs = []
+    for i in range(2):
+        group = f"scale-probe-{uuid.uuid4().hex}"
+        with probe.group(group):
+            observed = work and i == 0 and name in WORK_PROBES
+            runs.append((*run(probe.spark, name, sf_dir, observed), group))
+    wall, _, _, group = min(runs, key=lambda r: r[0])
+    return wall, runs[0][1], runs[0][2], _max_task_ms(probe, group)
+
+
+def _max_task_ms(probe, group: str) -> float | None:
+    """Longest completed task of a job group's stages, in ms, from the
+    status store: the straggler gauge (a hot key shows up as one task
+    holding its stage open after its siblings finish).  Skipped stages
+    have no task summary."""
+    drain(probe.spark)
+    tracker = probe.sc.statusTracker()
+    store = probe.sc._jsc.sc().statusStore()
+    stages = {
+        int(s)
+        for job in tracker.getJobIdsForGroup(group)
+        if (info := tracker.getJobInfo(job)) is not None
+        for s in info.stageIds
+    }
+    top = probe.sc._gateway.new_array(probe.sc._jvm.double, 1)
+    top[0] = 1.0  # the 100th percentile
+    longest = 0.0
+    for sid in stages:
+        try:
+            attempt = store.lastStageAttempt(sid).attemptId()
+        except Py4JJavaError:  # evicted from the store
+            continue
+        q = store.taskSummary(sid, attempt, top)
+        if q.isDefined():
+            longest = max(longest, float(q.get().duration().apply(0)))
+    return longest or None
+
+
+def _ratio_table(probe, k: int, subset: list) -> None:
+    """sf0.1 vs ×K wall and output rows for every PROBES query."""
+    spark = probe.spark
+    big_dir = build(spark, k)
+    # warm both datasets' footers + codegen with one cheap query each
+    run(spark, "q_pricing_summary", BASE_SF)
+    run(spark, "q_pricing_summary", big_dir)
+    lines = [
+        "# SCALING — measured runtime growth on ×%d data" % k,
         "",
-        f"`python tools/scale_probe.py {k} --tail ...` — ×10 vs ×{k} "
-        f"(data grows {k / 10:.0f}×; min of 2 per cell).  Verdict rule: "
-        "wall growth ≤ 1.25 × max(data growth, output growth, work "
-        "growth) ⇒ the candidate caps bound the tail; above that ⇒ the "
-        "quadratic was deferred, not removed.  `work rows` (only for "
-        "emission-capped EXACT queries, see WORK_PROBES) counts the "
-        "pre-cap qualifying rows the algorithm must score to rank the "
-        "cap's survivors — for those queries post-cap output "
-        "understates intrinsic growth by construction.  Wall includes "
-        "DataFrame CONSTRUCTION (eager localCheckpoint materializations "
-        "count — ADVICE r9), so cells are not comparable to pre-r10 "
-        "tables.",
+        f"`python tools/scale_probe.py {k}` replicates sf0.1 ×{k} with disjoint",
+        "key spaces (≈6M lineitem rows) and compares per-query runtimes.",
+        "ratio ≈ K ⇒ scan/shuffle-bound (healthy: more executors absorb it);",
+        "ratio ≫ K ⇒ super-linear fan-out or state — a 100 TB red flag.",
+        "Wall includes DataFrame construction (eager localCheckpoint",
+        "materializations count — ADVICE r9); min of 2 per cell.",
         "",
-        f"| query | ×10 (s) | ×{k} (s) | wall ×{k}/×10 | "
-        f"out rows ×10→×{k} | work rows ×10→×{k} | verdict |",
+        "| query | sf0.1 (s) | ×%d (s) | ratio (ideal ≈%d) | out rows sf0.1→×%d |" % (k, k, k),
+        "|---|---|---|---|---|",
+    ]
+    for name in subset or PROBES:
+        t_small, rows_small, _, _ = _measure(probe, name, BASE_SF)
+        t_big, rows_big, _, _ = _measure(probe, name, big_dir)
+        ratio = t_big / t_small if t_small > 0 else float("inf")
+        rows_ratio = rows_big / rows_small if rows_small else float("inf")
+        note = NOTES.get(name, "")
+        lines.append(
+            f"| {name} | {t_small:.2f} | {t_big:.2f} | {ratio:.1f}× {note}| "
+            f"{rows_small}→{rows_big} ({rows_ratio:.1f}×) |"
+        )
+        print(lines[-1], flush=True)
+    if subset:
+        print("(subset run: SCALING.md not rewritten)")
+        return
+    write_section(RATIO_MARKER, lines)
+
+
+def _growth_probe(probe, flag: str, k: int, subset: list) -> None:
+    """`--tail` (×10 → ×K) and `--decade` (×30 → ×K): wall growth judged
+    against output growth and, for emission-capped EXACT queries, pre-cap
+    work growth.  For the output-bound queries a healthy cap means wall
+    tracks max(output, work, data) growth; wall outgrowing all three
+    flags a quadratic the cap only deferred."""
+    base, marker, default = GROWTH[flag]
+    names = subset or list(default)
+    tables = (
+        None
+        if any(n not in WORK_PROBE_TABLES for n in names)
+        else tuple(sorted({t for n in names for t in WORK_PROBE_TABLES[n]}))
+    )
+    small, big = (_scale_dir(probe.spark, s, tables) for s in (base, k))
+    lines = [
+        marker,
+        "",
+        f"`python tools/scale_probe.py {k} {flag}` — ×{base} vs ×{k} "
+        f"(data grows {k / base:.1f}×; min of 2 per cell; work rows ride "
+        "the first timed run's CollectMetrics, no extra pass).  Verdict "
+        "rule: wall growth ≤ 1.25 × max(data, output, work) growth ⇒ the "
+        "candidate caps bound the tail; above ⇒ the quadratic was "
+        "deferred, not removed.  `work rows` (only for emission-capped "
+        "EXACT queries, see WORK_PROBES) counts the pre-cap qualifying "
+        "rows the algorithm must score to rank the cap's survivors — for "
+        "those queries post-cap output understates intrinsic growth by "
+        "construction.  Wall includes DataFrame construction (eager cut "
+        "materializations count).",
+        "",
+        f"| query | ×{base} (s) | ×{k} (s) | wall ×{k}/×{base} | "
+        f"out rows ×{base}→×{k} | work rows ×{base}→×{k} | verdict |",
         "|---|---|---|---|---|---|---|",
     ]
-    data_ratio = k / 10
     for name in names:
-        r10 = _measure(run, name, x10_dir)
-        rk = _measure(run, name, big_dir)
-        rows_out.append(_growth_row(name, r10, rk, data_ratio))
-        print(rows_out[-1], flush=True)
-    path = os.path.join(ROOT, "SCALING.md")
-    doc = open(path).read()
-    appendix = ""
-    # the decade section (this tool's --decade mode) and the A/B
-    # appendix (tools/ab_bench.py) both live after the tail table —
-    # preserve whichever comes first
-    for m in (DECADE_MARKER, SKEW_MARKER, AB_MARKER):
-        if m in doc:
-            appendix = doc[doc.index(m) :]
-            doc = doc[: doc.index(m)]
-            break
-    if TAIL_MARKER in doc:
-        doc = doc[: doc.index(TAIL_MARKER)]
-    with open(path, "w") as f:
-        f.write(
-            doc.rstrip()
-            + "\n\n"
-            + "\n".join(rows_out)
-            + "\n\n"
-            + appendix
+        lines.append(
+            _growth_row(
+                name,
+                _measure(probe, name, small, work=True),
+                _measure(probe, name, big, work=True),
+                k / base,
+            )
         )
-    print(f"tail section written to {path}")
-
-
-def _measure(run, name: str, sf_dir: str) -> tuple:
-    """min-of-2 timing at one scale; for WORK_PROBES queries the FIRST
-    run carries the pre-cap work CollectMetrics, so the intrinsic-work
-    count costs no extra execution of the scored plan (ADVICE r8).
-    Returns (t_min, out_rows, work_rows|None)."""
-    observed = name in WORK_PROBES
-    first = run(name, sf_dir, observed=observed)
-    second = run(name, sf_dir)
-    return min(first[0], second[0]), first[1], first[2]
+        print(lines[-1], flush=True)
+    write_section(marker, lines, subset)
 
 
 def _growth_row(
     name: str, small: tuple, big: tuple, data_ratio: float
 ) -> str:
-    t_s, n_s, w_s = small
-    t_b, n_b, w_b = big
+    t_s, n_s, w_s, _ = small
+    t_b, n_b, w_b, _ = big
     wall = t_b / t_s if t_s > 0 else float("inf")
     out_ratio = n_b / n_s if n_s else float("inf")
     work_cell, work_ratio = "—", 0.0
@@ -439,107 +611,6 @@ def _growth_row(
         f"{n_s}→{n_b} ({out_ratio:.1f}×) | {work_cell} | {verdict} |"
     )
 
-
-def _decade_probe(spark, run, k: int, subset: list | None = None) -> None:
-    """`--decade`: one decade past the ×30 tail cell for the
-    super-linear-suspect queries (default: every WORK_PROBE_TABLES
-    entry) — ×30 vs ×K wall growth judged against output and, for
-    emission-capped EXACT queries, pre-cap work growth, so the ×100
-    claims in SCALING.md are regenerable in one command instead of
-    hand-built one-offs (VERDICT r8 task #4; r10 task #5 extended the
-    set with the edge-gen/pair-volume families).  Replicates only the
-    tables the subset reads (a full ×100 build would write tens of
-    millions of rows the subset never scans).  Rewrites matching rows
-    of the DECADE_MARKER section (a subset run updates its own rows
-    and keeps the others), preserving the ratio/tail tables before it
-    and the A/B appendix after it."""
-    base = 30  # the tail probe's top scale — the decade is ×30 → ×K
-    names = [n for n in (subset or list(WORK_PROBE_TABLES))]
-    unknown = [n for n in names if n not in WORK_PROBE_TABLES]
-    if unknown:
-        raise SystemExit(
-            f"--decade needs a WORK_PROBE_TABLES entry for {unknown}"
-        )
-    tables = tuple(
-        sorted({t for n in names for t in WORK_PROBE_TABLES[n]})
-    )
-
-    def _dir_for(scale: int) -> str:
-        # a FULL ×scale replica published by an earlier probe run is a
-        # superset of the subset build — reuse it only when it actually
-        # carries every table this subset scans
-        full = f"/tmp/spark_graft_scale_{os.getuid()}/x{scale}"
-        if all(
-            os.path.exists(f"{full}/{t}.parquet/_SUCCESS") for t in tables
-        ):
-            return full
-        return build(spark, scale, tables)
-
-    base_dir = _dir_for(base)
-    big_dir = _dir_for(k)
-    data_ratio = k / base
-    rows_out = [
-        DECADE_MARKER,
-        "",
-        f"`python tools/scale_probe.py {k} --decade` — ×{base} vs ×{k} "
-        f"(data grows {data_ratio:.1f}×; min of 2 per cell; work rows "
-        "ride the first timed run's CollectMetrics, no extra pass).  "
-        "Same verdict rule as the tail probe: wall growth ≤ 1.25 × "
-        "max(data, output, work) growth ⇒ the caps bound a SECOND "
-        "decade; above ⇒ the quadratic was deferred, not removed.  "
-        "Wall includes DataFrame construction (eager localCheckpoint "
-        "materializations count — ADVICE r9).",
-        "",
-        f"| query | ×{base} (s) | ×{k} (s) | wall ×{k}/×{base} | "
-        f"out rows ×{base}→×{k} | work rows ×{base}→×{k} | verdict |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    fresh = {}
-    for name in names:
-        r_base = _measure(run, name, base_dir)
-        r_big = _measure(run, name, big_dir)
-        fresh[name] = _growth_row(name, r_base, r_big, data_ratio)
-        print(fresh[name], flush=True)
-    path = os.path.join(ROOT, "SCALING.md")
-    doc = open(path).read()
-    appendix = ""
-    for m in (LSH_INGEST_MARKER, SKEW_MARKER, AB_MARKER):
-        if m in doc:
-            appendix = doc[doc.index(m) :]
-            doc = doc[: doc.index(m)]
-            break
-    # keep rows from a previous decade run for queries outside this
-    # subset (a q_pagerank-only re-probe must not drop the
-    # prefix-filter-join ×100 cell)
-    kept = {}
-    if DECADE_MARKER in doc:
-        old = doc[doc.index(DECADE_MARKER) :]
-        doc = doc[: doc.index(DECADE_MARKER)]
-        for line in old.splitlines():
-            if line.startswith("| q_"):
-                kept[line.split("|")[1].strip()] = line
-    for name in WORK_PROBE_TABLES:
-        if name in fresh:
-            rows_out.append(fresh[name])
-        elif name in kept:
-            rows_out.append(kept[name])
-    with open(path, "w") as f:
-        f.write(
-            doc.rstrip()
-            + "\n\n"
-            + "\n".join(rows_out)
-            + "\n\n"
-            + appendix
-        )
-    print(f"decade section written to {path}")
-
-
-# --- skewed-key probe (VERDICT r10 task #1) --------------------------------
-
-#: section owned by `scale_probe.py K --skew`: hot-key (Zipfian-ish)
-#: resilience of the window/join/LSH paths.  Sits between the decade
-#: cell and the A/B appendix.
-SKEW_MARKER = "## Skewed-key probe (hot keys, tool-generated)"
 
 #: registry queries probed under skew — the window / grouped-map / LSH /
 #: graph paths whose 100 TB skew story was documented but never
@@ -651,12 +722,10 @@ def build_skew(spark, k: int) -> str:
     """×k replica with the hot-key overlay — same row counts and file
     layout as the uniform ×k build, only the key distribution differs,
     so wall-ratio deltas are attributable to skew alone."""
-    from end_to_end_datapipeline_project_spark.sources import claim_staged
-
     # key the staged dir by the overlay table set: claim_staged reuses a
     # published dir as-is, so a SKEW_TABLES change must land elsewhere
     out = (
-        f"/tmp/spark_graft_scale_{os.getuid()}/x{k}_skew_"
+        f"{SCALE_ROOT}/x{k}_skew_"
         + "-".join(t[:2] for t in sorted(SKEW_TABLES))
     )
 
@@ -686,9 +755,7 @@ def build_skew_part(spark, k: int) -> str:
     else — so the build costs one table, not four.  Selection hashes
     (l_orderkey, l_linenumber, l_suppkey): deterministic, and
     independent of the column being remapped."""
-    from end_to_end_datapipeline_project_spark.sources import claim_staged
-
-    out = f"/tmp/spark_graft_scale_{os.getuid()}/x{k}_skewpart"
+    out = f"{SCALE_ROOT}/x{k}_skewpart"
 
     def _build(tmp: str) -> None:
         os.makedirs(tmp, exist_ok=True)
@@ -726,53 +793,6 @@ def _wedge_count(edges) -> int:
     )
     return int(row["w"] or 0)
 
-
-class _TaskWatch:
-    """Max completed-task duration between mark() and max_task_ms(),
-    via the Spark UI REST API on the probe's own local session (the
-    straggler gauge: a hot key shows up as one task holding the stage
-    open long after its 31 siblings finish)."""
-
-    def __init__(self, spark):
-        self._base = (
-            f"{spark.sparkContext.uiWebUrl}/api/v1/applications/"
-            f"{spark.sparkContext.applicationId}"
-        )
-        self._last = -1
-
-    def _get(self, path: str):
-        import json
-        import urllib.request
-
-        with urllib.request.urlopen(self._base + path, timeout=15) as r:
-            return json.load(r)
-
-    def mark(self) -> None:
-        try:
-            self._last = max(
-                (s["stageId"] for s in self._get("/stages")), default=-1
-            )
-        except Exception:
-            self._last = -1
-
-    def max_task_ms(self) -> float | None:
-        try:
-            stages = self._get("/stages?status=complete")
-        except Exception:
-            return None
-        mx = 0.0
-        for s in stages:
-            if s["stageId"] <= self._last:
-                continue
-            try:
-                q = self._get(
-                    f"/stages/{s['stageId']}/{s['attemptId']}"
-                    "/taskSummary?quantiles=1.0"
-                )
-                mx = max(mx, float(q["duration"][0]))
-            except Exception:
-                pass  # skipped / zero-task stages 404 their summary
-        return mx or None
 
 
 def _unsalted_join(spark, sf_dir: str):
@@ -820,11 +840,10 @@ STRAGGLER_FLOOR_MS = 5000.0
 
 
 def _skew_row(label, u, s) -> str:
-    """One markdown row of the skew table from (wall, rows, max_task_ms)
-    uniform/skew measurements — shared by the full rewrite and the
-    kept-row subset update."""
-    t_u, n_u, mt_u = u
-    t_s, n_s, mt_s = s
+    """One markdown row of the skew table from the uniform and skewed
+    ``_measure`` results."""
+    t_u, n_u, _, mt_u = u
+    t_s, n_s, _, mt_s = s
     wall = t_s / t_u if t_u > 0 else float("inf")
     out_ratio = n_s / n_u if n_u else float("inf")
     mt_cell_u = f"{mt_u / 1000:.2f}" if mt_u else "—"
@@ -843,86 +862,18 @@ def _skew_row(label, u, s) -> str:
     )
 
 
-def _skew_probe(spark, run, k: int, subset: list | None = None) -> None:
-    """`--skew`: same-scale A/B — uniform ×k keys vs 25%-hot keys —
-    for the window/grouped-map/LSH/graph/join paths.  Reports wall and
-    max-task-duration ratios; rewrites the SKEW_MARKER section of
-    SCALING.md (preserving the tables before it and the A/B appendix
-    after it).  With a SUBSET, re-measures only the named rows and
-    splices them into the existing section in place (the decade probe's
-    kept-row convention) — narrative, special rows, and adjudication
-    paragraphs stay byte-identical."""
-    # validate the subset BEFORE the expensive dataset builds (ADVICE
-    # r12): a renamed query or reformatted table row used to SystemExit
-    # only after the uniform/skew replicas were already written
-    if subset:
-        doc0 = open(os.path.join(ROOT, "SCALING.md")).read()
-        if SKEW_MARKER not in doc0:
-            raise SystemExit(
-                "no skew section in SCALING.md — run the full --skew "
-                "probe first"
-            )
-        sect0 = doc0[doc0.index(SKEW_MARKER):]
-        missing = [
-            n for n in subset
-            if not any(
-                line.startswith(f"| {n} |") for line in sect0.splitlines()
-            )
-        ]
-        if missing:
-            raise SystemExit(
-                f"no existing skew row for {missing} — run the full "
-                "--skew probe to add new rows"
-            )
-
+def _skew_probe(probe, k: int, subset: list) -> None:
+    """`--skew`: same-scale A/B — uniform ×k keys vs 25%-hot keys — for
+    the window/grouped-map/LSH/graph/join paths.  Reports wall and
+    max-task-duration ratios.  A subset run re-measures only the named
+    rows; the narrative, special rows and adjudication paragraphs of
+    the section stay as they are."""
+    spark = probe.spark
     uniform_dir = build(spark, k)
     skew_dir = build_skew(spark, k)
-    watch = _TaskWatch(spark)
-
-    def measure(name, sf_dir) -> tuple:
-        best = None  # (wall, rows, max_task_ms) from the min-wall run
-        for _ in range(2):
-            watch.mark()
-            t, rows, _ = run(name, sf_dir)
-            mt = watch.max_task_ms()
-            if best is None or t < best[0]:
-                best = (t, rows, mt)
-        return best
-
     # warm both datasets' footers + codegen
-    run("q_pricing_summary", uniform_dir)
-
-    if subset:
-        path = os.path.join(ROOT, "SCALING.md")
-        doc = open(path).read()
-        # scope the in-place replacement to the skew SECTION: the same
-        # query has rows in the ×10/decade tables too, and a whole-doc
-        # first-match replace clobbers those (observed: the ×10 row)
-        start = doc.index(SKEW_MARKER)
-        end = doc.index(AB_MARKER) if AB_MARKER in doc else len(doc)
-        head, sect, tail = doc[:start], doc[start:end], doc[end:]
-        for name in subset:
-            row = _skew_row(
-                name, measure(name, uniform_dir), measure(name, skew_dir)
-            )
-            print(row, flush=True)
-            lines = sect.splitlines()
-            for i, line in enumerate(lines):
-                if line.startswith(f"| {name} |"):
-                    lines[i] = row
-                    break
-            else:
-                raise SystemExit(
-                    f"no existing skew row for {name!r} — run the full "
-                    "--skew probe to add new rows"
-                )
-            sect = "\n".join(lines) + ("\n" if sect.endswith("\n") else "")
-        with open(path, "w") as f:
-            f.write(head + sect + tail)
-        print(f"skew rows {subset} updated in {path}")
-        return
-
-    rows_out = [
+    run(spark, "q_pricing_summary", uniform_dir)
+    lines = [
         SKEW_MARKER,
         "",
         f"`python tools/scale_probe.py {k} --skew` — uniform ×{k} keys vs "
@@ -937,16 +888,14 @@ def _skew_probe(spark, run, k: int, subset: list | None = None) -> None:
         f"a separate lineitem overlay with {100 // HOT_DENOM}% of rows "
         "on l_partkey 1 — a massive-degree vertex in the part co-order "
         "graph the main overlay never touches.  min of 2 per cell; "
-        "max-task = longest completed task in the min-wall run (UI REST "
-        "taskSummary) — the straggler gauge.  A straggler ratio whose "
-        "skew-side max task is under 5 s reads `n/a (<5 s floor)`: "
-        "balanced sub-5 s stages over a sub-second uniform denominator "
-        "are noise, not a reduce-tail (the r11/r12 "
-        "q_incremental_minhash adjudication, now encoded — VERDICT r12 "
-        "task #6).  Verdict rule (VERDICT "
-        "r10): skewed wall ≤ max(3× uniform wall, 1.25× output growth) "
-        "⇒ handled; above ⇒ the documented salting/re-window path must "
-        "actually be wired in.  The FIRST run of this probe (r11) "
+        "max-task = longest completed task in the min-wall run (the "
+        "status store's taskSummary) — the straggler gauge.  A straggler "
+        "ratio whose skew-side max task is under 5 s reads "
+        "`n/a (<5 s floor)`: balanced sub-5 s stages over a sub-second "
+        "uniform denominator are noise, not a reduce-tail.  Verdict rule "
+        "(VERDICT r10): skewed wall ≤ max(3× uniform wall, 1.25× output "
+        "growth) ⇒ handled; above ⇒ the documented salting/re-window path "
+        "must actually be wired in.  The FIRST run of this probe (r11) "
         "measured q_minhash_lsh at 7.0× wall / 11.8× straggler (one "
         "72 s task) and drove three fixes in `dedup.minhash_candidates`"
         " — hot-bucket chunking, xxhash64 verify arrays, width-pinned "
@@ -958,32 +907,32 @@ def _skew_probe(spark, run, k: int, subset: list | None = None) -> None:
         "|---|---|---|---|---|---|---|---|---|",
     ]
 
-    def emit(label, u, s):
-        rows_out.append(_skew_row(label, u, s))
-        print(rows_out[-1], flush=True)
+    def emit(label, name, skewed_dir):
+        lines.append(
+            _skew_row(
+                label,
+                _measure(probe, name, uniform_dir),
+                _measure(probe, name, skewed_dir),
+            )
+        )
+        print(lines[-1], flush=True)
 
-    for name in SKEW_PROBES:
-        emit(name, measure(name, uniform_dir), measure(name, skew_dir))
+    for name in subset or SKEW_PROBES:
+        emit(name, name, skew_dir)
+    if subset:
+        write_section(SKEW_MARKER, lines, subset)
+        return
 
     # salted-vs-unsalted A/B under the hot join key, broadcast disabled
     # (the 100 TB regime where the dim no longer broadcasts)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        emit(
-            "q_salted_join [nobcast]",
-            measure("q_salted_join", uniform_dir),
-            measure("q_salted_join", skew_dir),
-        )
-        emit(
-            "unsalted join [nobcast]",
-            measure(_unsalted_join, uniform_dir),
-            measure(_unsalted_join, skew_dir),
-        )
+        emit("q_salted_join [nobcast]", "q_salted_join", skew_dir)
+        emit("unsalted join [nobcast]", _unsalted_join, skew_dir)
         # AQE skew-join evidence for the unsalted form on skewed keys
         df = _unsalted_join(spark, skew_dir)
         df.collect()
-        plan = df._jdf.queryExecution().toString()
-        aqe_skew = "skew=true" in plan
+        aqe_skew = "skew=true" in df._jdf.queryExecution().toString()
     finally:
         spark.conf.set(
             "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
@@ -994,13 +943,9 @@ def _skew_probe(spark, run, k: int, subset: list | None = None) -> None:
     # q_item_cosine read needs its own hub (l_partkey 1)
     part_dir = build_skew_part(spark, k)
     for name in PART_HUB_PROBES:
-        emit(
-            f"{name} [part-hub]",
-            measure(name, uniform_dir),
-            measure(name, part_dir),
-        )
+        emit(f"{name} [part-hub]", name, part_dir)
 
-    rows_out += [
+    lines += [
         "",
         "Unsalted-form AQE adjudication: executed plan "
         + (
@@ -1021,17 +966,12 @@ def _skew_probe(spark, run, k: int, subset: list | None = None) -> None:
     # minimum, so id order keeps all its edges outgoing and its wedge
     # count is C(deg_hub, 2) — infeasible to enumerate, which is the
     # point.
-    from end_to_end_datapipeline_project_spark.graph import (
-        _co_order_half_edges,
-        orient_by_degree,
-    )
-
     li = read_parquet_table(spark, part_dir, "lineitem")
-    half = _co_order_half_edges(li).localCheckpoint()
+    half = graph._co_order_half_edges(li).localCheckpoint()
     w_id = _wedge_count(half)  # _co_order_half_edges emits src < dst by id
-    w_deg = _wedge_count(orient_by_degree(half))
+    w_deg = _wedge_count(graph.orient_by_degree(half))
     n_edges = half.count()
-    rows_out += [
+    lines += [
         "",
         "Degree-orientation adjudication on the part-hub edge list "
         f"({n_edges:,} co-order edges, hub = part 1): the wedge join "
@@ -1044,172 +984,59 @@ def _skew_probe(spark, run, k: int, subset: list | None = None) -> None:
         "above is the degree-oriented form running on exactly this "
         "graph.",
     ]
-
-    path = os.path.join(ROOT, "SCALING.md")
-    doc = open(path).read()
-    appendix = ""
-    # the sparse-pr section (--sparse-pr) sits between this section and
-    # the A/B appendix — preserve whichever comes first
-    for m in (SPARSE_MARKER, AB_MARKER):
-        if m in doc:
-            appendix = doc[doc.index(m) :]
-            doc = doc[: doc.index(m)]
-            break
-    if SKEW_MARKER in doc:
-        doc = doc[: doc.index(SKEW_MARKER)]
-    with open(path, "w") as f:
-        f.write(doc.rstrip() + "\n\n" + "\n".join(rows_out) + "\n\n" + appendix)
-    print(f"skew section written to {path}")
+    write_section(SKEW_MARKER, lines)
 
 
-#: section owned by `scale_probe.py K --sparse-pr` (VERDICT r12 task
-#: #7): on the SPARSE weight-floor co-order graph, does incremental
-#: PageRank's per-ingest work actually scale with the DELTA (patched
-#: nodes, wall) rather than the graph?  The dense co-supply probe cell
-#: can't show this — its 3-hop ball saturates (SCALING.md's honest
-#: caveat).  Sits after the skew section, before the A/B appendix.
-SPARSE_MARKER = (
-    "## Sparse-graph delta-scaling probe (incremental PageRank, "
-    "tool-generated)"
-)
-
-#: section owned by `scale_probe.py K --sparse-lpa` (VERDICT r13
-#: stretch #7): the same fixed-graph delta sweep on the LPA patch
-#: kernel, whose re-vote join prunes differently.  Sits after the
-#: sparse-pr section, before the A/B appendix.
-SPARSE_LPA_MARKER = (
-    "## Sparse-graph delta-scaling probe (incremental LPA, "
-    "tool-generated)"
-)
-
-
-def _sparse_pr_probe(spark, k: int) -> None:
-    """`--sparse-pr`: fix the graph (×k part co-order, weight-floor ≥2,
-    sparse by construction), sweep the DELTA SHARE (l_orderkey % mod ==
-    7 for mod = 10/100/1000), and time ONLY the per-ingest patch phase
-    against stored state built untimed through the same kernels.
-
-    r14 contract (VERDICT r13 task #1): the timed region is the honest
-    production ingest — the delta's OWN pair counts
-    (_co_order_pair_counts over delta orders only), the floor-crossing
-    check against the stored pair-weight segments pruned to the
-    delta's buckets (co_order_new_edges — the r13 probe's O(E)
-    merged-vs-base anti-join is gone), and pagerank_patch_levels over
-    src-bucketed adjacency segments with partition-pruned frontier
-    scans and an incrementally-merged degree table.  The r13 row read
-    flat ~32.5 s at every delta share because every level joined the
-    full edge list; the pass criterion now is a wall that tracks the
-    delta."""
-    import shutil
-
-    from end_to_end_datapipeline_project_spark.graph import (
-        _co_order_pair_counts,
-        co_order_new_edges,
-        co_order_state,
-        pagerank_patch_levels,
-        pagerank_seed_levels,
-    )
-
-    full = f"/tmp/spark_graft_scale_{os.getuid()}/x{k}"
-    big_dir = (
-        full
-        if os.path.exists(f"{full}/lineitem.parquet/_SUCCESS")
-        else build(spark, k, ("lineitem",))
-    )
-    li = read_parquet_table(spark, big_dir, "lineitem").localCheckpoint()
-    n_nodes = li.select("l_partkey").distinct().count()
-    state_root = f"/tmp/spark_graft_scale_{os.getuid()}/sparse_state"
-
-    rows_out = [
+#: fixed-graph delta sweeps on the sparse weight-floor co-order graph
+#: (does a patch kernel's per-ingest work scale with the DELTA rather
+#: than the graph?): flag → (section, seed kernel returning the stored
+#: state the patch kernel takes, patch kernel returning the frame the
+#: ingest ends in, what the timed region covers)
+DELTA_SWEEPS = {
+    "--sparse-pr": (
         SPARSE_MARKER,
-        "",
-        f"`python tools/scale_probe.py {k} --sparse-pr` — the ×{k} part "
-        f"co-order graph ({n_nodes:,} nodes, weight-floor ≥2, sparse "
-        "by construction) held FIXED while the ingest delta share "
-        "sweeps 10% → 0.1% (l_orderkey % mod == 7).  Timed region: the "
-        "per-ingest patch only — delta pair counts, floor-crossing "
-        "check against pair-weight segments PRUNED to the delta's "
-        "buckets, and the 3-level blast-radius re-rank through "
-        "partition-pruned scans of the src-bucketed stored adjacency "
-        "with an incrementally-merged degree table.  Stored state "
-        "(weight/adjacency segments, per-iteration rank vectors, "
-        "degrees) is built untimed through the same kernels.  The r13 "
-        "row sat flat at ~32.5 s because every level joined the FULL "
-        "edge list and degrees were recomputed from E per patch "
-        "(VERDICT r13 #1); the wall must now track the delta.",
-        "",
-        "| delta share | new edges | patched nodes | total nodes | "
-        "patched frac | patch wall (s) |",
-        "|---|---|---|---|---|---|",
-    ]
-    n_half = None
-    for mod in (10, 100, 1000):
-        cond = F.col("l_orderkey") % mod == 7
-        shutil.rmtree(state_root, ignore_errors=True)
-        # --- stored pre-ingest state, untimed
-        store, base_half = co_order_state(li.filter(~cond), state_root)
-        base_levels, outdeg0 = pagerank_seed_levels(base_half)
-        if n_half is None:
-            n_half = base_half.count()  # ~the fixed graph's edge count
-        delta_li = li.filter(cond).localCheckpoint()
-        # --- the timed per-ingest patch
-        obs: dict = {}
-        t0 = time.time()
-        dw = _co_order_pair_counts(delta_li).localCheckpoint()
-        new_half = co_order_new_edges(spark, store.dirs("weights"), dw)
-        levels, _od = pagerank_patch_levels(
-            spark, store.dirs("adj"), outdeg0, base_levels, new_half, obs=obs
-        )
-        levels[-1].count()
-        dt = time.time() - t0
-        rows_out.append(
-            f"| 1/{mod} | {obs['n_new_edges']:,} | {obs['n_patched']:,} "
-            f"| {n_nodes:,} | {obs['n_patched'] / max(n_nodes, 1):.3f} "
-            f"| {dt:.2f} |"
-        )
-        print(rows_out[-1], flush=True)
-    shutil.rmtree(state_root, ignore_errors=True)
-
-    _write_sparse_section(SPARSE_MARKER, rows_out)
+        lambda half: graph.pagerank_seed_levels(half)[::-1],
+        lambda *a, **kw: graph.pagerank_patch_levels(*a, **kw)[0][-1],
+        "the floor-crossing check against pair-weight segments pruned to "
+        "the delta's buckets, and the 3-level blast-radius re-rank "
+        "through partition-pruned scans of the src-bucketed stored "
+        "adjacency with an incrementally-merged degree table",
+    ),
+    "--sparse-lpa": (
+        SPARSE_LPA_MARKER,
+        graph.lpa_seed_levels,
+        lambda *a, **kw: graph.lpa_patch_levels(*a, **kw)[1],
+        "the pruned floor-crossing check, and lpa_patch_levels' 1-hop "
+        "re-vote through partition-pruned adjacency scans",
+    ),
+}
 
 
-def _sparse_lpa_probe(spark, k: int) -> None:
-    """`--sparse-lpa` (VERDICT r13 stretch #7): the delta-scaling sweep
-    on the SECOND patch-kernel shape — incremental LPA shares the
-    pruned-adjacency layout but its re-vote join has different pruning
-    behavior (one S1-bucket read serves both level-1 and the S2
-    expansion; level 2 gathers S2's buckets once).  Same fixed ×k
-    co-order graph, same delta sweep, same timed-region contract as
-    --sparse-pr."""
+def _delta_sweep(probe, flag: str, k: int) -> None:
+    """`--sparse-pr` / `--sparse-lpa`: hold the ×k part co-order graph
+    (weight-floor ≥2, sparse by construction) fixed, sweep the delta
+    share (l_orderkey % mod == 7 for mod = 10/100/1000), and time only
+    the per-ingest patch against stored state built untimed through the
+    same kernels.  The wall must track the delta."""
     import shutil
 
-    from end_to_end_datapipeline_project_spark.graph import (
-        _co_order_pair_counts,
-        co_order_new_edges,
-        co_order_state,
-        lpa_patch_levels,
-        lpa_seed_levels,
-    )
-
-    full = f"/tmp/spark_graft_scale_{os.getuid()}/x{k}"
-    big_dir = (
-        full
-        if os.path.exists(f"{full}/lineitem.parquet/_SUCCESS")
-        else build(spark, k, ("lineitem",))
-    )
-    li = read_parquet_table(spark, big_dir, "lineitem").localCheckpoint()
+    marker, seed, patch, covers = DELTA_SWEEPS[flag]
+    spark = probe.spark
+    li = read_parquet_table(
+        spark, _scale_dir(spark, k, ("lineitem",)), "lineitem"
+    ).localCheckpoint()
     n_nodes = li.select("l_partkey").distinct().count()
-    state_root = f"/tmp/spark_graft_scale_{os.getuid()}/sparse_state"
-
-    rows_out = [
-        SPARSE_LPA_MARKER,
+    state_root = f"{SCALE_ROOT}/sparse_state"
+    lines = [
+        marker,
         "",
-        f"`python tools/scale_probe.py {k} --sparse-lpa` — the ×{k} "
-        f"part co-order graph ({n_nodes:,} nodes) held FIXED while the "
-        "delta share sweeps 10% → 0.1%; timed region is the per-ingest "
-        "LPA patch (delta pair counts → pruned floor-crossing check → "
-        "lpa_patch_levels' 1-hop re-vote through partition-pruned "
-        "adjacency scans), stored state built untimed.",
+        f"`python tools/scale_probe.py {k} {flag}` — the ×{k} part "
+        f"co-order graph ({n_nodes:,} nodes, weight-floor ≥2, sparse by "
+        "construction) held FIXED while the ingest delta share sweeps "
+        "10% → 0.1% (l_orderkey % mod == 7).  Timed region: the "
+        f"per-ingest patch only — delta pair counts, {covers} — written "
+        "to noop.  Stored state is built untimed through the same "
+        "kernels; the wall must track the delta.",
         "",
         "| delta share | new edges | patched nodes | total nodes | "
         "patched frac | patch wall (s) |",
@@ -1218,57 +1045,41 @@ def _sparse_lpa_probe(spark, k: int) -> None:
     for mod in (10, 100, 1000):
         cond = F.col("l_orderkey") % mod == 7
         shutil.rmtree(state_root, ignore_errors=True)
-        store, base_half = co_order_state(li.filter(~cond), state_root)
-        l1b, l2b = lpa_seed_levels(base_half)
+        store, base_half = graph.co_order_state(li.filter(~cond), state_root)
+        state = seed(base_half)
         delta_li = li.filter(cond).localCheckpoint()
         obs: dict = {}
-        t0 = time.time()
-        dw = _co_order_pair_counts(delta_li).localCheckpoint()
-        new_half = co_order_new_edges(spark, store.dirs("weights"), dw)
-        l1f, l2f = lpa_patch_levels(
-            spark, store.dirs("adj"), l1b, l2b, new_half, obs=obs
-        )
-        l2f.localCheckpoint().count()
-        dt = time.time() - t0
-        rows_out.append(
+
+        def ingest():
+            dw = graph._co_order_pair_counts(delta_li).localCheckpoint()
+            new_half = graph.co_order_new_edges(spark, store.dirs("weights"), dw)
+            return patch(spark, store.dirs("adj"), *state, new_half, obs=obs)
+
+        wall = timed_run(spark, ingest)[0]
+        lines.append(
             f"| 1/{mod} | {obs['n_new_edges']:,} | {obs['n_patched']:,} "
             f"| {n_nodes:,} | {obs['n_patched'] / max(n_nodes, 1):.3f} "
-            f"| {dt:.2f} |"
+            f"| {wall:.2f} |"
         )
-        print(rows_out[-1], flush=True)
+        print(lines[-1], flush=True)
     shutil.rmtree(state_root, ignore_errors=True)
-
-    _write_sparse_section(SPARSE_LPA_MARKER, rows_out)
-
-
-#: section owned by `scale_probe.py K --lsh-ingest` (VERDICT r14
-#: missing #1 / task #2): the number the decade cell for
-#: q_incremental_minhash_clusters conflates — what does ONE delta
-#: ingest cost against EXISTING stored state?  The registered query
-#: builds the pre-ingest state (≈90% of a rebuild) INSIDE the timed
-#: cell; here the state seeds UNTIMED (the graph family's --sparse-pr
-#: discipline) and only lsh_maintenance_step + reattachment is timed.
-#: Sits between the decade cell and the skew probe.
-LSH_INGEST_MARKER = (
-    "## LSH maintenance ingest-only decade cell (tool-generated)"
-)
+    write_section(marker, lines)
 
 
-def _lsh_ingest_probe(spark, k: int) -> None:
-    """`--lsh-ingest`: seed the LSH cluster-maintenance state from the
-    base corpus (doc_id % 10 != 7) UNTIMED, then time ONE
-    lsh_maintenance_step ingesting the delta (doc_id % 10 == 7) plus
-    the member reattachment — at ×30 and ×K.  min of 2 on the timed
-    step against the SAME seeded state (the kernel is pure — it
-    derives new state, never mutates the old).  The pass criterion a
-    100 TB operator needs: the ×K ingest wall must sit BELOW the full
-    rebuild's decade-cell wall, else maintaining the clustering loses
-    to rebuilding it."""
-    import gc
-
+def _lsh_ingest_probe(probe, k: int) -> None:
+    """`--lsh-ingest`: what does ONE delta ingest cost against existing
+    stored state?  The registered q_incremental_minhash_clusters builds
+    its pre-ingest state inside the timed cell; here the state seeds
+    untimed from the base corpus (doc_id % 10 != 7) and only one
+    lsh_maintenance_step over the delta (doc_id % 10 == 7) plus the
+    member reattachment is timed, at ×30 and ×K, min of 2 against the
+    same seeded state (the kernel derives new state, never mutates the
+    old).  Maintenance earns its keep only below the decade cell's
+    rebuild wall."""
     from end_to_end_datapipeline_project_spark.llm_ops import dedup
 
-    rows_out = [
+    spark = probe.spark
+    lines = [
         LSH_INGEST_MARKER,
         "",
         f"`python tools/scale_probe.py {k} --lsh-ingest` — stored "
@@ -1277,25 +1088,20 @@ def _lsh_ingest_probe(spark, k: int) -> None:
         "corpus (doc_id % 10 != 7) via lsh_seed_state; timed region is "
         "ONE lsh_maintenance_step over the delta (doc_id % 10 == 7) "
         "plus member reattachment — the per-ingest cost the registered "
-        "decade cell conflates with state construction (VERDICT r14 "
-        "missing #1).  min of 2 per cell against the same seeded "
-        "state; pairs = the ingest's own scored-pair CollectMetrics "
-        "gauge.  Compare the ingest wall to q_minhash_clusters' "
-        "decade-cell rebuild wall at the same scale: maintenance only "
-        "earns its keep below it.",
+        "decade cell conflates with state construction.  min of 2 per "
+        "cell against the same seeded state; pairs = the ingest's own "
+        "scored-pair CollectMetrics gauge.  Compare the ingest wall to "
+        "q_minhash_clusters' decade-cell rebuild wall at the same "
+        "scale: maintenance only earns its keep below it.",
         "",
         "| scale | docs | delta docs | seed (s, untimed) | "
         "ingest wall (s) | ingest pairs scored | out rows |",
         "|---|---|---|---|---|---|---|",
     ]
     for scale in (30, k):
-        full = f"/tmp/spark_graft_scale_{os.getuid()}/x{scale}"
-        sf_dir = (
-            full
-            if os.path.exists(f"{full}/documents.parquet/_SUCCESS")
-            else build(spark, scale, ("documents",))
+        docs = read_parquet_table(
+            spark, _scale_dir(spark, scale, ("documents",)), "documents"
         )
-        docs = read_parquet_table(spark, sf_dir, "documents")
         is_delta = F.col("doc_id") % 10 == 7
         n_docs = docs.count()
         corpus = docs.select(
@@ -1303,234 +1109,199 @@ def _lsh_ingest_probe(spark, k: int) -> None:
         )
         delta = corpus.filter(is_delta).localCheckpoint()
         n_delta = delta.count()
-        # --- stored pre-ingest state, untimed (the --sparse-pr
-        # discipline); labels are materialized so the timed step reads
-        # state, never re-derives it
+        # labels are materialized so the timed step reads state, never
+        # re-derives it
         t0 = time.time()
         d0, g0, i0, s0, l0 = dedup.lsh_seed_state(docs.filter(~is_delta))
-        i0, s0, l0 = (
-            i0.localCheckpoint(),
-            s0.localCheckpoint(),
-            l0.localCheckpoint(),
-        )
+        i0, s0, l0 = (df.localCheckpoint() for df in (i0, s0, l0))
         t_seed = time.time() - t0
-        best, pairs, out_rows = None, None, None
-        for _rep in range(2):
-            from pyspark.sql import Observation
 
-            ro = Observation()
-            obs: dict = {}
-            t0 = time.time()
+        def ingest(obs: dict):
             d2, g2, _i2, _s2, l2, _ = dedup.lsh_maintenance_step(
                 d0, g0, i0, s0, l0, delta, obs
             )
-            out = dedup._reattach(d2, g2, l2)
-            out.observe(ro, F.count(F.lit(1)).alias("rows")).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            dt = time.time() - t0
-            if best is None or dt < best:
-                best, pairs = dt, obs.get("n_pairs_scored", 0)
-            out_rows = ro.get["rows"]
-            spark.catalog.clearCache()
-            gc.collect()
-            spark._jvm.System.gc()
-        rows_out.append(
+            return dedup._reattach(d2, g2, l2)
+
+        runs = []
+        for _ in range(2):
+            obs: dict = {}
+            wall, rows, _ = timed_run(spark, lambda: ingest(obs))
+            runs.append((wall, obs.get("n_pairs_scored", 0), rows))
+        wall, pairs, rows = min(runs, key=lambda r: r[0])
+        lines.append(
             f"| ×{scale} | {n_docs:,} | {n_delta:,} | {t_seed:.1f} "
-            f"| {best:.2f} | {pairs:,} | {out_rows:,} |"
+            f"| {wall:.2f} | {pairs:,} | {rows:,} |"
         )
-        print(rows_out[-1], flush=True)
-        # free the seeded state's checkpoint blocks before the next scale
-        spark.catalog.clearCache()
-        gc.collect()
-        spark._jvm.System.gc()
-    _write_sparse_section(LSH_INGEST_MARKER, rows_out)
+        print(lines[-1], flush=True)
+    write_section(LSH_INGEST_MARKER, lines)
 
 
-def _write_sparse_section(marker: str, rows_out: list) -> None:
-    """Rewrite one tool-owned SCALING.md section in place, preserving
-    everything after it up to the next known marker."""
-    path = os.path.join(ROOT, "SCALING.md")
-    doc = open(path).read()
-    followers = [
-        m
-        for m in (SKEW_MARKER, SPARSE_MARKER, SPARSE_LPA_MARKER, AB_MARKER)
-        if m != marker and m in doc
+def _cross_round_rows() -> list[str]:
+    """Mechanical cross-round paragraph (VERDICT r13 task #6 second
+    half / r14 task #5 — the hand-written paragraph went stale the
+    round after it was written): read the BENCH_r*.json driver records,
+    normalize each round's Σ(min) by its fixed-work SPARK all-cores
+    canary (r16 — see the inline comment; python canary is the
+    pre-r15 fallback) against the pinned reference, and compare the
+    two newest rounds on the one host-comparable number."""
+    import glob
+    import json
+    import re
+
+    recs = []
+    # BENCH_r<N>.json ONLY — suffixed control runs (e.g. BENCH_r15_c8,
+    # the driver's low-core-count control) are not round records and
+    # made the paragraph compare r15 against itself (r16 fix)
+    paths = [
+        p
+        for p in glob.glob(os.path.join(ROOT, "BENCH_r*.json"))
+        if re.search(r"BENCH_r(\d+)\.json$", p)
     ]
-    tail = ""
-    if marker in doc:
-        rest = doc[doc.index(marker):]
-        nxt = min(
-            (rest.index(m) for m in followers if m in rest[1:]),
-            default=len(rest),
+    for p in sorted(
+        paths,
+        key=lambda p: int(re.search(r"BENCH_r(\d+)\.json$", p).group(1)),
+    ):
+        try:
+            d = json.load(open(p)).get("parsed") or {}
+            n = int(re.search(r"BENCH_r(\d+)\.json$", p).group(1))
+        except Exception:
+            continue
+        if d.get("value") and d.get("canary", {}).get("python_1core_sec"):
+            recs.append((n, d))
+    if len(recs) < 2:
+        return []
+    ref = next(
+        (
+            d["canary_ref"]
+            for _, d in reversed(recs)
+            if d.get("canary_ref")
+        ),
+        recs[-1][1]["canary"]["python_1core_sec"],
+    )
+    # r16 (VERDICT r15 "what's wrong" #4): normalize by the SPARK
+    # all-cores canary, not the python 1-core one — in r15 the two
+    # decoupled (python said the host got 32% faster while spark said
+    # 25% slower under CPU steal), and the suite is multicore work, so
+    # the python-normalized number pointed the wrong way.  Python
+    # canary stays as the fallback for records predating the spark one.
+    ref_spark = REF_SPARK_CANARY
+
+    def norm(d: dict) -> tuple:
+        sc = d.get("canary", {}).get("spark_allcores_sec")
+        if sc:
+            return d["value"] * ref_spark / sc, "spark"
+        if d.get("value_canary_norm"):
+            return d["value_canary_norm"], "python"
+        return d["value"] * ref / d["canary"]["python_1core_sec"], "python"
+
+    (na, a), (nb, b) = recs[-2], recs[-1]
+    nb_v, nb_c = norm(b)
+    na_v, na_c = norm(a)
+    return [
+        "",
+        f"Cross-round (mechanical, canary-normalized): r{nb} Σ(min) "
+        f"normalizes to **{nb_v:.2f} s** ({nb_c} canary) vs r{na} "
+        f"**{na_v:.2f} s** ({na_c} canary) ({nb_v / na_v:.3f}×) over "
+        f"{b['n_queries']} headline queries — each round's driver "
+        f"Σ(min) × (reference spark-allcores canary {ref_spark:.3f} s "
+        "/ that round's measured spark canary): the multicore-work "
+        "deflator (VERDICT r15 #4 — the 1-core python canary decoupled "
+        "from multicore host speed in r15 and mis-normalized the "
+        "suite total).  Raw driver records: "
+        f"r{nb} {b['value']:.2f} s @ spark canary "
+        f"{b['canary'].get('spark_allcores_sec', float('nan')):.3f} s, "
+        f"r{na} {a['value']:.2f} s @ "
+        f"{a['canary'].get('spark_allcores_sec', float('nan')):.3f} s.",
+    ]
+
+
+def _ab_probe(probe, subset: list) -> None:
+    """`--ab`: bench.py's loop over the headline suite (or a subset) in
+    this process, rendered as the interleaved A/B appendix.  Σ(min)
+    over the full suite is the quiet-host estimate bench.py's final
+    line reports as ``value``."""
+    spark = probe.spark
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", BASE_SF)
+    names = subset or list(HEADLINE)
+    canary = host_canary(spark)
+    t_wall0 = time.time()
+    times = {n: r["samples"] for n, r in measure(spark, names, sf_dir).items()}
+    wall = time.time() - t_wall0
+
+    from datetime import datetime, timezone
+
+    stamp = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%MZ")
+    rows = [
+        AB_MARKER,
+        "",
+        f"`python tools/scale_probe.py --ab` @ {sf_dir}, {stamp} — "
+        f"{len(names)} queries through bench.py's loop in one process: a "
+        "batch pass (a second sample for a query over 1 s), then "
+        "$SPARK_GRAFT_BENCH_SWEEPS round-robin sweeps "
+        f"(wall {wall:.0f}s incl. warm-up).  min = quiet-host estimate "
+        "(bench.py's `queries`); spread = max/min across samples, the "
+        "first of which is the query's first run in the process, so "
+        "spread counts its warm-up as well as host noise.  Host-speed "
+        "canary (fixed work, "
+        f"min of 3): python 1-core {canary['python_1core_sec']:.2f}s, "
+        f"spark all-cores {canary['spark_allcores_sec']:.2f}s — divide "
+        "Σ(min) deltas across rounds by the canary ratio before reading "
+        "them as regressions.",
+        *_cross_round_rows(),
+        "",
+        "| query | min (s) | median (s) | spread | reps (s) |",
+        "|---|---|---|---|---|",
+    ]
+    total_min = 0.0
+    for name in names:
+        ts = sorted(times[name])
+        total_min += ts[0]
+        med = ts[len(ts) // 2]
+        spread = ts[-1] / ts[0] if ts[0] > 0 else float("inf")
+        rows.append(
+            f"| {name} | {ts[0]:.2f} | {med:.2f} | {spread:.1f}× | "
+            f"{'/'.join(f'{t:.2f}' for t in times[name])} |"
         )
-        tail = rest[nxt:]
-        doc = doc[: doc.index(marker)]
-    else:
-        nxt_pos = min(
-            (doc.index(m) for m in followers), default=len(doc)
-        )
-        tail = doc[nxt_pos:]
-        doc = doc[:nxt_pos]
-    with open(path, "w") as f:
-        f.write(doc.rstrip() + "\n\n" + "\n".join(rows_out) + "\n\n" + tail)
-    print(f"section '{marker[:40]}…' written to {path}")
+        print(rows[-1], flush=True)
+    rows.append(
+        f"| **Σ(min) over {len(names)} queries** | **{total_min:.2f}** "
+        "| | | |"
+    )
+    print(f"TOTAL(min): {total_min:.2f}s over {len(names)} queries")
+    if subset:
+        print("(subset run: SCALING.md not rewritten)")
+        return
+    write_section(AB_MARKER, rows)
+
+
+MODES = ("--ab", "--lsh-ingest", "--skew", *GROWTH, *DELTA_SWEEPS)
 
 
 def main() -> None:
     argv = sys.argv[1:]
-    tail = "--tail" in argv  # subset run that WRITES the tail section
-    decade = "--decade" in argv  # work-probe decade cell (×30 vs ×K)
-    skew = "--skew" in argv  # hot-key probe (uniform ×K vs skewed ×K)
-    sparse_pr = "--sparse-pr" in argv  # delta-scaling sweep (r12 task #7)
-    sparse_lpa = "--sparse-lpa" in argv  # the LPA kernel's sweep (r14)
-    lsh_ingest = "--lsh-ingest" in argv  # seeded-state ingest cell (r15)
-    argv = [
-        a
-        for a in argv
-        if a not in ("--tail", "--decade", "--skew", "--sparse-pr",
-                     "--sparse-lpa", "--lsh-ingest")
-    ]
-    if argv and argv[0].isdigit():
-        k = int(argv[0])
-        subset = argv[1:]  # subset run: print ratios, keep SCALING.md
+    flags = [a for a in argv if a.startswith("--")]
+    args = [a for a in argv if not a.startswith("--")]
+    if len(flags) > 1 or any(f not in MODES for f in flags):
+        raise SystemExit(__doc__)
+    mode = flags[0] if flags else None
+    if args and args[0].isdigit():
+        k, subset = int(args[0]), args[1:]
     else:
-        k = 100 if (decade or lsh_ingest) else 10
-        subset = argv
-    if tail and not subset:
-        # bare `--tail` defaults to the output-bound probe set rather
-        # than rewriting the tail section to an empty table (ADVICE r7)
-        subset = list(TAIL_DEFAULT)
+        k, subset = (100 if mode in ("--decade", "--lsh-ingest") else 10), args
     _load()
-    # the skew probe reads max task durations off the UI REST API, so
-    # its session (alone) re-enables the UI
-    spark = get_spark(
-        "scale-probe",
-        extra_conf={"spark.ui.enabled": "true"} if skew else None,
-    )
-
-    def run(name: str, sf_dir: str, observed: bool = False) -> tuple:
-        # Observation rides the same noop write — output-row counts cost
-        # no extra pass, and make "output-bound" ratio claims checkable
-        # (rows_small -> rows_big printed beside the wall ratio).  With
-        # observed=True the WORK_PROBES form adds a second CollectMetrics
-        # on the pre-cap rows — intrinsic work from the SAME timed run.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        wobs = Observation() if observed else None
-        # t0 BEFORE DataFrame construction (ADVICE r9): spark_fn bodies
-        # that eagerly localCheckpoint() intermediates (shingle/vocab/
-        # minhash-signature passes) run data-proportional Spark jobs
-        # DURING construction — timing only the final write would hide
-        # super-linear growth in exactly those checkpointed stages
-        t0 = time.time()
-        if observed:
-            df = WORK_PROBES[name](spark, sf_dir, wobs)
-        else:
-            fn = name if callable(name) else REGISTRY[name].spark_fn
-            df = fn(spark, sf_dir)
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        dt = time.time() - t0
-        rows = obs.get["rows"]
-        work = wobs.get["work_rows"] if observed else None
-        # queries that persist()/localCheckpoint() intermediates pin
-        # executor memory; without cleanup those RDDs survive into the
-        # NEXT query's timing and skew it with GC/spill pressure.
-        # ContextCleaner frees checkpoint blocks only after a JVM GC —
-        # Python gc alone never triggers one (same fix as bench.py)
-        import gc
-
-        spark.catalog.clearCache()
-        gc.collect()
-        spark._jvm.System.gc()
-        return dt, rows, work
-
-    if lsh_ingest:
-        _lsh_ingest_probe(spark, k)
-        return
-
-    if sparse_pr:
-        _sparse_pr_probe(spark, k)
-        return
-
-    if sparse_lpa:
-        _sparse_lpa_probe(spark, k)
-        return
-
-    if skew:
-        _skew_probe(spark, run, k, subset or None)
-        return
-
-    if decade:
-        _decade_probe(spark, run, k, subset or None)
-        return
-
-    big_dir = build(spark, k)
-    if tail:
-        _tail_probe(spark, run, k, big_dir, subset)
-        return
-
-    # warm both datasets' footers + codegen with one cheap query each
-    run("q_pricing_summary", BASE_SF)
-    run("q_pricing_summary", big_dir)
-
-    lines = [
-        "# SCALING — measured runtime growth on ×%d data" % k,
-        "",
-        f"`python tools/scale_probe.py {k}` replicates sf0.1 ×{k} with disjoint",
-        "key spaces (≈6M lineitem rows) and compares per-query runtimes.",
-        "ratio ≈ K ⇒ scan/shuffle-bound (healthy: more executors absorb it);",
-        "ratio ≫ K ⇒ super-linear fan-out or state — a 100 TB red flag.",
-        "Wall includes DataFrame construction (eager localCheckpoint",
-        "materializations count — ADVICE r9); min of 2 per cell.",
-        "",
-        "| query | sf0.1 (s) | ×%d (s) | ratio (ideal ≈%d) | out rows sf0.1→×%d |" % (k, k, k),
-        "|---|---|---|---|---|",
-    ]
-    for name in subset or PROBES:
-        runs_small = [run(name, BASE_SF) for _ in range(2)]
-        runs_big = [run(name, big_dir) for _ in range(2)]
-        t_small = min(t for t, _, _ in runs_small)
-        t_big = min(t for t, _, _ in runs_big)
-        rows_small, rows_big = runs_small[0][1], runs_big[0][1]
-        ratio = t_big / t_small if t_small > 0 else float("inf")
-        rows_ratio = rows_big / rows_small if rows_small else float("inf")
-        note = NOTES.get(name, "")
-        lines.append(
-            f"| {name} | {t_small:.2f} | {t_big:.2f} | {ratio:.1f}× {note}| "
-            f"{rows_small}→{rows_big} ({rows_ratio:.1f}×) |"
-        )
-        print(lines[-1], flush=True)
-    if subset:
-        print("(subset run: SCALING.md not rewritten)")
-        return
-    # preserve the ×K tail section (this tool's --tail mode) and the
-    # interleaved-A/B adjudication appendix (tools/ab_bench.py) — the
-    # full probe owns only the ratio table
-    appendix = ""
-    try:
-        old = open(os.path.join(ROOT, "SCALING.md")).read()
-        marks = [
-            old.index(m)
-            for m in (
-                TAIL_MARKER,
-                DECADE_MARKER,
-                SKEW_MARKER,
-                SPARSE_MARKER,
-                AB_MARKER,
-            )
-            if m in old
-        ]
-        if marks:
-            appendix = "\n" + old[min(marks):]
-    except OSError:
-        pass
-    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
-        f.write("\n".join(lines) + "\n" + appendix)
-    print("SCALING.md written")
+    probe = spark_probe(get_spark("scale-probe"))
+    if mode == "--ab":
+        _ab_probe(probe, subset)
+    elif mode == "--lsh-ingest":
+        _lsh_ingest_probe(probe, k)
+    elif mode == "--skew":
+        _skew_probe(probe, k, subset)
+    elif mode in GROWTH:
+        _growth_probe(probe, mode, k, subset)
+    elif mode in DELTA_SWEEPS:
+        _delta_sweep(probe, mode, k)
+    else:
+        _ratio_table(probe, k, subset)
 
 
 if __name__ == "__main__":
